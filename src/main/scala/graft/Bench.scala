@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 object Bench {
   /** Time one warm step into `builds`. A failed step must not abort the
@@ -9,7 +10,8 @@ object Bench {
     * (the round-over-round drift adjudications do exactly that) silently
     * subtracted as a fake second of credit. A failure is now recorded by
     * NAME in `failed` and the step omitted from `builds` entirely, so the
-    * map stays summable (VERDICT r16 #3).
+    * map stays summable (VERDICT r16 #3). A fatal error (OOM, linkage)
+    * is not caught: it ends the run with a non-zero exit.
     */
   private[graft] def warmStepInto(
       builds: scala.collection.mutable.LinkedHashMap[String, Double],
@@ -17,7 +19,7 @@ object Bench {
       name: String)(f: => Unit): Unit = {
     val t0 = System.nanoTime()
     try { f; builds(name) = (System.nanoTime() - t0) / 1e9 }
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] warm step $name FAILED: ${e.getMessage}")
       failed += name
     }
@@ -54,13 +56,13 @@ object Bench {
       SparkEntry.queries.foreach { case (name, fn) =>
         // failures surface in the timed pass; never abort the bench here
         try fn(spark, warmDir).count()
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
       }
     // First-touch the benchmark tables themselves (footer + row-group
     // metadata; the persisted ones materialize fully in Tables.warm below).
     graft.model.Tables.names.foreach { n =>
       try graft.model.Tables(spark, sfDir, n).count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     // Materialize the caches SHARED across queries (session-persisted
     // tables, DerivedGraph, the GraphX build) before the timed loop, so
@@ -89,13 +91,8 @@ object Bench {
     // bucket-clustered endpoint table: graph_kcore's init-degree source
     // on big datasets (sf10 A/B: 14.8 vs 71.6 s min) — built once per
     // dataset here so the timed pass measures serve cost. Skipped when
-    // the timed query won't read it: under GRAFT_KCORE_DEG=union, or when
-    // the size gate keeps the small-data union path (a charged build the
-    // variant doesn't use would distort the A/B replay — ADVICE r15 #4).
-    if (!sys.env.get("GRAFT_KCORE_DEG").contains("union") &&
-        (sys.env.get("GRAFT_KCORE_DEG").contains("bucketed") ||
-         graft.model.CacheDirs.entryBytes("graph", sfDir, "fact_edges")
-           >= graft.ops.GraphAnalytics.BucketedDegreeMinBytes))
+    // the size gate keeps graph_kcore on the small-data union path.
+    if (graft.ops.GraphAnalytics.useBucketedDegrees(sfDir))
       warmStep("kcore_endp")(
         graft.ops.GraphAnalytics.bucketedDegrees(spark, sfDir).count())
     // materialized undirected adjacency (khop_2/ego_subgraph hops): the
@@ -119,7 +116,7 @@ object Bench {
       spark.sparkContext.setJobDescription(s"bench:$name")
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           // keep timing every query, but never hide a failure in the total
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           failed += name

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Plan-audit tool: prints the formatted physical plan of selected queries
   * (all, if no names given) so pushdown/broadcast/codegen properties can be
@@ -21,7 +22,7 @@ object Explain {
       println(s"\n========== $n ==========")
       try println(Queries.all(n).fn(spark, sfDir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
-      catch { case e: Throwable => println(s"explain failed: $e") }
+      catch { case NonFatal(e) => println(s"explain failed: $e") }
     }
     spark.stop()
   }

@@ -74,6 +74,25 @@ object QueriesGraph {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
+  /** Top-20 customer pairs by a per-part fixed-point weight summed over
+    * their shared parts — the capped posting-list pair plan of
+    * graph_resource_alloc and graph_adamic_adar. `weight` is a BIGINT
+    * expression of the posting list `cs`; pairs are ranked by its exact
+    * sum `units`, shown as `score` = units / 1e9.
+    */
+  private def weightedPairTop(s: org.apache.spark.sql.SparkSession, d: String,
+      weight: org.apache.spark.sql.Column, units: String, score: String) = {
+    val pairs = partPostings(s, d).filter(size(col("cs")) >= 2)
+      .withColumn("w", weight)
+      .select(col("w"), posexplode(col("cs")).as(Seq("__i", "a_id")), col("cs"))
+      .select(col("w"), col("a_id"),
+        explode(slice(col("cs"), col("__i") + 2, size(col("cs")))).as("b_id"))
+    pairs.groupBy("a_id", "b_id").agg(sum(col("w")).as(units))
+      .select(col("a_id"), col("b_id"), col(units),
+        round(col(units).cast("double") / lit(1e9), 6).as(score))
+      .orderBy(col(units).desc, col("a_id"), col("b_id")).limit(20)
+  }
+
   val defs: ListMap[String, QueryDef] = ListMap(
 
     // find_neighbors (mongraph.py:228-250): undirected 1-hop, seed included.
@@ -352,17 +371,8 @@ object QueriesGraph {
     // quadratic, so the cap removes cost where the signal already
     // vanishes.
     "graph_resource_alloc" -> QueryDef(
-      (s, d) => {
-        val pairs = partPostings(s, d).filter(size(col("cs")) >= 2)
-          .withColumn("w", expr("1000000000L div size(cs)"))
-          .select(col("w"), posexplode(col("cs")).as(Seq("__i", "a_id")), col("cs"))
-          .select(col("w"), col("a_id"),
-            explode(slice(col("cs"), col("__i") + 2, size(col("cs")))).as("b_id"))
-        pairs.groupBy("a_id", "b_id").agg(sum(col("w")).as("ra_units"))
-          .select(col("a_id"), col("b_id"), col("ra_units"),
-            round(col("ra_units").cast("double") / lit(1e9), 6).as("ra"))
-          .orderBy(col("ra_units").desc, col("a_id"), col("b_id")).limit(20)
-      },
+      (s, d) => weightedPairTop(s, d, expr("1000000000L div size(cs)"),
+        "ra_units", "ra"),
       s"""WITH cp AS (SELECT DISTINCT o_custkey AS c, l_partkey AS p
          |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
          |pdf AS (SELECT p, COUNT(*) AS df FROM cp GROUP BY p),
@@ -392,18 +402,9 @@ object QueriesGraph {
     // table stays 499 constant rows while the pair stream rides the
     // DF-capped lists.
     "graph_adamic_adar" -> QueryDef(
-      (s, d) => {
-        val wArr = array(aaWeights.map(lit): _*) // index 1 ↔ df 2
-        val pairs = partPostings(s, d).filter(size(col("cs")) >= 2)
-          .withColumn("w", element_at(wArr, size(col("cs")) - 1))
-          .select(col("w"), posexplode(col("cs")).as(Seq("__i", "a_id")), col("cs"))
-          .select(col("w"), col("a_id"),
-            explode(slice(col("cs"), col("__i") + 2, size(col("cs")))).as("b_id"))
-        pairs.groupBy("a_id", "b_id").agg(sum(col("w")).as("aa_units"))
-          .select(col("a_id"), col("b_id"), col("aa_units"),
-            round(col("aa_units").cast("double") / lit(1e9), 6).as("aa"))
-          .orderBy(col("aa_units").desc, col("a_id"), col("b_id")).limit(20)
-      },
+      (s, d) => weightedPairTop(s, d,
+        element_at(array(aaWeights.map(lit): _*), size(col("cs")) - 1), // index 1 ↔ df 2
+        "aa_units", "aa"),
       s"""WITH cp AS (SELECT DISTINCT o_custkey AS c, l_partkey AS p
          |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
          |pdf AS (SELECT p, COUNT(*) AS df FROM cp GROUP BY p),

@@ -237,17 +237,13 @@ object QueriesGraphX {
         // zero RDD-storage footprint — the structural pre-emption of the
         // kcore-class spill one decade up; columnar + cross-session beats
         // a per-session deserialized 2|E| write even at sf10).
-        // GRAFT_LPA_UND=ckpt restores the r13 localCheckpoint path for
-        // re-measurement.
         val undOverride =
-          if (sys.env.get("GRAFT_LPA_UND").contains("ckpt")) None
-          else
-            Some(graft.model.CacheDirs.cachedParquet(s, "graph", d,
-              "lpa_und_member_v1") {
-              val e = member.select("src", "dst")
-              e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
-                .select(col("src").as("a"), col("dst").as("b"))
-            })
+          Some(graft.model.CacheDirs.cachedParquet(s, "graph", d,
+            "lpa_und_member_v1") {
+            val e = member.select("src", "dst")
+            e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
+              .select(col("src").as("a"), col("dst").as("b"))
+          })
         GraphAnalytics.lpaDF(
           g.vertices.filter(col("label") =!= "part").select("id"),
           member.select("src", "dst"), 5, undOverride = undOverride)
@@ -410,25 +406,12 @@ object QueriesGraphX {
         // materialize the fact-edge entry FIRST so the size signal below
         // reads its real bytes even in a cold session
         val edges = DerivedGraph(s, d).edges.select("src", "dst")
-        // Bucketed-endpoint init degrees by SIZE (VERDICT r14 #6 default,
-        // made adaptive in r16): at sf10+ the bucketed table wins 5×
-        // (r15 A/B: min 14.8 s vs 71.6 s, −689 MB shuffle — round 0's
-        // |2E|-row exchange AND the persisted-edge union decode both
-        // gone), but at sf0.1 its 512 small-file scan costs MORE than the
-        // whole exchange it avoids (r16 A/B: aged 1.97 vs 1.42 s) — the
-        // scale-path constant must not tax the small-data path. Env
-        // forces either side for A/B replay.
-        val init = sys.env.get("GRAFT_KCORE_DEG") match {
-          case Some("union") => None
-          case Some("bucketed") => Some(GraphAnalytics.bucketedDegrees(s, d))
-          case None =>
-            if (graft.model.CacheDirs.entryBytes("graph", d, "fact_edges")
-                >= GraphAnalytics.BucketedDegreeMinBytes)
-              Some(GraphAnalytics.bucketedDegrees(s, d))
-            else None
-          case Some(other) => throw new IllegalArgumentException(
-            s"GRAFT_KCORE_DEG=$other — allowed values: bucketed|union")
-        }
+        // bucketed-endpoint init degrees by SIZE: they win 5× at sf10+
+        // and lose at sf0.1 (GraphAnalytics.BucketedDegreeMinBytes)
+        val init =
+          if (GraphAnalytics.useBucketedDegrees(d))
+            Some(GraphAnalytics.bucketedDegrees(s, d))
+          else None
         GraphAnalytics.kCoreDF(edges, k = 8,
           rounds = KcoreRounds, initDegrees = init)
           .orderBy("id")

@@ -2115,18 +2115,14 @@ object QueriesLlm {
         // size n rides the posting list as a struct field; pairs dropped
         // are exactly those the final 5·inter ≥ 4·uni filter would drop,
         // so the output is row-identical (oracle unchanged).
-        val cand0 = prefix.groupBy("source", "tok")
+        val cand = prefix.groupBy("source", "tok")
           .agg(sort_array(collect_list(struct(col("doc_id"), col("n")))).as("docs"))
           .filter(size(col("docs")) >= 2)
           .select(col("source"), posexplode(col("docs")).as(Seq("__i", "a")), col("docs"))
           .select(col("source"), col("a.doc_id").as("a_id"), col("a.n").as("na"),
             explode(slice(col("docs"), col("__i") + 2, size(col("docs")))).as("b"))
-        // graft.ssj.lenfilter=0: FlagAB's off-switch for the interleaved A/B
-        val cand1 = if (sys.props.get("graft.ssj.lenfilter")
-            .orElse(sys.env.get("GRAFT_SSJ_LENFILTER")).contains("0")) cand0
-          else cand0.filter(lit(5L) * least(col("na"), col("b.n")) >=
+          .filter(lit(5L) * least(col("na"), col("b.n")) >=
             lit(4L) * greatest(col("na"), col("b.n")))
-        val cand = cand1
           .select(col("source"), col("a_id"), col("b.doc_id").as("b_id"))
           .distinct()
         val sets = toks.groupBy("source", "doc_id")

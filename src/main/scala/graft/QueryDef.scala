@@ -20,12 +20,8 @@ import org.apache.spark.sql.types.DecimalType
   * is the final iterate, not a deferred plan (ADVICE r15 #5). Callers
   * must treat `fn(spark, dir)` itself as potentially expensive and time
   * construction + action together (Bench/Verify/ScaleProbe all do).
-  * r17 re-examined the per-hop bucket collects (VERDICT r16 #5): a fully
-  * lazy DPP form exists behind GRAFT_KHOP_PRUNE=dpp, fires, and measured
-  * SLOWER than the ≤256-int collect it replaces (the DPP subquery jobs
-  * cost more than the collect — Traverse.prunedHopForm scaladoc), so the
-  * collect stays the default; the pruned-vs-full choice itself no longer
-  * collects (span is estimated from the tracked frontier count).
+  * A fully lazy DPP hop form measured slower than the per-hop bucket
+  * collect (BENCHNOTES r17 lazy DPP entry).
   */
 final case class QueryDef(
     fn: (SparkSession, String) => DataFrame,

@@ -116,7 +116,9 @@ object ThreatIntel {
       .toDF("resource", "report"))
   }
 
-  /** Ingest a DataFrame of (resource STRING, report STRING-of-JSON) rows. */
+  /** Ingest a DataFrame of (resource STRING, report STRING-of-JSON) rows.
+    * A resource reported twice keeps, per props key, the smallest value.
+    */
   def fromReports(reports: DataFrame): ThreatGraph = {
     val r = reports
       .withColumn("rep", from_json(col("report"), reportSchema))
@@ -158,9 +160,14 @@ object ThreatIntel {
       .select(col("resource"), col("fk"),
         explode(from_json(col("fv"), MapType(StringType, StringType))).as(Seq("sk", "sv")))
       .select(col("resource"), concat(col("fk"), lit("_"), col("sk")).as("fk"), col("sv").as("fv"))
+    // first entry per key of the sorted list: map_from_entries rejects a
+    // duplicate key, which a re-sent resource brings
     val props = flatScalar.unionByName(flatList).unionByName(flatObject)
       .groupBy("resource")
-      .agg(map_from_entries(array_sort(collect_list(struct(col("fk"), col("fv"))))).as("props"))
+      .agg(array_sort(collect_list(struct(col("fk"), col("fv")))).as("__kv"))
+      .select(col("resource"), map_from_entries(filter(col("__kv"), (e, i) =>
+        i === 0 || element_at(col("__kv"), greatest(i, lit(1))).getField("fk") =!=
+          e.getField("fk"))).as("props"))
 
     // ---- resource vertices (with aggregate + props patched on)
     val resourceVertices = r.select(col("resource"), col("res_label").as("label")).distinct()

@@ -110,9 +110,7 @@ object DerivedGraph {
     // copy. The engine now CHOOSES per dataset (VERDICT r14 #4) from the
     // fact-edge parquet's on-disk size vs the JVM's storage share and the
     // shuffle dir's free space — the storage-fraction sizing decision a
-    // cluster deployment makes, made automatic. GRAFT_GRAPH_STORAGE
-    // remains the probe override; unknown values fail fast (ADVICE r14)
-    // instead of silently measuring the default policy.
+    // cluster deployment makes, made automatic.
     val policy = storagePolicy(spark, sfDir, "fact_edges")
     policy match {
       case "none" => G(vertices, edges)
@@ -123,27 +121,21 @@ object DerivedGraph {
     }
   }
 
-  /** The storage-level decision for a CacheDirs-backed frame: the env
-    * override when set (fails fast on unknown values — ADVICE r14),
-    * otherwise [[choosePolicy]] sized from the named entry's on-disk
-    * bytes. Shared by the graph frames and the undirected adjacency so
-    * the two cannot drift to different policies on one dataset.
+  /** The storage-level decision for a CacheDirs-backed frame:
+    * [[choosePolicy]] sized from the named entry's on-disk bytes. Shared
+    * by the graph frames and the undirected adjacency so the two cannot
+    * drift to different policies on one dataset.
     */
-  def storagePolicy(spark: SparkSession, sfDir: String, entry: String): String =
-    sys.env.get("GRAFT_GRAPH_STORAGE") match {
-      case Some(v @ ("none" | "disk" | "default")) => v
-      case Some(other) => throw new IllegalArgumentException(
-        s"GRAFT_GRAPH_STORAGE=$other — allowed values: none|disk|default")
-      case None =>
-        val p = choosePolicy(CacheDirs.entryBytes("graph", sfDir, entry),
-          (Runtime.getRuntime.maxMemory * StorageMemShare).toLong,
-          shuffleDirUsableBytes(spark))
-        // one WARN-visible line per decision: a probe/bench log must show
-        // WHICH level the auto-policy picked (a "none" session and a
-        // "default" session read identically otherwise)
-        System.err.println(s"[graft] storage policy for $entry: $p")
-        p
-    }
+  def storagePolicy(spark: SparkSession, sfDir: String, entry: String): String = {
+    val p = choosePolicy(CacheDirs.entryBytes("graph", sfDir, entry),
+      (Runtime.getRuntime.maxMemory * StorageMemShare).toLong,
+      shuffleDirUsableBytes(spark))
+    // one WARN-visible line per decision: a probe/bench log must show
+    // WHICH level the auto-policy picked (a "none" session and a
+    // "default" session read identically otherwise)
+    System.err.println(s"[graft] storage policy for $entry: $p")
+    p
+  }
 
   /** Approximate share of the JVM heap available to BLOCK STORAGE under
     * the unified memory manager: `spark.memory.fraction` (0.6) of

@@ -231,30 +231,14 @@ object GraphAnalytics {
       if (i % checkpointEvery == 0 || i == numIter) ranks = ranks.localCheckpoint()
     }
     // normalize Σranks to |V| like GraphX (SPARK-18847 sink correction):
-    // the total is a single-row exact-decimal aggregate over the final
-    // (checkpointed) rank table, fetched as ONE driver row and embedded
-    // as literals — the renormStep discipline: broadcast(tot) collects
-    // the same row to the driver anyway, then pays a broadcast-build job
-    // and an extra plan layer on top. Types match the former crossJoin
-    // form exactly (t is dsum's DOUBLE, n a LONG), so
-    // `rank * n / t` promotes identically and the DuckDB replay is
-    // unchanged; the scaling step is IEEE mult/div of identical doubles
-    // on both engines.
-    if (sys.props.get("graft.pr.crossjoin")
-        .orElse(sys.env.get("GRAFT_PR_CROSSJOIN")).contains("1")) {
-      // pre-r19 form, kept for the CentralityAB tool only
-      val tot = ranks.agg(graft.Qh.dsum(col("rank"), 6).as("__t"),
-        count(lit(1)).as("__n"))
-      ranks.crossJoin(broadcast(tot))
-        .select(col("id"),
-          round(col("rank") * col("__n") / col("__t"), roundScale).as("rank"))
-    } else {
-      val trow = ranks.agg(graft.Qh.dsum(col("rank"), 6).as("__t"),
-        count(lit(1)).as("__n")).head()
-      val (t, n) = (trow.getDouble(0), trow.getLong(1))
-      ranks.select(col("id"),
-        round(col("rank") * lit(n) / lit(t), roundScale).as("rank"))
-    }
+    // the exact-decimal total is fetched as ONE driver row and embedded as
+    // literals, no broadcast crossJoin (BENCHNOTES r19 centrality entry).
+    // t is dsum's DOUBLE and n a LONG, so the DuckDB replay is unchanged.
+    val trow = ranks.agg(graft.Qh.dsum(col("rank"), 6).as("__t"),
+      count(lit(1)).as("__n")).head()
+    val (t, n) = (trow.getDouble(0), trow.getLong(1))
+    ranks.select(col("id"),
+      round(col("rank") * lit(n) / lit(t), roundScale).as("rank"))
   }
 
   /** Personalized PageRank (Page et al. 1999 §6 / Jeh & Widom 2003):
@@ -423,34 +407,12 @@ object GraphAnalytics {
     * `gatherKey` endpoint; exact LONG sums per receiver, one IEEE divide
     * back to double, receivers ∪ `noRecv` (constant-0 frame) = all |V|
     * rows. Renormalize: Σ to |V| via the exact-DECIMAL total fetched as
-    * ONE driver row and embedded as literals — `broadcast(tot)` would
-    * collect the same row to the driver anyway (that's how broadcast
-    * exchanges build), but the crossJoin form pays a broadcast-build job
-    * + an extra plan layer per round. Types match the crossJoin form
-    * exactly: t is dsum's DOUBLE, n a LONG, so `__y * n / t` promotes
-    * identically and the DuckDB replays are unchanged. The lineage cut
-    * lands on the message table `y` because BOTH the total and the
-    * renormalized projection read it (an un-cut y re-executes its edge
-    * join inside the next round's broadcast build — the r9 3-4× cost).
+    * ONE driver row and embedded as literals (t is dsum's DOUBLE, n a
+    * LONG, so the DuckDB replays are unchanged). The lineage cut lands on
+    * the message table `y` because BOTH the total and the renormalized
+    * projection read it. The cut is lazy: the total's `head()` fills it
+    * in the same job, one job per round (BENCHNOTES r19 centrality entry).
     */
-  /** When true (default), each renorm round's message table materializes
-    * INSIDE the scalar-total job instead of a dedicated eager-checkpoint
-    * job: `localCheckpoint(eager = false)` cuts lineage identically (the
-    * returned frame is a LogicalRDD either way, its RDD marked for local
-    * checkpointing at call time), and the total's `head()` is a blocking
-    * global aggregate touching every partition — so that one job both
-    * fills the checkpoint and fetches the scalar. One job per renorm
-    * round instead of two (measured per-round jobs and wall in the
-    * CentralityAB entry, BENCHNOTES r19 — VERDICT r18 #5). Unlike
-    * pageRankDF's REJECTED eager=false (there the fill folded into the
-    * next round's broadcast-build THREAD, serializing it), here the
-    * scalar fetch is an immediate same-frame action, so the fill rides a
-    * normal fully-parallel job. Sys-prop switch for the A/B tool only.
-    */
-  private[graft] def renormFoldedFetch: Boolean =
-    !sys.props.get("graft.renorm.eager")
-      .orElse(sys.env.get("GRAFT_RENORM_EAGER")).contains("1")
-
   private def renormStep(state: DataFrame, stateCol: String, ed: DataFrame,
       sendKey: String, gatherKey: String, noRecv: DataFrame,
       hintSmall: DataFrame => DataFrame, yParts: Int, roundScale: Int,
@@ -462,7 +424,7 @@ object GraphAnalytics {
       .select(col(gatherKey).as("id"), col("__y"))
       .unionAll(noRecv.select(col("id"), lit(0.0).as("__y")))
       .coalesce(yParts)
-      .localCheckpoint(eager = !renormFoldedFetch)
+      .localCheckpoint(eager = false)
     val row = y.agg(graft.Qh.dsum(col("__y"), roundScale).as("__t"),
       count(lit(1)).as("__n")).head()
     val (t, n) = (row.getDouble(0), row.getLong(1))
@@ -622,6 +584,14 @@ object GraphAnalytics {
     */
   val BucketedDegreeMinBytes: Long = 64L << 20
 
+  /** Whether the k-core init degrees of `sfDir` come from
+    * [[bucketedDegrees]]: the size gate above, read off the materialized
+    * fact-edge entry (callers materialize it first).
+    */
+  def useBucketedDegrees(sfDir: String): Boolean =
+    graft.model.CacheDirs.entryBytes("graph", sfDir, "fact_edges") >=
+      BucketedDegreeMinBytes
+
   /** Exchange-free initial degrees for the k-core peel (VERDICT r14 #6):
     * the derived graph's endpoint list stored ONCE per dataset as a Spark
     * bucketed table clustered+sorted on the vertex id, so `groupBy(a)`
@@ -630,8 +600,7 @@ object GraphAnalytics {
     * ceiling that stopped the d3 probe. The build pays that exchange once
     * (repartition aligned 1:1 with the bucket spec → one file per
     * bucket); every session after serves degree counts with zero shuffle.
-    * Env-gated A/B (`GRAFT_KCORE_DEG=bucketed`) until the sf10 numbers
-    * decide the default.
+    * Used above [[BucketedDegreeMinBytes]] ([[useBucketedDegrees]]).
     */
   def bucketedDegrees(spark: SparkSession, sfDir: String): DataFrame = {
     val endp = graft.model.CacheDirs.cachedBucketedTable(spark, "graph", sfDir,
@@ -670,9 +639,6 @@ object GraphAnalytics {
     // SQL oracle replays. The loss join's removed side starts at the
     // sub-k fringe and shrinks towards convergence — AQE picks the
     // broadcast side from its real size (no unsafe hint).
-    val dbg = sys.env.contains("GRAFT_PEEL_DEBUG")
-    def tick() = System.nanoTime()
-    var t0 = tick()
     // initial degrees from a SINGLE-column endpoint union — half the
     // shuffle bytes of grouping the two-column und view. Callers with a
     // bucket-clustered endpoint copy pass `initDegrees` (exchange-free —
@@ -682,12 +648,10 @@ object GraphAnalytics {
       e.select(col("src").as("a"))
         .unionAll(e.select(col("dst").as("a")))
         .groupBy("a").agg(count(lit(1)).as("deg"))).localCheckpoint()
-    if (dbg) println(f"[kcore] init deg: ${(tick() - t0) / 1e9}%.2f s")
     var r = 0
     var converged = false
     while (r < rounds && !converged) {
       r += 1
-      t0 = tick()
       val removed = deg.filter(col("deg") < k)
         .select(col("a").as("rid")).localCheckpoint()
       // the count reads the checkpointed partition sizes (no recompute);
@@ -715,7 +679,6 @@ object GraphAnalytics {
           .select(col("a"), (col("deg") - coalesce(col("__lost"), lit(0L))).as("deg"))
           .localCheckpoint()
       }
-      if (dbg) println(f"[kcore] round $r removed=$nRemoved: ${(tick() - t0) / 1e9}%.2f s")
     }
     // deg now holds within-core degrees of the survivors; vertices whose
     // neighbours were all peeled in the final bounded round carry deg 0
@@ -872,10 +835,8 @@ object GraphAnalytics {
     var cumDecRows = 0L //     crosses MaxCumLazyRows the next round re-bases
     var r = 0
     var converged = false
-    val dbg = sys.env.contains("GRAFT_KTRUSS_DEBUG")
     while (r < rounds && !converged) {
       r += 1
-      val t0 = System.nanoTime()
       // zero-triangle edges never enter sup, so the survivor projection
       // drops them with the low-support rows — and being triangle-less
       // their removal charges nothing. keptSup stays LAZY (a cheap filter
@@ -1002,8 +963,6 @@ object GraphAnalytics {
             .filter(col("support") > 0)
         }
       }
-      if (dbg) println(f"[ktruss] round $r nRemoved=$nRemoved " +
-        f"${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     // support-0 rows never exist at a fixpoint; the filter above also
     // matches the oracle's final-pass convention (triangle-less edges
@@ -1280,15 +1239,6 @@ object GraphAnalytics {
     * (GraphAnalyticsSpec pins parity) — levels only name WHICH vertices
     * sit at depth d, a fact both forms derive from the same BFS.
     */
-  /** Backward-pass form switch (A/B only — see the in-loop comment):
-    * `graft.stress.backsemi=1` pre-filters h-messages to the receiving
-    * level's membership before the per-round groupBy. Row-identical by
-    * construction; default stays the measured winner.
-    */
-  private[graft] def stressBackwardSemi: Boolean =
-    sys.props.get("graft.stress.backsemi")
-      .orElse(sys.env.get("GRAFT_STRESS_BACKSEMI")).contains("1")
-
   def stressCentralityDF(edges: DataFrame, seeds: Seq[Long],
       maxDepth: Int = 10, levels: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
@@ -1383,21 +1333,10 @@ object GraphAnalytics {
         val msgs = und.join(
             hintSmall(hPrev.select(col("lm").as("__slm"), col("id").as("__w"), col("h"))),
             col("b") === col("__w"))
-        // frame-driven backward form (VERDICT r18 #7): h-messages from
-        // level d+1 only matter at level-d receivers (BFS-DAG edges go
-        // depth d → d+1); the left join below drops the rest AFTER the
-        // groupBy has shuffled them. The semi-join filters them map-side
-        // BEFORE the agg — row-identical output (the dropped (lm, a)
-        // groups are exactly the left join's misses). MEASURED AND
-        // REJECTED (CentralityAB entry, BENCHNOTES r19): +5 jobs/run
-        // from the per-round membership broadcast builds, wall 7.11 vs
-        // 6.24-6.99 s at sf0.1 — fails the ≥10%-at-both-SFs bar at the
-        // first SF, so the default stays off; flag kept for re-probing.
-        val kept = if (stressBackwardSemi)
-          msgs.join(hintSmall(lvl.select(col("lm").as("__slm"), col("id").as("a"))),
-            Seq("__slm", "a"), "left_semi")
-        else msgs
-        val succ = kept
+        // the left join below drops h-messages that miss level d; a
+        // semi-join filtering them before the groupBy was measured and
+        // rejected (BENCHNOTES r19 centrality entry)
+        val succ = msgs
           .groupBy(col("__slm"), col("a"))
           .agg(sum(lit(1L) + col("h")).as("__hs"))
         lvl.join(succ,

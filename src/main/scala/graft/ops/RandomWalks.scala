@@ -79,10 +79,10 @@ object RandomWalks {
     * not exist; the hint was unconditional), measured at sf10 with a
     * 3.6M-walk frontier under a forced-low limit — SortMergeJoin both
     * sides exchanged, shuffle linear at 1.78 GB/step, rows exact
-    * (WalksProbe entry, BENCHNOTES r19) — and plan-pinned in
+    * (BENCHNOTES r19 walks over-limit entry) — and plan-pinned in
     * PlanShapeR10Spec. Spans past the cutoff fall back to the full view
-    * exactly like Traverse.kHopCore; the bucket filter takes the
-    * session's [[Traverse.prunedHopForm]].
+    * exactly like Traverse.kHopCore; a pruned step collects its bucket ids
+    * into a literal filter, as there.
     */
   private[graft] def stepCandidates(frontier: DataFrame, und: DataFrame,
       byBucket: Option[(DataFrame, Int, Int)], walkCount: Long,
@@ -99,20 +99,12 @@ object RandomWalks {
       case _ => None
     }
     val joined = stepPruned match {
-      case Some((raw, nb)) if Traverse.prunedHopForm == "collect" =>
+      case Some((raw, nb)) =>
         val bks = frontier
           .select(pmod(col("node"), lit(nb.toLong)).cast("int").as("bk"))
           .distinct().collect().map(_.getInt(0)).toSeq
         val stepAdj = raw.filter(col("bk").isin(bks.map(Integer.valueOf): _*))
         hintFrontier(frontier).join(stepAdj, frontier("node") === stepAdj("a"))
-      case Some((raw, nb)) =>
-        // bk >= 0 is identity (pmod is non-negative) but satisfies
-        // DPP's likely-selective filtering-side heuristic
-        val fr = frontier
-          .withColumn("bk", pmod(col("node"), lit(nb.toLong)).cast("int"))
-          .filter(col("bk") >= 0)
-        hintFrontier(fr).join(raw,
-          fr("node") === raw("a") && fr("bk") === raw("bk"))
       case None =>
         hintFrontier(frontier).join(und, frontier("node") === und("a"))
     }
@@ -128,9 +120,7 @@ object RandomWalks {
     // the walker count bounds every step's frontier (one row per walk,
     // walks only ever die at sinks) — ONE count up front drives every
     // step's pruned-vs-full choice via the span estimate, so the choice
-    // itself runs no per-step job; the bucket filter then takes the
-    // session's prunedHopForm (collect-literal default / dpp — see
-    // Traverse.prunedHopForm for the measured A/B).
+    // itself runs no per-step job.
     val walkCount = seeds.count()
     // resolved once per run, not per step (one env/conf read)
     val broadcastLimit = Traverse.effectiveBroadcastLimit(seeds.sparkSession)
@@ -139,14 +129,9 @@ object RandomWalks {
         broadcastLimit)
       // checkpoint each frontier: without it, the final union's branch
       // for step k re-executes every join 1..k (edges scanned 1+2+…+steps
-      // times). It must be the EAGER localCheckpoint, not a lazy
-      // persist(): a pruned step's DPP subquery runs as its own job
-      // BEFORE the main action fills any cache, so with persist() step
-      // k's subquery re-executed the whole chain 1..k−1 cold (measured
-      // 19 → 69 s at sf10, aged unaffected — the filled cache hid it).
-      // A checkpointed frontier is a materialized leaf either way, and
-      // its fill is one row per walk — the same tiny job the old
-      // per-step bucket collect used to pay.
+      // times). It is the EAGER localCheckpoint, not a lazy persist(), so
+      // no job run before the main action re-executes steps 1..k−1
+      // (BENCHNOTES r17 lazy DPP entry); its fill is one row per walk.
       frontier = cand.groupBy("walk_id")
         .agg(min(struct(col("pri"), col("cand"))).as("m"))
         .select(col("walk_id"), col("m.cand").as("node"))

@@ -87,9 +87,8 @@ object Traverse {
     else math.min(static, maxResultBytes / 48L)
 
   /** Validate a GRAFT_BCAST_LIMIT value — fail fast with a named message
-    * (the GRAFT_KCORE_DEG / GRAFT_GRAPH_STORAGE discipline) instead of a
-    * bare NumberFormatException deep inside query construction
-    * (ADVICE r16 #3).
+    * instead of a bare NumberFormatException deep inside query
+    * construction.
     */
   private[graft] def parseBcastLimit(v: String): Long = {
     val n = try v.trim.toLong catch {
@@ -107,18 +106,6 @@ object Traverse {
     * result.
     */
   val FrontierBloomFpp: Double = 0.02
-
-  /** Over-limit-frontier strategy: `bloom` or `chunked` — see the
-    * fallback branch in kHopCore. Env GRAFT_KHOP_FALLBACK for tool
-    * sessions; the system property is the in-process test hook.
-    */
-  private[graft] def bigFrontierFallback: String = {
-    val v = sys.props.get("graft.khop.fallback")
-      .orElse(sys.env.get("GRAFT_KHOP_FALLBACK")).getOrElse("chunked")
-    require(v == "bloom" || v == "chunked",
-      s"GRAFT_KHOP_FALLBACK must be bloom|chunked, got '$v'")
-    v
-  }
 
   /** One broadcastable frontier slice of the chunked big-frontier
     * fallback: either a group of WHOLE buckets (the common case — the
@@ -181,33 +168,6 @@ object Traverse {
     Some(subSlices ++ bucketSlices)
   }
 
-  /** Pruned-hop bucket-filter form: `collect` (default — collect the
-    * frontier's ≤`buckets` bucket ids, one tiny job over the checkpointed
-    * frontier, and push a literal `bk IN (...)`) or `dpp` (the bucket key
-    * rides the hop join and dynamic partition pruning pushes it into the
-    * scan at runtime — zero driver collects, fully lazy hops).
-    *
-    * VERDICT r16 #5 asked for the dpp form; it was built, it FIRES
-    * (R17OpsSpec pins dynamicpruning in the plan and runtime
-    * numFiles = |span|), and it LOSES: the DPP subquery + its
-    * SubqueryBroadcast run as extra serialized jobs before each hop's
-    * scan stage, measured ~+0.75-1.0 s per pruned hop at sf10/2048 parts
-    * (same-binary A/B, BENCHNOTES r17: khop_2 aged 1.76 → 3.27 s, walks
-    * 1.75 → 8.2 s at four pruned steps; rows identical). The collect is
-    * ≤256 ints over an already-materialized frontier — strictly cheaper
-    * than the subquery jobs that replace it, at any scale (the collect
-    * cost is O(buckets), not O(frontier)). So `collect` stays the
-    * default and `dpp` stays replayable for future Spark versions to
-    * re-measure.
-    */
-  private[graft] def prunedHopForm: String = {
-    val v = sys.props.get("graft.khop.prune")
-      .orElse(sys.env.get("GRAFT_KHOP_PRUNE")).getOrElse("collect")
-    require(v == "dpp" || v == "collect",
-      s"GRAFT_KHOP_PRUNE must be dpp|collect, got '$v'")
-    v
-  }
-
   def kHopIds(edges: DataFrame, seed: Long, k: Int): DataFrame =
     kHopCore(DerivedGraph.undirected(edges), None, seed, k,
       effectiveBroadcastLimit(edges.sparkSession))
@@ -224,7 +184,7 @@ object Traverse {
     *    cutoff = buckets (prune whenever the frontier misses ≥1 bucket;
     *    measured full/parquet 1.29 — the two reads are the same read).
     *  - `default` (deserialized columnar cache): measured full/parquet
-    *    0.51 at sf10 (AdjReadAB, sum over both endpoint columns — a bare
+    *    0.51 at sf10 (BENCHNOTES r16, sum over both endpoint columns — a bare
     *    count() reads only footer metadata and measures nothing) →
     *    cutoff = buckets/2, the r15 constant confirmed by direct
     *    measurement.
@@ -290,8 +250,8 @@ object Traverse {
     *     map-side hash join with no fp padding. The Bloom pre-filter
     *     ([[graft.functions.LongBloomMightContain]] probed INSIDE the
     *     scan stage, exchange carries only frontier-incident candidates
-    *     +fpp) remains the fallback for unbucketed adjacencies,
-    *     GRAFT_KHOP_FALLBACK=bloom, and pathological per-cell skew.
+    *     +fpp) remains the fallback for unbucketed adjacencies and
+    *     pathological per-cell skew.
     */
   def kHopIdsAdj(adj: DerivedGraph.Adj, seed: Long, k: Int,
       broadcastLimit: Long = broadcastRowLimit): DataFrame = {
@@ -302,7 +262,7 @@ object Traverse {
       math.min(broadcastLimit, effectiveBroadcastLimit(adj.full.sparkSession)))
   }
 
-  private def kHopCore(und: DataFrame, byBucket: Option[(DataFrame, Int, Int)],
+  private[graft] def kHopCore(und: DataFrame, byBucket: Option[(DataFrame, Int, Int)],
       seed: Long, k: Int, broadcastLimit: Long): DataFrame = {
     val spark = und.sparkSession
     import spark.implicits._
@@ -321,12 +281,11 @@ object Traverse {
       // pruned-vs-full choice uses the span ESTIMATED from the
       // already-tracked frontier row count ([[expectedSpan]] — no job);
       // estimate-vs-exact differs only near the cutoff and only in plan
-      // CHOICE, never rows. The bucket filter itself takes one of two
-      // forms ([[prunedHopForm]]): the default collects the ≤`nb` bucket
-      // ids into a literal `bk IN (...)`; the `dpp` form rides the hop
-      // join (measured slower — see prunedHopForm's scaladoc). An
-      // over-limit frontier cannot broadcast, so those hops go to the
-      // full view's Bloom/chunked fallbacks below.
+      // CHOICE, never rows. The bucket filter collects the ≤`nb` bucket
+      // ids into a literal `bk IN (...)`; a lazy DPP form was measured
+      // slower (BENCHNOTES r17 lazy DPP entry). An over-limit frontier
+      // cannot broadcast, so those hops go to the full view's
+      // Bloom/chunked fallbacks below.
       val prunedHop = byBucket match {
         // `< nb` keeps the pre-r17 exclusion: a full-span "pruned" hop is
         // the same scan as the full view plus a pointless bucket filter
@@ -350,24 +309,15 @@ object Traverse {
       // secondary hash — no uniform-occupancy assumption anywhere, so a
       // skewed frontier can never push a broadcast collect past
       // maxResultSize (the failure class ADVICE r17 flagged). Requires
-      // the bucketed adjacency; without it (or under GRAFT_KHOP_FALLBACK=
-      // bloom, or on pathological per-cell skew) the Bloom path stands.
-      val chunkedFallback = bigFrontierFallback == "chunked"
+      // the bucketed adjacency; without it (or on pathological per-cell
+      // skew) the Bloom path stands.
       val nbrs = prunedHop match {
-        case Some((raw, nb)) if prunedHopForm == "collect" =>
+        case Some((raw, nb)) =>
           val bks = frontier
             .select(pmod(col("id"), lit(nb.toLong)).cast("int").as("bk"))
             .distinct().collect().map(_.getInt(0)).toSeq
           raw.filter(col("bk").isin(bks.map(Integer.valueOf): _*))
             .join(broadcast(frontierA), Seq("a"))
-        case Some((raw, nb)) =>
-          // the bk >= 0 filter is semantically identity (pmod is
-          // non-negative) but satisfies DPP's likely-selective
-          // filtering-side heuristic
-          val fab = frontierA
-            .withColumn("bk", pmod(col("a"), lit(nb.toLong)).cast("int"))
-            .filter(col("bk") >= 0)
-          raw.join(broadcast(fab), Seq("a", "bk"))
         case None =>
         if (frontierRows <= broadcastLimit)
           und.join(broadcast(frontierA), Seq("a"))
@@ -383,7 +333,7 @@ object Traverse {
             und.filter(probe).join(frontierA, Seq("a"))
           }
           byBucket match {
-            case Some((raw, nb, _)) if chunkedFallback =>
+            case Some((raw, nb, _)) =>
               val fan = subSplitFan(frontierRows, broadcastLimit)
               // one combinable agg over the checkpointed frontier —
               // O(buckets·fan) rows collected, never O(frontier)

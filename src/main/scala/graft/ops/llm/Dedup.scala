@@ -484,7 +484,7 @@ object Dedup {
     *     never a bytes-derived guess; no job.
     *  3. one exact `docs.count()` job — the only remaining shape is a
     *     DERIVED docs input with no count anywhere; for bare parquet
-    *     that count is row-group metadata only (the AdjReadAB lesson),
+    *     that count is row-group metadata only (BENCHNOTES r16),
     *     and one construction-time job is inside the QueryDef contract.
     *
     * Gate v2's bytes/8 fast path is GONE (ADVICE r17): sizeInBytes for a

@@ -7,6 +7,41 @@ class EntrySpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("engine code reads no runtime switch beyond GRAFT_BCAST_LIMIT") {
+    // one code path per operator: a new sys.props / GRAFT_* env read
+    // outside graft.tools fails here, so it shows up in review
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Iterator.iterate(Paths.get("").toAbsolutePath)(_.getParent)
+      .takeWhile(_ != null)
+      .map(_.resolve("src/main/scala/graft"))
+      .find(Files.isDirectory(_))
+      .getOrElse(fail("src/main/scala/graft not found above the working directory"))
+    val files = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && !p.startsWith(root.resolve("tools")))
+      .toSeq
+    assert(files.size > 20)
+    val jvmProps = Set("java.io.tmpdir", "user.name")
+    def envOk(key: String) = key == "GRAFT_BCAST_LIMIT" || key.startsWith("SPARK_GRAFT_")
+    // a read is allowed only with a literal key; group 1 is that key
+    val envRead = """(?:sys\.env|System\.getenv)(?:(?:\.(?:get|getOrElse|contains|apply))?\s*\(\s*"([^"]*)")?""".r
+    val propRead = """System\.getProperty(?:\s*\(\s*"([^"]*)")?""".r
+    val graftLit = """"(GRAFT_\w+)""".r
+    val violations = files.flatMap { f =>
+      val src = new String(Files.readAllBytes(f), "UTF-8")
+      val where = root.relativize(f)
+      def keys(r: scala.util.matching.Regex) =
+        r.findAllMatchIn(src).map(m => Option(m.group(1))).toSeq
+      def show(k: Option[String]) = k.getOrElse("<non-literal key>")
+      (if (src.contains("sys.props")) Seq(s"$where: sys.props") else Nil) ++
+        keys(envRead).filterNot(_.exists(envOk)).map(k => s"$where: env ${show(k)}") ++
+        keys(propRead).filterNot(_.exists(jvmProps)).map(k => s"$where: property ${show(k)}") ++
+        graftLit.findAllMatchIn(src).map(_.group(1))
+          .filter(_ != "GRAFT_BCAST_LIMIT").map(k => s"$where: literal $k")
+    }
+    assert(violations.isEmpty, violations.mkString("new runtime switches:\n", "\n", ""))
+  }
+
   test("every oracle key has a query; names are unique and non-empty") {
     val q = SparkEntry.queries
     assert(SparkEntry.oracleSql.keySet.subsetOf(q.keySet))

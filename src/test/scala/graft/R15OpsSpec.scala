@@ -88,7 +88,8 @@ class R15OpsSpec extends SparkSpec {
 
   test("kHopIdsAdj big-frontier Bloom path (broadcastLimit=1) is exact") {
     // synthetic adjacency frame with the Adj shape: every hop past the
-    // seed exceeds broadcastLimit=1, forcing the Bloom+shuffle-join path
+    // seed exceeds broadcastLimit=1. The bucketed adjacency takes the
+    // chunked slices; the unbucketed one the Bloom+shuffle-join path
     val edges = Seq((1L, 2L, "e"), (1L, 3L, "e"), (2L, 4L, "e"),
       (3L, 5L, "e"), (4L, 6L, "e"), (7L, 8L, "e")).toDF("src", "dst", "label")
     val und = DerivedGraph.undirected(edges)
@@ -98,6 +99,9 @@ class R15OpsSpec extends SparkSpec {
     val got = graft.ops.Traverse.kHopIdsAdj(adj, 1L, 3, broadcastLimit = 1L)
       .as[Long].collect().toSet
     assert(got == ref && ref == Set(1L, 2L, 3L, 4L, 5L, 6L))
+    val bloom = graft.ops.Traverse.kHopCore(DerivedGraph.undirected(edges), None,
+      1L, 3, broadcastLimit = 1L).as[Long].collect().toSet
+    assert(bloom == ref)
   }
 
   test("bucketedDegrees: no exchange in the count plan; kcore values unchanged") {

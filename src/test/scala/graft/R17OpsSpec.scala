@@ -101,89 +101,9 @@ class R17OpsSpec extends SparkSpec {
       .withColumn("bk", pmod(col("a"), lit(4L)).cast("int"))
     val adj = DerivedGraph.Adj(und, und, 4)
     val ref = Traverse.kHopIds(edges, 1L, 3).as[Long].collect().toSet
-    sys.props("graft.khop.fallback") = "chunked"
-    try {
-      val got = Traverse.kHopIdsAdj(adj, 1L, 3, broadcastLimit = 1L)
-        .as[Long].collect().toSet
-      assert(got == ref && ref == Set(1L, 2L, 3L, 4L, 5L, 6L))
-    } finally sys.props.remove("graft.khop.fallback")
-    val bad = intercept[IllegalArgumentException] {
-      sys.props("graft.khop.fallback") = "magic"
-      try Traverse.kHopIdsAdj(adj, 1L, 3, broadcastLimit = 1L).count()
-      finally sys.props.remove("graft.khop.fallback")
-    }
-    assert(bad.getMessage.contains("GRAFT_KHOP_FALLBACK"))
-  }
-
-  test("hop join on (a, bk) dynamic-partition-prunes the adjacency scan") {
-    // the mechanism behind the r17 lazy pruned hops (VERDICT r16 #5): a
-    // broadcast frontier carrying its pmod bucket joins the partitioned
-    // adjacency on (a, bk), and DPP pushes the frontier's ACTUAL bucket
-    // set into the scan at runtime — no driver collect of bucket ids.
-    // Pinned here against the real sf0.001 adjacency layout so a Spark
-    // upgrade that stops firing DPP on this shape fails loudly.
-    val sf001 = "/root/testdata/sf0.001"
-    assume(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(sf001)),
-      "testdata sf0.001 not present")
-    val adj = graft.model.DerivedGraph.undAdjacency(spark, sf001)
-    val frontier = adj.full.select(col("a").as("id")).distinct()
-      .orderBy("id").limit(3).localCheckpoint()
-    val fab = frontier.select(col("id").as("a"),
-      pmod(col("id"), lit(adj.buckets.toLong)).cast("int").as("bk"))
-      .filter(col("bk") >= 0)
-    val hop = adj.byBucket.join(broadcast(fab), Seq("a", "bk"))
-    val rows = hop.collect().length
-    assert(rows > 0)
-    val plan = hop.queryExecution.executedPlan
-    assert(plan.toString.contains("dynamicpruning"),
-      s"DPP did not fire on the (a, bk) hop join:\n$plan")
-    def walk(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] =
-      p.collect { case x => x }.flatMap {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walk(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          walk(q.plan)
-        case x => Seq(x)
-      }
-    val scanned = walk(plan).collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-        s.metrics.get("numFiles").map(_.value).getOrElse(-1L)
-    }
-    // ≤3 distinct seeds touch ≤3 of the 256 bucket directories — the scan
-    // must have read the pruned set, not the whole layout
-    assert(scanned.nonEmpty && scanned.forall(n => n >= 1L && n <= 3L),
-      s"adjacency scan not runtime-pruned (numFiles=$scanned):\n$plan")
-  }
-
-  test("dpp pruned-hop form: traversal and walk parity with the collect default") {
-    // GRAFT_KHOP_PRUNE=dpp is the lazy form kept replayable (it measured
-    // slower — Traverse.prunedHopForm scaladoc); its rows must stay
-    // identical to the default on both traversal families
-    val sf001 = "/root/testdata/sf0.001"
-    assume(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(sf001)),
-      "testdata sf0.001 not present")
-    val adj = graft.model.DerivedGraph.undAdjacency(spark, sf001)
-    val seeds = (1L to 4L).map(graft.model.DerivedGraph.CustomerBase + _).toDF("walk_id")
-    val refHop = Traverse.kHopIdsAdj(adj, QueriesGraph.custSeed, 2)
+    val got = Traverse.kHopIdsAdj(adj, 1L, 3, broadcastLimit = 1L)
       .as[Long].collect().toSet
-    val refWalk = graft.ops.RandomWalks.walksAdj(seeds, adj, steps = 3)
-      .as[(Long, Long, Long)].collect().toSet
-    sys.props("graft.khop.prune") = "dpp"
-    try {
-      val gotHop = Traverse.kHopIdsAdj(adj, QueriesGraph.custSeed, 2)
-        .as[Long].collect().toSet
-      val gotWalk = graft.ops.RandomWalks.walksAdj(seeds, adj, steps = 3)
-        .as[(Long, Long, Long)].collect().toSet
-      assert(gotHop == refHop)
-      assert(gotWalk == refWalk)
-    } finally sys.props.remove("graft.khop.prune")
-    val bad = intercept[IllegalArgumentException] {
-      sys.props("graft.khop.prune") = "magic"
-      try Traverse.prunedHopForm
-      finally sys.props.remove("graft.khop.prune")
-    }
-    assert(bad.getMessage.contains("GRAFT_KHOP_PRUNE"))
+    assert(got == ref && ref == Set(1L, 2L, 3L, 4L, 5L, 6L))
   }
 
   test("adamic-adar weight table: exact fixed-point of 1e9/ln(df), decreasing") {
@@ -220,5 +140,9 @@ class R17OpsSpec extends SparkSpec {
     assert(builds.keySet == Set("ok"))
     // the map stays summable: no -1.0 sentinel subtracting fake credit
     assert(builds.values.forall(_ >= 0.0))
+    // a fatal error is not swallowed: it ends the run
+    intercept[OutOfMemoryError](
+      Bench.warmStepInto(builds, failed, "oom")(throw new OutOfMemoryError("synthetic")))
+    assert(failed == Seq("boom"))
   }
 }
