@@ -154,16 +154,26 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     withVertices.insertEdges(newEdges)
   }
 
-  /** `find_neighbors` (mongraph.py:228-250). */
+  /** `find_neighbors` (mongraph.py:228-250): the neighbour vertex rows,
+    * `id` first. A neighbour set held on the driver is probed in the
+    * vertex scan, with no join.
+    */
   def neighbors(vertexId: Long): DataFrame =
-    Traverse.neighborIds(edges, vertexId).join(vertices, Seq("id"))
+    Traverse.neighbors(edges, vertexId, Traverse.broadcastRowLimit) match {
+      case Traverse.Held(ids) => vertices.filter(ids.contains(col("id")))
+        .select((col("id") +: vertices.columns.filter(_ != "id").map(col)).toSeq: _*)
+      case ids => ids.toDF.join(vertices, Seq("id"))
+    }
 
-  /** k-hop ego vertex set (`_explode_node` intent, mongraph.py:252-274). */
+  /** k-hop ego vertex set (`_explode_node` intent, mongraph.py:252-274);
+    * the frontiers stay on the driver while they fit (see [[Traverse]]).
+    */
   def kHop(vertexId: Long, depth: Int): DataFrame =
     Traverse.kHopIds(edges, vertexId, depth)
 
   /** `build_graph` (mongraph.py:276-303): depth-bounded ego subgraph as a
-    * JSON document (default depth 4 as the reference hard-codes).
+    * JSON document (default depth 4 as the reference hard-codes), built
+    * on the driver from one vertex and one edge collect.
     */
   def buildGraphJson(rootId: Long, depth: Int = 4): String =
     Traverse.egoSubgraphJson(vertices, edges, rootId, depth)

@@ -82,13 +82,17 @@ object Tables {
     try {
       stream.filter(p => java.nio.file.Files.isRegularFile(p) &&
           p.getFileName.toString.endsWith(".parquet"))
-        .mapToLong { p =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(p.toUri), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }.sum()
+        .mapToLong(p => parquetFileRows(conf, p.toUri)).sum()
     } finally stream.close()
+  }
+
+  /** Row count of one parquet file, from its footer. */
+  private[model] def parquetFileRows(conf: org.apache.hadoop.conf.Configuration,
+      file: java.net.URI): Long = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file), conf))
+    try r.getRecordCount finally r.close()
   }
 
   /** The events table stores `ts` as parquet TIMESTAMP(NANOS), which Spark's

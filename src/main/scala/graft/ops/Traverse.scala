@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.HeldIds
 import graft.model.DerivedGraph
 
 /** Traversal operators — the reference's read path re-expressed as frontier
@@ -9,40 +10,101 @@ import graft.model.DerivedGraph
   *
   * The reference issues one unindexed `\$or` edge-collection scan per
   * frontier vertex per level and revisits neighbors exponentially (no
-  * visited set; mongraph.py:236-241, 252-274). Here each hop is ONE shuffle
-  * join of the undirected edge view against the frontier, with a visited-set
-  * anti-join and `localCheckpoint()` per round to cut lineage growth —
-  * O(depth) stages regardless of fan-out.
+  * visited set; mongraph.py:236-241, 252-274). Here a hop is ONE scan of
+  * the undirected edge view against the whole frontier with visited-set
+  * dedup — O(depth) jobs regardless of fan-out.
+  *
+  * A frontier or visited set that fits [[effectiveBroadcastLimit]] stays
+  * on the driver as a sorted primitive array ([[HeldIds]]). Its hop
+  * probes the frontier's broadcast sorted array inside the adjacency scan,
+  * collects the distinct neighbours through one shuffle and subtracts
+  * the visited set on the driver: two jobs per hop, no checkpoint. The
+  * hop collects only when an upper bound on the rows it reads, known
+  * before it runs, is within the limit: the edge view's row count (free
+  * for a loaded cache, else one count per k-hop call) or, on the bucketed
+  * adjacency, the summed footer row counts of the buckets the frontier
+  * hits. Otherwise — and for every frontier over the limit — the hop
+  * anti-joins the visited set on the executors and `localCheckpoint()`s
+  * the new frontier, which comes back to the driver once it fits again.
   */
 object Traverse {
+
+  /** A traversal id set: held on the driver while it fits the broadcast
+    * limit, a DataFrame past it. */
+  private[graft] sealed trait IdSet { def toDF: DataFrame }
+  private[graft] final case class Held(ids: HeldIds) extends IdSet {
+    def toDF: DataFrame = ids.toDF
+  }
+  private[graft] final case class Spread(toDF: DataFrame) extends IdSet
+
+  /** Rows of `df` whose column `c` is in `ids`, in `df`'s column order: a
+    * probe of the held set in the scan, a semi-join otherwise. */
+  private def within(df: DataFrame, c: String, ids: IdSet): DataFrame =
+    ids match {
+      case Held(h) => df.filter(h.contains(col(c)))
+      case Spread(s) => df.join(s.select(col("id").as(c)), Seq(c), "left_semi")
+        .select(df.columns.map(col).toSeq: _*)
+    }
+
+  /** The row count of `df` when Spark knows it exactly without a job: a
+    * loaded cache (its build counted the rows) or a local relation. */
+  private def knownRows(df: DataFrame): Option[Long] = {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    df.queryExecution.optimizedPlan match {
+      case r: InMemoryRelation if r.cacheBuilder.isCachedColumnBuffersLoaded =>
+        r.computeStats().rowCount.map(_.toLong)
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        Some(l.data.length.toLong)
+      case _ => None
+    }
+  }
+
+  /** Upper bound on the rows of `df`: [[knownRows]], else a count in one
+    * job (an RDD count; `Dataset.count` adds a shuffle job under AQE). */
+  private def rowBound(df: DataFrame): Long =
+    knownRows(df).getOrElse(df.select(lit(1)).rdd.count())
 
   /** Undirected 1-hop neighborhood. Matches `find_neighbors` semantics
     * exactly: only the endpoints of *found* incident edges are collected
     * (mongraph.py:243-245) — the seed appears in its own result iff it has
     * at least one incident edge, and an isolated vertex returns the empty
     * set. The seed predicate is pushed into the edge scan on BOTH endpoint
-    * columns (no undirected-view materialization).
+    * columns (no undirected-view materialization). A NULL endpoint is no
+    * vertex and is never returned.
     */
   def neighborIds(edges: DataFrame, seed: Long): DataFrame =
-    edges.filter(col("src") === seed || col("dst") === seed)
+    neighbors(edges, seed, broadcastRowLimit).toDF
+
+  /** [[neighborIds]] as an [[IdSet]]. When Spark knows the edge count
+    * without a job and the undirected view fits the limit, the endpoints
+    * of the incident edges are collected in one job and deduplicated on
+    * the driver; otherwise they stay a `distinct` frame, so a one-hop read
+    * never scans the edges twice. */
+  private[graft] def neighbors(edges: DataFrame, seed: Long, broadcastLimit: Long): IdSet = {
+    val endpoints = edges.filter(col("src") === seed || col("dst") === seed)
       .select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
+      .filter(col("id").isNotNull)
+    if (knownRows(edges).exists(2L * _ <= limitFor(edges, broadcastLimit)))
+      Held(HeldIds(edges.sparkSession, endpoints.collect().map(_.getLong(0))))
+    else Spread(endpoints.distinct())
+  }
+
+  /** A caller's limit capped by what this session can collect. */
+  private def limitFor(df: DataFrame, broadcastLimit: Long): Long =
+    math.min(broadcastLimit, effectiveBroadcastLimit(df.sparkSession))
 
   /** Depth-bounded k-hop closure with visited-set dedup — the *intent* of
     * `_explode_node` (mongraph.py:252-274; the letter crashes, SURVEY §2.3
     * items 1-2). Returns the visited vertex-id set including the seed.
     *
-    * Each hop joins the undirected edge view against the frontier. While
-    * the frontier is small (the ego-query regime) it is broadcast, so the
-    * hop is a map-side hash join — the edge table is never shuffled. Once
-    * the visited set outgrows [[broadcastRowLimit]] (possible at depth ≥
-    * graph diameter on a 100 TB graph) the hint is dropped and the hop
-    * falls back to AQE's join choice. Row counts are cheap: only the
-    * frontier is localCheckpoint'ed (its `count()` reads cached partition
-    * sizes), and the visited size is tracked incrementally — `visited`
-    * itself stays a plain union over the checkpointed frontiers.
+    * This limit is the largest id set a traversal holds on the driver and
+    * ships to the executors as one broadcast (see the object doc): the
+    * frontier, the visited set and a hop's collected output. Past it a
+    * frontier stays a checkpointed DataFrame and the visited anti-join
+    * shuffles (possible at depth ≥ graph diameter on a 100 TB graph).
     *
-    * 25M ids ≈ 200 MB serialized / ~1.5 GB hashed — one copy per executor,
+    * 25M ids ≈ 200 MB as a held array (~1.5 GB as a slice's hashed
+    * broadcast relation past the limit) — one copy per executor,
     * inside a normal executor's memory budget, and two orders of magnitude
     * cheaper than the alternative: the r15 sf100 probe measured ego's
     * hop-4 frontier (20M ids) just over the previous 5M limit, sending the
@@ -169,8 +231,15 @@ object Traverse {
   }
 
   def kHopIds(edges: DataFrame, seed: Long, k: Int): DataFrame =
-    kHopCore(DerivedGraph.undirected(edges), None, seed, k,
-      effectiveBroadcastLimit(edges.sparkSession))
+    visit(edges, seed, k, broadcastRowLimit).toDF
+
+  /** [[kHopIds]] as an [[IdSet]]; a hop's read is bounded by the rows of
+    * the undirected edge view, 2|E|. */
+  private[graft] def visit(edges: DataFrame, seed: Long, k: Int, broadcastLimit: Long): IdSet = {
+    val limit = limitFor(edges, broadcastLimit)
+    lazy val undRows = 2L * rowBound(edges)
+    hops(DerivedGraph.undirected(edges), None, seed, k, limit, _ => undRows <= limit)
+  }
 
   /** Bucket-span cutoff for the pruned-parquet hop path, PER STORAGE
     * POLICY (VERDICT r15 #4 — the break-even is a property of what a
@@ -219,12 +288,12 @@ object Traverse {
   val PrunedScanMinBytes: Long = 64L << 20
 
   /** Expected number of distinct pmod-buckets hit by `f` ids spread
-    * uniformly over `nb` buckets: nb·(1 − (1 − 1/nb)^f). Replaces the
-    * per-hop driver collect of the exact bucket set in the pruned-vs-full
-    * decision (VERDICT r16 #5) — the estimate is within a few buckets of
-    * the exact span for hash-spread ids, and a miss only flips a
-    * near-cutoff hop's PLAN (pruned vs cached-full), never its rows. The
-    * pow underflows to 0 for f ≫ nb·ln nb, correctly saturating at nb.
+    * uniformly over `nb` buckets: nb·(1 − (1 − 1/nb)^f) — the random-walk
+    * step's pruned-vs-full decision, whose walker set is never on the
+    * driver. The estimate is within a few buckets of the exact span for
+    * hash-spread ids, and a miss only flips a near-cutoff step's PLAN
+    * (pruned vs cached-full), never its rows. The pow underflows to 0 for
+    * f ≫ nb·ln nb, correctly saturating at nb.
     */
   private[graft] def expectedSpan(f: Long, nb: Int): Int =
     if (f <= 0L) 0
@@ -237,183 +306,237 @@ object Traverse {
     * Semantically identical to [[kHopIds]] (R15OpsSpec pins row-for-row
     * parity); the difference is pure plan shape, two prunings per hop:
     *
-    *  1. PARTITION PRUNING: the frontier's bucket set (≤ `adj.buckets`
-    *     values, one tiny distinct over the checkpointed frontier) is
-    *     pushed as a `bk IN (...)` literal filter, so the hop scans only
-    *     the adjacency directories the frontier touches — a depth-1/2
-    *     frontier reads a few files instead of the 2|E| copy, and the
-    *     filter is dropped entirely once every bucket is hit.
-    *  2. CHUNKED SLICES past the broadcast limit (default since r18 —
-    *     VERDICT r17 #1): the frontier splits into measured-size
-    *     bucket-grouped slices, each broadcast against only its own
-    *     bucket directories ([[packSlices]]), so every hop join stays a
-    *     map-side hash join with no fp padding. The Bloom pre-filter
-    *     ([[graft.functions.LongBloomMightContain]] probed INSIDE the
-    *     scan stage, exchange carries only frontier-incident candidates
-    *     +fpp) remains the fallback for unbucketed adjacencies and
-    *     pathological per-cell skew.
+    *  1. PARTITION PRUNING: a held frontier's bucket set (`pmod` on the
+    *     driver, no job) is pushed as a `bk IN (...)` literal filter, so
+    *     the hop scans only the adjacency directories the frontier
+    *     touches — a depth-1/2 frontier reads a few files instead of the
+    *     2|E| copy — while the span stays within [[spanCutoff]].
+    *  2. CHUNKED SLICES past the broadcast limit: the frontier splits
+    *     into measured-size bucket-grouped slices, each broadcast against
+    *     only its own bucket directories ([[packSlices]]), so every hop
+    *     join stays a map-side hash join with no fp padding. The Bloom
+    *     pre-filter ([[graft.functions.LongBloomMightContain]] probed
+    *     INSIDE the scan stage, exchange carries only frontier-incident
+    *     candidates +fpp) remains the fallback for unbucketed adjacencies
+    *     and pathological per-cell skew.
+    *
+    * A hop's read is bounded by the loaded full view's row count when
+    * that fits, else by the footer row counts of the buckets it hits
+    * ([[DerivedGraph.Adj.bucketRows]]).
     */
   def kHopIdsAdj(adj: DerivedGraph.Adj, seed: Long, k: Int,
       broadcastLimit: Long = broadcastRowLimit): DataFrame = {
-    // an explicit caller limit is still capped by what this session's
-    // maxResultSize can actually collect (ADVICE r15 #1)
-    kHopCore(adj.full, Some((adj.byBucket, adj.buckets, spanCutoff(adj))),
-      seed, k,
-      math.min(broadcastLimit, effectiveBroadcastLimit(adj.full.sparkSession)))
+    val limit = limitFor(adj.full, broadcastLimit)
+    val loaded = knownRows(adj.full)
+    lazy val total = rowBound(adj.full)
+    def fits(f: HeldIds): Boolean = loaded.exists(_ <= limit) || (adj.bucketRows match {
+      case Some(rows) => bucketsOf(f, adj.buckets).iterator.map(rows(_)).sum <= limit
+      case None => total <= limit
+    })
+    hops(adj.full, Some((adj.byBucket, adj.buckets, spanCutoff(adj))), seed, k, limit, fits)
+      .toDF
   }
 
+  /** k-hop over any undirected view (`a`, `b`), a hop's read bounded by
+    * the view's row count. */
   private[graft] def kHopCore(und: DataFrame, byBucket: Option[(DataFrame, Int, Int)],
       seed: Long, k: Int, broadcastLimit: Long): DataFrame = {
+    lazy val undRows = rowBound(und)
+    hops(und, byBucket, seed, k, broadcastLimit, _ => undRows <= broadcastLimit).toDF
+  }
+
+  /** The distinct `pmod(id, nb)` buckets of a held set, ascending. */
+  private def bucketsOf(f: HeldIds, nb: Int): Array[Int] = {
+    val hit = new Array[Boolean](nb)
+    f.ids.foreach(x => hit(Math.floorMod(x, nb.toLong).toInt) = true)
+    (0 until nb).filter(hit(_)).toArray
+  }
+
+  /** The hop loop. `fits(f)` says whether an upper bound on the rows a
+    * hop from the held frontier `f` reads is within `limit`; only then is
+    * the hop's output collected. */
+  private def hops(und: DataFrame, byBucket: Option[(DataFrame, Int, Int)],
+      seed: Long, k: Int, limit: Long, fits: HeldIds => Boolean): IdSet = {
     val spark = und.sparkSession
-    import spark.implicits._
-    var visited = Seq(seed).toDF("id").localCheckpoint()
-    var frontier = visited
+    def held(ids: Array[Long]) = HeldIds(spark, ids)
+    var visited: IdSet = Held(held(Array(seed)))
+    var frontier: IdSet = visited
     var frontierRows = 1L
     var visitedRows = 1L
     for (_ <- 1 to k if frontierRows > 0) {
-      def maybeBroadcast(df: DataFrame, rows: Long) =
-        if (rows <= broadcastLimit) broadcast(df) else df
-      // the hop's adjacency side: a frontier spanning at most `cutoff`
-      // buckets hops against the raw partitioned parquet — directory
-      // pruning, and no 2|E|-row cache fill for a narrow hop; a wider
-      // hop uses the (possibly persisted) full view, which beats a
-      // barely-pruned parquet decode where a cache exists. The
-      // pruned-vs-full choice uses the span ESTIMATED from the
-      // already-tracked frontier row count ([[expectedSpan]] — no job);
-      // estimate-vs-exact differs only near the cutoff and only in plan
-      // CHOICE, never rows. The bucket filter collects the ≤`nb` bucket
-      // ids into a literal `bk IN (...)`; a lazy DPP form was measured
-      // slower (BENCHNOTES r17 lazy DPP entry). An over-limit frontier
-      // cannot broadcast, so those hops go to the full view's
-      // Bloom/chunked fallbacks below.
-      val prunedHop = byBucket match {
-        // `< nb` keeps the pre-r17 exclusion: a full-span "pruned" hop is
-        // the same scan as the full view plus a pointless bucket filter
-        // (visible under policy none, where cutoff == nb)
-        case Some((raw, nb, cutoff)) if frontierRows <= broadcastLimit &&
-            expectedSpan(frontierRows, nb) <= cutoff &&
-            expectedSpan(frontierRows, nb) < nb => Some((raw, nb))
-        case _ => None
+      val nbrs = (frontier match {
+        case Held(f) => heldHop(und, byBucket, f)
+        case Spread(f) => spreadHop(und, byBucket, f, frontierRows, limit)
+      }).select(col("b").as("id")).filter(col("id").isNotNull).distinct()
+      val (next, rows) = (frontier, visited) match {
+        case (Held(f), Held(v)) if fits(f) =>
+          val h = held(nbrs.collect().map(_.getLong(0))).diff(v)
+          (Held(h), h.rows)
+        case _ =>
+          val fresh = (visited match {
+            case Held(v) => nbrs.filter(!v.contains(col("id")))
+            case Spread(v) => nbrs.join(v, Seq("id"), "left_anti")
+          }).localCheckpoint()
+          val n = fresh.count()
+          if (n <= limit) (Held(held(fresh.collect().map(_.getLong(0)))), n)
+          else (Spread(fresh), n)
       }
-      val frontierA = frontier.withColumnRenamed("id", "a")
-      // Chunked fallback (DEFAULT since r18 — VERDICT r17 #1): over-limit
-      // frontiers split into bucket-grouped slices, each broadcast against
-      // ONLY its own bucket directories — the broadcast join's map-side
-      // pruning without the Bloom fp padding (this shipped form measured
-      // at sf100 under a forced 1M limit, BENCHNOTES r19 "#3a" entry:
-      // 1.25× wall / 1.9× less shuffle than Bloom same-codec, rows
-      // identical, every slice ≤ limit). Slice sizes are
-      // EXACT: one combinable groupBy over the already-checkpointed
-      // frontier measures per-(bucket, sub-cell) counts, first-fit packing
-      // keeps every slice ≤ limit, and an oversize bucket re-splits by a
-      // secondary hash — no uniform-occupancy assumption anywhere, so a
-      // skewed frontier can never push a broadcast collect past
-      // maxResultSize (the failure class ADVICE r17 flagged). Requires
-      // the bucketed adjacency; without it (or on pathological per-cell
-      // skew) the Bloom path stands.
-      val nbrs = prunedHop match {
-        case Some((raw, nb)) =>
-          val bks = frontier
-            .select(pmod(col("id"), lit(nb.toLong)).cast("int").as("bk"))
-            .distinct().collect().map(_.getInt(0)).toSeq
-          raw.filter(col("bk").isin(bks.map(Integer.valueOf): _*))
-            .join(broadcast(frontierA), Seq("a"))
-        case None =>
-        if (frontierRows <= broadcastLimit)
-          und.join(broadcast(frontierA), Seq("a"))
-        else {
-          // frontier too big for ONE broadcast: measure exact slice sizes
-          // and chunk, or Bloom-prune the adjacency in the scan stage and
-          // join EXACTLY on the survivors
-          def bloomHop: DataFrame = {
-            val bf = frontier.stat.bloomFilter("id", frontierRows, FrontierBloomFpp)
-            val probe = org.apache.spark.sql.GraftShim.column(
-              graft.functions.LongBloomMightContain(
-                org.apache.spark.sql.GraftShim.expression(col("a")), bf))
-            und.filter(probe).join(frontierA, Seq("a"))
-          }
-          byBucket match {
-            case Some((raw, nb, _)) =>
-              val fan = subSplitFan(frontierRows, broadcastLimit)
-              // one combinable agg over the checkpointed frontier —
-              // O(buckets·fan) rows collected, never O(frontier)
-              val counts = frontier.select(
-                  pmod(col("id"), lit(nb.toLong)).cast("int").as("bk"),
-                  pmod(xxhash64(col("id")), lit(fan.toLong)).cast("int").as("sub"))
-                .groupBy("bk", "sub").agg(count(lit(1)).as("c"))
-                .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getLong(2))).toSeq
-              packSlices(counts, broadcastLimit, fan) match {
-                case Some(slices) =>
-                  println(s"[khop] chunked fallback: $frontierRows ids in " +
-                    s"${slices.length} measured slices of ≤$broadcastLimit " +
-                    s"(max ${slices.map(_.rows).max})")
-                  slices.map {
-                    case BucketSlice(bks, _) =>
-                      val jbks = bks.map(Integer.valueOf)
-                      raw.filter(col("bk").isin(jbks: _*)).join(
-                        broadcast(frontierA.filter(
-                          pmod(col("a"), lit(nb.toLong)).isin(jbks: _*))),
-                        Seq("a"))
-                    case SubSlice(bk, cells, sf, _) =>
-                      val jcs = cells.map(Integer.valueOf)
-                      raw.filter(col("bk") === bk).join(
-                        broadcast(frontierA.filter(
-                          pmod(col("a"), lit(nb.toLong)) === bk &&
-                            pmod(xxhash64(col("a")), lit(sf.toLong)).isin(jcs: _*))),
-                        Seq("a"))
-                  }.reduce(_ unionByName _)
-                case None => bloomHop // a single sub-cell over the limit
-              }
-            case _ => bloomHop
-          }
-        }
+      visited = (visited, next) match {
+        case (Held(v), Held(f)) if visitedRows + rows <= limit => Held(v.union(f))
+        // a union over checkpointed or driver-held leaves, depth ≤ k
+        case _ => Spread(visited.toDF.union(next.toDF))
       }
-      val next = nbrs.select(col("b").as("id")).distinct()
-      frontier = next.join(maybeBroadcast(visited, visitedRows), Seq("id"), "left_anti")
-        .localCheckpoint()
-      frontierRows = frontier.count()
-      // visited = union of already-checkpointed frontiers: its lineage is
-      // one union node over materialized leaves (depth ≤ k, never
-      // recomputed), so re-checkpointing it would only buy a redundant
-      // materialization job per hop.
-      visited = visited.union(frontier)
-      visitedRows += frontierRows
+      frontier = next
+      frontierRows = rows
+      visitedRows += rows
     }
     visited
+  }
+
+  /** The adjacency rows leaving a held frontier, probed in the scan. A
+    * frontier spanning at most `cutoff` buckets reads only its bucket
+    * directories of the partitioned parquet — no 2|E|-row cache fill for
+    * a narrow hop; a wider hop reads the (possibly persisted) full view,
+    * which beats a barely-pruned parquet decode where a cache exists. The
+    * literal `bk IN (...)` filter was measured faster than a lazy DPP
+    * form (BENCHNOTES r17 lazy DPP entry).
+    */
+  private def heldHop(und: DataFrame, byBucket: Option[(DataFrame, Int, Int)],
+      f: HeldIds): DataFrame = {
+    val side = byBucket match {
+      // `< nb`: a full-span "pruned" hop is the full scan plus a pointless
+      // bucket filter (visible under policy none, where cutoff == nb)
+      case Some((raw, nb, cutoff)) =>
+        val bks = bucketsOf(f, nb)
+        if (bks.length <= cutoff && bks.length < nb)
+          raw.filter(col("bk").isin(bks.map(Integer.valueOf).toSeq: _*))
+        else und
+      case None => und
+    }
+    side.filter(f.contains(col("a")))
+  }
+
+  /** The adjacency rows leaving a frontier too big for one broadcast:
+    * measured-size bucket-grouped slices, each broadcast against only its
+    * own bucket directories (BENCHNOTES r19 "#3a" entry: 1.25× wall and
+    * 1.9× less shuffle than Bloom at sf100 under a forced 1M limit). One
+    * combinable groupBy over the checkpointed frontier measures exact
+    * per-(bucket, sub-cell) counts and first-fit packing keeps every slice
+    * ≤ limit, so a skewed frontier can never push a broadcast collect past
+    * maxResultSize. Without the bucketed adjacency, or on pathological
+    * per-cell skew, the Bloom pre-filter and a shuffle join stand.
+    */
+  private def spreadHop(und: DataFrame, byBucket: Option[(DataFrame, Int, Int)],
+      frontier: DataFrame, frontierRows: Long, broadcastLimit: Long): DataFrame = {
+    val frontierA = frontier.withColumnRenamed("id", "a")
+    def bloomHop: DataFrame = {
+      val bf = frontier.stat.bloomFilter("id", frontierRows, FrontierBloomFpp)
+      val probe = org.apache.spark.sql.GraftShim.column(
+        graft.functions.LongBloomMightContain(
+          org.apache.spark.sql.GraftShim.expression(col("a")), bf))
+      und.filter(probe).join(frontierA, Seq("a"))
+    }
+    byBucket match {
+      case Some((raw, nb, _)) =>
+        val fan = subSplitFan(frontierRows, broadcastLimit)
+        // one combinable agg over the checkpointed frontier —
+        // O(buckets·fan) rows collected, never O(frontier)
+        val counts = frontier.select(
+            pmod(col("id"), lit(nb.toLong)).cast("int").as("bk"),
+            pmod(xxhash64(col("id")), lit(fan.toLong)).cast("int").as("sub"))
+          .groupBy("bk", "sub").agg(count(lit(1)).as("c"))
+          .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getLong(2))).toSeq
+        packSlices(counts, broadcastLimit, fan) match {
+          case Some(slices) =>
+            System.err.println(s"[khop] chunked fallback: $frontierRows ids in " +
+              s"${slices.length} measured slices of ≤$broadcastLimit " +
+              s"(max ${slices.map(_.rows).max})")
+            slices.map {
+              case BucketSlice(bks, _) =>
+                val jbks = bks.map(Integer.valueOf)
+                raw.filter(col("bk").isin(jbks: _*)).join(
+                  broadcast(frontierA.filter(
+                    pmod(col("a"), lit(nb.toLong)).isin(jbks: _*))),
+                  Seq("a"))
+              case SubSlice(bk, cells, sf, _) =>
+                val jcs = cells.map(Integer.valueOf)
+                raw.filter(col("bk") === bk).join(
+                  broadcast(frontierA.filter(
+                    pmod(col("a"), lit(nb.toLong)) === bk &&
+                      pmod(xxhash64(col("a")), lit(sf.toLong)).isin(jcs: _*))),
+                  Seq("a"))
+            }.reduce(_ unionByName _)
+          case None => bloomHop // a single sub-cell over the limit
+        }
+      case _ => bloomHop
+    }
   }
 
   /** `build_graph` intent (mongraph.py:276-303): the depth-k ego subgraph —
     * visited vertices plus the induced edges (both endpoints visited).
     */
   def egoSubgraph(vertices: DataFrame, edges: DataFrame, seed: Long, depth: Int)
-      : (DataFrame, DataFrame) = {
-    val ids = kHopIds(edges, seed, depth)
-    val vs = vertices.join(ids, Seq("id"), "left_semi")
-    val es = edges
-      .join(ids.select(col("id").as("src")), Seq("src"), "left_semi")
-      .join(ids.select(col("id").as("dst")), Seq("dst"), "left_semi")
-      .select(edges.columns.map(col).toSeq: _*)
-    (vs, es)
+      : (DataFrame, DataFrame) = ego(vertices, edges, seed, depth, broadcastRowLimit)
+
+  /** [[egoSubgraph]] under a given broadcast limit. */
+  private[graft] def ego(vertices: DataFrame, edges: DataFrame, seed: Long, depth: Int,
+      broadcastLimit: Long): (DataFrame, DataFrame) = {
+    val ids = visit(edges, seed, depth, broadcastLimit)
+    (within(vertices, "id", ids), within(within(edges, "src", ids), "dst", ids))
   }
 
   /** JSON export of a (bounded) ego subgraph — `build_graph`'s
     * `{"graph": {"vertices": ..., "edges": ...}}` shape (mongraph.py:298-303,
     * which raises on sets/ObjectIds; we emit the intended document).
-    * Canonically sorted so the output is deterministic for golden tests.
-    * Collects to the driver — only valid for depth-bounded ego sets, which
-    * is the reference's use case; full-graph export goes through
-    * `df.write.json` instead.
+    * Canonically sorted so the output is deterministic for golden tests:
+    * vertices by id, edges by (src, dst, label) and then by their JSON, so
+    * parallel edges with different props come out in one order whatever
+    * the input order. Vertex and edge rows are collected in one job each
+    * and sorted on the driver, where the document is built. Only valid for
+    * depth-bounded ego sets, which is the reference's use case; full-graph
+    * export goes through `df.write.json` instead.
     */
-  def egoSubgraphJson(vertices: DataFrame, edges: DataFrame, seed: Long, depth: Int): String = {
-    val (vs, es) = egoSubgraph(vertices, edges, seed, depth)
-    val vJson = vs.orderBy("id")
-      .select(to_json(struct(vs.columns.map(col).toSeq: _*)).as("j"))
-      .collect().map(_.getString(0))
-    val eJson = es.orderBy("src", "dst", "label")
-      .select(to_json(struct(es.columns.map(col).toSeq: _*)).as("j"))
-      .collect().map(_.getString(0))
+  def egoSubgraphJson(vertices: DataFrame, edges: DataFrame, seed: Long, depth: Int): String =
+    document(egoSubgraph(vertices, edges, seed, depth))
+
+  /** The `{"graph": ...}` document of an ego subgraph's (vertices, edges). */
+  private[graft] def document(subgraph: (DataFrame, DataFrame)): String = {
+    val (vs, es) = subgraph
+    def json(df: DataFrame) = to_json(struct(df.columns.map(col).toSeq: _*))
+    val vJson = vs.select(col("id"), json(vs)).collect()
+      .sortBy(_.getLong(0)).map(_.getString(1))
+    val eJson = es.select(col("src"), col("dst"), col("label"), json(es)).collect()
+      .map(r => EdgeDoc(r.getLong(0), r.getLong(1), r.getString(2), r.getString(3)))
+      .sorted(EdgeDocOrder).map(_.json)
     s"""{"graph":{"vertices":[${vJson.mkString(",")}],"edges":[${eJson.mkString(",")}]}}"""
   }
+
+  private final case class EdgeDoc(src: Long, dst: Long, label: String, json: String)
+
+  /** Spark's ascending order on (src, dst, label), the JSON breaking ties. */
+  private val EdgeDocOrder: Ordering[EdgeDoc] = (a, b) => {
+    val c = java.lang.Long.compare(a.src, b.src)
+    if (c != 0) c
+    else {
+      val d = java.lang.Long.compare(a.dst, b.dst)
+      if (d != 0) d
+      else {
+        val l = utf8Compare(a.label, b.label)
+        if (l != 0) l else utf8Compare(a.json, b.json)
+      }
+    }
+  }
+
+  /** Spark's string order: NULL first, then UTF-8 bytes, which is code
+    * point order (String.compareTo orders UTF-16 units instead). */
+  private def utf8Compare(a: String, b: String): Int =
+    if (a == null || b == null) java.lang.Boolean.compare(a != null, b != null)
+    else {
+      var i = 0
+      while (i < a.length && i < b.length && a.charAt(i) == b.charAt(i)) i += 1
+      if (i == a.length || i == b.length) Integer.compare(a.length, b.length)
+      else Integer.compare(a.codePointAt(i), b.codePointAt(i))
+    }
 
   /** Per-vertex undirected degree: one `explode` of both endpoints + a
     * count — map-side combinable, no join (adjacency model,
