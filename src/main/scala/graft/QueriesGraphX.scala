@@ -126,15 +126,34 @@ object QueriesGraphX {
     ()
   }
 
+  /** The affiliation subgraph (customer/supplier—nation—region) that
+    * graph_lpa and graph_modularity propagate labels over.
+    */
+  private def memberEdges(g: DerivedGraph.G) =
+    g.edges.filter(col("label").isin("in_nation", "in_region")).select("src", "dst")
+
+  /** The five-round LPA labels of the member subgraph, shared by
+    * graph_lpa and graph_modularity. The undirected view is one
+    * cross-session parquet entry: at sf10 it aged 19.2 s vs 27.1 s for a
+    * session checkpoint, with no RDD-storage footprint (BENCHNOTES r14).
+    */
+  private def memberLabels(s: org.apache.spark.sql.SparkSession, d: String) = {
+    val g = DerivedGraph(s, d)
+    GraphAnalytics.lpaDF(g.vertices.filter(col("label") =!= "part").select("id"),
+      graft.model.CacheDirs.cachedParquet(s, "graph", d, "lpa_und_member_v1")(
+        DerivedGraph.undirected(memberEdges(g))), 5)
+  }
+
   val defs: ListMap[String, QueryDef] = ListMap(
 
     // Static 10-iteration PageRank over the derived graph; top-100 by
     // rank. Runs as the deterministic DataFrame loop
-    // (GraphAnalytics.pageRankDF: DECIMAL message sums + per-iteration
-    // 6dp rounding), so the DuckDB oracle — the same ten rounds as
-    // chained CTEs with the identical rounding ladder — reproduces the
-    // values exactly. The GraphX staticPageRank variant stays as the
-    // library op and is tolerance-cross-checked in GraphAnalyticsSpec.
+    // (GraphAnalytics.pageRankDF: fixed-point LONG message sums +
+    // per-iteration 6dp rounding), so the DuckDB oracle — the same ten
+    // rounds as chained CTEs with the identical rounding ladder —
+    // reproduces the values exactly. The GraphX staticPageRank variant
+    // stays as the library op and is tolerance-cross-checked in
+    // GraphAnalyticsSpec.
     "graph_pagerank" -> QueryDef(
       (s, d) => {
         val g = graft.model.DerivedGraph(s, d)
@@ -228,27 +247,7 @@ object QueriesGraphX {
     // the library op, cross-checked at community-structure level in
     // GraphAnalyticsSpec.
     "graph_lpa" -> QueryDef(
-      (s, d) => {
-        val g = DerivedGraph(s, d)
-        val member = g.edges
-          .filter(col("label").isin("in_nation", "in_region"))
-        // und rides a CacheDirs parquet entry by DEFAULT (r14 A/B at sf10:
-        // aged 19.20 s vs the session localCheckpoint's 27.13 s, −29%, and
-        // zero RDD-storage footprint — the structural pre-emption of the
-        // kcore-class spill one decade up; columnar + cross-session beats
-        // a per-session deserialized 2|E| write even at sf10).
-        val undOverride =
-          Some(graft.model.CacheDirs.cachedParquet(s, "graph", d,
-            "lpa_und_member_v1") {
-            val e = member.select("src", "dst")
-            e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
-              .select(col("src").as("a"), col("dst").as("b"))
-          })
-        GraphAnalytics.lpaDF(
-          g.vertices.filter(col("label") =!= "part").select("id"),
-          member.select("src", "dst"), 5, undOverride = undOverride)
-          .orderBy("id")
-      },
+      (s, d) => memberLabels(s, d).orderBy("id"),
       lpaOracleSql),
 
     // Newman modularity of the LPA partition (Newman-Girvan 2004): the
@@ -261,13 +260,8 @@ object QueriesGraphX {
     // prefix, so label drift between the two queries is impossible.
     "graph_modularity" -> QueryDef(
       (s, d) => {
-        val g = DerivedGraph(s, d)
-        val member = g.edges
-          .filter(col("label").isin("in_nation", "in_region"))
-          .select("src", "dst")
-        val lbl = GraphAnalytics.lpaDF(
-          g.vertices.filter(col("label") =!= "part").select("id"),
-          member, 5)
+        val member = memberEdges(DerivedGraph(s, d))
+        val lbl = memberLabels(s, d)
         val m = member.count() // one scalar, the |E| every Q term shares
         val deg = member.select(col("src").as("a"))
           .unionAll(member.select(col("dst").as("a")))
@@ -728,14 +722,6 @@ object QueriesGraphX {
        |FROM k$CcRounds GROUP BY lbl ORDER BY n_vertices DESC, component""".stripMargin
   }
 
-  /** Generated oracle for graph_lpa: GraphAnalytics.lpaDF's five
-    * supersteps replayed as chained CTEs over the member-edge undirected
-    * view. Each round: count neighbour labels per vertex, pick the
-    * (max count, min label) winner via a fully-ordered row_number —
-    * mechanically different from Spark's lexicographic struct-max but the
-    * same argmax — then carry unchanged labels through a left join.
-    * All-BIGINT arithmetic: no rounding ladder needed.
-    */
   /** Shared CTE prefix producing `me(src,dst)` (member edges), `mu(a,b)`
     * (their undirected view) and `l5(id, lbl)` — the converged LPA
     * labels. Drives BOTH the graph_lpa and graph_modularity oracles.
@@ -760,6 +746,14 @@ object QueriesGraphX {
        | $rounds""".stripMargin
   }
 
+  /** Generated oracle for graph_lpa: GraphAnalytics.lpaDF's five
+    * supersteps replayed as chained CTEs over the member-edge undirected
+    * view. Each round: count neighbour labels per vertex, pick the
+    * (max count, min label) winner via a fully-ordered row_number —
+    * mechanically different from Spark's lexicographic struct-max but the
+    * same argmax — then carry unchanged labels through a left join.
+    * All-BIGINT arithmetic: no rounding ladder needed.
+    */
   private lazy val lpaOracleSql: String =
     s"""$lpaCtePrefix
        |SELECT id, lbl AS community FROM l5 ORDER BY id""".stripMargin

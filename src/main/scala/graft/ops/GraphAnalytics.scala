@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy, VertexId}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.reflect.ClassTag
 
@@ -54,16 +54,6 @@ object GraphAnalytics {
     */
   final val MaxCumLazyRows = 2000000L
 
-  /** Build a GraphX graph with (label, name) vertex attributes,
-    * EdgePartition2D-partitioned.
-    *
-    * Edge partitions are sized down from the SQL shuffle width: iterative
-    * Pregel jobs pay per-task overhead every superstep, so GraphX wants
-    * fewer, fatter partitions than a one-shot SQL shuffle (rule of thumb
-    * ~1M+ edges per partition; cores/4 here keeps all executors busy while
-    * cutting superstep task counts 4×). At cluster scale the same ratio
-    * holds relative to total parallelism.
-    */
   /** GraphX RDD partition count for an |E|-row edge set: cores/4 is the
     * FLOOR (fat partitions cut superstep task overhead on small graphs),
     * but it must not CAP big ones — pinned at 8, sf10's 120M edges meant
@@ -87,6 +77,16 @@ object GraphAnalytics {
     if (parts > rdd.getNumPartitions) rdd.repartition(parts)
     else rdd.coalesce(parts)
 
+  /** Build a GraphX graph with (label, name) vertex attributes,
+    * EdgePartition2D-partitioned.
+    *
+    * Edge partitions are sized down from the SQL shuffle width: iterative
+    * Pregel jobs pay per-task overhead every superstep, so GraphX wants
+    * fewer, fatter partitions than a one-shot SQL shuffle (rule of thumb
+    * ~1M+ edges per partition; cores/4 here keeps all executors busy while
+    * cutting superstep task counts 4×). At cluster scale the same ratio
+    * holds relative to total parallelism.
+    */
   def toGraphX(vertices: DataFrame, edges: DataFrame): Graph[(String, String), String] = {
     val sc = vertices.sparkSession.sparkContext
     val parts = graphParts(sc, edges.count())
@@ -132,341 +132,217 @@ object GraphAnalytics {
   def pageRank(vertices: DataFrame, edges: DataFrame, numIter: Int = 10): DataFrame =
     pageRank(toGraphX(vertices, edges), numIter)
 
-  /** Static PageRank as chained DataFrame joins, with GraphX
-    * `staticPageRank` semantics (init 1.0, directed src→dst messages,
-    * `rank' = 0.15 + 0.85·Σ rank/outdeg`, final Σranks normalized to |V|
-    * like SPARK-18847's sink correction) — but DETERMINISTIC and
-    * oracle-replayable:
-    *  - per-destination message sums accumulate as FIXED-POINT LONGS
-    *    (floor of 1e9× the per-edge contribution; see the loop comment) →
-    *    order/partitioning-independent, unlike GraphX's double `merge`;
-    *  - ranks are rounded to `roundScale` decimals after EVERY iteration,
-    *    so an external replay (the DuckDB chained-CTE oracle) that applies
-    *    the identical rounding ladder reproduces the exact values —
-    *    IEEE division/multiply/add of identical doubles is engine-invariant,
-    *    and the per-iteration round quashes any residual ULP drift before
-    *    it can compound.
-    * Cross-checked against GraphX `staticPageRank` (tolerance-based) in
-    * GraphAnalyticsSpec.
-    *
-    * Scale shape: the static (src, dst, outdeg) edge relation materializes
-    * ONCE (localCheckpoint — the same lineage-bounding pattern as the
-    * k-hop frontier and clustersDF loops; a GraphX Pregel run persists its
-    * edge RDD per superstep the same way), and the tiny |V|-row rank
-    * table checkpoints every `checkpointEvery` rounds (default 2 — see
-    * the in-loop comment for the cadence measurement). Without periodic
-    * cuts the 10 rounds stack into one ~40-join nested plan whose
-    * Catalyst/AQE optimization time DWARFS the data work (measured 38 s
-    * vs 2 s on the sf0.1 derived graph — planning, not execution); with
-    * them, each round is a flat join+agg over |V| rows (AQE broadcasts
-    * ranks against the edge table when small) and the per-round shuffle
-    * carries (dst, decimal) message rows only.
+  /** Decimal places every rank/centrality ladder rounds to, each round —
+    * the rounding the DuckDB replays apply.
     */
-  def pageRankDF(vertices: DataFrame, edges: DataFrame, numIter: Int = 10,
-      roundScale: Int = 6, checkpointEvery: Int = 2,
-      broadcastRankLimit: Long = 5000000L): DataFrame = {
-    val e = edges.select("src", "dst")
-    val ed = e.join(e.groupBy("src").agg(count(lit(1)).as("__outdeg")), "src")
-      .localCheckpoint()
-    // checkpointed frames are LogicalRDDs with UNKNOWN stats — the planner
-    // would sort-merge the big edge relation against the |V|-row rank
-    // table EVERY round (measured ~1 s/round on the sf0.1 graph, ~90% of
-    // the query). The rank/message tables are |V| rows; while that is
-    // broadcast-sized, hint it explicitly — past the limit the rounds
-    // degrade to the 3-shuffle-per-iteration plan that scales arbitrarily
-    // (same adaptive-hint policy as Traverse.broadcastRowLimit).
-    val nV = vertices.count()
-    // Overflow guard for the fixed-point LONG message sum below: the units
-    // flowing into ONE vertex are bounded by 1e9·Σranks ≈ 1e9·|V| (ranks
-    // sum to ~|V| every round), so |V| < 2⁶³/1e9 makes wraparound
-    // impossible. Fail loudly past that instead of returning silently
-    // wrong ranks in non-ANSI mode (same policy as Dedup.clustersDF).
-    require(nV < Long.MaxValue / 1000000000L,
-      s"pageRankDF: |V|=$nV exceeds the 1e9 fixed-point headroom " +
-        "(long message sums could overflow); reduce the scale factor")
-    val hintSmall: DataFrame => DataFrame =
-      if (nV <= broadcastRankLimit) broadcast(_) else identity
-    // Vertices with NO in-edges never receive a message: their rank is
-    // 1.0 at init and exactly round(0.15 + 0.85·0) = 0.15 from round 1 on
-    // — a STATIC row set, computed once. The per-round rank table is then
-    // (ranked message receivers) ∪ (this constant frame): a zero-shuffle
-    // union instead of a per-round |V|-row outer join.
-    val noIn = vertices.select("id")
-      .join(ed.select(col("dst")), col("id") === col("dst"), "left_anti")
-      .localCheckpoint()
-    // Message accumulation is FIXED-POINT LONG arithmetic, not DECIMAL:
-    // floor((rank/outdeg)·1e9) per edge, exact long sum, one double
-    // divide per receiver. Same order-independence guarantee (integer
-    // addition commutes), identical IEEE ops in the DuckDB replay — but
-    // all codegen primitives. The earlier DECIMAL cast allocated a
-    // BigDecimal PER EDGE PER ROUND (~3 s of executor CPU per round on
-    // the sf0.1 graph — the whole-query hotspot). Headroom: 2⁶³/1e9 ≈
-    // 9.2e9 rank units flowing into one vertex before overflow —
-    // raise the scale denominator before graphs get near that.
-    def rankOf(msum: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      round(lit(0.15) + lit(0.85) * msum, roundScale)
-    var ranks = vertices.select(col("id"), lit(1.0).as("rank"))
-    for (i <- 1 to numIter) {
-      val msum = hintSmall(ranks).join(ed, col("id") === col("src"))
-        .select(col("dst"),
-          floor(col("rank") / col("__outdeg") * lit(1e9)).as("__c"))
-        .groupBy("dst")
-        .agg((sum(col("__c")).cast("double") / lit(1e9)).as("__msum"))
-      // no-in vertices: round(0.15 + 0.85·0, s) = 0.15 exactly for any s≥2
-      ranks = msum.select(col("dst").as("id"), rankOf(col("__msum")).as("rank"))
-        .unionAll(noIn.select(col("id"), lit(0.15).as("rank")))
-      // cut lineage every TWO rounds (default): each materialization+
-      // convergence job costs fixed driver latency, and two stacked rounds
-      // per cut measured ~25% faster than one (3.5–5.1 s vs 4.7–8.0 s on
-      // the sf0.1 graph) while five rounds per cut regressed again (plan
-      // growth). The un-cut round's chain re-executes once inside the next
-      // broadcast build — cheaper than the extra job round-trip at this
-      // |V|; past broadcast sizes the hint drops and per-round cuts win
-      // back (pass checkpointEvery = 1). The cut itself materializes only
-      // the |V|-row rank table.
-      // eager (default) on purpose: folding the materialization into the
-      // next round's broadcast-build job (eager=false) measured SLOWER —
-      // it serializes the cut into the broadcast thread instead of a
-      // parallel dedicated job.
-      if (i % checkpointEvery == 0 || i == numIter) ranks = ranks.localCheckpoint()
-    }
-    // normalize Σranks to |V| like GraphX (SPARK-18847 sink correction):
-    // the exact-decimal total is fetched as ONE driver row and embedded as
-    // literals, no broadcast crossJoin (BENCHNOTES r19 centrality entry).
-    // t is dsum's DOUBLE and n a LONG, so the DuckDB replay is unchanged.
-    val trow = ranks.agg(graft.Qh.dsum(col("rank"), 6).as("__t"),
-      count(lit(1)).as("__n")).head()
-    val (t, n) = (trow.getDouble(0), trow.getLong(1))
-    ranks.select(col("id"),
-      round(col("rank") * lit(n) / lit(t), roundScale).as("rank"))
+  private final val RoundScale = 6
+
+  /** Rounds between lineage cuts of the PageRank ladder: two stacked
+    * rounds per cut measured ~25% faster than one on the sf0.1 graph,
+    * five regressed again (plan growth).
+    */
+  private final val CutEvery = 2
+
+  /** Largest |V| whose per-round state is broadcast-hinted against the
+    * static edges. Checkpointed frames carry unknown stats, so without
+    * the hint the planner sort-merges the edge relation every round
+    * (~90% of the sf0.1 pagerank); past it, shuffle joins scale out.
+    */
+  private final val HintRowLimit = 5000000L
+
+  /** Fixed-point units per rank of the PageRank and renormalized
+    * ladders. PageRank divides by out-degree, so its messages need the
+    * finer scale; the renormalized ladders send whole values and keep
+    * 1000× more headroom.
+    */
+  private final val RankUnit = 1000000000L
+  private final val RenormUnit = 1000000L
+
+  private def broadcastIf(small: Boolean): DataFrame => DataFrame =
+    if (small) broadcast(_) else identity
+
+  /** A static edge relation checkpointed once and right-sized, with its
+    * row count: a union arrives as many narrow partitions (134 of ~18k
+    * rows at sf0.1) and every round would re-pay that width as tasks.
+    * Coalescing the checkpoint is a narrow wrapper; target ~4M rows per
+    * partition, floored at the session's parallelism.
+    */
+  private def rightSized(edges: DataFrame): (DataFrame, Long) = {
+    val raw = edges.localCheckpoint()
+    val rows = raw.count()
+    val target = math.max(raw.sparkSession.sparkContext.defaultParallelism.toLong,
+      rows / 4000000L + 1L).toInt
+    (if (raw.rdd.getNumPartitions > target) raw.coalesce(target) else raw, rows)
   }
 
-  /** Personalized PageRank (Page et al. 1999 §6 / Jeh & Widom 2003):
-    * [[pageRankDF]]'s ladder with the teleport mass concentrated on a
-    * SEED SET instead of spread uniformly — rank(v) = round(base(v) +
-    * 0.85·msum(v), 6) per round, where base(v) = 0.15·|V|/|S| for seeds
-    * and 0 elsewhere (total teleport mass 0.15·|V|, matching the
-    * unnormalized pagerank convention so the two ladders share the
-    * fixed-point headroom analysis). The recommendation/proximity
-    * primitive: ranks measure closeness to the seeds, not global
-    * prestige.
-    *
-    * Same determinism ladder as [[pageRankDF]] (1e9 fixed-point long
-    * message sums, per-round rounding), same per-round shape (receivers ∪
-    * constant no-in frame — no-in vertices hold base(v) exactly from
-    * round 1), same lineage-cut cadence. The seed-flag join rides a
-    * broadcast of the seed id list only.
+  /** The superstep kernel of the fixed-point ladders (Pregelix's
+    * vertex⋈message join plus group-by), over a static edge relation `ed`
+    * checkpointed once per call. Per-receiver unit inflow is bounded by
+    * `unit`·Σstate ≈ `unit`·|V|, so |V| < 2⁶³/`unit` makes a wrapped long
+    * sum impossible; past it the call fails instead of returning wrong
+    * values in non-ANSI mode.
     */
-  def personalizedPageRankDF(vertices: DataFrame, edges: DataFrame,
-      seedPred: org.apache.spark.sql.Column, numIter: Int = 10,
-      roundScale: Int = 6, checkpointEvery: Int = 2,
-      broadcastRankLimit: Long = 5000000L): DataFrame = {
+  private final class Superstep(vertices: DataFrame, ed: DataFrame, unit: Long,
+      op: String) {
+    val nV: Long = vertices.count()
+    require(nV < Long.MaxValue / unit,
+      s"$op: |V|=$nV exceeds the fixed-point headroom of $unit units per rank " +
+        "(long message sums could overflow); reduce the scale factor")
+    private val hintSmall = broadcastIf(nV <= HintRowLimit)
+
+    /** Vertices no edge reaches at its `key` endpoint: they never
+      * receive a message, so their value is a constant from round 1.
+      */
+    def noReceiver(key: String): DataFrame =
+      vertices.select("id").join(ed.select(col(key)), col("id") === col(key), "left_anti")
+
+    /** One message round: the (id, …) state joins the edges on `from`,
+      * each edge sends floor(`value`·unit) to its `to` endpoint, and the
+      * messages sum as exact longs per receiver — integer addition
+      * commutes, so the sum is order- and partitioning-independent — then
+      * one IEEE divide back to double. Returns (id, __m) for receivers.
+      */
+    def gather(state: DataFrame, value: Column, from: String, to: String): DataFrame =
+      hintSmall(state).join(ed, col("id") === col(from))
+        .select(col(to), floor(value * lit(unit.toDouble)).as("__c"))
+        .groupBy(to)
+        .agg((sum(col("__c")).cast("double") / lit(unit.toDouble)).as("__m"))
+        .select(col(to).as("id"), col("__m"))
+
+    /** Width of a materialized |V|-row message table: ~2M rows per
+      * partition, capped by the session's parallelism, floored at 8. A
+      * checkpoint keeps its width, and 32 near-empty partitions per round
+      * measured 10.2 s vs 3.8 s on the sf0.1 graph.
+      */
+    private lazy val iterWidth: Int = math.max(8L, math.min(
+      vertices.sparkSession.sparkContext.defaultParallelism.toLong,
+      nV / 2000000L + 1L)).toInt
+
+    /** One L1-renormalized round of [[eigenvectorDF]] and [[hitsDF]]: the
+      * gather plus `noRecv` at 0 gives all |V| rows, renormalized to
+      * Σ = |V|. The cut lands on the message table because both the total
+      * and the projection read it; it is lazy, so the total's `head()`
+      * fills it in the same job.
+      */
+    def renormStep(state: DataFrame, stateCol: String, from: String, to: String,
+        noRecv: DataFrame, out: String): DataFrame =
+      renormalized(gather(state, col(stateCol), from, to)
+        .unionAll(noRecv.select(col("id"), lit(0.0).as("__m")))
+        .coalesce(iterWidth)
+        .localCheckpoint(eager = false), "__m", out)
+  }
+
+  /** `c` rescaled so its column sums to the row count. The exact-DECIMAL
+    * total is fetched as one driver row and enters the plan as literals
+    * (t is dsum's DOUBLE, n a LONG, so the DuckDB replays are unchanged).
+    */
+  private def renormalized(df: DataFrame, c: String, out: String): DataFrame = {
+    val row = df.agg(graft.Qh.dsum(col(c), RoundScale).as("__t"),
+      count(lit(1)).as("__n")).head()
+    val (t, n) = (row.getDouble(0), row.getLong(1))
+    df.select(col("id"), round(col(c) * lit(n) / lit(t), RoundScale).as(out))
+  }
+
+  /** The teleport term of the PageRank ladder: `attach` joins what `base`
+    * reads onto an id-keyed frame; `base` is the per-vertex term.
+    */
+  private final case class Teleport(attach: DataFrame => DataFrame, base: Column)
+
+  /** The PageRank ladder both [[pageRankDF]] and [[personalizedPageRankDF]]
+    * run: init 1.0, then `rank = round(base + 0.85·Σ rank/outdeg, 6)` per
+    * round over directed src→dst messages. `teleport` gets |V|. Vertices
+    * without in-edges hold round(base, 6) from round 1 — a static frame,
+    * so each round is receivers ∪ that frame, not a |V|-row outer join.
+    * The rank table is cut every [[CutEvery]] rounds and after the last:
+    * without cuts the rounds stack into one ~40-join plan whose planning
+    * time dwarfs the data work (38 s vs 2 s on the sf0.1 graph).
+    */
+  private def rankLadder(vertices: DataFrame, edges: DataFrame, numIter: Int, op: String)
+      (teleport: Long => Teleport): DataFrame = {
     val e = edges.select("src", "dst")
-    val ed = e.join(e.groupBy("src").agg(count(lit(1)).as("__outdeg")), "src")
-      .localCheckpoint()
-    val nV = vertices.count()
-    require(nV < Long.MaxValue / 1000000000L,
-      s"personalizedPageRankDF: |V|=$nV exceeds the 1e9 fixed-point headroom")
-    val seeds = vertices.filter(seedPred).select(col("id")).localCheckpoint()
-    val nS = seeds.count()
-    require(nS > 0, "personalizedPageRankDF: empty seed set")
-    // both engines compute the seed base as (0.15 · nV) / nS in this op
-    // order — see the generated oracle
-    val seedBase = lit(0.15) * lit(nV.toDouble) / lit(nS.toDouble)
-    val hintSmall: DataFrame => DataFrame =
-      if (nV <= broadcastRankLimit) broadcast(_) else identity
-    val seedFlag = broadcast(seeds.withColumn("__s", lit(1)))
-    // no-in vertices never receive a message: constant base(v) from
-    // round 1 (0.15·|V|/|S| for seeds, exactly 0.0 otherwise)
-    val noIn = vertices.select("id")
-      .join(ed.select(col("dst")), col("id") === col("dst"), "left_anti")
-      .join(seedFlag, Seq("id"), "left")
-      .select(col("id"),
-        when(col("__s").isNotNull, round(seedBase, roundScale))
-          .otherwise(lit(0.0)).as("rank"))
-      .localCheckpoint()
+    val st = new Superstep(vertices,
+      e.join(e.groupBy("src").agg(count(lit(1)).as("__outdeg")), "src").localCheckpoint(),
+      RankUnit, op)
+    val tp = teleport(st.nV)
+    val noIn = tp.attach(st.noReceiver("dst")).localCheckpoint()
     var ranks = vertices.select(col("id"), lit(1.0).as("rank"))
     for (i <- 1 to numIter) {
-      val msum = hintSmall(ranks).join(ed, col("id") === col("src"))
-        .select(col("dst"),
-          floor(col("rank") / col("__outdeg") * lit(1e9)).as("__c"))
-        .groupBy("dst")
-        .agg((sum(col("__c")).cast("double") / lit(1e9)).as("__msum"))
-      ranks = msum
-        .join(seedFlag, msum("dst") === seedFlag("id"), "left")
-        .select(msum("dst").as("id"),
-          round(when(col("__s").isNotNull, seedBase).otherwise(lit(0.0)) +
-            lit(0.85) * col("__msum"), roundScale).as("rank"))
-        .unionAll(noIn)
-      if (i % checkpointEvery == 0 || i == numIter) ranks = ranks.localCheckpoint()
+      ranks = tp.attach(st.gather(ranks, col("rank") / col("__outdeg"), "src", "dst"))
+        .select(col("id"), round(tp.base + lit(0.85) * col("__m"), RoundScale).as("rank"))
+        .unionAll(noIn.select(col("id"), round(tp.base, RoundScale).as("rank")))
+      if (i % CutEvery == 0 || i == numIter) ranks = ranks.localCheckpoint()
     }
     ranks
   }
 
+  /** Static PageRank as chained DataFrame joins, with GraphX
+    * `staticPageRank` semantics (init 1.0, `rank' = 0.15 + 0.85·Σ
+    * rank/outdeg`, final Σranks normalized to |V| like SPARK-18847's sink
+    * correction), but deterministic and oracle-replayable: message sums
+    * are fixed-point longs and ranks are rounded to 6 dp every round, so
+    * the DuckDB chained-CTE replay of the same ladder reproduces the exact
+    * values. Cross-checked against GraphX in GraphAnalyticsSpec.
+    */
+  def pageRankDF(vertices: DataFrame, edges: DataFrame, numIter: Int = 10): DataFrame =
+    renormalized(rankLadder(vertices, edges, numIter, "pageRankDF")(
+      _ => Teleport(identity, lit(0.15))), "rank", "rank")
+
+  /** Personalized PageRank (Page et al. 1999 §6 / Jeh & Widom 2003): the
+    * [[pageRankDF]] ladder with the teleport mass on a SEED SET — base(v)
+    * = 0.15·|V|/|S| for seeds, 0 elsewhere (total 0.15·|V|, so the
+    * fixed-point headroom is pagerank's), and no final normalization.
+    * Ranks measure closeness to the seeds, not global prestige. The seed
+    * flag rides a broadcast of the seed id list.
+    */
+  def personalizedPageRankDF(vertices: DataFrame, edges: DataFrame,
+      seedPred: Column, numIter: Int = 10): DataFrame =
+    rankLadder(vertices, edges, numIter, "personalizedPageRankDF") { nV =>
+      val seeds = vertices.filter(seedPred).select(col("id")).localCheckpoint()
+      val nS = seeds.count()
+      require(nS > 0, "personalizedPageRankDF: empty seed set")
+      val flag = broadcast(seeds.withColumn("__s", lit(1)))
+      // (0.15 · nV) / nS in this op order, as in the generated oracle
+      Teleport(_.join(flag, Seq("id"), "left"),
+        when(col("__s").isNotNull, lit(0.15) * lit(nV.toDouble) / lit(nS.toDouble))
+          .otherwise(lit(0.0)))
+    }
+
   /** Eigenvector centrality by synchronous power iteration (Bonacich
-    * 1972): x' = A'x, L1-renormalized to Σx = |V| every round so the
-    * iterate neither diverges nor vanishes (the renormalization is what
-    * makes this value-checkable where Katz/eigenvector in raw form is
-    * not: unnormalized iterates grow like (λ₁)^k and overflow any fixed
-    * precision, while the normalized ladder stays O(|V|) forever).
-    *
-    * Determinism ladder, same as [[pageRankDF]] but with 1e6 fixed-point
-    * units (messages are NOT divided by degree here, so per-vertex unit
-    * inflow is bounded by 1e6·Σx = 1e6·|V| — the coarser scale buys 1000×
-    * headroom): per round, floor(x·1e6) exact-long sums into each dst,
-    * one IEEE divide back to double, then the per-round total as an exact
-    * DECIMAL sum and x' = round(y·n/t, 6) — identical op order in the
-    * DuckDB replay.
-    *
-    * Scale shape: identical to pageRankDF — static edge relation
-    * checkpointed once, |V|-row iterate joined per round (broadcast-
-    * hinted under the limit), per-round shuffle carries (dst, long) rows,
-    * plus one scalar-total broadcast per round (the pageRankDF
-    * final-normalize shape, just per-round).
-    *
-    * Unlike pageRankDF the lineage cut lands on the MESSAGE table `y`
-    * (pre-renormalization), not the iterate `x`, and every round. The
-    * per-round total makes y a double-consumer frame (`tot`'s aggregate
-    * AND `x`'s projection both read it), and an un-cut round re-executes
-    * its edge join once more inside the next round's broadcast build — the
-    * r9 shape paid both costs (measured 3-4× pageRankDF on the same
-    * ladder; 17.4 → 6.3 s aged on the sf0.1 graph from this change
-    * alone). With y materialized, `tot` is a tiny agg over a LogicalRDD
-    * and `x` a lazy zero-shuffle projection — numerically IDENTICAL
-    * ladder, so the DuckDB replay (QueriesGraphX.evOracleSql) is
-    * untouched. `checkpointEvery` is kept for signature stability but the
-    * cut cadence is structurally 1 (every round cuts at y).
+    * 1972): x' = A'x, L1-renormalized to Σx = |V| every round, so the
+    * iterate neither diverges nor vanishes and stays value-checkable (raw
+    * iterates grow like λ₁^k and overflow any fixed precision). Each round
+    * is one [[Superstep.renormStep]] over the once-checkpointed,
+    * right-sized edge relation; the DuckDB replay
+    * (QueriesGraphX.evOracleSql) applies the identical op order.
     */
-  def eigenvectorDF(vertices: DataFrame, edges: DataFrame, numIter: Int = 8,
-      roundScale: Int = 6, checkpointEvery: Int = 2,
-      broadcastRankLimit: Long = 5000000L): DataFrame = {
-    // Right-size the static edge relation ONCE: the undirected view
-    // arrives as a union of narrow scan/shuffle outputs (134 partitions of
-    // ~18k rows at sf0.1 — vs pageRankDF's 8, whose ed passes through an
-    // AQE-coalesced shuffle join), and every one of the 8 rounds re-pays
-    // that width as join-stage tasks. Coalescing the checkpointed RDD is a
-    // narrow wrapper (no recompute, no shuffle); target ~4M edge
-    // rows/partition, floored at the session's parallelism so the
-    // per-round join stays fully parallel at any scale.
-    val ed = rightSizeEdges(edges)
-    val nV = vertices.count()
-    // unit inflow into one vertex ≤ 1e6·Σx = 1e6·|V| (Σx renormalizes to
-    // |V| each round) — same loud-failure policy as pageRankDF
-    require(nV < Long.MaxValue / 1000000L,
-      s"eigenvectorDF: |V|=$nV exceeds the 1e6 fixed-point headroom")
-    val hintSmall: DataFrame => DataFrame =
-      if (nV <= broadcastRankLimit) broadcast(_) else identity
-    val yParts = iterateWidth(vertices, nV)
-    val noIn = vertices.select("id")
-      .join(ed.select(col("dst")), col("id") === col("dst"), "left_anti")
-      .localCheckpoint()
-    var x = vertices.select(col("id"), lit(1.0).as("x"))
-    for (i <- 1 to numIter)
-      x = renormStep(x, "x", ed, "src", "dst", noIn,
-        hintSmall, yParts, roundScale, "x")
-    x
-  }
-
-  /** Right-size a static edge relation at checkpoint: an undirected view
-    * arrives as a union of narrow scan/shuffle outputs (134 partitions of
-    * ~18k rows at sf0.1 — vs pageRankDF's 8, whose ed passes through an
-    * AQE-coalesced shuffle join), and every iteration round re-pays that
-    * width as join-stage tasks. Coalescing the checkpointed RDD is a
-    * narrow wrapper (no recompute, no shuffle); target ~4M edge
-    * rows/partition, floored at the session's parallelism so the
-    * per-round join stays fully parallel at any scale.
-    */
-  private def rightSizeEdges(edges: DataFrame): DataFrame = {
-    val edRaw = edges.select("src", "dst").localCheckpoint()
-    val edTarget = math.max(
-      edRaw.sparkSession.sparkContext.defaultParallelism.toLong,
-      edRaw.count() / 4000000L + 1L).toInt
-    if (edRaw.rdd.getNumPartitions > edTarget) edRaw.coalesce(edTarget)
-    else edRaw
-  }
-
-  /** Partition width of a per-round |V|-row iterate, sized to the DATA:
-    * ~2M rows per partition, capped by the session's parallelism at
-    * scale, floored at 8 (a width of 1 serializes the agg reduce — the
-    * BENCHNOTES r10 variant ladder). The expensive per-round work (the
-    * edge join) keeps the edge relation's width — this only narrows the
-    * materialized message table. AQE right-sizes shuffle partitions
-    * inside a stage, but a checkpointed RDD keeps its static width, and
-    * 8 rounds × 32 near-empty partitions × (materialize + total +
-    * broadcast-build) jobs measured 10.2 s aged vs 3.8 s at a data-sized
-    * width on the sf0.1 graph — pure per-task overhead, not plan cost.
-    */
-  private def iterateWidth(vertices: DataFrame, nV: Long): Int =
-    math.max(8L, math.min(
-      vertices.sparkSession.sparkContext.defaultParallelism.toLong,
-      nV / 2000000L + 1L)).toInt
-
-  /** One L1-renormalized fixed-point message round — the shared ladder
-    * step of [[eigenvectorDF]] and [[hitsDF]]. Gather: each edge sends
-    * floor(state·1e6) units from its `sendKey` endpoint to its
-    * `gatherKey` endpoint; exact LONG sums per receiver, one IEEE divide
-    * back to double, receivers ∪ `noRecv` (constant-0 frame) = all |V|
-    * rows. Renormalize: Σ to |V| via the exact-DECIMAL total fetched as
-    * ONE driver row and embedded as literals (t is dsum's DOUBLE, n a
-    * LONG, so the DuckDB replays are unchanged). The lineage cut lands on
-    * the message table `y` because BOTH the total and the renormalized
-    * projection read it. The cut is lazy: the total's `head()` fills it
-    * in the same job, one job per round (BENCHNOTES r19 centrality entry).
-    */
-  private def renormStep(state: DataFrame, stateCol: String, ed: DataFrame,
-      sendKey: String, gatherKey: String, noRecv: DataFrame,
-      hintSmall: DataFrame => DataFrame, yParts: Int, roundScale: Int,
-      outCol: String): DataFrame = {
-    val y = hintSmall(state).join(ed, col("id") === col(sendKey))
-      .select(col(gatherKey), floor(col(stateCol) * lit(1e6)).as("__c"))
-      .groupBy(gatherKey)
-      .agg((sum(col("__c")).cast("double") / lit(1e6)).as("__y"))
-      .select(col(gatherKey).as("id"), col("__y"))
-      .unionAll(noRecv.select(col("id"), lit(0.0).as("__y")))
-      .coalesce(yParts)
-      .localCheckpoint(eager = false)
-    val row = y.agg(graft.Qh.dsum(col("__y"), roundScale).as("__t"),
-      count(lit(1)).as("__n")).head()
-    val (t, n) = (row.getDouble(0), row.getLong(1))
-    y.select(col("id"),
-      round(col("__y") * lit(n) / lit(t), roundScale).as(outCol))
+  def eigenvectorDF(vertices: DataFrame, edges: DataFrame, numIter: Int = 8): DataFrame = {
+    val st = new Superstep(vertices, rightSized(edges.select("src", "dst"))._1,
+      RenormUnit, "eigenvectorDF")
+    val noIn = st.noReceiver("dst").localCheckpoint()
+    (1 to numIter).foldLeft(vertices.select(col("id"), lit(1.0).as("x"))) { (x, _) =>
+      st.renormStep(x, "x", "src", "dst", noIn, "x")
+    }
   }
 
   /** HITS hubs & authorities (Kleinberg 1999) over the DIRECTED graph —
     * the mutually-recursive twin of [[eigenvectorDF]]: per round,
     * auth' = renorm(Aᵀ·hub) then hub' = renorm(A·auth'), each half-step
-    * the same L1 ladder (Σ = |V|; Kleinberg's L2 norm would need a
-    * cross-engine sqrt-of-sum — L1 keeps the fixed-point units bounded
-    * AND the replay exact; the top-k ORDER is what HITS consumers use,
-    * and it is norm-invariant). Directed is the point here: unlike
-    * eigenvector centrality — degenerate on this layered-DAG derived
-    * graph — HITS is DESIGNED for such bipartite-ish link structure
-    * (hubs = vertices pointing at strong authorities). Same scale shape
-    * as eigenvectorDF: 2·numIter renorm rounds over the once-checkpointed
-    * right-sized edge relation.
+    * the same L1 ladder (Kleinberg's L2 norm would need a cross-engine
+    * sqrt-of-sum; the top-k order HITS consumers use is norm-invariant).
+    * Directed is the point: eigenvector centrality is degenerate on the
+    * layered-DAG derived graph, while HITS is designed for such link
+    * structure (hubs point at strong authorities).
     */
-  def hitsDF(vertices: DataFrame, edges: DataFrame, numIter: Int = 4,
-      roundScale: Int = 6, broadcastRankLimit: Long = 5000000L): DataFrame = {
-    val ed = rightSizeEdges(edges)
-    val nV = vertices.count()
-    require(nV < Long.MaxValue / 1000000L,
-      s"hitsDF: |V|=$nV exceeds the 1e6 fixed-point headroom")
-    val hintSmall: DataFrame => DataFrame =
-      if (nV <= broadcastRankLimit) broadcast(_) else identity
-    val yParts = iterateWidth(vertices, nV)
-    val noIn = vertices.select("id")
-      .join(ed.select(col("dst")), col("id") === col("dst"), "left_anti")
-      .localCheckpoint()
-    val noOut = vertices.select("id")
-      .join(ed.select(col("src")), col("id") === col("src"), "left_anti")
-      .localCheckpoint()
+  def hitsDF(vertices: DataFrame, edges: DataFrame, numIter: Int = 4): DataFrame = {
+    val st = new Superstep(vertices, rightSized(edges.select("src", "dst"))._1,
+      RenormUnit, "hitsDF")
+    val noIn = st.noReceiver("dst").localCheckpoint()
+    val noOut = st.noReceiver("src").localCheckpoint()
     var hub = vertices.select(col("id"), lit(1.0).as("hub"))
     var auth = vertices.select(col("id"), lit(0.0).as("auth"))
-    for (i <- 1 to numIter) {
-      auth = renormStep(hub, "hub", ed, "src", "dst", noIn,
-        hintSmall, yParts, roundScale, "auth")
-      hub = renormStep(auth, "auth", ed, "dst", "src", noOut,
-        hintSmall, yParts, roundScale, "hub")
+    for (_ <- 1 to numIter) {
+      auth = st.renormStep(hub, "hub", "src", "dst", noIn, "auth")
+      hub = st.renormStep(auth, "auth", "dst", "src", noOut, "hub")
     }
     // both sides carry all |V| ids; the join is |V|⋈|V| on the id key
     hub.join(auth, "id")
@@ -499,43 +375,28 @@ object GraphAnalytics {
 
   /** Deterministic synchronous label propagation. Every vertex starts
     * with its own id as its label; each superstep a vertex adopts the
-    * most frequent label among its neighbours (undirected view), ties
-    * broken by the SMALLEST label; vertices receiving no message keep
-    * their label. Unlike GraphX's LPA — whose tie-break follows hash-map
-    * iteration order, making community ids run-unstable — this is a pure
-    * function of the graph, so the result is value-checkable in SQL
-    * (the graph_lpa oracle replays these supersteps as chained CTEs).
+    * most frequent label among its neighbours, ties broken by the
+    * SMALLEST label; vertices receiving no message keep their label.
+    * Unlike GraphX's LPA — whose tie-break follows hash-map iteration
+    * order — this is a pure function of the graph, so the graph_lpa
+    * oracle replays these supersteps as chained CTEs.
     *
-    * 100 TB shape: per round, one |2E|⨝|V| join (label side broadcast
-    * below the adaptive limit, hash join past it), one map-side-combinable
-    * (vertex,label) count, and one argmax agg expressed as
-    * `max(struct(count, -label))` — lexicographic struct max picks the
-    * max count then the min label with NO per-vertex sort. All shuffles
-    * key on vertex id; lineage is cut per round like [[pageRankDF]].
-    * All-long arithmetic — no floats anywhere, so no rounding ladder is
-    * needed for oracle parity.
+    * `und` is the undirected (a, b) edge view — both orientations of
+    * every edge, e.g. [[graft.model.DerivedGraph.undirected]]. Every round
+    * reads it, so it should be materialization-stable (a checkpoint, a
+    * persisted frame or a parquet scan).
+    *
+    * Per round: one |2E|⨝|V| join (labels broadcast below
+    * [[HintRowLimit]]), one combinable (vertex, label) count, and one
+    * argmax agg as `max(struct(count, -label))` — lexicographic struct max
+    * picks the max count then the min label with no per-vertex sort. All
+    * shuffles key on vertex id; labels are cut per round. All-long
+    * arithmetic, so no rounding ladder is needed for oracle parity.
     */
-  def lpaDF(vertices: DataFrame, edges: DataFrame, numIter: Int = 5,
-      broadcastLabelLimit: Long = 5000000L,
-      undOverride: Option[DataFrame] = None): DataFrame = {
-    val e = edges.select("src", "dst")
-    // the materialized 2|E| copy EARNS its write here, unlike kCoreDF's
-    // (r13 A/B at sf10: checkpoint aged 19.5 s vs lazy view 47.0 s, cold
-    // parity) — numIter rounds each probe und once, so the one-time write
-    // amortizes where kcore's 2-round peel could not. `undOverride` lets
-    // a caller supply an equivalent materialization-stable (a, b) frame
-    // instead — e.g. a cross-session cached parquet copy that keeps the
-    // 2|E| rows OUT of the RDD storage region entirely (the sf100
-    // pre-emption of the kcore spill mode; A/B'd at sf10 in BENCHNOTES
-    // r14). Caller contract: same rows as the union below.
-    val und = undOverride.getOrElse(
-      e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
-        .select(col("src").as("a"), col("dst").as("b"))
-        .localCheckpoint())
-    val hintSmall: DataFrame => DataFrame =
-      if (vertices.count() <= broadcastLabelLimit) broadcast(_) else identity
+  def lpaDF(vertices: DataFrame, und: DataFrame, numIter: Int = 5): DataFrame = {
+    val hintSmall = broadcastIf(vertices.count() <= HintRowLimit)
     var labels = vertices.select(col("id"), col("id").as("lbl"))
-    for (i <- 1 to numIter) {
+    for (_ <- 1 to numIter) {
       val pick = und.join(hintSmall(labels), col("b") === col("id"))
         .groupBy(col("a"), col("lbl")).agg(count(lit(1)).as("c"))
         .groupBy(col("a"))
@@ -548,25 +409,6 @@ object GraphAnalytics {
     labels.select(col("id"), col("lbl").as("community"))
   }
 
-  /** k-core decomposition by iterative peeling: repeatedly drop vertices
-    * with fewer than `k` neighbours among the survivors; the fixpoint is
-    * the maximal subgraph of minimum degree ≥ k (Seidman, "Network
-    * structure and minimum degree", Social Networks 1983 — the standard
-    * graph-density screen). `rounds` bounds the peel supersteps so the
-    * computation is replayable as chained SQL rounds; convergence within
-    * the bound is PROVEN per graph family in GraphAnalyticsSpec (one extra
-    * round must change nothing), not assumed. Returns the core members
-    * with their within-core degree.
-    *
-    * 100 TB shape: each round is two survivor semi-joins on the undirected
-    * edge list (vertex-keyed shuffles, no broadcast requirement) + one
-    * map-side-combinable degree count; survivors shrink monotonically and
-    * the lineage is cut per round like [[pageRankDF]]. Peel depth on
-    * real-world (heavy-tailed) graphs is small; a chain-of-pendants
-    * adversary needs O(chain length) rounds — that is a property the spec
-    * exercises, and the `rounds` parameter makes the trade explicit
-    * instead of unbounded.
-    */
   /** Bucket count / version of the clustered endpoint copy behind
     * [[bucketedDegrees]].
     */
@@ -612,6 +454,25 @@ object GraphAnalytics {
     endp.groupBy("a").agg(count(lit(1)).as("deg"))
   }
 
+  /** k-core decomposition by iterative peeling: repeatedly drop vertices
+    * with fewer than `k` neighbours among the survivors; the fixpoint is
+    * the maximal subgraph of minimum degree ≥ k (Seidman, "Network
+    * structure and minimum degree", Social Networks 1983 — the standard
+    * graph-density screen). `rounds` bounds the peel supersteps so the
+    * computation is replayable as chained SQL rounds; convergence within
+    * the bound is PROVEN per graph family in GraphAnalyticsSpec (one extra
+    * round must change nothing), not assumed. Returns the core members
+    * with their within-core degree.
+    *
+    * 100 TB shape: each round is two survivor semi-joins on the undirected
+    * edge list (vertex-keyed shuffles, no broadcast requirement) + one
+    * map-side-combinable degree count; survivors shrink monotonically and
+    * the lineage is cut per round like [[pageRankDF]]. Peel depth on
+    * real-world (heavy-tailed) graphs is small; a chain-of-pendants
+    * adversary needs O(chain length) rounds — that is a property the spec
+    * exercises, and the `rounds` parameter makes the trade explicit
+    * instead of unbounded.
+    */
   def kCoreDF(edges: DataFrame, k: Int, rounds: Int = 10,
       initDegrees: Option[DataFrame] = None): DataFrame = {
     require(k >= 1, s"k must be ≥ 1, got $k")
@@ -686,31 +547,6 @@ object GraphAnalytics {
     deg.filter(col("deg") > 0).select(col("a").as("id"), col("deg"))
   }
 
-  /** k-truss decomposition by iterative edge peeling (Cohen, "Trusses:
-    * cohesive subgraphs for social network analysis", NSA tech report
-    * 2008): repeatedly drop edges supported by fewer than k−2 triangles
-    * among the surviving edges; the fixpoint is the maximal subgraph
-    * where every edge closes ≥ k−2 triangles — the EDGE-cohesion screen
-    * one notch stronger than [[kCoreDF]]'s vertex degrees (every k-truss
-    * is inside the (k−1)-core, not vice versa). `rounds` bounds the peel
-    * like kCoreDF so the computation replays as chained SQL rounds;
-    * convergence within the bound is proven per graph family in spec
-    * (an extra round changes nothing), not assumed. Returns surviving
-    * edges with their support measured in the FINAL edge set.
-    *
-    * Input contract: canonical undirected edges, `a < b`, distinct.
-    *
-    * 100 TB shape: support comes from degree-ordered triangle ENUMERATION
-    * (the [[triangleCountDF]] orientation: each triangle materializes
-    * exactly once at its base edge, then credits its three edges), NOT
-    * from the naive wedge join — wedges that never close made the naive
-    * form 122 s at sf0.1 where this one rides the triangle count (1.9M
-    * triangles → 5.6M credit rows there, measured ~25× cheaper). Per
-    * round: two vertex-keyed joins against the oriented adjacency, one
-    * explode bounded by 3·triangles, one combinable per-edge count,
-    * lineage cut per round; survivors shrink monotonically. Skewed hub
-    * keys are AQE's skew-join case; no broadcast requirement.
-    */
   /** Canonical triangle list (x < y < z, one row per triangle) of a
     * canonical undirected edge set (`a < b`, distinct) — the
     * [[triangleCountDF]] degree-ordered enumeration with the rows kept
@@ -783,6 +619,31 @@ object GraphAnalytics {
     */
   val KTrussVersion: Int = 1
 
+  /** k-truss decomposition by iterative edge peeling (Cohen, "Trusses:
+    * cohesive subgraphs for social network analysis", NSA tech report
+    * 2008): repeatedly drop edges supported by fewer than k−2 triangles
+    * among the surviving edges; the fixpoint is the maximal subgraph
+    * where every edge closes ≥ k−2 triangles — the EDGE-cohesion screen
+    * one notch stronger than [[kCoreDF]]'s vertex degrees (every k-truss
+    * is inside the (k−1)-core, not vice versa). `rounds` bounds the peel
+    * like kCoreDF so the computation replays as chained SQL rounds;
+    * convergence within the bound is proven per graph family in spec
+    * (an extra round changes nothing), not assumed. Returns surviving
+    * edges with their support measured in the FINAL edge set.
+    *
+    * Input contract: canonical undirected edges, `a < b`, distinct.
+    *
+    * 100 TB shape: support comes from degree-ordered triangle ENUMERATION
+    * (the [[triangleCountDF]] orientation: each triangle materializes
+    * exactly once at its base edge, then credits its three edges), NOT
+    * from the naive wedge join — wedges that never close made the naive
+    * form 122 s at sf0.1 where this one rides the triangle count (1.9M
+    * triangles → 5.6M credit rows there, measured ~25× cheaper). Per
+    * round: two vertex-keyed joins against the oriented adjacency, one
+    * explode bounded by 3·triangles, one combinable per-edge count,
+    * lineage cut per round; survivors shrink monotonically. Skewed hub
+    * keys are AQE's skew-join case; no broadcast requirement.
+    */
   def kTrussDF(canonicalEdges: DataFrame, k: Int, rounds: Int = 6,
       broadcastSides: Boolean = false,
       triangleList: Option[DataFrame] = None): DataFrame = {
@@ -1107,6 +968,14 @@ object GraphAnalytics {
       .head().getLong(0)
   }
 
+  /** Definition version of the co-order projection, folded into every
+    * cache-entry name that bakes the projection in (co_edges itself and
+    * the triangle list enumerated from it — ADVICE r13): bump it when the
+    * projection's semantics change so stale cross-session caches rebuild
+    * instead of silently serving the old definition to correctness gates.
+    */
+  val CoEdgesVersion: Int = 1
+
   /** Parts co-ordered in the same order — a triangle-rich projection of the
     * order/lineitem bipartite graph, canonical (a < b) distinct pairs.
     *
@@ -1125,14 +994,6 @@ object GraphAnalytics {
     * groupBy + wedge distinct (~120M-row shuffle) on every call — with
     * the cache each consumer gets a 2-column pruned parquet scan.
     */
-  /** Definition version of the co-order projection, folded into every
-    * cache-entry name that bakes the projection in (co_edges itself and
-    * the triangle list enumerated from it — ADVICE r13): bump it when the
-    * projection's semantics change so stale cross-session caches rebuild
-    * instead of silently serving the old definition to correctness gates.
-    */
-  val CoEdgesVersion: Int = 1
-
   def coOrderPartEdges(spark: SparkSession, sfDir: String): DataFrame =
     graft.model.CacheDirs.cachedParquet(spark, "graph", sfDir,
       s"co_edges_v$CoEdgesVersion") {
@@ -1180,8 +1041,8 @@ object GraphAnalytics {
     // the planner sort-merges the edge list against it TWICE (one full
     // edge shuffle per endpoint). `broadcastDeg = true` hints both probe
     // sides instead — the edge list then never shuffles at all (measured
-    // 3.85 → 1.6 s on the sf0.1 derived graph, Prof --assort). Same
-    // opt-in-with-shuffle-default policy as triangleCountDF.broadcastSides:
+    // 3.85 → 1.6 s on the sf0.1 derived graph). Same opt-in-with-shuffle-
+    // default policy as triangleCountDF.broadcastSides:
     // safe while |V| is broadcast-sized (~10⁷ vertices at 16 B/row); past
     // that, keep the default and let the two shuffle joins scale out.
     val hint: DataFrame => DataFrame = if (broadcastDeg) broadcast(_) else identity
@@ -1225,8 +1086,8 @@ object GraphAnalytics {
     * diameter ≤ 8) values stay far below the BIGINT output cast — a
     * graph with 10¹⁸-path multiplicities moves the output column to
     * DECIMAL(38,0), same ladder.
-    */
-  /** `levels`, when given, is a precomputed (lm, id, dist) landmark-BFS
+    *
+    * `levels`, when given, is a precomputed (lm, id, dist) landmark-BFS
     * frame over the SAME edges/seeds/maxDepth (the shared
     * [[multiSourceBfs]] frame that shortest_paths/closeness/harmonic/
     * eccentricity already ride — VERDICT r17 #2). The forward pass then
@@ -1244,17 +1105,7 @@ object GraphAnalytics {
     import org.apache.spark.sql.types.DecimalType
     val spark = edges.sparkSession
     import spark.implicits._
-    // static relation right-sized ONCE (the eigenvectorDF discipline:
-    // an undirected union arrives as many narrow partitions and every
-    // round re-pays that width as join-stage tasks)
-    val undRaw = edges.select(col("a"), col("b")).localCheckpoint()
-    val undCount = undRaw.count()
-    val undTarget = math.max(
-      spark.sparkContext.defaultParallelism.toLong,
-      undCount / 4000000L + 1L).toInt
-    val und =
-      if (undRaw.rdd.getNumPartitions > undTarget) undRaw.coalesce(undTarget)
-      else undRaw
+    val (und, undCount) = rightSized(edges.select(col("a"), col("b")))
     // per-round frontier/level frames are ≤|V|·L rows: keep them at a
     // small static width (a checkpointed RDD keeps its width; 20 rounds
     // × shuffle-partition-many near-empty partitions is pure task
@@ -1284,8 +1135,7 @@ object GraphAnalytics {
     // 500 s — the per-round message groupBy, not the edge exchange,
     // bounds the round, so the upfront copies only add build cost (and a
     // three-deserialized-copy variant OOM'd a 100g heap).
-    val hintSmall: DataFrame => DataFrame =
-      if (undCount <= 50000000L) broadcast(_) else identity
+    val hintSmall = broadcastIf(undCount <= 50000000L)
     def sigmaMessages(fr: DataFrame): DataFrame =
       hintSmall(fr).join(und, col("id") === col("a"))
         .groupBy(col("lm"), col("b"))

@@ -1,0 +1,49 @@
+package graft
+
+import org.apache.spark.sql.functions._
+import graft.model.DerivedGraph
+import graft.ops.GraphAnalytics
+
+/** Spark jobs per call of the DataFrame iteration family, pinned: a plan
+  * change that adds a checkpoint, a count or a scalar fetch to a round
+  * fails here instead of in a benchmark run. Each call runs on the
+  * sf0.001 derived graph with its inventory query's arguments, and the
+  * result is collected, so the count covers the whole call.
+  */
+class AnalyticsJobBudgetSpec extends SparkSpec {
+
+  private val sf001 = "/root/testdata/sf0.001"
+  private def haveSf001 = java.nio.file.Files.isDirectory(java.nio.file.Paths.get(sf001))
+
+  private def jobs(body: => Any): Int = JobCounter(spark.sparkContext)(body)._2
+
+  test("pagerank, ppr, eigenvector, hits, lpa and stress job budgets") {
+    assume(haveSf001, "testdata sf0.001 not present")
+    DerivedGraph.warm(spark, sf001)
+    val g = DerivedGraph(spark, sf001)
+    val und = DerivedGraph.undirected(g.edges)
+    val member = g.edges.filter(col("label").isin("in_nation", "in_region"))
+      .select("src", "dst")
+    // the inventory query reads the member view from a cached parquet
+    // entry; a checkpoint stands in for it, outside the counted calls
+    val memberUnd = DerivedGraph.undirected(member).localCheckpoint()
+    val levels = GraphAnalytics.multiSourceBfs(GraphAnalytics.derivedGraphX(spark, sf001),
+        QueriesGraphX.spLandmarks, 10)
+      .select(col("landmark").as("lm"), col("id"), col("dist")).localCheckpoint()
+
+    val got = Map(
+      "pagerank" -> jobs(GraphAnalytics.pageRankDF(g.vertices, g.edges, 10).collect()),
+      "ppr" -> jobs(GraphAnalytics.personalizedPageRankDF(g.vertices, g.edges,
+        col("label") === "nation", 10).collect()),
+      "eigenvector" -> jobs(GraphAnalytics.eigenvectorDF(g.vertices,
+        und.select(col("a").as("src"), col("b").as("dst")), 8).collect()),
+      "hits" -> jobs(GraphAnalytics.hitsDF(g.vertices, g.edges.select("src", "dst"), 4)
+        .collect()),
+      "lpa" -> jobs(GraphAnalytics.lpaDF(
+        g.vertices.filter(col("label") =!= "part").select("id"), memberUnd, 5).collect()),
+      "stress" -> jobs(GraphAnalytics.stressCentralityDF(und, QueriesGraphX.spLandmarks, 10,
+        levels = Some(levels)).collect()))
+    assert(got == Map("pagerank" -> 35, "ppr" -> 42, "eigenvector" -> 40, "hits" -> 45,
+      "lpa" -> 28, "stress" -> 54))
+  }
+}

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.model.DerivedGraph
 import graft.ops.GraphAnalytics
 
 /** GraphX wrappers verified on hand-computed graphs + the invariants
@@ -80,11 +81,11 @@ class GraphAnalyticsSpec extends SparkSpec {
     // the triangle+tail component collapses onto label 1 by round 3; the
     // isolated pair 5-6 oscillates with period 2 (classic bipartite LPA),
     // so after an odd round v5 holds 6 and v6 holds 5.
-    val got = GraphAnalytics.lpaDF(v.select("id"), e.select("src", "dst"), 5)
+    val got = GraphAnalytics.lpaDF(v.select("id"), DerivedGraph.undirected(e), 5)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 6L, 6L -> 5L))
     val shuffled = GraphAnalytics.lpaDF(
-      v.repartition(7).select("id"), e.repartition(5).select("src", "dst"), 5)
+      v.repartition(7).select("id"), DerivedGraph.undirected(e.repartition(5)), 5)
       .as[(Long, Long)].collect().toMap
     assert(shuffled == got, "lpaDF changed under repartitioning")
   }
@@ -99,7 +100,7 @@ class GraphAnalyticsSpec extends SparkSpec {
       .toDF("src", "dst", "label")
     def partition(df: org.apache.spark.sql.DataFrame): Set[Set[Long]] =
       df.as[(Long, Long)].collect().groupBy(_._2).values.map(_.map(_._1).toSet).toSet
-    val mine = partition(GraphAnalytics.lpaDF(sv.select("id"), se.select("src", "dst"), 4))
+    val mine = partition(GraphAnalytics.lpaDF(sv.select("id"), DerivedGraph.undirected(se), 4))
     val gx = partition(GraphAnalytics.labelPropagation(
       GraphAnalytics.toGraphX(sv, se), 4))
     assert(mine == gx, s"partitions differ: $mine vs $gx")
@@ -238,5 +239,142 @@ class GraphAnalyticsSpec extends SparkSpec {
     // n=8 Σx=18 Σy=18 Σxy=38 Σx²=44 Σy²=44
     // r = (8·38−324)/(8·44−324) = (304−324)/(352−324) = −20/28
     assert(r.getDouble(1) == math.rint(-20.0 / 28.0 * 1e6) / 1e6)
+  }
+
+  test("hitsDF: L1 renorm holds, sourceless vertices have auth 0") {
+    // star-ish DAG: 1->3, 2->3, 3->4  (3 is the authority; 1,2 hubs)
+    val v = Seq(1L, 2L, 3L, 4L).toDF("id")
+    val e = Seq((1L, 3L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
+    val r = graft.ops.GraphAnalytics.hitsDF(v, e, numIter = 4)
+      .orderBy("id").as[(Long, Double, Double)].collect()
+    val (hubs, auths) = (r.map(_._2), r.map(_._3))
+    assert(math.abs(hubs.sum - 4.0) < 1e-3, s"hub sum ${hubs.sum}")
+    assert(math.abs(auths.sum - 4.0) < 1e-3, s"auth sum ${auths.sum}")
+    // vertices 1,2 have no in-edges -> auth exactly 0; 4 has no out -> hub 0
+    assert(r(0)._3 == 0.0 && r(1)._3 == 0.0 && r(3)._2 == 0.0)
+    // 3 is the strongest authority
+    assert(auths.max == r(2)._3)
+  }
+
+  test("graph_ppr: seed-teleport semantics on a hand graph, replayed independently") {
+    import graft.ops.GraphAnalytics
+    // 1 ⇄ 2 cycle (1 is the seed), 3 → 4 disconnected from the seed
+    val vs = Seq((1L, "seed"), (2L, "x"), (3L, "x"), (4L, "x"))
+      .toDF("id", "label")
+    val es = Seq((1L, 2L), (2L, 1L), (3L, 4L)).toDF("src", "dst")
+    val got = GraphAnalytics.personalizedPageRankDF(vs, es,
+      col("label") === "seed", numIter = 10)
+      .orderBy("id").as[(Long, Double)].collect().toSeq
+    // independent replay: same ladder in plain Scala (1e9 fixed point,
+    // round to 6 dp per round, base = 0.15*|V|/|S| on the seed)
+    val base = 0.15 * 4.0 / 1.0
+    def rnd(x: Double) = BigDecimal(x)
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    var r = Map(1L -> 1.0, 2L -> 1.0, 3L -> 1.0, 4L -> 1.0)
+    val out = Map(1L -> Seq(2L), 2L -> Seq(1L), 3L -> Seq(4L))
+    for (_ <- 1 to 10) {
+      val m = Seq(1L, 2L, 3L, 4L).map { v =>
+        val in = out.collect { case (u, ds) if ds.contains(v) =>
+          math.floor(r(u) / out(u).size * 1e9).toLong }
+        v -> in.sum.toDouble / 1e9
+      }.toMap
+      r = r.keys.map(v => v -> rnd((if (v == 1L) base else 0.0) + 0.85 * m(v))).toMap
+    }
+    val expected = Seq(1L, 2L, 3L, 4L).map(v => (v, r(v)))
+    assert(got == expected, s"got $got\nexpected $expected")
+    // unreachable-from-seed mass decays to exactly 0; the seed holds mass
+    assert(got.find(_._1 == 3L).get._2 == 0.0)
+    assert(got.find(_._1 == 4L).get._2 == 0.0)
+    assert(got.find(_._1 == 1L).get._2 > got.find(_._1 == 2L).get._2)
+  }
+
+  /** Independent brute-force stress centrality: enumerate ALL shortest
+    * paths from each seed to each target by BFS-layered DFS, count the
+    * paths in which each vertex appears as an INTERIOR vertex.
+    */
+  private def bruteStress(edges: Seq[(Long, Long)], seeds: Seq[Long])
+      : Map[Long, Long] = {
+    val adj = (edges ++ edges.map(e => (e._2, e._1)))
+      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSet }
+    val verts = adj.keySet
+    val counts = scala.collection.mutable.Map[Long, Long]().withDefaultValue(0L)
+    for (s <- seeds) {
+      // BFS distances
+      val dist = scala.collection.mutable.Map(s -> 0)
+      var frontier = Set(s)
+      while (frontier.nonEmpty) {
+        val next = frontier.flatMap(adj.getOrElse(_, Set.empty))
+          .filterNot(dist.contains)
+        next.foreach(v => dist(v) = dist(frontier.head) + 1)
+        frontier = next
+      }
+      // enumerate all shortest paths s→t along the BFS DAG
+      def paths(v: Long): Seq[List[Long]] =
+        if (v == s) Seq(List(s))
+        else adj(v).toSeq.filter(u => dist.get(u).contains(dist(v) - 1))
+          .flatMap(u => paths(u).map(p => p :+ v))
+      for (t <- verts if t != s && dist.contains(t); p <- paths(t);
+           v <- p.drop(1).dropRight(1))
+        counts(v) += 1L
+    }
+    counts.toMap
+  }
+
+  test("graph_stress matches brute-force shortest-path counting (diamond + tail)") {
+    // 1-2, 1-3, 2-4, 3-4 (diamond: two shortest 1→4 paths), 4-5 tail
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 5L))
+    val und = (edges ++ edges.map(e => (e._2, e._1))).toDF("a", "b")
+    val got = graft.ops.GraphAnalytics
+      .stressCentralityDF(und, Seq(1L, 5L), 10)
+      .as[(Long, Long)].collect().toSeq
+    val brute = bruteStress(edges, Seq(1L, 5L))
+    val expected = Seq(1L, 2L, 3L, 4L, 5L)
+      .map(v => (v, brute.getOrElse(v, 0L)))
+      .sortBy { case (id, st) => (-st, id) }
+    assert(got == expected)
+    // the diamond's merge vertex carries the most paths
+    assert(got.head._1 == 4L)
+  }
+
+  test("graph_stress on a path graph: interior vertices count pass-through paths") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L))
+    val und = (edges ++ edges.map(e => (e._2, e._1))).toDF("a", "b")
+    val got = graft.ops.GraphAnalytics
+      .stressCentralityDF(und, Seq(1L), 10)
+      .as[(Long, Long)].collect().toSeq
+    // from 1: paths to 3,4 pass 2 (2 paths); to 4 passes 3 (1 path)
+    assert(got == Seq((2L, 2L), (3L, 1L), (4L, 0L)))
+  }
+
+  test("stressCentralityDF with precomputed levels is row-identical to the " +
+      "standalone form (diamond + tail)") {
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 5L))
+    val und = (edges ++ edges.map(e => (e._2, e._1))).toDF("a", "b")
+    val ref = graft.ops.GraphAnalytics
+      .stressCentralityDF(und, Seq(1L, 5L), 10)
+      .as[(Long, Long)].collect().toSeq
+    // the landmark-BFS frame the shared traversal would produce, by hand
+    val levels = Seq(
+      (1L, 1L, 0L), (1L, 2L, 1L), (1L, 3L, 1L), (1L, 4L, 2L), (1L, 5L, 3L),
+      (5L, 5L, 0L), (5L, 4L, 1L), (5L, 2L, 2L), (5L, 3L, 2L), (5L, 1L, 3L))
+      .toDF("lm", "id", "dist")
+    val got = graft.ops.GraphAnalytics
+      .stressCentralityDF(und, Seq(1L, 5L), 10, levels = Some(levels))
+      .as[(Long, Long)].collect().toSeq
+    assert(got == ref)
+  }
+
+  test("graph_stress (shared-BFS wiring) matches the standalone form at sf0.001") {
+    val sf = "/root/testdata/sf0.001"
+    assume(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(sf)),
+      "testdata sf0.001 not present")
+    import graft.model.DerivedGraph
+    val ref = graft.ops.GraphAnalytics.stressCentralityDF(
+        DerivedGraph.undirected(DerivedGraph(spark, sf).edges),
+        QueriesGraphX.spLandmarks, 10)
+      .as[(Long, Long)].collect().toSeq
+    val got = Queries.all("graph_stress").fn(spark, sf)
+      .as[(Long, Long)].collect().toSeq
+    assert(got == ref)
   }
 }

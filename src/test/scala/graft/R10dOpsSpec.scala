@@ -195,38 +195,6 @@ class R10dOpsSpec extends SparkSpec {
     assert(got == Seq(("X", 10.0, 4L), ("Y", 30.0, 6L)))
   }
 
-  test("graph_ppr: seed-teleport semantics on a hand graph, replayed independently") {
-    import graft.ops.GraphAnalytics
-    // 1 ⇄ 2 cycle (1 is the seed), 3 → 4 disconnected from the seed
-    val vs = Seq((1L, "seed"), (2L, "x"), (3L, "x"), (4L, "x"))
-      .toDF("id", "label")
-    val es = Seq((1L, 2L), (2L, 1L), (3L, 4L)).toDF("src", "dst")
-    val got = GraphAnalytics.personalizedPageRankDF(vs, es,
-      col("label") === "seed", numIter = 10)
-      .orderBy("id").as[(Long, Double)].collect().toSeq
-    // independent replay: same ladder in plain Scala (1e9 fixed point,
-    // round to 6 dp per round, base = 0.15*|V|/|S| on the seed)
-    val base = 0.15 * 4.0 / 1.0
-    def rnd(x: Double) = BigDecimal(x)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    var r = Map(1L -> 1.0, 2L -> 1.0, 3L -> 1.0, 4L -> 1.0)
-    val out = Map(1L -> Seq(2L), 2L -> Seq(1L), 3L -> Seq(4L))
-    for (_ <- 1 to 10) {
-      val m = Seq(1L, 2L, 3L, 4L).map { v =>
-        val in = out.collect { case (u, ds) if ds.contains(v) =>
-          math.floor(r(u) / out(u).size * 1e9).toLong }
-        v -> in.sum.toDouble / 1e9
-      }.toMap
-      r = r.keys.map(v => v -> rnd((if (v == 1L) base else 0.0) + 0.85 * m(v))).toMap
-    }
-    val expected = Seq(1L, 2L, 3L, 4L).map(v => (v, r(v)))
-    assert(got == expected, s"got $got\nexpected $expected")
-    // unreachable-from-seed mass decays to exactly 0; the seed holds mass
-    assert(got.find(_._1 == 3L).get._2 == 0.0)
-    assert(got.find(_._1 == 4L).get._2 == 0.0)
-    assert(got.find(_._1 == 1L).get._2 > got.find(_._1 == 2L).get._2)
-  }
-
   test("multimodal_audio_gain: matches the synthesis replay; corrupt bytes yield no rows") {
     import graft.ops.llm.Multimodal
     val docs = Seq((1L, ""), (4L, ""), (7L, "")).toDF("doc_id", "text")

@@ -130,64 +130,6 @@ class R10eOpsSpec extends SparkSpec {
     assert(math.abs(spike._4) > math.abs(got(1)._4))
   }
 
-  /** Independent brute-force stress centrality: enumerate ALL shortest
-    * paths from each seed to each target by BFS-layered DFS, count the
-    * paths in which each vertex appears as an INTERIOR vertex.
-    */
-  private def bruteStress(edges: Seq[(Long, Long)], seeds: Seq[Long])
-      : Map[Long, Long] = {
-    val adj = (edges ++ edges.map(e => (e._2, e._1)))
-      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSet }
-    val verts = adj.keySet
-    val counts = scala.collection.mutable.Map[Long, Long]().withDefaultValue(0L)
-    for (s <- seeds) {
-      // BFS distances
-      val dist = scala.collection.mutable.Map(s -> 0)
-      var frontier = Set(s)
-      while (frontier.nonEmpty) {
-        val next = frontier.flatMap(adj.getOrElse(_, Set.empty))
-          .filterNot(dist.contains)
-        next.foreach(v => dist(v) = dist(frontier.head) + 1)
-        frontier = next
-      }
-      // enumerate all shortest paths s→t along the BFS DAG
-      def paths(v: Long): Seq[List[Long]] =
-        if (v == s) Seq(List(s))
-        else adj(v).toSeq.filter(u => dist.get(u).contains(dist(v) - 1))
-          .flatMap(u => paths(u).map(p => p :+ v))
-      for (t <- verts if t != s && dist.contains(t); p <- paths(t);
-           v <- p.drop(1).dropRight(1))
-        counts(v) += 1L
-    }
-    counts.toMap
-  }
-
-  test("graph_stress matches brute-force shortest-path counting (diamond + tail)") {
-    // 1-2, 1-3, 2-4, 3-4 (diamond: two shortest 1→4 paths), 4-5 tail
-    val edges = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 5L))
-    val und = (edges ++ edges.map(e => (e._2, e._1))).toDF("a", "b")
-    val got = graft.ops.GraphAnalytics
-      .stressCentralityDF(und, Seq(1L, 5L), 10)
-      .as[(Long, Long)].collect().toSeq
-    val brute = bruteStress(edges, Seq(1L, 5L))
-    val expected = Seq(1L, 2L, 3L, 4L, 5L)
-      .map(v => (v, brute.getOrElse(v, 0L)))
-      .sortBy { case (id, st) => (-st, id) }
-    assert(got == expected)
-    // the diamond's merge vertex carries the most paths
-    assert(got.head._1 == 4L)
-  }
-
-  test("graph_stress on a path graph: interior vertices count pass-through paths") {
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L))
-    val und = (edges ++ edges.map(e => (e._2, e._1))).toDF("a", "b")
-    val got = graft.ops.GraphAnalytics
-      .stressCentralityDF(und, Seq(1L), 10)
-      .as[(Long, Long)].collect().toSeq
-    // from 1: paths to 3,4 pass 2 (2 paths); to 4 passes 3 (1 path)
-    assert(got == Seq((2L, 2L), (3L, 1L), (4L, 0L)))
-  }
-
   test("multimodal_audio_silence matches a plain-Scala run replay of the synth formula") {
     import graft.ops.llm.Multimodal
     for (id <- Seq(1L, 4L, 103L)) { // audio ids (id % 3 == 1)

@@ -168,40 +168,6 @@ class R18OpsSpec extends SparkSpec {
       s"dedup_containment construction ran Spark jobs: $groups")
   }
 
-  // ---- stress riding the shared BFS levels (VERDICT r17 #2) ----------
-
-  test("stressCentralityDF with precomputed levels is row-identical to the " +
-      "standalone form (diamond + tail)") {
-    val edges = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 5L))
-    val und = (edges ++ edges.map(e => (e._2, e._1))).toDF("a", "b")
-    val ref = graft.ops.GraphAnalytics
-      .stressCentralityDF(und, Seq(1L, 5L), 10)
-      .as[(Long, Long)].collect().toSeq
-    // the landmark-BFS frame the shared traversal would produce, by hand
-    val levels = Seq(
-      (1L, 1L, 0L), (1L, 2L, 1L), (1L, 3L, 1L), (1L, 4L, 2L), (1L, 5L, 3L),
-      (5L, 5L, 0L), (5L, 4L, 1L), (5L, 2L, 2L), (5L, 3L, 2L), (5L, 1L, 3L))
-      .toDF("lm", "id", "dist")
-    val got = graft.ops.GraphAnalytics
-      .stressCentralityDF(und, Seq(1L, 5L), 10, levels = Some(levels))
-      .as[(Long, Long)].collect().toSeq
-    assert(got == ref)
-  }
-
-  test("graph_stress (shared-BFS wiring) matches the standalone form at sf0.001") {
-    val sf = "/root/testdata/sf0.001"
-    assume(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(sf)),
-      "testdata sf0.001 not present")
-    import graft.model.DerivedGraph
-    val ref = graft.ops.GraphAnalytics.stressCentralityDF(
-        DerivedGraph.undirected(DerivedGraph(spark, sf).edges),
-        QueriesGraphX.spLandmarks, 10)
-      .as[(Long, Long)].collect().toSeq
-    val got = Queries.all("graph_stress").fn(spark, sf)
-      .as[(Long, Long)].collect().toSeq
-    assert(got == ref)
-  }
-
   // ---- over-limit walks step (VERDICT r17 #5) ------------------------
 
   test("walks step past the broadcast limit: the hint drops and the step " +
