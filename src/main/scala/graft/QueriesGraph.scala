@@ -272,10 +272,7 @@ object QueriesGraph {
     "graph_assortativity" -> QueryDef(
       (s, d) => {
         val g = DerivedGraph(s, d)
-        // broadcastDeg: the derived graph's vertex set is far under the
-        // documented ~10⁷ bound; the hint only changes join strategy,
-        // never values (same per-edge xy formula and decimal sums)
-        graft.ops.GraphAnalytics.degreeAssortativity(g.edges, broadcastDeg = true)
+        graft.ops.GraphAnalytics.degreeAssortativity(g.edges)
           .orderBy("n")
       },
       s"""${DerivedGraphSql.cte},

@@ -147,7 +147,7 @@ object QueriesGraphX {
   val defs: ListMap[String, QueryDef] = ListMap(
 
     // Static 10-iteration PageRank over the derived graph; top-100 by
-    // rank. Runs as the deterministic DataFrame loop
+    // rank. Runs on the block superstep kernel
     // (GraphAnalytics.pageRankDF: fixed-point LONG message sums +
     // per-iteration 6dp rounding), so the DuckDB oracle — the same ten
     // rounds as chained CTEs with the identical rounding ladder —
@@ -168,8 +168,8 @@ object QueriesGraphX {
     // closeness to the seeds instead of global prestige (customers and
     // suppliers of well-connected nations rise; unreachable-from-seed
     // mass decays to 0). Same fixed-point ladder, per-round rounding and
-    // lineage cadence as graph_pagerank; the oracle replays the rounds
-    // with the seed-conditional base term.
+    // kernel as graph_pagerank; the oracle replays the rounds with the
+    // seed-conditional base term.
     "graph_ppr" -> QueryDef(
       (s, d) => {
         val g = graft.model.DerivedGraph(s, d)
@@ -187,9 +187,9 @@ object QueriesGraphX {
     // the UNDIRECTED view (Bonacich's symmetric-adjacency form — and the
     // derived graph is a layered DAG in directed form, where all mass
     // drains to sinks and the iterate vanishes). Same determinism ladder
-    // as graph_pagerank (exact-long message sums, one IEEE divide, 6dp
-    // round per round), replayed in DuckDB as chained CTEs with a
-    // per-round exact-DECIMAL total.
+    // and kernel as graph_pagerank (exact-long message sums, one IEEE
+    // divide, 6dp round per round), replayed in DuckDB as chained CTEs
+    // with a per-round exact-DECIMAL total.
     "graph_eigenvector" -> QueryDef(
       (s, d) => {
         val g = graft.model.DerivedGraph(s, d)
@@ -240,12 +240,12 @@ object QueriesGraphX {
     // the semantically meaningful community structure, and it keeps LPA's
     // per-superstep label-histogram messages away from the ordered/supplies
     // hub vertices (on the full graph those maps made LPA ~10× the cost of
-    // PageRank). Runs as the deterministic synchronous DataFrame LPA
-    // (GraphAnalytics.lpaDF: min-label tie-break — a pure function of the
-    // graph), so the DuckDB oracle replays the five supersteps as chained
-    // CTEs and VALUE-checks the communities; the GraphX variant stays as
-    // the library op, cross-checked at community-structure level in
-    // GraphAnalyticsSpec.
+    // PageRank). Runs as the deterministic synchronous LPA on the block
+    // superstep kernel (GraphAnalytics.lpaDF: min-label tie-break — a
+    // pure function of the graph), so the DuckDB oracle replays the five
+    // supersteps as chained CTEs and VALUE-checks the communities; the
+    // GraphX variant stays as the library op, cross-checked at
+    // community-structure level in GraphAnalyticsSpec.
     "graph_lpa" -> QueryDef(
       (s, d) => memberLabels(s, d).orderBy("id"),
       lpaOracleSql),

@@ -146,8 +146,8 @@ object Windows {
           coalesce(col("filled"), col("__prev")).as("filled"))
         .localCheckpoint()
       // advance state: latest non-null reading per user over state ∪ batch
-      // — lexicographic struct-max on the unique (ts, event_id) key, the
-      // same argmax idiom as lpaDF (reading rides along, never compared)
+      // — lexicographic struct-max on the unique (ts, event_id) key, an
+      // argmax with no per-key sort (reading rides along, never compared)
       state = state
         .unionByName(local.filter(col("reading").isNotNull)
           .select(col("user_id"),

@@ -254,6 +254,10 @@ class GraphAnalyticsSpec extends SparkSpec {
     assert(r(0)._3 == 0.0 && r(1)._3 == 0.0 && r(3)._2 == 0.0)
     // 3 is the strongest authority
     assert(auths.max == r(2)._3)
+    def layout(n: Int) = graft.ops.GraphAnalytics
+      .hitsDF(v.repartition(n), e.repartition(n), 4)
+      .orderBy("id").as[(Long, Double, Double)].collect().toSeq
+    assert(layout(1) == r.toSeq && layout(7) == r.toSeq, "hitsDF changed under repartitioning")
   }
 
   test("graph_ppr: seed-teleport semantics on a hand graph, replayed independently") {
@@ -282,10 +286,61 @@ class GraphAnalyticsSpec extends SparkSpec {
     }
     val expected = Seq(1L, 2L, 3L, 4L).map(v => (v, r(v)))
     assert(got == expected, s"got $got\nexpected $expected")
+    def layout(n: Int) = GraphAnalytics.personalizedPageRankDF(vs.repartition(n),
+      es.repartition(n), col("label") === "seed", numIter = 10)
+      .orderBy("id").as[(Long, Double)].collect().toSeq
+    assert(layout(1) == got && layout(7) == got,
+      "personalizedPageRankDF changed under repartitioning")
     // unreachable-from-seed mass decays to exactly 0; the seed holds mass
     assert(got.find(_._1 == 3L).get._2 == 0.0)
     assert(got.find(_._1 == 4L).get._2 == 0.0)
     assert(got.find(_._1 == 1L).get._2 > got.find(_._1 == 2L).get._2)
+  }
+
+  // A hand graph with every irregular shape the edge relation can hold:
+  // vertex 4's only in-edge comes from the dangling source 98, 99 is a
+  // dangling destination that also sends (to 5), 97→96 has neither
+  // endpoint among the vertices, 1→2 is doubled, 3→3 is a self-loop and
+  // 6 is isolated. Vertices 1 and 7 are the PPR seeds.
+  private lazy val irregular = {
+    val vs = Seq((1L, "s"), (2L, "x"), (3L, "x"), (4L, "x"), (5L, "x"), (6L, "x"),
+      (7L, "s")).toDF("id", "label")
+    val es = Seq((1L, 2L), (1L, 2L), (2L, 3L), (3L, 1L), (3L, 3L), (2L, 99L),
+      (99L, 5L), (98L, 4L), (4L, 5L), (5L, 1L), (97L, 96L), (7L, 1L))
+      .toDF("src", "dst")
+    (vs, es)
+  }
+
+  private def rowStrings(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.orderBy("id").collect().toSeq.map(_.toString)
+
+  test("iteration family on an irregular hand graph: rows pinned") {
+    // Rows as the DataFrame rounds computed them. Vertex 4 receives only
+    // from a non-vertex, so it drops out after the first round; 99 joins
+    // the state as a receiver and sends onwards.
+    val (vs, es) = irregular
+    assert(rowStrings(GraphAnalytics.pageRankDF(vs, es, 10)) == Seq("[1,1.710321]",
+      "[2,1.705233]", "[3,1.498115]", "[5,0.87508]", "[6,0.170732]", "[7,0.170732]",
+      "[99,0.869787]"))
+    assert(rowStrings(GraphAnalytics.personalizedPageRankDF(vs, es,
+      col("label") === "s", 10)) == Seq("[1,2.000801]", "[2,1.768895]", "[3,1.224989]",
+      "[5,0.57065]", "[6,0.0]", "[7,0.525]", "[99,0.71279]"))
+    assert(rowStrings(GraphAnalytics.eigenvectorDF(vs, es, 8)) == Seq("[1,1.638889]",
+      "[2,1.666666]", "[3,2.194445]", "[5,0.611111]", "[6,0.0]", "[7,0.0]",
+      "[99,0.888889]"))
+    assert(rowStrings(GraphAnalytics.hitsDF(vs, es, 4)) == Seq("[1,2.056225,2.423077]",
+      "[2,1.228916,2.027149]", "[3,2.128514,1.773756]", "[5,1.228916,0.126697]",
+      "[6,0.0,0.0]", "[7,1.228916,0.0]", "[99,0.064257,0.649321]"))
+    assert(rowStrings(GraphAnalytics.lpaDF(vs.select("id"), DerivedGraph.undirected(es), 5)) ==
+      Seq("[1,2]", "[2,1]", "[3,3]", "[4,2]", "[5,1]", "[6,6]", "[7,1]"))
+    // no vertex receives anything: the renormalizing total is 0 and the
+    // division fails (ANSI); the pagerank and LPA ladders need no total
+    val (lone, stray) = (Seq(1L, 2L).toDF("id"), Seq((97L, 96L)).toDF("src", "dst"))
+    intercept[ArithmeticException](GraphAnalytics.eigenvectorDF(lone, stray, 8).collect())
+    intercept[ArithmeticException](GraphAnalytics.hitsDF(lone, stray, 4).collect())
+    assert(rowStrings(GraphAnalytics.pageRankDF(lone, stray, 10)) == Seq("[1,1.0]", "[2,1.0]"))
+    assert(rowStrings(GraphAnalytics.lpaDF(lone, DerivedGraph.undirected(stray), 5)) ==
+      Seq("[1,1]", "[2,2]"))
   }
 
   /** Independent brute-force stress centrality: enumerate ALL shortest

@@ -68,10 +68,9 @@ class PlanShapeR10dSpec extends SparkSpec {
   }
 
   test("graph_ppr: final pass is a top-k over the checkpointed rank table") {
-    // the per-round joins run inside the checkpoint cadence (their
-    // broadcast shape is pageRankDF's, measured there); the visible plan
-    // must be exactly TakeOrdered over the materialized final round — no
-    // trailing shuffle, no global sort
+    // the rounds run on the block superstep kernel before this plan
+    // exists; the visible plan must be exactly TakeOrdered over the held
+    // final round — no trailing shuffle, no global sort
     val p = planOf("graph_ppr")
     assert(!p.contains("CartesianProduct"), s"ppr plan:\n$p")
     assert(p.contains("TakeOrderedAndProject"),
