@@ -6,40 +6,38 @@ import scala.collection.immutable.ListMap
 import graft.model.{DerivedGraph, DerivedGraphSql}
 import graft.ops.GraphAnalytics
 
-/** GraphX analytics inventory (BASELINE.json spark_approach). CC and LPA
-  * are fixpoint/tie-break-unstable → no SQL oracle (rows-only check per
-  * driver contract); PageRank (static iteration count + per-iteration
-  * rounding ladder), BFS/shortest-paths (chained frontier joins) and the
-  * triangle count (3-way self-join) are all value-checked in DuckDB.
+/** Graph analytics inventory. Every query here is value-checked in DuckDB:
+  * PageRank and the other fixed-round iterations replay their rounding
+  * ladders, BFS and the landmark centralities replay chained frontier
+  * joins, the triangle count a 3-way self-join, and CC and LPA their
+  * bounded rounds (`ccOracleSql`, `lpaOracleSql`).
   */
 object QueriesGraphX {
 
-  /** The multi-landmark BFS frame FOUR centralities read
-    * (shortest_paths / closeness / harmonic / eccentricity) — traversed
-    * once per (session, SF dir) and persisted, like Tables/DerivedGraph/
-    * partPostings: before this cache each query re-ran the full Pregel
-    * traversal (~1.5 s each at sf0.1, ~11 s at sf1), paying 4x for one
-    * frame. |V|·L rows (L = 3 landmarks) — comfortably persistable at
-    * any SF the landmark design targets.
+  /** The multi-landmark BFS frame the landmark queries read
+    * (bfs_dist / shortest_paths / closeness / harmonic / eccentricity) —
+    * traversed once per (session, SF dir) and persisted, like
+    * Tables/DerivedGraph/partPostings, so the queries share one traversal.
+    * |V|·L rows (L = 3 landmarks).
     */
   private val bfsCache = new graft.model.SessionCache[String, org.apache.spark.sql.DataFrame]
 
   private def sharedBfs(s: org.apache.spark.sql.SparkSession, d: String) =
     bfsCache.getOrElseUpdate(s, d) {
-      // disk-cached across sessions (the fact_edges/scd2 CacheDirs
-      // discipline, VERDICT r12 #2): a fresh session with a valid cache
-      // reads |V|·L parquet rows instead of re-running the Pregel
-      // traversal. All-long columns — the parquet round-trip is exact, so
-      // the cached frame is value-identical to the build.
-      // cache-entry name folds in the CODE parameters the frame bakes in
-      // (landmark set, max depth — ADVICE r13): changing either produces a
-      // NEW entry instead of silently serving the old one to the
-      // correctness gates of every session whose cache predates the change.
-      graft.model.CacheDirs.cachedParquet(s, "graph", d,
+      // disk-cached across sessions: a fresh session with a valid cache
+      // reads |V|·L parquet rows instead of re-running the traversal. The
+      // entry name folds in the landmark set and max depth, so changing
+      // either builds a new entry instead of serving the old frame.
+      var built: Option[GraphAnalytics.HeldFrame] = None
+      try graft.model.CacheDirs.cachedParquet(s, "graph", d,
         s"landmark_bfs_lm${spLandmarks.map(_ - graft.model.DerivedGraph.NationBase).mkString("-")}_d$spMaxDepth") {
-        GraphAnalytics.multiSourceBfs(
-          GraphAnalytics.derivedGraphX(s, d), spLandmarks, spMaxDepth)
+        val g = DerivedGraph(s, d)
+        val b = GraphAnalytics.landmarkBfs(g.vertices, DerivedGraph.undirected(g.edges),
+          spLandmarks, spMaxDepth)
+        built = Some(b)
+        b.frame
       }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      finally built.foreach(_.release())
     }
 
   /** Materialize the persisted BFS frame — the bench warmup hook, owned
@@ -287,16 +285,8 @@ object QueriesGraphX {
 
     // BFS distances from a nation seed; oracle = min level over chained
     // frontier joins (diameter of the derived graph is well under the
-    // 10-superstep bound). The seed IS one of the three sharedBfs
-    // landmarks, so the query reads the one disk-cached multi-landmark
-    // frame (the eccentricity/closeness/harmonic "traverse once, derive
-    // many" discipline) instead of re-running a single-seed Pregel pass:
-    // the r13 tier-7 probe read the Pregel form at 16.7× per 10× data
-    // (deserialized VertexRDD supersteps under 2×-heap pressure), while
-    // the landmark-frame filter is a pruned parquet/persist scan. The
-    // explicit Pregel program stays as the library op
-    // (GraphAnalytics.bfsDistances, spec-exercised) for seeds outside
-    // the landmark set.
+    // 10-round bound). The seed is one of the three landmarks, so the
+    // query filters the shared landmark frame.
     "graph_bfs_dist" -> QueryDef(
       (s, d) => sharedBfs(s, d)
         .filter(col("landmark") === (DerivedGraph.NationBase + 7))
@@ -322,20 +312,18 @@ object QueriesGraphX {
          |   UNION ALL SELECT id, 10 FROM h10)
          |SELECT id, CAST(MIN(dist) AS BIGINT) AS dist FROM lv GROUP BY id ORDER BY id""".stripMargin),
 
-    // Multi-landmark shortest paths (3 nation landmarks) in one Pregel
-    // traversal over the cached GraphX build; oracle = one chained
-    // frontier-join BFS per landmark (generated below), min level per
-    // (vertex, landmark). Value-checked like graph_bfs_dist — iterative
-    // graph analytics under the full oracle.
+    // Multi-landmark shortest paths (3 nation landmarks): the shared
+    // landmark frame; oracle = one chained frontier-join BFS per landmark
+    // (generated below), min level per (vertex, landmark).
     "graph_shortest_paths" -> QueryDef(
       (s, d) => sharedBfs(s, d)
         .orderBy("id", "landmark"),
       spOracleSql),
 
     // Landmark closeness centrality (Bavelas 1950 form over the reachable
-    // set): closeness(L) = (|reached|−1) / Σ dist(L,·) — the same
-    // multi-landmark Pregel traversal as graph_shortest_paths aggregated
-    // per landmark, so the oracle reuses the identical BFS CTE prefix.
+    // set): closeness(L) = (|reached|−1) / Σ dist(L,·) — the shared
+    // landmark frame aggregated per landmark, so the oracle reuses the
+    // identical BFS CTE prefix.
     // n_reached and sum_dist are exact BIGINTs; closeness is one IEEE
     // division of those exact inputs, 6 dp — the determinism ladder.
     "graph_closeness" -> QueryDef(
@@ -488,22 +476,12 @@ object QueriesGraphX {
     // classic betweenness accumulates path FRACTIONS (Brandes 2001) that
     // no cross-engine replay survives; stress counts the shortest paths
     // through each vertex, so both Brandes passes (forward σ, backward
-    // successor accumulation) run in exact BIGINTs. Fifth consumer of
-    // the landmark discipline (shortest_paths/closeness/harmonic/
-    // eccentricity read distances; stress needs σ and the DAG, so it
-    // runs its own two-pass ladder on the same seeds). Top-100, (stress
-    // desc, id) deterministic.
+    // successor accumulation) run in exact BIGINTs. It needs σ and the
+    // BFS DAG, not just distances, so it runs both passes itself on the
+    // block kernel. Top-100, (stress desc, id) deterministic.
     "graph_stress" -> QueryDef(
-      // σ/accumulation still run their own two-pass ladder, but the
-      // forward pass rides the SHARED landmark-BFS frame for level
-      // membership (sixth consumer of the one traversal — VERDICT r17
-      // #2): the growing-visited anti-join broadcast and the per-round
-      // emptiness probes are gone; GraphAnalyticsSpec pins row parity
-      // with the standalone form
       (s, d) => GraphAnalytics.stressCentralityDF(
-        DerivedGraph.undirected(DerivedGraph(s, d).edges), spLandmarks, 10,
-        levels = Some(sharedBfs(s, d).select(
-          col("landmark").as("lm"), col("id"), col("dist")))),
+        DerivedGraph.undirected(DerivedGraph(s, d).edges), spLandmarks, 10),
       stressOracleSql)
   )
 
@@ -781,8 +759,8 @@ object QueriesGraphX {
        |ORDER BY ds.community""".stripMargin
 
   /** Landmarks for graph_shortest_paths: three nation vertices.
-    * `private[graft]` so the R18 stress-parity spec can replay the
-    * standalone form on the same seeds.
+    * `private[graft]` so the specs can run the landmark passes on the
+    * same seeds.
     */
   private[graft] lazy val spLandmarks: Seq[Long] =
     Seq(3L, 7L, 12L).map(DerivedGraph.NationBase + _)

@@ -8,9 +8,10 @@ import graft.ops.GraphAnalytics
   * adds a count, a materialization or a scalar fetch to a round fails
   * here instead of in a benchmark run. On the block superstep kernel a
   * call pays an edge count, the static-block build, one job per
-  * renormalized round (or one for all rounds) and the collect. Each call runs on the
-  * sf0.001 derived graph with its inventory query's arguments, and the
-  * result is collected, so the count covers the whole call.
+  * renormalized round (or one for all rounds) and the collect. Each call
+  * runs on the sf0.001 derived graph with its inventory query's
+  * arguments, and the result is collected, so the count covers the whole
+  * call. Pins only go down.
   */
 class AnalyticsJobBudgetSpec extends SparkSpec {
 
@@ -29,9 +30,6 @@ class AnalyticsJobBudgetSpec extends SparkSpec {
     // the inventory query reads the member view from a cached parquet
     // entry; a checkpoint stands in for it, outside the counted calls
     val memberUnd = DerivedGraph.undirected(member).localCheckpoint()
-    val levels = GraphAnalytics.multiSourceBfs(GraphAnalytics.derivedGraphX(spark, sf001),
-        QueriesGraphX.spLandmarks, 10)
-      .select(col("landmark").as("lm"), col("id"), col("dist")).localCheckpoint()
 
     val got = Map(
       "pagerank" -> jobs(GraphAnalytics.pageRankDF(g.vertices, g.edges, 10).collect()),
@@ -43,9 +41,23 @@ class AnalyticsJobBudgetSpec extends SparkSpec {
         .collect()),
       "lpa" -> jobs(GraphAnalytics.lpaDF(
         g.vertices.filter(col("label") =!= "part").select("id"), memberUnd, 5).collect()),
-      "stress" -> jobs(GraphAnalytics.stressCentralityDF(und, QueriesGraphX.spLandmarks, 10,
-        levels = Some(levels)).collect()))
+      "stress" -> jobs(GraphAnalytics.stressCentralityDF(und, QueriesGraphX.spLandmarks, 10)
+        .collect()))
     assert(got == Map("pagerank" -> 4, "ppr" -> 4, "eigenvector" -> 11, "hits" -> 11,
-      "lpa" -> 4, "stress" -> 54))
+      "lpa" -> 4, "stress" -> 3))
+  }
+
+  test("shared landmark frame build job budget") {
+    assume(haveSf001, "testdata sf0.001 not present")
+    // a fresh session has no memoized frame; the derived graph is warmed
+    // outside the count, then the frame is built under an empty cache root
+    val s = spark.newSession()
+    DerivedGraph.warm(s, sf001)
+    val saved = System.getProperty("java.io.tmpdir")
+    System.setProperty("java.io.tmpdir",
+      java.nio.file.Files.createTempDirectory("graft-landmarks").toString)
+    val built = try jobs(QueriesGraphX.warmSharedBfs(s, sf001))
+    finally System.setProperty("java.io.tmpdir", saved)
+    assert(built == 7)
   }
 }

@@ -1,12 +1,16 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.GraphAnalytics.{DSum6, Exact}
+import graft.model.DerivedGraph
+import graft.ops.GraphAnalytics
+import graft.ops.GraphAnalytics.{DSum6, Exact, ProductSum}
+import org.apache.spark.sql.types.DecimalType
 
 /** The block superstep kernel computes the iteration family's ladders on
   * primitives; these helpers must equal Spark's own `round(x, 6)`,
-  * `floor(x)` and [[Qh.dsum]] bit for bit, or the rows drift from the
-  * DuckDB replays. Each is compared with Spark on one corpus.
+  * `floor(x)`, [[Qh.dsum]] and the stress `SUM(DECIMAL(38,0))` bit for
+  * bit, and fail where Spark's ANSI arithmetic fails, or the rows drift
+  * from the DuckDB replays. Each is compared with Spark on one corpus.
   */
 class ExactArithmeticSpec extends SparkSpec {
   import spark.implicits._
@@ -82,5 +86,69 @@ class ExactArithmeticSpec extends SparkSpec {
       val t = Seq(1.5, x).toDF("x").agg(Qh.dsum(col("x"))).as[Double].head()
       assert(bits(t) == bits(new DSum6().add(1.5).add(x).toDouble))
     }
+  }
+
+  /** Whether `body` fails with an ArithmeticException anywhere in its
+    * cause chain (a task failure reaches the driver wrapped).
+    */
+  private def arithmeticFailure(body: => Any): Boolean =
+    try { body; false }
+    catch {
+      case e: Exception =>
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(_.isInstanceOf[ArithmeticException])
+    }
+
+  private def sparkProductSum(pairs: Seq[(Int, Long, Long)]) =
+    pairs.toDF("g", "s", "h").groupBy("g")
+      .agg(sum(col("s").cast(DecimalType(38, 0)) * col("h")).cast("long"))
+
+  private def productSum(pairs: Seq[(Long, Long)]): Long =
+    pairs.foldLeft(new ProductSum)((a, p) => a.add(p._1, p._2)).toLong
+
+  test("ProductSum equals Spark's DECIMAL(38,0) σ·h sum cast to BIGINT") {
+    val rnd = new scala.util.Random(5)
+    def small = rnd.nextInt(1 << 21).toLong - (1 << 20)
+    // 40 groups of small signed products, then groups whose products pass
+    // Long.MaxValue but whose sums are back in range: a·b − a·(b+1) = −a
+    val smalls = (0 until 4000).map(i => (i % 40, small, small))
+    val wide = (0 until 300).flatMap { i =>
+      val (a, b) = (rnd.nextLong(), rnd.nextLong() >> (1 + rnd.nextInt(40)))
+      Seq((100 + i, a, b), (100 + i, -a, b + 1))
+    } ++ Seq((500, 1L << 40, 1L << 40), (500, -(1L << 40), 1L << 40), (500, 3L, 5L),
+      (501, Long.MaxValue, Long.MaxValue), (501, Long.MaxValue, -Long.MaxValue), (501, 7L, -2L),
+      (502, Long.MinValue, 2L), (502, 1L << 62, 4L), (502, -1L, 9L))
+    val pairs = smalls ++ wide
+    val want = sparkProductSum(pairs).as[(Int, Long)].collect().toMap
+    val got = pairs.groupBy(_._1).map { case (g, ps) => g -> productSum(ps.map(p => (p._2, p._3))) }
+    assert(want.size == 343 && got == want)
+    assert(Seq(want(500), want(501), want(502)) == Seq(15L, -14L, -9L))
+    // a product or a sum past BIGINT fails the cast on both sides
+    for (ps <- Seq(Seq((Long.MaxValue, 2L)), Seq((Long.MaxValue, 1L), (1L, 1L)),
+        Seq((Long.MinValue, 1L), (-1L, 1L)), Seq((1L << 62, 1L << 62), (1L << 62, 1L << 62)))) {
+      assert(arithmeticFailure(sparkProductSum(ps.map(p => (0, p._1, p._2))).collect()), ps)
+      assert(arithmeticFailure(productSum(ps)), ps)
+    }
+  }
+
+  test("the kernel's σ and h sums fail on long overflow as ANSI sum does") {
+    assert(arithmeticFailure(Seq(Long.MaxValue - 5, 3L, 3L).toDF("x").agg(sum("x")).collect()))
+    // a path 0-1-…-10 with m parallel edges per hop: σ(v_j) = m^j, and
+    // each h(v_j) = m·(1 + h(v_j+1)) from h(v_10) = 0
+    def ladder(m: Int) = DerivedGraph.undirected(
+      (1 to 10).flatMap(j => Seq.fill(m)((j - 1).toLong, j.toLong)).toDF("src", "dst"))
+    val m = 50
+    val h = (9 to 0 by -1).scanLeft(BigInt(0))((acc, _) => m * (1 + acc)).reverse
+    val want = (1 to 10).map(j => (j.toLong, (BigInt(m).pow(j) * h(j)).toLong))
+      .sortBy { case (id, st) => (-st, id) }
+    assert(want.head._2 > (1L << 55))
+    assert(GraphAnalytics.stressCentralityDF(ladder(m), Seq(0L), 10)
+      .as[(Long, Long)].collect().toSeq == want)
+    // at m = 100 the last round's σ sum is 100 · 100^9 = 10^20
+    assert(BigInt(100).pow(9) < Long.MaxValue && BigInt(100).pow(10) > Long.MaxValue)
+    assert(arithmeticFailure(Seq.fill(100)(BigInt(100).pow(9).toLong).toDF("x").agg(sum("x"))
+      .collect()))
+    assert(arithmeticFailure(GraphAnalytics.stressCentralityDF(ladder(100), Seq(0L), 10)
+      .collect()))
   }
 }

@@ -197,28 +197,61 @@ class GraphAnalyticsSpec extends SparkSpec {
   }
 
   test("bfs distances on a path with an unreachable pair") {
-    val dists = GraphAnalytics.bfsDistances(e, seed = 1L)
+    val dists = PregelBfs.bfsDistances(e, seed = 1L)
       .orderBy("id").as[(Long, Long)].collect().toSeq
     assert(dists == Seq((1L, 0L), (2L, 1L), (3L, 1L), (4L, 2L))) // 5,6 unreachable
   }
 
-  test("multiSourceBfs: one traversal equals a per-landmark bfsDistances run") {
-    // random undirected graph; every landmark's distance map must match
-    // the single-source Pregel exactly (including omitted unreachables).
-    val rnd = new scala.util.Random(11)
-    val edges = Seq.fill(40)((rnd.nextInt(20).toLong + 1, rnd.nextInt(20).toLong + 1))
-      .filter { case (a, b) => a != b }.distinct
-      .toDF("src", "dst").withColumn("label", lit("e"))
-    val verts = (1L to 20L).map(i => (i, "x", s"v$i")).toDF("id", "label", "name")
-    val g = GraphAnalytics.toGraphX(verts, edges)
-    val landmarks = Seq(1L, 7L, 13L)
-    val multi = GraphAnalytics.multiSourceBfs(g, landmarks, 10)
-      .as[(Long, Long, Long)].collect().toSet
-    val singles = landmarks.flatMap { lm =>
-      GraphAnalytics.bfsDistances(g, lm, 10).as[(Long, Long)].collect()
-        .map { case (id, d) => (id, lm, d) }
-    }.toSet
-    assert(multi == singles)
+  /** Seeded random graphs over vertices 1..20 with an isolated vertex 21
+    * in the vertex table, a vertex 30 that only appears as an edge
+    * endpoint and a component 40-41 that no landmark reaches.
+    */
+  private def randomGraph(seed: Int): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    (Seq.fill(30)((rnd.nextInt(20).toLong + 1, rnd.nextInt(20).toLong + 1)) ++
+      Seq((30L, rnd.nextInt(20).toLong + 1), (40L, 41L)))
+      .filter { case (a, b) => a != b }
+      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
+  }
+
+  /** `body` at 1 and 4 shuffle partitions, restoring the session's width. */
+  private def atShuffleWidths[T](body: => T): Seq[T] = {
+    val saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try Seq("1", "4").map { w => spark.conf.set("spark.sql.shuffle.partitions", w); body }
+    finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+  }
+
+  test("landmarkBfs equals per-landmark Pregel BFS under any layout") {
+    // landmarks: two graph vertices, the edgeless vertex 21, the
+    // endpoint-only vertex 30 and 99, which is in neither table
+    val landmarks = Seq(1L, 7L, 21L, 30L, 99L)
+    val verts = ((1L to 21L) ++ Seq(40L, 41L)).map(i => (i, "x", s"v$i"))
+      .toDF("id", "label", "name")
+    for (seed <- Seq(11, 12, 13)) {
+      val pairs = randomGraph(seed)
+      val edges = pairs.toDF("src", "dst").withColumn("label", lit("e"))
+      val g = GraphAnalytics.toGraphX(verts, edges)
+      def kernel(vs: org.apache.spark.sql.DataFrame, es: org.apache.spark.sql.DataFrame,
+          depth: Int): Set[(Long, Long, Long)] = {
+        val b = GraphAnalytics.landmarkBfs(vs, DerivedGraph.undirected(es), landmarks, depth)
+        try b.frame.as[(Long, Long, Long)].collect().toSet finally b.release()
+      }
+      for (depth <- Seq(2, 10)) {
+        val ref = landmarks.flatMap { lm =>
+          PregelBfs.bfsDistances(g, lm, depth).as[(Long, Long)].collect()
+            .map { case (id, d) => (id, lm, d) }
+        }.toSet
+        assert(ref.contains((21L, 21L, 0L)) && ref.contains((30L, 30L, 0L)))
+        assert(!ref.exists(r => r._2 == 99L || r._1 == 40L))
+        assert(kernel(verts, edges, depth) == ref, s"graph $seed, depth $depth")
+        if (depth == 10) {
+          val layouts = atShuffleWidths(Seq(
+            kernel(verts.coalesce(1), edges.coalesce(1), depth),
+            kernel(verts.repartition(7), edges.repartition(7), depth)))
+          layouts.flatten.foreach(got => assert(got == ref, s"graph $seed under a layout"))
+        }
+      }
+    }
   }
 
   test("degreeAssortativity: a star is perfectly disassortative (r = -1)") {
@@ -401,35 +434,62 @@ class GraphAnalyticsSpec extends SparkSpec {
     assert(got == Seq((2L, 2L), (3L, 1L), (4L, 0L)))
   }
 
-  test("stressCentralityDF with precomputed levels is row-identical to the " +
-      "standalone form (diamond + tail)") {
-    val edges = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 5L))
-    val und = (edges ++ edges.map(e => (e._2, e._1))).toDF("a", "b")
-    val ref = graft.ops.GraphAnalytics
-      .stressCentralityDF(und, Seq(1L, 5L), 10)
-      .as[(Long, Long)].collect().toSeq
-    // the landmark-BFS frame the shared traversal would produce, by hand
-    val levels = Seq(
-      (1L, 1L, 0L), (1L, 2L, 1L), (1L, 3L, 1L), (1L, 4L, 2L), (1L, 5L, 3L),
-      (5L, 5L, 0L), (5L, 4L, 1L), (5L, 2L, 2L), (5L, 3L, 2L), (5L, 1L, 3L))
-      .toDF("lm", "id", "dist")
-    val got = graft.ops.GraphAnalytics
-      .stressCentralityDF(und, Seq(1L, 5L), 10, levels = Some(levels))
-      .as[(Long, Long)].collect().toSeq
-    assert(got == ref)
+  test("stress matches brute force on random graphs under any layout") {
+    val seeds = Seq(1L, 7L, 30L)
+    for (seed <- Seq(11, 12, 13)) {
+      val pairs = randomGraph(seed)
+      val brute = bruteStress(pairs, seeds)
+      // a row per vertex some other landmark reaches, stress 0 included
+      val adj = (pairs ++ pairs.map(_.swap)).groupMap(_._1)(_._2)
+      def reach(s: Long): Set[Long] = Iterator.iterate(Set(s))(f =>
+        f ++ f.flatMap(adj.getOrElse(_, Nil))).drop(25).next()
+      val expected = seeds.flatMap(s => reach(s) - s).distinct
+        .map(v => (v, brute.getOrElse(v, 0L))).sortBy { case (id, st) => (-st, id) }.take(100)
+      val und = DerivedGraph.undirected(pairs.toDF("src", "dst"))
+      def run(u: org.apache.spark.sql.DataFrame) =
+        GraphAnalytics.stressCentralityDF(u, seeds, 10).as[(Long, Long)].collect().toSeq
+      assert(run(und) == expected, s"graph $seed")
+      atShuffleWidths(Seq(run(und.coalesce(1)), run(und.repartition(7)))).flatten
+        .foreach(got => assert(got == expected, s"graph $seed under a layout"))
+    }
   }
 
-  test("graph_stress (shared-BFS wiring) matches the standalone form at sf0.001") {
+  /** graph_stress at sf0.001 as the DataFrame rounds computed it before
+    * the landmark passes moved onto the block kernel: (id, stress_units),
+    * in output order.
+    */
+  private val stressSf001 = Seq(
+      (3000000087L, 70834L), (3000000095L, 47521L), (3000000135L, 44415L), (4000000007L, 41893L),
+      (4000000003L, 38293L), (4000000001L, 14713L), (4000000009L, 14688L), (4000000000L, 13897L),
+      (4000000004L, 13574L), (4000000008L, 13294L), (4000000006L, 13221L), (4000000005L, 13217L),
+      (4000000002L, 13114L), (3000000054L, 11196L), (3000000114L, 8992L), (3000000017L, 7023L),
+      (3000000057L, 6773L), (3000000016L, 6369L), (3000000020L, 5999L), (5000000023L, 4564L),
+      (5000000022L, 4404L), (5000000034L, 4256L), (5000000121L, 4256L), (5000000153L, 4179L),
+      (5000000077L, 4120L), (3000000099L, 4094L), (5000000116L, 3924L), (5000000081L, 3463L),
+      (3000000073L, 3119L), (5000000024L, 3117L), (5000000007L, 3061L), (5000000158L, 2929L),
+      (5000000138L, 2807L), (5000000080L, 2803L), (5000000099L, 2749L), (5000000165L, 2722L),
+      (5000000043L, 2714L), (5000000056L, 2682L), (5000000000L, 2663L), (5000000010L, 2652L),
+      (5000000179L, 2640L), (2000000019L, 2629L), (5000000072L, 2598L), (5000000098L, 2590L),
+      (5000000070L, 2568L), (5000000036L, 2559L), (5000000104L, 2532L), (5000000016L, 2529L),
+      (5000000101L, 2525L), (5000000035L, 2524L), (5000000105L, 2512L), (5000000131L, 2510L),
+      (5000000027L, 2504L), (5000000092L, 2481L), (5000000012L, 2476L), (5000000140L, 2471L),
+      (5000000033L, 2463L), (5000000061L, 2451L), (5000000141L, 2438L), (5000000195L, 2438L),
+      (5000000124L, 2426L), (5000000122L, 2423L), (5000000112L, 2415L), (5000000172L, 2391L),
+      (5000000134L, 2388L), (5000000160L, 2381L), (5000000085L, 2364L), (5000000100L, 2354L),
+      (5000000145L, 2348L), (5000000031L, 2338L), (5000000185L, 2309L), (5000000198L, 2278L),
+      (5000000041L, 2265L), (5000000180L, 2265L), (5000000015L, 2259L), (5000000029L, 2255L),
+      (5000000063L, 2227L), (5000000089L, 2226L), (5000000184L, 2224L), (5000000018L, 2221L),
+      (5000000014L, 2213L), (5000000011L, 2201L), (5000000093L, 2199L), (5000000154L, 2197L),
+      (5000000096L, 2188L), (5000000173L, 2103L), (5000000151L, 2090L), (5000000196L, 2071L),
+      (5000000182L, 2028L), (5000000186L, 2025L), (5000000073L, 2022L), (2000000020L, 2002L),
+      (5000000013L, 1992L), (5000000042L, 1992L), (5000000178L, 1984L), (5000000129L, 1978L),
+      (5000000148L, 1975L), (5000000152L, 1949L), (5000000137L, 1939L), (5000000159L, 1923L))
+
+  test("graph_stress sf0.001 top-100 rows equal the pinned literals") {
     val sf = "/root/testdata/sf0.001"
     assume(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(sf)),
       "testdata sf0.001 not present")
-    import graft.model.DerivedGraph
-    val ref = graft.ops.GraphAnalytics.stressCentralityDF(
-        DerivedGraph.undirected(DerivedGraph(spark, sf).edges),
-        QueriesGraphX.spLandmarks, 10)
-      .as[(Long, Long)].collect().toSeq
-    val got = Queries.all("graph_stress").fn(spark, sf)
-      .as[(Long, Long)].collect().toSeq
-    assert(got == ref)
+    val got = Queries.all("graph_stress").fn(spark, sf).as[(Long, Long)].collect().toSeq
+    assert(got == stressSf001)
   }
 }
