@@ -217,19 +217,24 @@ object QueriesGraphX {
       },
       hitsOracleSql),
 
-    // Connected components → component sizes. GraphX CC labels each
-    // component with its minimum vertex id, so the DuckDB oracle replays
-    // it as BOUNDED min-label propagation: after k rounds a vertex holds
-    // min(id) over its radius-k ball, which equals the component minimum
-    // once k ≥ the eccentricity of the component's argmin vertex. The
-    // derived graph's diameter is a property of the star-schema TOPOLOGY
-    // (part—customer—nation—region—nation—supplier—part ≤ ~7 hops), not
-    // of the scale factor, so 12 rounds converge at every SF —
-    // GraphAnalyticsSpec asserts 12-round == GraphX CC on the real graph.
+    // Connected components → component sizes. GraphAnalytics.connectedComponents
+    // runs min-label propagation on the block superstep kernel to its
+    // fixpoint, labelling each component with its minimum vertex id. The
+    // DuckDB oracle replays it as BOUNDED min-label propagation: after k
+    // rounds a vertex holds min(id) over its radius-k ball, which equals
+    // the component minimum once k ≥ the eccentricity of the component's
+    // argmin vertex. The derived graph's diameter is a property of the
+    // star-schema TOPOLOGY (part—customer—nation—region—nation—supplier—
+    // part ≤ ~7 hops), not of the scale factor, so 12 rounds converge at
+    // every SF — GraphAnalyticsSpec asserts 12-round == GraphX CC on the
+    // real graph.
     "graph_cc" -> QueryDef(
-      (s, d) => GraphAnalytics.connectedComponents(GraphAnalytics.derivedGraphX(s, d))
-        .groupBy("component").agg(count(lit(1)).as("n_vertices"))
-        .orderBy(col("n_vertices").desc, col("component")),
+      (s, d) => {
+        val g = DerivedGraph(s, d)
+        GraphAnalytics.connectedComponents(g.vertices, DerivedGraph.undirected(g.edges))
+          .groupBy("component").agg(count(lit(1)).as("n_vertices"))
+          .orderBy(col("n_vertices").desc, col("component"))
+      },
       ccOracleSql),
 
     // Label-propagation communities on the affiliation subgraph
@@ -241,9 +246,9 @@ object QueriesGraphX {
     // PageRank). Runs as the deterministic synchronous LPA on the block
     // superstep kernel (GraphAnalytics.lpaDF: min-label tie-break — a
     // pure function of the graph), so the DuckDB oracle replays the five
-    // supersteps as chained CTEs and VALUE-checks the communities; the
-    // GraphX variant stays as the library op, cross-checked at
-    // community-structure level in GraphAnalyticsSpec.
+    // supersteps as chained CTEs and VALUE-checks the communities;
+    // GraphAnalyticsSpec cross-checks it against GraphX's LPA at
+    // community-structure level.
     "graph_lpa" -> QueryDef(
       (s, d) => memberLabels(s, d).orderBy("id"),
       lpaOracleSql),
@@ -417,11 +422,11 @@ object QueriesGraphX {
 
     // Triangle count over the co-order part projection, oracle-verified by
     // an ordered 3-way self-join ((x,y),(x,z),(y,z) with x<y<z counts each
-    // triangle exactly once). Runs as the degree-ordered DataFrame wedge
-    // join (GraphAnalytics.triangleCountDF) — GraphX TriangleCount's
-    // per-vertex neighbor sets are the memory bottleneck at scale; the
-    // GraphX variant is cross-checked against this one in
-    // GraphAnalyticsSpec.
+    // triangle exactly once). Counts the rows of the degree-ordered
+    // DataFrame enumeration (GraphAnalytics.triangleListDF) — GraphX
+    // TriangleCount's per-vertex neighbor sets are the memory bottleneck
+    // at scale; GraphAnalyticsSpec cross-checks the enumeration against
+    // GraphX.
     "graph_triangles" -> QueryDef(
       (s, d) => {
         val spark = s
@@ -430,8 +435,7 @@ object QueriesGraphX {
         // session with broadcastSides = true — the co-order projection's
         // degree/adjacency sides are a few MB at bench scale, the opt-in
         // case the library's scale-safe default exists to protect against
-        // elsewhere). GraphAnalyticsSpec pins this count against the
-        // standalone triangleCountDF wedge join and the GraphX variant.
+        // elsewhere).
         val n = sharedTriangles(s, d).count()
         Seq(n).toDF("n_triangles")
       },

@@ -474,12 +474,11 @@ object QueriesLlm {
 
     // Candidate pairs → dedup clusters via connected components; the
     // cluster representative is the min doc_id (GraphX CC label), i.e.
-    // the doc the exact-dedup keep-min rule would keep. (A pure-DataFrame
-    // min-label fixpoint exists too — Dedup.clustersDF, cross-checked in
-    // DedupSpec — but GraphX's Pregel CC wins here: the fixpoint loop pays
-    // per-round checkpoint + convergence-check jobs.) Oracle: the
-    // replayable minhash pairs + a recursive min-label reachability
-    // fixpoint — an ITERATIVE graph algorithm value-checked end to end.
+    // the doc the exact-dedup keep-min rule would keep. GraphX's Pregel CC
+    // beat a DataFrame min-label fixpoint here, which paid per-round
+    // checkpoint and convergence-check jobs. Oracle: the replayable
+    // minhash pairs + a recursive min-label reachability fixpoint — an
+    // ITERATIVE graph algorithm value-checked end to end.
     "dedup_clusters" -> QueryDef(
       (s, d) => Dedup.clusters(
         Dedup.minhashCandidatePairs(Dedup.minhashBuckets(t(s, d, "documents"))))

@@ -51,7 +51,7 @@ object DerivedGraph {
 
   /** Materialize the persisted vertex/edge DataFrames — the warmup hook,
     * owned HERE next to the persist calls it warms so the inventory cannot
-    * drift (GraphAnalytics.warm composes it with the GraphX build).
+    * drift (GraphAnalytics.warm is this call).
     */
   def warm(spark: SparkSession, sfDir: String): Unit = {
     val g = apply(spark, sfDir)

@@ -1,40 +1,30 @@
 package graft.ops
 
-import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy, VertexId}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
-import scala.reflect.ClassTag
 
-/** Graph analytics. Of the inventory queries only graph_cc still runs on
-  * GraphX (BASELINE.json "spark_approach"): its graph is materialized from
-  * the vertex/edge DataFrames (SURVEY.md §1.2), edge-partitioned with
-  * EdgePartition2D in [[toGraphX]] so both endpoints of any edge land in
-  * at most 2√P partitions, and memoized per (session, sfDir) in
-  * [[derivedGraphX]]. The other GraphX entry points ([[pageRank]],
-  * [[labelPropagation]], [[triangleCount]]) are the cross-checks the
-  * specs compare the production forms against.
+/** Graph analytics over the vertex/edge DataFrames (SURVEY.md §1.2).
   *
-  * Triangle counting runs as a degree-ordered DataFrame join
-  * ([[triangleCountDF]]) rather than GraphX's `TriangleCount`: the GraphX
-  * implementation materializes per-vertex neighbor hash sets (memory ∝ Σdeg²
-  * on hubs), while the oriented wedge join keeps everything in Tungsten
-  * rows with AQE handling skew — the shape that survives a 100× scale-up.
+  * The iterations — [[pageRankDF]], [[personalizedPageRankDF]],
+  * [[eigenvectorDF]], [[hitsDF]], [[lpaDF]], [[connectedComponents]] and
+  * the landmark passes of [[landmarkBfs]] and [[stressCentralityDF]] — run
+  * on one block superstep kernel (Pregelix's vertex⋈message join plus
+  * group-by, as a co-partitioned RDD lineage, so Catalyst and AQE never
+  * see a round). The static edges are shuffled once on their sending
+  * endpoint into one primitive-array adjacency block per partition; the
+  * vertex state is one block per partition under the same partitioning.
+  * A round zips the two, combines the messages map-side into a primitive
+  * map and ships one record per receiving partition: one shuffle stage,
+  * no job. [[Exact]], [[DSum6]] and [[ProductSum]] replicate Spark's
+  * arithmetic, so the rows are the ones the DuckDB replays compute.
   *
-  * The fixed-round iterations — [[pageRankDF]], [[personalizedPageRankDF]],
-  * [[eigenvectorDF]], [[hitsDF]], [[lpaDF]] and the landmark passes of
-  * [[landmarkBfs]] and [[stressCentralityDF]] — run on one block
-  * superstep kernel (Pregelix's vertex⋈message join plus group-by, as a
-  * co-partitioned RDD lineage, so Catalyst and AQE never see a round).
-  * The static edges are shuffled once on their sending endpoint into one
-  * primitive-array adjacency block per partition; the vertex state is one
-  * block per partition under the same partitioning. A round zips the
-  * two, sums the messages map-side into a primitive map and ships one
-  * record per receiving partition: one shuffle stage, no job.
-  * [[Exact]], [[DSum6]] and [[ProductSum]] replicate Spark's arithmetic,
-  * so the rows are the ones the DuckDB replays compute.
+  * Triangles are enumerated by a degree-ordered DataFrame join
+  * ([[triangleListDF]]): GraphX's `TriangleCount` materializes per-vertex
+  * neighbour hash sets (memory ∝ Σdeg² on hubs), while the oriented wedge
+  * join keeps everything in Tungsten rows with AQE handling skew.
   */
 object GraphAnalytics {
 
@@ -68,83 +58,11 @@ object GraphAnalytics {
     */
   final val MaxCumLazyRows = 2000000L
 
-  /** GraphX RDD partition count for an |E|-row edge set: cores/4 is the
-    * FLOOR (fat partitions cut superstep task overhead on small graphs),
-    * but it must not CAP big ones — pinned at 8, sf10's 120M edges meant
-    * 15M deserialized Edge objects per partition and 8-way supersteps on
-    * 32 cores (graph_cc read 14.7× per 10× data in the r13 tier-5 probe).
-    * Scale by the ~2M-edges/partition rule, bounded at 4× parallelism so
-    * superstep task counts stay iteration-friendly.
+  /** Materialize the session-shared derived graph; the kernel holds no
+    * state across calls.
     */
-  private def graphParts(sc: org.apache.spark.SparkContext, nE: Long): Int =
-    math.max(math.max(2, sc.defaultParallelism / 4),
-      math.min(sc.defaultParallelism * 4, (nE / 2000000L).toInt + 1))
-
-  /** Resize an RDD to the [[graphParts]] target in the right direction:
-    * `coalesce` can only REDUCE a partition count, so a source that
-    * arrives NARROWER than the edge-scaled target (an AQE-coalesced or
-    * persisted frame) must go through a shuffle repartition or the sf10
-    * partition-starvation fix silently does not apply (ADVICE r13).
-    */
-  private def toParts[T: ClassTag](rdd: org.apache.spark.rdd.RDD[T],
-      parts: Int): org.apache.spark.rdd.RDD[T] =
-    if (parts > rdd.getNumPartitions) rdd.repartition(parts)
-    else rdd.coalesce(parts)
-
-  /** Build a GraphX graph with (label, name) vertex attributes,
-    * EdgePartition2D-partitioned.
-    *
-    * Edge partitions are sized down from the SQL shuffle width: iterative
-    * Pregel jobs pay per-task overhead every superstep, so GraphX wants
-    * fewer, fatter partitions than a one-shot SQL shuffle (rule of thumb
-    * ~1M+ edges per partition; cores/4 here keeps all executors busy while
-    * cutting superstep task counts 4×). At cluster scale the same ratio
-    * holds relative to total parallelism.
-    */
-  def toGraphX(vertices: DataFrame, edges: DataFrame): Graph[(String, String), String] = {
-    val sc = vertices.sparkSession.sparkContext
-    val parts = graphParts(sc, edges.count())
-    val vRDD = toParts(vertices.select("id", "label", "name").rdd
-      .map(r => (r.getLong(0): VertexId, (r.getString(1), r.getString(2)))), parts)
-    val eRDD = toParts(edges.select("src", "dst", "label").rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), r.getString(2))), parts)
-    Graph(vRDD, eRDD).partitionBy(PartitionStrategy.EdgePartition2D)
-  }
-
-  // session-scoped like DerivedGraph's memo (identity-keyed, strong refs —
-  // pinned until SessionCache.evict): the one cached GraphX build graph_cc
-  // reads in a Verify/Bench session.
-  private val gxCache =
-    new graft.model.SessionCache[String, Graph[(String, String), String]]
-
-  /** Materialize the session-shared graph caches — DerivedGraph warms its
-    * own persisted DataFrames (the persist lives there), this module warms
-    * the GraphX build it caches.
-    */
-  def warm(spark: SparkSession, sfDir: String): Unit = {
+  def warm(spark: SparkSession, sfDir: String): Unit =
     graft.model.DerivedGraph.warm(spark, sfDir)
-    val gx = derivedGraphX(spark, sfDir)
-    gx.vertices.count(); gx.edges.count()
-  }
-
-  /** The derived property graph as a cached GraphX graph. */
-  def derivedGraphX(spark: SparkSession, sfDir: String): Graph[(String, String), String] =
-    gxCache.getOrElseUpdate(spark, sfDir)({
-      val g = graft.model.DerivedGraph(spark, sfDir)
-      val gx = toGraphX(g.vertices, g.edges)
-      gx.cache()
-      gx
-    })
-
-  /** PageRank (fixed iteration count → deterministic superstep structure). */
-  def pageRank[VD: ClassTag, ED: ClassTag](g: Graph[VD, ED], numIter: Int): DataFrame = {
-    val spark = SparkSession.active
-    import spark.implicits._
-    g.staticPageRank(numIter).vertices.toDF("id", "rank")
-  }
-
-  def pageRank(vertices: DataFrame, edges: DataFrame, numIter: Int = 10): DataFrame =
-    pageRank(toGraphX(vertices, edges), numIter)
 
   /** Fixed-point units per rank of the PageRank and renormalized
     * ladders. PageRank divides by out-degree, so its messages need the
@@ -234,6 +152,7 @@ object GraphAnalytics {
   private final val Sum = 0
   private final val Or = 1
   private final val Put = 2
+  private final val Min = 3
 
   /** Keys, optional second keys and values in parallel primitive arrays:
     * one shuffle record of the block kernel. An edge record has `k2` (the
@@ -243,7 +162,7 @@ object GraphAnalytics {
       extends Serializable
 
   /** Open-addressing map from a long key (or key pair) to a long that
-    * combines by ANSI-checked [[Sum]], bitwise [[Or]] or [[Put]].
+    * combines by ANSI-checked [[Sum]], bitwise [[Or]], [[Put]] or [[Min]].
     */
   private final class LongMap(pairs: Boolean, mode: Int) {
     private var mask = 15
@@ -266,6 +185,7 @@ object GraphAnalytics {
       if (used(i)) v(i) = mode match {
         case Sum => Math.addExact(v(i), x)
         case Or => v(i) | x
+        case Min => math.min(v(i), x)
         case _ => x
       } else {
         used(i) = true; k1(i) = a; if (pairs) k2(i) = b; v(i) = x
@@ -340,12 +260,12 @@ object GraphAnalytics {
 
   /** The map side of a round in partition `t`: each sender `ids(i)` with
     * out-edges sends `value(i, outdeg)` to every out-neighbour, keyed
-    * (neighbour, `k2(i)`) when `pairs`, summed per key into one record
-    * per receiving partition.
+    * (neighbour, `k2(i)`) when `pairs`, combined per key by `mode` into
+    * one record per receiving partition.
     */
-  private def send(t: Topo, ids: Array[Long], p: Int, pairs: Boolean)(k2: Int => Long,
+  private def send(t: Topo, ids: Array[Long], p: Int, pairs: Boolean, mode: Int)(k2: Int => Long,
       value: (Int, Int) => Long): Iterator[(Int, Keyed)] = {
-    val out = Array.fill(p)(new LongMap(pairs, Sum))
+    val out = Array.fill(p)(new LongMap(pairs, mode))
     var i = 0
     while (i < ids.length) {
       val j = java.util.Arrays.binarySearch(t.keys, ids(i))
@@ -360,9 +280,9 @@ object GraphAnalytics {
     shipped(out)
   }
 
-  /** The receive side of a round: the partition's records summed per key. */
-  private def received(records: Iterator[(Int, Keyed)], pairs: Boolean): LongMap = {
-    val in = new LongMap(pairs, Sum)
+  /** The receive side of a round: the partition's records combined per key. */
+  private def received(records: Iterator[(Int, Keyed)], pairs: Boolean, mode: Int): LongMap = {
+    val in = new LongMap(pairs, mode)
     records.foreach(r => in.addAll(r._2))
     in
   }
@@ -467,8 +387,11 @@ object GraphAnalytics {
     }
 
     /** Unpersist every held block not in `keep`. */
-    def release(keep: RDD[_]*): Unit =
-      held.filterNot(r => keep.exists(_ eq r)).foreach(_.unpersist(blocking = false))
+    def release(keep: RDD[_]*): Unit = {
+      val (kept, gone) = held.partition(r => keep.exists(_ eq r))
+      gone.foreach(_.unpersist(blocking = false))
+      held.clear(); held ++= kept
+    }
   }
 
   private def kernel(vertices: DataFrame, edges: DataFrame, seed: Column,
@@ -477,15 +400,22 @@ object GraphAnalytics {
     val p = widthFor(vertices.sparkSession.sparkContext,
       edges.select().queryExecution.toRdd.count())
     val topos = dirs.map { case (from, to) => topology(vertices, seed, edges, from, to, p) }
-    val (nV, nS) = vertices.sparkSession.sparkContext.union(topos)
-      .mapPartitionsWithIndex { (i, it) =>
-        it.map(t => if (i < p) (t.vids.length.toLong, t.vflags.count(f => (f & Seed) != 0).toLong)
-          else (0L, 0L))
-      }.fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
+    // every direction carries the same vertex blocks
+    val (nV, nS) = topos.head
+      .map(t => (t.vids.length.toLong, t.vflags.count(f => (f & Seed) != 0).toLong))
+      .fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
     require(nV < Long.MaxValue / unit,
       s"$op: |V|=$nV exceeds the fixed-point headroom of $unit units per rank " +
         "(long message sums could overflow); reduce the scale factor")
     new Kernel(p, topos, nV, nS)
+  }
+
+  /** |V| as the kernel counts it for the message directions `dirs`. */
+  private[graft] def kernelVertexCount(vertices: DataFrame, edges: DataFrame,
+      dirs: Seq[(String, String)]): Long = {
+    val k = kernel(vertices, edges, lit(false), dirs, 1L, "kernelVertexCount")
+    k.release()
+    k.nV
   }
 
   private def initial(topo: RDD[Topo], x: Double): RDD[Vals] =
@@ -502,10 +432,10 @@ object GraphAnalytics {
       (recv: (Int, Long) => Double, none: Int => Double): RDD[Vals] =
     topo.zipPartitions(state) { (ti, si) =>
       val (t, s) = (ti.next(), si.next())
-      send(t, s.ids, p, pairs = false)(_ => 0L, (i, deg) => units(s.x(i), deg))
+      send(t, s.ids, p, pairs = false, Sum)(_ => 0L, (i, deg) => units(s.x(i), deg))
     }.partitionBy(new ToPartition(p)).zipPartitions(topo) { (mi, ti) =>
       val t = ti.next()
-      val m = received(mi, pairs = false).toKeyed
+      val m = received(mi, pairs = false, Sum).toKeyed
       val quiet = t.vids.indices.filter(i => (t.vflags(i) & HasIn) == 0).toArray
       val n = m.k1.length
       val ids = java.util.Arrays.copyOf(m.k1, n + quiet.length)
@@ -690,10 +620,10 @@ object GraphAnalytics {
       val prev = labels
       labels = k.hold(topo.zipPartitions(prev) { (ti, li) =>
         val (t, l) = (ti.next(), li.next())
-        send(t, l.ids, p, pairs = true)(l.lbl(_), (_, _) => 1L)
+        send(t, l.ids, p, pairs = true, Sum)(l.lbl(_), (_, _) => 1L)
       }.partitionBy(new ToPartition(p)).zipPartitions(prev) { (mi, li) =>
         val l = li.next()
-        val m = received(mi, pairs = true).toKeyed
+        val m = received(mi, pairs = true, Sum).toKeyed
         // per receiver, the entry of max (count, -label)
         val best = new LongMap(false, Put)
         for (e <- m.k1.indices) {
@@ -716,6 +646,60 @@ object GraphAnalytics {
         StructField("community", LongType, nullable = false))))
   }
 
+  /** Rounds of [[connectedComponents]] between two convergence checks. */
+  private final val CcCheckEvery = 4
+
+  /** One partition's component labels, and the indices whose label the
+    * last round changed: only those send in the next round.
+    */
+  private final class Components(val ids: Array[Long], val lbl: Array[Long],
+      val moved: Array[Int]) extends Serializable
+
+  /** Connected components, each vertex labelled with the smallest vertex
+    * id of its component. Labels start at each vertex's own id; per round
+    * every vertex whose label moved sends it to its neighbours (a vertex
+    * that did not move already sent the same label), the messages are
+    * min-combined map-side, and a receiver keeps the smaller of its label
+    * and theirs. The rounds are one lineage; every [[CcCheckEvery]] rounds
+    * one job counts the labels the last round moved, and the loop stops
+    * at the first zero, so the labels are exact at any diameter.
+    *
+    * `und` is the undirected (a, b) edge view, both orientations of every
+    * edge ([[graft.model.DerivedGraph.undirected]]). Rows are the ids of
+    * `vertices`; an isolated vertex labels itself, and an endpoint missing
+    * from `vertices` relays nothing.
+    */
+  def connectedComponents(vertices: DataFrame, und: DataFrame): DataFrame = {
+    val k = kernel(vertices, und, lit(false), Seq("b" -> "a"), 1L, "connectedComponents")
+    val (p, topo) = (k.p, k.topos.head)
+    var labels =
+      topo.map(t => new Components(t.vids, t.vids.clone, Array.range(0, t.vids.length)))
+    var moved = 1L
+    while (moved > 0) {
+      for (_ <- 1 to CcCheckEvery) {
+        val prev = labels
+        labels = k.hold(topo.zipPartitions(prev) { (ti, ci) =>
+          val (t, c) = (ti.next(), ci.next())
+          send(t, c.moved.map(c.ids(_)), p, pairs = false, Min)(_ => 0L,
+            (i, _) => c.lbl(c.moved(i)))
+        }.partitionBy(new ToPartition(p)).zipPartitions(prev) { (mi, ci) =>
+          val (in, c) = (received(mi, pairs = false, Min), ci.next())
+          val lbl = Array.tabulate(c.ids.length)(i =>
+            math.min(c.lbl(i), in.get(c.ids(i), Long.MaxValue)))
+          Iterator(new Components(c.ids, lbl,
+            Array.range(0, lbl.length).filter(i => lbl(i) != c.lbl(i))))
+        })
+      }
+      moved = labels.map(_.moved.length.toLong).fold(0L)(_ + _)
+      k.release(topo, labels)
+    }
+    k.release(labels)
+    vertices.sparkSession.createDataFrame(
+      labels.flatMap(c => c.ids.indices.iterator.map(i => Row(c.ids(i), c.lbl(i)))),
+      StructType(Seq(StructField("id", LongType, nullable = false),
+        StructField("component", LongType, nullable = false))))
+  }
+
   /** One partition's (vertex, landmark) pairs at one BFS level, with σ,
     * the number of shortest paths from the landmark, and h, the number of
     * shortest paths onward from the vertex (null before the backward pass).
@@ -731,7 +715,7 @@ object GraphAnalytics {
     val p = k.p
     k.topos.head.zipPartitions(lvl) { (ti, li) =>
       val (t, l) = (ti.next(), li.next())
-      send(t, l.ids, p, pairs = true)(l.lms(_), (i, _) => value(l, i))
+      send(t, l.ids, p, pairs = true, Sum)(l.lms(_), (i, _) => value(l, i))
     }.partitionBy(new ToPartition(p))
   }
 
@@ -758,7 +742,7 @@ object GraphAnalytics {
       val (prev, prev2) = (levels(d - 1), levels(math.max(d - 2, 0)))
       levels += k.hold(landmarkRound(k, prev)((l, i) => l.sig(i))
         .zipPartitions(prev, prev2, preservesPartitioning = true) { (mi, ai, bi) =>
-          val m = received(mi, pairs = true).toKeyed
+          val m = received(mi, pairs = true, Sum).toKeyed
           val seen = new LongMap(true, Put)
           for (l <- Seq(ai.next(), bi.next()); i <- l.ids.indices) seen.add(l.ids(i), l.lms(i), 1L)
           val fresh = m.k1.indices.filter(i => seen.get(m.k1(i), m.k2(i), 0L) == 0L).toArray
@@ -831,7 +815,7 @@ object GraphAnalytics {
       for (d <- maxDepth - 1 to 0 by -1) {
         lvl = k.hold(landmarkRound(k, lvl)((l, i) => Math.addExact(1L, l.h(i)))
           .zipPartitions(levels(d), preservesPartitioning = true) { (mi, li) =>
-            val (in, l) = (received(mi, pairs = true), li.next())
+            val (in, l) = (received(mi, pairs = true, Sum), li.next())
             Iterator(new Level(l.ids, l.lms, l.sig,
               l.ids.indices.map(i => in.get(l.ids(i), l.lms(i), 0L)).toArray))
           })
@@ -849,31 +833,6 @@ object GraphAnalytics {
     } finally k.release()
     spark.createDataFrame(java.util.Arrays.asList(top.map(r => Row(r._1, r._2)): _*),
       StructType(Seq(StructField("id", LongType), StructField("stress_units", LongType))))
-  }
-
-  /** Connected components (undirected semantics — GraphX CC ignores
-    * direction).
-    */
-  def connectedComponents[VD: ClassTag, ED: ClassTag](g: Graph[VD, ED]): DataFrame = {
-    val spark = SparkSession.active
-    import spark.implicits._
-    g.connectedComponents().vertices.toDF("id", "component")
-  }
-
-  def connectedComponents(vertices: DataFrame, edges: DataFrame): DataFrame =
-    connectedComponents(toGraphX(vertices, edges))
-
-  /** Label propagation (community detection) — GraphX LPA with a fixed
-    * superstep count. Tie-breaking inside LPA follows map iteration order,
-    * so community IDS are not run-stable — downstream consumers use the
-    * per-vertex row set (stable cardinality), never the raw ids; declared
-    * rows-only in the oracle contract like the other fixpoint algorithms.
-    */
-  def labelPropagation[VD: ClassTag, ED: ClassTag](g: Graph[VD, ED], numIter: Int): DataFrame = {
-    val spark = SparkSession.active
-    import spark.implicits._
-    org.apache.spark.graphx.lib.LabelPropagation.run(g, numIter)
-      .vertices.toDF("id", "community")
   }
 
   /** Bucket count / version of the clustered endpoint copy behind
@@ -1015,13 +974,19 @@ object GraphAnalytics {
   }
 
   /** Canonical triangle list (x < y < z, one row per triangle) of a
-    * canonical undirected edge set (`a < b`, distinct) — the
-    * [[triangleCountDF]] degree-ordered enumeration with the rows kept
-    * instead of counted. Factored out of [[kTrussDF]] so the enumeration
-    * can be computed once per (session, dataset) and SHARED between the
-    * triangle count, the truss peel, and any future clustering-coefficient
-    * style consumer (the sharedBfs "traverse once, derive many"
-    * discipline applied to triangles).
+    * canonical undirected edge set (`a < b`, distinct), by degree-ordered
+    * enumeration: every edge is oriented from its (degree, id)-smaller
+    * endpoint to the larger (an acyclic total order, so each triangle
+    * appears exactly once, at its base edge u→w with its third corner in
+    * N⁺(u) ∩ N⁺(w)), and |N⁺| ≤ O(√m) bounds the per-edge intersection.
+    * Computed once per (session, dataset) and SHARED between the
+    * triangle count, the truss peel and the clustering coefficient.
+    *
+    * `broadcastSides = true` broadcasts the degree table and the oriented
+    * adjacency, so the edge table is not shuffled and sorted four times;
+    * it is worth it only while both fit an executor/driver broadcast
+    * (~10⁷ edges), so the default is the shuffle-join plan that scales to
+    * any graph.
     */
   def triangleListDF(t: DataFrame, broadcastSides: Boolean = false): DataFrame = {
     val hint: DataFrame => DataFrame =
@@ -1101,7 +1066,7 @@ object GraphAnalytics {
     * Input contract: canonical undirected edges, `a < b`, distinct.
     *
     * 100 TB shape: support comes from degree-ordered triangle ENUMERATION
-    * (the [[triangleCountDF]] orientation: each triangle materializes
+    * (the [[triangleListDF]] orientation: each triangle materializes
     * exactly once at its base edge, then credits its three edges), NOT
     * from the naive wedge join — wedges that never close made the naive
     * form 122 s at sf0.1 where this one rides the triangle count (1.9M
@@ -1296,71 +1261,6 @@ object GraphAnalytics {
     // matches the oracle's final-pass convention (triangle-less edges
     // yield no row) if the round budget is exhausted mid-peel
     sup.select(col("a"), col("b"), col("support"))
-  }
-
-  /** Total triangle count of an undirected simple graph given canonical
-    * (src < dst) distinct edges — GraphX `TriangleCount` (counts each
-    * triangle once per corner → sum/3). Kept as the cross-check for
-    * [[triangleCountDF]]; prefer the DataFrame plan at scale.
-    */
-  def triangleCount(canonicalEdges: DataFrame): Long = {
-    val parts = graphParts(
-      canonicalEdges.sparkSession.sparkContext, canonicalEdges.count())
-    val eRDD = toParts(canonicalEdges.select("src", "dst").rdd
-      .map(r => (r.getLong(0), r.getLong(1))), parts)
-    val g = Graph.fromEdgeTuples(eRDD, defaultValue = 1)
-      .partitionBy(PartitionStrategy.EdgePartition2D)
-    g.triangleCount().vertices.map(_._2.toLong).fold(0L)(_ + _) / 3
-  }
-
-  /** Degree-ordered triangle count as a pure DataFrame plan — the classic
-    * scalable formulation: orient every edge from its (degree, id)-smaller
-    * endpoint to the larger (an acyclic total order, so each triangle
-    * {a<b<c} is counted exactly once, at its base edge a→b with c in
-    * N⁺(a) ∩ N⁺(b)), then intersect out-neighbor lists per edge. Work is
-    * Σ_edges (|N⁺(u)|+|N⁺(w)|) with |N⁺| ≤ O(√m) — on a dense co-order
-    * graph that's ~100× fewer operations than materializing every wedge
-    * through a join, and the intersection is the codegen'd two-pointer
-    * `sorted_intersect_count`.
-    *
-    * `broadcastSides = true` broadcasts the per-vertex degree table
-    * (16 B/vertex) and the oriented adjacency table (~8 B/edge) — without
-    * the hints AQE leaves all four joins as sort-merge (the collect_list
-    * agg hides the adjacency side's true size from it), and the edge table
-    * (the BIG side) shuffles and sorts four times, which profiling showed
-    * was ~80% of the query. The hints keep the whole count ONE action (the
-    * repeated edge-build subplans collapse via ReuseExchange) whose final
-    * stage is a single codegen pass: edge scan → BHJ → BHJ → intersect →
-    * partial sum. It is worth it ONLY while degree+adjacency fit an
-    * executor/driver broadcast (~10⁷ edges); the library DEFAULT is
-    * therefore `false` — shuffle joins that scale to any graph — and a
-    * caller who KNOWS the graph is broadcast-sized opts in (the bench
-    * query does; ADVICE r4: a default-on broadcast is an OOM trap on the
-    * 100 TB regime this library targets).
-    */
-  def triangleCountDF(canonicalEdges: DataFrame, broadcastSides: Boolean = false): Long = {
-    val e = canonicalEdges.select("src", "dst")
-    val hint: DataFrame => DataFrame = if (broadcastSides) broadcast(_) else identity
-    val deg = hint(e.select(col("src").as("x")).unionAll(e.select(col("dst").as("x")))
-      .groupBy("x").agg(count(lit(1)).as("d")))
-    val withDeg = e
-      .join(deg.select(col("x").as("src"), col("d").as("sd")), "src")
-      .join(deg.select(col("x").as("dst"), col("d").as("dd")), "dst")
-    val oriented = withDeg.select(
-      when(struct(col("sd"), col("src")) < struct(col("dd"), col("dst")),
-        struct(col("src").as("u"), col("dst").as("w")))
-        .otherwise(struct(col("dst").as("u"), col("src").as("w"))).as("o"))
-      .select(col("o.u").as("u"), col("o.w").as("w"))
-    // sorted adjacency + the codegen'd two-pointer merge: zero allocation
-    // per row, vs array_intersect's per-row hash set + result array.
-    val adj = hint(oriented.groupBy("u")
-      .agg(sort_array(collect_list(col("w"))).as("nbrs")))
-    oriented
-      .join(adj.select(col("u"), col("nbrs").as("na")), Seq("u"))
-      .join(adj.select(col("u").as("w"), col("nbrs").as("nb")), Seq("w"))
-      .agg(coalesce(sum(graft.functions.ArrayFunctions.sorted_intersect_count(
-        col("na"), col("nb"))), lit(0L)).as("n"))
-      .head().getLong(0)
   }
 
   /** Definition version of the co-order projection, folded into every

@@ -228,58 +228,6 @@ object Dedup {
       .toDF("doc_id", "cluster_rep")
   }
 
-  /** [[clusters]] as a pure DataFrame min-label fixpoint — the same
-    * propagate-the-minimum algorithm GraphX CC runs as a Pregel program,
-    * but staying a Catalyst plan: no RDD conversion, no VertexRDD/routing
-    * -table build, whole-stage codegen per round. Near-dup components are
-    * chains of pairwise-similar docs with tiny diameter, so the loop
-    * converges in a handful of rounds; each round is one equi-join + one
-    * map-side-combinable min aggregation over the pair list, with
-    * `localCheckpoint` bounding lineage exactly like the k-hop traversal.
-    * Labels only ever decrease, so the fixpoint (no label changed) is the
-    * exact component minimum — same output contract as [[clusters]],
-    * cross-checked against GraphX in DedupClustersSpec.
-    *
-    * If a component's diameter exceeds ~2·`maxIters` the loop exits before
-    * the fixpoint and the labels are NOT the component minima — that is a
-    * wrong answer, not an approximation, so it fails loudly rather than
-    * returning silently (ADVICE r4). Components that deep mean the
-    * candidate graph is pathological (e.g. a near-duplicate chain of 100+
-    * docs); raise `maxIters` or use the GraphX [[clusters]] path.
-    */
-  def clustersDF(candidatePairs: DataFrame, aCol: String = "a_id", bCol: String = "b_id",
-      maxIters: Int = 50): DataFrame = {
-    val und = candidatePairs.select(col(aCol).as("u"), col(bCol).as("v"))
-      .unionAll(candidatePairs.select(col(bCol).as("u"), col(aCol).as("v")))
-      .localCheckpoint()
-    var labels = und.select(col("u").as("id")).distinct()
-      .withColumn("rep", col("id")).localCheckpoint()
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIters) {
-      // two propagation hops per checkpointed round: halves the
-      // materialize + convergence-check job count (per-round scheduling
-      // overhead dominates on sparse candidate graphs).
-      var cur = labels
-      for (_ <- 0 until 2) {
-        val prop = und.join(cur.select(col("id").as("v"), col("rep")), "v")
-          .select(col("u").as("id"), col("rep"))
-        cur = cur.unionAll(prop).groupBy("id").agg(min("rep").as("rep"))
-      }
-      val next = cur.localCheckpoint()
-      changed = next.join(labels.select(col("id"), col("rep").as("__old")), "id")
-        .filter(col("rep") =!= col("__old")).count()
-      labels = next
-      it += 1
-    }
-    if (changed > 0) throw new IllegalStateException(
-      s"clustersDF did not converge in $maxIters rounds ($changed labels still " +
-        "changing): a candidate component has diameter > ~2*maxIters, so the " +
-        "returned labels would not be the component minima. Raise maxIters or " +
-        "use the GraphX clusters() path.")
-    labels.toDF("doc_id", "cluster_rep")
-  }
-
   /** Sorted distinct shingle-hash set per document — the exact-verification
     * side of the near-dedup pipeline. Same shingling + polynomial fold as
     * [[minhashBuckets]] (shared constants → the DuckDB oracle replays it),

@@ -8,10 +8,10 @@ import graft.ops.GraphAnalytics
   * adds a count, a materialization or a scalar fetch to a round fails
   * here instead of in a benchmark run. On the block superstep kernel a
   * call pays an edge count, the static-block build, one job per
-  * renormalized round (or one for all rounds) and the collect. Each call
-  * runs on the sf0.001 derived graph with its inventory query's
-  * arguments, and the result is collected, so the count covers the whole
-  * call. Pins only go down.
+  * renormalized round or convergence check (or one for all rounds) and
+  * the collect. Each call runs on the sf0.001 derived graph with its
+  * inventory query's arguments, and the result is collected, so the
+  * count covers the whole call. Pins only go down.
   */
 class AnalyticsJobBudgetSpec extends SparkSpec {
 
@@ -45,6 +45,14 @@ class AnalyticsJobBudgetSpec extends SparkSpec {
         .collect()))
     assert(got == Map("pagerank" -> 4, "ppr" -> 4, "eigenvector" -> 11, "hits" -> 11,
       "lpa" -> 4, "stress" -> 3))
+  }
+
+  test("connected components job budget") {
+    assume(haveSf001, "testdata sf0.001 not present")
+    DerivedGraph.warm(spark, sf001)
+    val g = DerivedGraph(spark, sf001)
+    val und = DerivedGraph.undirected(g.edges)
+    assert(jobs(GraphAnalytics.connectedComponents(g.vertices, und).collect()) == 5)
   }
 
   test("shared landmark frame build job budget") {

@@ -61,20 +61,6 @@ class DedupSpec extends SparkSpec {
     assert(got == Set((1L, 1L), (2L, 1L), (7L, 1L), (5L, 5L), (6L, 5L)))
   }
 
-  test("clustersDF fixpoint equals GraphX clusters on random pair graphs") {
-    val rnd = new scala.util.Random(7)
-    for (trial <- 0 until 3) {
-      val n = 40
-      val pairs = Seq.fill(30)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter { case (a, b) => a != b }
-        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-        .distinct.toDF("a_id", "b_id")
-      val gx = Dedup.clusters(pairs).as[(Long, Long)].collect().toSet
-      val df = Dedup.clustersDF(pairs).as[(Long, Long)].collect().toSet
-      assert(df == gx, s"trial $trial: DF fixpoint diverged from GraphX CC")
-    }
-  }
-
   test("simhash: near-dups land within small hamming distance, unrelated far apart") {
     val sh = Dedup.simhash(docs).as[(Long, Long)].collect().toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(sh(a) ^ sh(b))

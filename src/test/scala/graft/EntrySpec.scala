@@ -1,7 +1,20 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
 /** Driver-contract smoke: entry rows>0, registry consistency. */
 class EntrySpec extends SparkSpec {
+
+  /** `src/main/scala`, found above the working directory. */
+  private def mainRoot: Path = Iterator.iterate(Paths.get("").toAbsolutePath)(_.getParent)
+    .takeWhile(_ != null)
+    .map(_.resolve("src/main/scala"))
+    .find(Files.isDirectory(_))
+    .getOrElse(fail("src/main/scala not found above the working directory"))
+
+  private def scalaFiles(root: Path): Seq[Path] =
+    Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
 
   test("entry (flagship agg_groupby at sf0.001) returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
@@ -10,16 +23,8 @@ class EntrySpec extends SparkSpec {
   test("engine code reads no runtime switch beyond GRAFT_BCAST_LIMIT") {
     // one code path per operator: a new sys.props / GRAFT_* env read
     // outside graft.tools fails here, so it shows up in review
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Iterator.iterate(Paths.get("").toAbsolutePath)(_.getParent)
-      .takeWhile(_ != null)
-      .map(_.resolve("src/main/scala/graft"))
-      .find(Files.isDirectory(_))
-      .getOrElse(fail("src/main/scala/graft not found above the working directory"))
-    val files = Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && !p.startsWith(root.resolve("tools")))
-      .toSeq
+    val root = mainRoot.resolve("graft")
+    val files = scalaFiles(root).filterNot(_.startsWith(root.resolve("tools")))
     assert(files.size > 20)
     val jvmProps = Set("java.io.tmpdir", "user.name")
     def envOk(key: String) = key == "GRAFT_BCAST_LIMIT" || key.startsWith("SPARK_GRAFT_")
@@ -40,6 +45,16 @@ class EntrySpec extends SparkSpec {
           .filter(_ != "GRAFT_BCAST_LIMIT").map(k => s"$where: literal $k")
     }
     assert(violations.isEmpty, violations.mkString("new runtime switches:\n", "\n", ""))
+  }
+
+  test("main code imports GraphX only in the dedup clusters") {
+    // the graph operators run on the block superstep kernel; GraphX is the
+    // test-scope reference (GraphXRef) apart from Dedup.clusters
+    val root = mainRoot
+    val users = scalaFiles(root)
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains("org.apache.spark.graphx"))
+      .map(root.relativize(_).toString).toSet
+    assert(users == Set("graft/ops/llm/Dedup.scala"), s"GraphX in main code: $users")
   }
 
   test("every oracle key has a query; names are unique and non-empty") {

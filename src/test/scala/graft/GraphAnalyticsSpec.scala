@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.model.DerivedGraph
 import graft.ops.GraphAnalytics
 
-/** GraphX wrappers verified on hand-computed graphs + the invariants
-  * SURVEY.md §2.2 prescribes for the iterative (non-oracle) algorithms.
+/** The graph operators on hand-computed graphs, against the GraphX
+  * references ([[GraphXRef]]) and under any input layout.
   */
 class GraphAnalyticsSpec extends SparkSpec {
   import spark.implicits._
@@ -16,12 +16,12 @@ class GraphAnalyticsSpec extends SparkSpec {
     (3L, 4L, "e"), (5L, 6L, "e")).toDF("src", "dst", "label")
 
   test("pageRank invariant: ranks sum to ≈ |V| (normalized PageRank)") {
-    val ranks = GraphAnalytics.pageRank(v, e).agg(sum("rank")).head().getDouble(0)
+    val ranks = GraphXRef.pageRank(e).agg(sum("rank")).head().getDouble(0)
     assert(math.abs(ranks - 6.0) < 0.1, s"sum(rank)=$ranks")
   }
 
   test("deterministic pageRankDF agrees with GraphX staticPageRank and is layout-invariant") {
-    val gx = GraphAnalytics.pageRank(v, e).as[(Long, Double)].collect().toMap
+    val gx = GraphXRef.pageRank(e).as[(Long, Double)].collect().toMap
     val df = GraphAnalytics.pageRankDF(v, e).as[(Long, Double)].collect().toMap
     assert(df.keySet == gx.keySet)
     df.foreach { case (id, r) =>
@@ -70,10 +70,40 @@ class GraphAnalyticsSpec extends SparkSpec {
   }
 
   test("connected components: two components with the expected membership") {
-    val cc = GraphAnalytics.connectedComponents(v, e)
+    val cc = GraphAnalytics.connectedComponents(v, DerivedGraph.undirected(e))
       .groupBy("component").agg(count(lit(1)).as("n"))
       .orderBy("component").as[(Long, Long)].collect().toSeq
     assert(cc == Seq((1L, 4L), (5L, 2L))) // GraphX labels by min vertex id
+  }
+
+  test("connectedComponents equals GraphX CC under any layout") {
+    // the path 50-…-62 needs 12 rounds, so more than one convergence
+    // check; 30 is an endpoint outside the vertex table, so it joins
+    // nothing to 45, and 21 is isolated
+    val verts = ((1L to 21L) ++ Seq(45L) ++ (50L to 62L)).toDF("id")
+    for (seed <- Seq(21, 22, 23)) {
+      val rnd = new scala.util.Random(seed)
+      val pairs = Seq.fill(18)((rnd.nextInt(20).toLong + 1, rnd.nextInt(20).toLong + 1)) ++
+        Seq((3L, 3L), (1L, 2L), (1L, 2L), (30L, 5L), (30L, 45L)) ++
+        (50L to 61L).map(i => (i, i + 1))
+      val edges = rnd.shuffle(pairs).toDF("src", "dst")
+      val ref = GraphXRef.connectedComponents(verts, edges).as[(Long, Long)].collect().toMap
+      assert(ref.size == verts.count() && ref(21L) == 21L && ref(45L) == 45L && ref(62L) == 50L)
+      def run(vs: org.apache.spark.sql.DataFrame, es: org.apache.spark.sql.DataFrame) =
+        GraphAnalytics.connectedComponents(vs, DerivedGraph.undirected(es))
+          .as[(Long, Long)].collect().toMap
+      assert(run(verts, edges) == ref, s"graph $seed")
+      atShuffleWidths(Seq(run(verts.coalesce(1), edges.coalesce(1)),
+        run(verts.repartition(7), edges.repartition(7)))).flatten
+        .foreach(got => assert(got == ref, s"graph $seed under a layout"))
+    }
+  }
+
+  test("the kernel counts each vertex once however many directions it builds") {
+    val v4 = Seq(1L, 2L, 3L, 4L).toDF("id")
+    val e4 = Seq((1L, 3L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
+    assert(GraphAnalytics.kernelVertexCount(v4, e4, Seq("src" -> "dst")) == 4L)
+    assert(GraphAnalytics.kernelVertexCount(v4, e4, Seq("src" -> "dst", "dst" -> "src")) == 4L)
   }
 
   test("lpaDF: hand-traced supersteps on a known graph, layout-invariant") {
@@ -101,8 +131,7 @@ class GraphAnalyticsSpec extends SparkSpec {
     def partition(df: org.apache.spark.sql.DataFrame): Set[Set[Long]] =
       df.as[(Long, Long)].collect().groupBy(_._2).values.map(_.map(_._1).toSet).toSet
     val mine = partition(GraphAnalytics.lpaDF(sv.select("id"), DerivedGraph.undirected(se), 4))
-    val gx = partition(GraphAnalytics.labelPropagation(
-      GraphAnalytics.toGraphX(sv, se), 4))
+    val gx = partition(GraphXRef.labelPropagation(se, 4))
     assert(mine == gx, s"partitions differ: $mine vs $gx")
   }
 
@@ -126,8 +155,7 @@ class GraphAnalyticsSpec extends SparkSpec {
         .localCheckpoint()
     }
     val bounded = lbl.as[(Long, Long)].collect().toMap
-    val gx = GraphAnalytics.connectedComponents(GraphAnalytics.derivedGraphX(spark, d))
-      .as[(Long, Long)].collect().toMap
+    val gx = GraphXRef.connectedComponents(g.vertices, g.edges).as[(Long, Long)].collect().toMap
     assert(bounded == gx,
       s"bounded min-label (${QueriesGraphX.CcRounds} rounds) disagrees with GraphX CC on ${
         bounded.count { case (k, v) => gx.get(k).exists(_ != v) }} vertices")
@@ -163,7 +191,7 @@ class GraphAnalyticsSpec extends SparkSpec {
   test("triangle count on a known graph") {
     val canonical = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (5L, 6L))
       .toDF("src", "dst")
-    assert(GraphAnalytics.triangleCount(canonical) == 1L)
+    assert(GraphXRef.triangleCount(canonical) == 1L)
   }
 
   test("DataFrame degree-ordered triangle count agrees with GraphX") {
@@ -171,11 +199,11 @@ class GraphAnalyticsSpec extends SparkSpec {
     val canonical = Seq(
       (1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
       (5L, 6L), (6L, 7L), (5L, 7L), (7L, 8L)).toDF("src", "dst")
-    assert(GraphAnalytics.triangleCountDF(canonical) == 5L)
+    val listed = canonical.select($"src".as("a"), $"dst".as("b"))
+    assert(GraphAnalytics.triangleListDF(listed).count() == 5L)
     // the broadcast-hinted plan (the bench opt-in) counts identically
-    assert(GraphAnalytics.triangleCountDF(canonical, broadcastSides = true) == 5L)
-    assert(GraphAnalytics.triangleCountDF(canonical) ==
-      GraphAnalytics.triangleCount(canonical))
+    assert(GraphAnalytics.triangleListDF(listed, broadcastSides = true).count() == 5L)
+    assert(GraphXRef.triangleCount(canonical) == 5L)
   }
 
   test("triangleListDF enumerates each triangle exactly once, canonically") {
@@ -190,14 +218,14 @@ class GraphAnalyticsSpec extends SparkSpec {
       (1L, 2L, 3L), (1L, 2L, 4L), (1L, 3L, 4L), (2L, 3L, 4L), (5L, 6L, 7L)))
     // the broadcast-hinted plan (the bench/shared-cache opt-in) agrees,
     // and the list's cardinality IS the triangle count graph_triangles
-    // now reads off the shared frame
+    // reads off the shared frame
     assert(GraphAnalytics.triangleListDF(canonical, broadcastSides = true)
-      .count() == GraphAnalytics.triangleCountDF(
+      .count() == GraphXRef.triangleCount(
         canonical.select($"a".as("src"), $"b".as("dst"))))
   }
 
   test("bfs distances on a path with an unreachable pair") {
-    val dists = PregelBfs.bfsDistances(e, seed = 1L)
+    val dists = GraphXRef.bfsDistances(e, seed = 1L)
       .orderBy("id").as[(Long, Long)].collect().toSeq
     assert(dists == Seq((1L, 0L), (2L, 1L), (3L, 1L), (4L, 2L))) // 5,6 unreachable
   }
@@ -230,7 +258,7 @@ class GraphAnalyticsSpec extends SparkSpec {
     for (seed <- Seq(11, 12, 13)) {
       val pairs = randomGraph(seed)
       val edges = pairs.toDF("src", "dst").withColumn("label", lit("e"))
-      val g = GraphAnalytics.toGraphX(verts, edges)
+      val g = GraphXRef.graph(verts, edges)
       def kernel(vs: org.apache.spark.sql.DataFrame, es: org.apache.spark.sql.DataFrame,
           depth: Int): Set[(Long, Long, Long)] = {
         val b = GraphAnalytics.landmarkBfs(vs, DerivedGraph.undirected(es), landmarks, depth)
@@ -238,7 +266,7 @@ class GraphAnalyticsSpec extends SparkSpec {
       }
       for (depth <- Seq(2, 10)) {
         val ref = landmarks.flatMap { lm =>
-          PregelBfs.bfsDistances(g, lm, depth).as[(Long, Long)].collect()
+          GraphXRef.bfsDistances(g, lm, depth).as[(Long, Long)].collect()
             .map { case (id, d) => (id, lm, d) }
         }.toSet
         assert(ref.contains((21L, 21L, 0L)) && ref.contains((30L, 30L, 0L)))

@@ -77,7 +77,7 @@ class PropertySpec extends SparkSpec {
       val edf = (if (es.isEmpty) List((0L, 1L)) else es)
         .map { case (s, d) => (s, d, "e") }.toDF("src", "dst", "label")
       val viaJoin = Traverse.kHopIds(edf, 0L, k).as[Long].collect().toSet
-      val viaBfs = PregelBfs.bfsDistances(edf, 0L, maxDepth = k)
+      val viaBfs = GraphXRef.bfsDistances(edf, 0L, maxDepth = k)
         .as[(Long, Long)].collect().map(_._1).toSet + 0L
       viaJoin == viaBfs
     })
