@@ -111,8 +111,7 @@ object QueriesGraphX {
         GraphAnalytics.kTrussDF(
           GraphAnalytics.coOrderPartEdges(s, d)
             .select(col("src").as("a"), col("dst").as("b")),
-          k = TrussK, rounds = TrussRounds, broadcastSides = true,
-          triangleList = Some(sharedTriangles(s, d)))
+          k = TrussK, rounds = TrussRounds, triangleList = Some(sharedTriangles(s, d)))
       }
     }
 

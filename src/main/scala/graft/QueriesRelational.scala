@@ -165,52 +165,22 @@ object QueriesRelational {
       |     OR a.o_totalprice IS DISTINCT FROM b.o_totalprice),
       |hist AS (SELECT * FROM closed UNION ALL SELECT * FROM opened)""".stripMargin
 
-  /** Persistent cache-root discipline — see [[graft.model.CacheDirs]]
-    * (collision-resistant per-SF-dir tags, per-user root, fingerprint-
-    * validated cross-session reuse). These forwarders keep the historic
-    * call sites/specs in this file.
+  /** Orders and lineitem keyed `k`, stored bucketed and sorted on it
+    * (8 buckets) as cross-session derived copies; returns the two tables.
     */
-  private[graft] def dirTag(d: String): String = graft.model.CacheDirs.dirTag(d)
-  private[graft] def cacheRoot(kind: String, d: String): String =
-    graft.model.CacheDirs.root(kind, d)
+  private def bucketedTables(s: org.apache.spark.sql.SparkSession, d: String) = (
+    graft.model.CacheDirs.cachedBucketedTable(s, "buckets", d, "bk_orders", 8, "k")(
+      t(s, d, "orders").select(col("o_orderkey").as("k"), col("o_orderpriority"))),
+    graft.model.CacheDirs.cachedBucketedTable(s, "buckets", d, "bk_lineitem", 8, "k")(
+      t(s, d, "lineitem").select(col("l_orderkey").as("k"),
+        col("l_extendedprice"), col("l_discount"))))
 
-  /** Bucketed orders/lineitem copies (bucketed+sorted on the join key)
-    * per (session, SF dir) — the Tables/DerivedGraph convention: built
-    * once, external tables under the reusable [[cacheRoot]] so the
-    * repo's cwd stays clean. Returns the two table names.
+  /** Events partitioned by `event_date` as a cross-session derived copy:
+    * day-ranged queries prune directories instead of scanning the year.
     */
-  private val bucketCache = new graft.model.SessionCache[String, (String, String)]
-  private def bucketedTables(s: org.apache.spark.sql.SparkSession,
-      d: String): (String, String) =
-    bucketCache.getOrElseUpdate(s, d) {
-      val tag = dirTag(d)
-      val base = cacheRoot("buckets", d)
-      val ot = s"graft_bk_orders_$tag"
-      val lt = s"graft_bk_lineitem_$tag"
-      graft.sources.Bucketing.saveBucketedAt(
-        t(s, d, "orders").select(col("o_orderkey").as("k"), col("o_orderpriority")),
-        ot, "k", 8, s"$base/$ot")
-      graft.sources.Bucketing.saveBucketedAt(
-        t(s, d, "lineitem").select(col("l_orderkey").as("k"),
-          col("l_extendedprice"), col("l_discount")),
-        lt, "k", 8, s"$base/$lt")
-      (ot, lt)
-    }
-
-  /** Date-partitioned events copy per (session, SF dir) — the partition-
-    * pruning sibling of [[bucketedTables]]: one write, every later
-    * day-ranged query prunes directories instead of scanning the year.
-    */
-  private val partCache = new graft.model.SessionCache[String, String]
-  private def partitionedEvents(s: org.apache.spark.sql.SparkSession,
-      d: String): String =
-    partCache.getOrElseUpdate(s, d) {
-      val path = cacheRoot("evpart", d)
-      t(s, d, "events")
-        .withColumn("event_date", to_date(col("ts")))
-        .write.mode("overwrite").partitionBy("event_date").parquet(path)
-      path
-    }
+  private def partitionedEvents(s: org.apache.spark.sql.SparkSession, d: String) =
+    graft.model.CacheDirs.cachedParquet(s, "evpart", d, "events", Seq("event_date"))(
+      t(s, d, "events").withColumn("event_date", to_date(col("ts"))))
 
   val defs: ListMap[String, QueryDef] = ListMap(
 
@@ -1911,15 +1881,14 @@ object QueriesRelational {
     // bucket_join_colocated: at 100 TB, partition pruning is how a
     // one-day query skips 99% of the table before a single row is read.
     // The events copy is written partitioned by event date once per
-    // (session, SF dir); the query filters one calendar week and the
-    // plan pin asserts the filter lands in PartitionFilters (directory
-    // pruning), not as a post-scan predicate over every file. Values
-    // equal the plain filtered aggregate; the oracle computes from the
-    // base table.
+    // dataset and reused by later sessions and JVMs (CacheDirs); the
+    // query filters one calendar week and the plan pin asserts the
+    // filter lands in PartitionFilters (directory pruning), not as a
+    // post-scan predicate over every file. Values equal the plain
+    // filtered aggregate; the oracle computes from the base table.
     "partition_pruned_scan" -> QueryDef(
       (s, d) => {
-        val pt = partitionedEvents(s, d)
-        s.read.parquet(pt)
+        partitionedEvents(s, d)
           .filter(col("event_date").between("2024-01-08", "2024-01-14"))
           .groupBy("event_date", "event_type")
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
@@ -1933,17 +1902,17 @@ object QueriesRelational {
 
     // Co-located fact⋈fact join over BUCKETED tables — the 100 TB answer
     // to "this join shuffles both sides every night": both tables are
-    // written bucketed+sorted on the join key once (8 buckets, the
-    // sources.Bucketing path — parquet's analog of the reference's
-    // absent secondary indexes), and every subsequent join on that key
-    // reads pre-partitioned scans: the ONLY exchange left in the plan is
+    // written bucketed+sorted on the join key once per dataset (8
+    // buckets, a CacheDirs copy reused across sessions — parquet's
+    // analog of the reference's absent secondary indexes), and every
+    // join on that key reads pre-partitioned scans: the ONLY exchange left in the plan is
     // the final 5-row aggregate's (plan-pinned — a shuffled join here is
     // a silent 2× nightly cost). Values identical to the plain join by
     // construction; the oracle computes it from the base tables.
     "bucket_join_colocated" -> QueryDef(
       (s, d) => {
-        val (ot, lt) = bucketedTables(s, d)
-        graft.sources.Bucketing.bucketedJoin(s, ot, lt, "k")
+        val (orders, lineitem) = bucketedTables(s, d)
+        orders.join(lineitem, "k")
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("n"),
             dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))

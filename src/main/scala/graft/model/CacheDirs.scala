@@ -1,44 +1,35 @@
 package graft.model
 
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Persistent derived-data cache shared across sessions (VERDICT r11 #3/#6).
+/** Derived parquet copies of a dataset (graph frames, bucketed and
+  * date-partitioned tables), reused across sessions and JVMs.
   *
-  * One well-known REUSABLE root per (user, kind, SF dir) under the system
-  * temp dir. Every write into it is overwrite-in-place, so repeated
-  * Verify/Bench sessions overwrite instead of accumulating per-session
-  * copies — disk use stays bounded at one derived copy per SF dir.
-  *
-  *  - The per-SF-dir tag is the first 16 hex chars of SHA-256 of the
-  *    absolute normalized path (collision-resistant, unlike the 32-bit
-  *    `String.hashCode` it replaced — two SF dirs can never alias).
-  *  - The root is scoped by `user.name` so two users on a shared host
-  *    cannot pre-create or poison each other's cache path; writability is
-  *    verified so a hijacked/foreign-owned directory fails loudly.
-  *  - [[cachedParquet]] guards cross-session reuse with a SOURCE-DATA
-  *    FINGERPRINT (every parquet file's relative path, length, mtime in the
-  *    SF dir): if the driver regenerates a dataset at the same path, the
-  *    stale cache is detected and rebuilt — a silent stale hit would poison
-  *    the correctness gate. A torn write leaves no valid marker (the marker
-  *    is deleted before writing, re-stamped only after the parquet commit),
-  *    so it repairs itself on the next call.
-  *
-  * Concurrent same-SF-dir same-user sessions serialize on a per-entry
-  * LOCK FILE ([[cachedParquet]]'s build section runs under an atomic
-  * create-on-acquire `<name>.lock`): the loser waits for the winner's
-  * commit and then reads the freshly-stamped copy instead of interleaving
-  * an overwrite with a read. A live owner HEARTBEATS the lock's mtime
-  * (so long builds are never presumed dead); a lock whose mtime is older
-  * than [[LockStaleMs]] is treated as a dead owner (crashed JVM) and
-  * taken over ATOMICALLY (rename-to-tombstone, then a post-rename
-  * staleness re-check that hands back a fresh lock grabbed by mistake —
-  * [[takeoverIfStale]]); the fingerprint marker discipline still repairs
-  * any torn write the dead owner left.
+  *  - Root: one directory per (user, kind, dataset dir) under
+  *    `java.io.tmpdir`. The dataset tag is 16 hex chars of SHA-256 of the
+  *    absolute normalized path, so two dataset dirs never share a root.
+  *    The user name keeps users on one host apart, and a root that is not
+  *    writable fails loudly.
+  *  - Entry: `<name>/` holds the parquet copy and `<name>.fp` the source
+  *    fingerprint (relative path, size and mtime of every dataset file).
+  *    A copy is served only when the marker matches the current
+  *    fingerprint and the parquet `_SUCCESS` is present, so a regenerated
+  *    dataset or a torn write rebuilds it.
+  *  - Lock: a build runs under an OS lock on `<name>.lock`, so concurrent
+  *    sessions on one entry build once and the rest read the winner's copy.
+  *    The kernel frees the lock when its holder dies. The zero-byte file
+  *    stays after release: unlinking it would let a waiter lock an
+  *    orphaned inode. Inside one JVM a monitor per entry serializes
+  *    callers first, since a second `FileChannel.lock` on a file this JVM
+  *    already locks throws `OverlappingFileLockException`; it is per entry
+  *    because builds nest (ktruss reads triangles, und_adj reads fact_edges).
   */
 object CacheDirs {
 
   def dirTag(d: String): String = {
-    val abs = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
+    val abs = Paths.get(d).toAbsolutePath.normalize.toString
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(abs.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
   }
@@ -46,11 +37,10 @@ object CacheDirs {
   def root(kind: String, d: String): String = {
     val user = Option(System.getProperty("user.name")).getOrElse("nouser")
       .replaceAll("[^A-Za-z0-9_.-]", "_")
-    val p = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_cache_$user",
+    val p = Paths.get(System.getProperty("java.io.tmpdir"), s"graft_cache_$user",
       s"${kind}_${dirTag(d)}")
-    java.nio.file.Files.createDirectories(p)
-    require(java.nio.file.Files.isWritable(p),
+    Files.createDirectories(p)
+    require(Files.isWritable(p),
       s"graft cache root $p exists but is not writable (foreign owner?)")
     p.toString
   }
@@ -59,258 +49,98 @@ object CacheDirs {
     * mtime) of every file under it, hashed. Metadata-only — no data read.
     */
   def fingerprint(d: String): String = {
-    val base = java.nio.file.Paths.get(d).toAbsolutePath.normalize
+    val base = Paths.get(d).toAbsolutePath.normalize
     val sb = new StringBuilder
-    if (java.nio.file.Files.isDirectory(base)) {
-      val stream = java.nio.file.Files.walk(base)
+    if (Files.isDirectory(base)) {
+      val stream = Files.walk(base)
       try {
-        stream.filter(java.nio.file.Files.isRegularFile(_))
-          .sorted().forEach { p =>
-            sb.append(base.relativize(p)).append('|')
-              .append(java.nio.file.Files.size(p)).append('|')
-              .append(java.nio.file.Files.getLastModifiedTime(p).toMillis)
-              .append('\n')
-          }
+        stream.filter(Files.isRegularFile(_)).sorted().forEach { p =>
+          sb.append(base.relativize(p)).append('|').append(Files.size(p)).append('|')
+            .append(Files.getLastModifiedTime(p).toMillis).append('\n')
+        }
       } finally stream.close()
     }
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(sb.toString.getBytes("UTF-8")).map(b => f"$b%02x").mkString
   }
 
-  /** Age past which a lock file with NO heartbeat is presumed to belong
-    * to a crashed JVM and may be taken over. A LIVE owner's heartbeat
-    * thread re-touches the lock every [[LockHeartbeatMs]], so even an
-    * sf100-tier build that runs for hours never looks stale — the
-    * threshold only has to outlive a heartbeat gap, not a whole build.
-    */
-  val LockStaleMs: Long = 30 * 60 * 1000L
-
-  /** Owner heartbeat period — far below [[LockStaleMs]], so a paused-GC
-    * or briefly-descheduled owner still refreshes well inside the stale
-    * window.
-    */
-  val LockHeartbeatMs: Long = LockStaleMs / 10
-
-  /** Run `f` holding the per-entry build lock.
-    *
-    *  - Acquire: atomic create (`CREATE_NEW` — atomic on POSIX and across
-    *    JVMs) writing a per-acquisition UUID token as the content; 100 ms
-    *    poll while held elsewhere.
-    *  - Liveness: a daemon heartbeat re-touches the lock's mtime every
-    *    [[LockHeartbeatMs]] for as long as `f` runs, so a legitimately
-    *    long build is never presumed dead.
-    *  - Stale takeover is ATOMIC: a waiter that sees mtime older than
-    *    [[LockStaleMs]] RENAMES the lock to a unique tombstone
-    *    (`ATOMIC_MOVE`) — exactly one waiter can win that rename, and
-    *    everyone (including the winner) then re-contends on the atomic
-    *    create. The former delete-based takeover could fire on a FRESH
-    *    lock created after the observed-stale one, letting two builders
-    *    run the overwrite-in-place write concurrently.
-    *  - Release deletes the lock only if it still holds OUR token: if the
-    *    lock was (wrongly) taken over while we ran, the new owner's lock
-    *    survives our release.
-    */
-  /** Test seams for the lock-race specs (CacheDirsSpec): invoked at the
-    * instant between a step's VALIDATION and its (otherwise-atomic) ACT,
-    * where a concurrent takeover/re-acquire can land. Production no-ops.
-    */
-  private[graft] var takeoverRaceHook: () => Unit = () => ()
-  private[graft] var releaseRaceHook: () => Unit = () => ()
-
-  /** One stale-takeover attempt by a waiter holding `token` (not the lock).
-    * Atomic rename-to-tombstone means at most one waiter clears a given
-    * stale lock — and the POST-RENAME staleness re-check closes the TOCTOU
-    * the rename alone left open (ADVICE r14 #1): between observing the
-    * stale mtime and the move, another waiter can complete the takeover
-    * AND a new builder can acquire a FRESH lock at the same path; the
-    * rename would then steal that fresh lock. The tombstone carries the
-    * victim's mtime through the move, so re-checking it distinguishes the
-    * two: stale → genuinely dead owner, clear it; fresh → hand it back
-    * (move the tombstone back; if a third lock appeared in the gap the
-    * hand-back fails and the tombstone is dropped — a double-stacked race
-    * whose damage the fingerprint-marker discipline bounds).
-    */
-  private[graft] def takeoverIfStale(rootDir: String, name: String, token: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val lock = Paths.get(rootDir, s"$name.lock")
-    val age = try {
-      System.currentTimeMillis() - Files.getLastModifiedTime(lock).toMillis
-    } catch { case _: java.io.IOException => return } // vanished: re-contend now
-    if (age <= LockStaleMs) { Thread.sleep(100); return }
-    takeoverRaceHook()
-    val tomb = Paths.get(rootDir, s"$name.lock.tomb-$token")
-    try {
-      Files.move(lock, tomb, StandardCopyOption.ATOMIC_MOVE)
-      val tombAge = System.currentTimeMillis() -
-        Files.getLastModifiedTime(tomb).toMillis
-      if (tombAge > LockStaleMs) Files.deleteIfExists(tomb)
-      else {
-        // we grabbed a FRESH lock, not the stale one we observed: restore it
-        try Files.move(tomb, lock, StandardCopyOption.ATOMIC_MOVE)
-        catch { case _: java.io.IOException => Files.deleteIfExists(tomb) }
-      }
-    } catch { case _: java.io.IOException => () } // lost the rename race: re-contend
-  }
-
-  /** Release the lock iff it still holds OUR token — ATOMICALLY (ADVICE
-    * r13/r14, VERDICT r14 #3): the former `readAllBytes == token` then
-    * `deleteIfExists` pair let a takeover land BETWEEN the read and the
-    * delete, destroying the new owner's fresh lock. Rename-to-tombstone
-    * first (atomic — nothing can slip in between "decide" and "act"),
-    * verify the token on the tombstone, and hand a wrongly-grabbed fresh
-    * lock back exactly as [[takeoverIfStale]] does.
-    */
-  private[graft] def releaseLock(rootDir: String, name: String, token: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val lock = Paths.get(rootDir, s"$name.lock")
-    val tomb = Paths.get(rootDir, s"$name.lock.rel-$token")
-    try {
-      Files.move(lock, tomb, StandardCopyOption.ATOMIC_MOVE)
-      releaseRaceHook()
-      if (new String(Files.readAllBytes(tomb), "UTF-8") == token)
-        Files.deleteIfExists(tomb)
-      else {
-        // ours was stolen and replaced while we ran; give the new owner
-        // its lock back (best-effort if a third lock appeared in the gap)
-        try Files.move(tomb, lock, StandardCopyOption.ATOMIC_MOVE)
-        catch { case _: java.io.IOException => Files.deleteIfExists(tomb) }
-      }
-    } catch { case _: java.io.IOException => () } // already gone
-  }
-
-  private def withEntryLock[T](rootDir: String, name: String)(f: => T): T = {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val lock = Paths.get(rootDir, s"$name.lock")
-    val token = java.util.UUID.randomUUID().toString
-    var acquired = false
-    while (!acquired) {
-      try {
-        Files.write(lock, token.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        acquired = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          takeoverIfStale(rootDir, name, token)
-      }
-    }
-    val hb = new Thread(() => {
-      try {
-        while (true) {
-          Thread.sleep(LockHeartbeatMs)
-          // retry transient I/O failures with short backoff INSIDE the
-          // loop (VERDICT r14 #3): one failed touch formerly killed the
-          // whole heartbeat thread, and a build longer than LockStaleMs
-          // was then presumed dead and taken over WHILE LIVE. A lock that
-          // is genuinely gone (stolen) keeps failing harmlessly — the
-          // next period retries and the thread dies with the build.
-          var attempt = 0
-          var touched = false
-          while (!touched && attempt < 5) {
-            try {
-              Files.setLastModifiedTime(lock,
-                java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-              touched = true
-            } catch {
-              case _: java.io.IOException =>
-                attempt += 1
-                Thread.sleep(200L * attempt)
-            }
-          }
-        }
-      } catch {
-        case _: InterruptedException => () // normal shutdown
-      }
-    }, s"graft-cache-lock-heartbeat-$name")
-    hb.setDaemon(true)
-    hb.start()
-    try f finally {
-      hb.interrupt()
-      releaseLock(rootDir, name, token)
-    }
-  }
-
-  /** On-disk bytes of a cache entry (0 if absent) — a cheap, accurate size
-    * signal for frames that are ALWAYS parquet-backed after first access
-    * (DerivedGraph's storage-policy heuristic sizes the fact-edge frame
-    * from this instead of paying a count job).
+  /** On-disk bytes of a cache entry (0 if absent): a size signal for
+    * frames that are always parquet-backed, read without a count job.
     */
   def entryBytes(kind: String, d: String, name: String): Long = {
-    val p = java.nio.file.Paths.get(root(kind, d), name)
-    if (!java.nio.file.Files.isDirectory(p)) 0L
+    val p = Paths.get(root(kind, d), name)
+    if (!Files.isDirectory(p)) 0L
     else {
-      val stream = java.nio.file.Files.walk(p)
-      try stream.filter(java.nio.file.Files.isRegularFile(_))
-        .mapToLong(java.nio.file.Files.size(_)).sum()
+      val stream = Files.walk(p)
+      try stream.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum()
       finally stream.close()
     }
   }
 
-  /** Read-through parquet cache for an expensive derived frame: if a cached
-    * copy exists whose stamped fingerprint matches the CURRENT source data
-    * (and whose parquet commit marker is present), read it; otherwise build,
-    * write, stamp, read — under the per-entry lock, with a second validity
-    * check after acquisition (the winner of a concurrent race builds; the
-    * loser wakes to a valid marker and skips straight to the read). The
-    * returned frame is always parquet-backed, so downstream scans get
-    * column pruning/pushdown against the derived copy.
+  private val monitors = new java.util.concurrent.ConcurrentHashMap[Path, AnyRef]
+
+  /** The entry's data path, after `write` has filled it unless a valid
+    * copy was there. Validity is checked again once the lock is held, so
+    * a waiter reads the winner's copy instead of rebuilding it.
+    */
+  private def readThrough(kind: String, d: String, name: String)(write: Path => Unit): Path = {
+    val rootDir = Paths.get(root(kind, d))
+    val data = rootDir.resolve(name)
+    val marker = rootDir.resolve(s"$name.fp")
+    val fp = fingerprint(d)
+    def valid = Files.exists(marker) && Files.readString(marker) == fp &&
+      Files.exists(data.resolve("_SUCCESS"))
+    if (!valid) {
+      val lock = rootDir.resolve(s"$name.lock")
+      monitors.computeIfAbsent(lock, _ => new Object).synchronized {
+        val ch = FileChannel.open(lock, StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+        try {
+          ch.lock() // released by close(), or by the kernel if this JVM dies
+          if (!valid) {
+            Files.deleteIfExists(marker)
+            write(data)
+            Files.writeString(marker, fp)
+          }
+        } finally ch.close()
+      }
+    }
+    data
+  }
+
+  /** Read-through parquet cache for an expensive derived frame, written
+    * hive-partitioned on `partitionCols` (filters on them prune
+    * directories). The returned frame is always parquet-backed, so later
+    * scans get column pruning and pushdown.
     */
   def cachedParquet(spark: SparkSession, kind: String, d: String,
       name: String, partitionCols: Seq[String] = Nil)(build: => DataFrame): DataFrame = {
-    val rootDir = root(kind, d)
-    val dataPath = java.nio.file.Paths.get(rootDir, name)
-    val marker = java.nio.file.Paths.get(rootDir, s"$name.fp")
-    val fp = fingerprint(d)
-    def valid = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fp &&
-      java.nio.file.Files.exists(dataPath.resolve("_SUCCESS"))
-    if (!valid) withEntryLock(rootDir, name) {
-      if (!valid) {
-        java.nio.file.Files.deleteIfExists(marker)
-        val w = build.write.mode("overwrite")
-        // hive-style directory partitioning: consumers get PARTITION
-        // PRUNING on `partitionCols` filters (the ego/k-hop frontier
-        // reads a bucket subset instead of the whole adjacency)
-        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-          .parquet(dataPath.toString)
-        java.nio.file.Files.write(marker, fp.getBytes("UTF-8"))
-      }
+    val data = readThrough(kind, d, name) { path =>
+      val w = build.write.mode("overwrite")
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+        .parquet(path.toString)
     }
-    spark.read.parquet(dataPath.toString)
+    spark.read.parquet(data.toString)
   }
 
-  /** Read-through cache for a BUCKETED table (same fingerprint/lock/marker
-    * discipline as [[cachedParquet]]): the derived frame is stored
-    * clustered+sorted on `bucketCol`, so every consumer whose grouping/
-    * join keys cover it gets the scan's HashPartitioning for free — no
-    * exchange. The catalog entry is session-scoped (in-memory catalog);
-    * a fresh session over a valid on-disk copy re-registers the bucket
-    * spec with DDL instead of rebuilding.
+  /** Read-through cache for a table stored bucketed and sorted on
+    * `bucketCol`: joins and groupings on it read the scan's hash
+    * partitioning, with no exchange. The catalog entry is per Spark
+    * application, so a new application over a valid copy re-registers the
+    * bucket spec with DDL instead of rebuilding.
     */
   def cachedBucketedTable(spark: SparkSession, kind: String, d: String,
       name: String, buckets: Int, bucketCol: String)(build: => DataFrame): DataFrame = {
-    val rootDir = root(kind, d)
-    val dataPath = java.nio.file.Paths.get(rootDir, name)
-    val marker = java.nio.file.Paths.get(rootDir, s"$name.fp")
-    val fp = fingerprint(d)
     val table = s"graft_${name}_${dirTag(d)}"
-    def valid = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fp &&
-      java.nio.file.Files.exists(dataPath.resolve("_SUCCESS"))
-    if (!valid) withEntryLock(rootDir, name) {
-      if (!valid) {
-        java.nio.file.Files.deleteIfExists(marker)
-        spark.sql(s"DROP TABLE IF EXISTS $table")
-        build.write.mode("overwrite")
-          .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-          .option("path", dataPath.toString)
-          .format("parquet").saveAsTable(table)
-        java.nio.file.Files.write(marker, fp.getBytes("UTF-8"))
-      }
+    val data = readThrough(kind, d, name) { path =>
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      build.write.mode("overwrite").bucketBy(buckets, bucketCol).sortBy(bucketCol)
+        .option("path", path.toString).format("parquet").saveAsTable(table)
     }
     if (!spark.catalog.tableExists(table)) {
-      val schemaDdl = spark.read.parquet(dataPath.toString).schema.toDDL
+      val schemaDdl = spark.read.parquet(data.toString).schema.toDDL
       spark.sql(s"CREATE TABLE $table ($schemaDdl) USING PARQUET " +
         s"CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol) INTO $buckets BUCKETS " +
-        s"LOCATION '${dataPath.toString}'")
+        s"LOCATION '$data'")
     }
     spark.table(table)
   }

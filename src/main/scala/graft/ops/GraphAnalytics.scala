@@ -1077,7 +1077,6 @@ object GraphAnalytics {
     * keys are AQE's skew-join case; no broadcast requirement.
     */
   def kTrussDF(canonicalEdges: DataFrame, k: Int, rounds: Int = 6,
-      broadcastSides: Boolean = false,
       triangleList: Option[DataFrame] = None): DataFrame = {
     require(k >= 3, s"k must be ≥ 3, got $k")
     require(rounds >= 1, s"rounds must be ≥ 1, got $rounds")
@@ -1098,7 +1097,7 @@ object GraphAnalytics {
     // a caller-provided (typically session-persisted) triangle list is
     // already materialization-stable — don't pay a checkpoint copy for it
     var tri = triangleList.getOrElse(
-      triangleListDF(canonicalEdges.select("a", "b"), broadcastSides)
+      triangleListDF(canonicalEdges.select("a", "b"))
         .localCheckpoint())
     var sup = tri.select(explode(array(
         edgeOf(col("x"), col("y")), edgeOf(col("x"), col("z")),

@@ -21,20 +21,6 @@ object Bucketing {
       .sortBy(key)
       .saveAsTable(table)
 
-  /** Like [[saveBucketed]] but as an EXTERNAL table at `path` — for
-    * sessions whose default warehouse must stay untouched (Verify/Bench
-    * run from the repo root; a managed table would drop spark-warehouse
-    * litter there).
-    */
-  def saveBucketedAt(df: DataFrame, table: String, key: String,
-      buckets: Int, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .format("parquet")
-      .option("path", path)
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .saveAsTable(table)
-
   /** Join two tables bucketed on `key` — planner sees compatible output
     * partitioning on both scans and elides the exchanges.
     */

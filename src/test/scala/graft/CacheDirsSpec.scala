@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.model.CacheDirs
 
-/** Contract of the fingerprint-validated cross-session parquet cache
-  * (VERDICT r11 #3): a valid cached copy is read back without rebuilding;
-  * a source-data change (same path, new bytes) invalidates it — a silent
-  * stale hit would poison the correctness gate.
+/** Contract of the fingerprint-validated cross-session parquet cache: a
+  * valid cached copy is read back without rebuilding; a source-data change
+  * (same path, new bytes) invalidates it, since a stale hit would serve
+  * wrong rows; concurrent callers and a killed holder's lock never cost a
+  * second build or a hang. The roots are per user and per dataset dir.
   */
 class CacheDirsSpec extends SparkSpec {
   import spark.implicits._
@@ -97,27 +98,22 @@ class CacheDirsSpec extends SparkSpec {
       CacheDirs.root("spec", src.toString), "dead.lock")
     java.nio.file.Files.createFile(lock)
     java.nio.file.Files.setLastModifiedTime(lock,
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - CacheDirs.LockStaleMs - 60000L))
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 3600000L))
     val got = CacheDirs.cachedParquet(spark, "spec", src.toString, "dead")(
       Seq((1L, "a")).toDF("id", "v"))
     assert(got.count() == 1)
-    assert(!java.nio.file.Files.exists(lock)) // takeover released it
   }
 
   test("stale-lock takeover is atomic: many waiters on one dead lock → exactly one build") {
-    // the delete-based takeover this replaced (ADVICE r13) let a second
-    // waiter delete the FRESH lock the first takeover had just created,
-    // admitting two concurrent builders into the overwrite-in-place write;
-    // the rename-to-tombstone form admits exactly one.
+    // a lock file left by a dead owner must admit exactly one of the
+    // waiters into the overwrite-in-place write; the rest read its copy
     val src = mkSourceDir()
     writeSource(src, "v1")
     val lock = java.nio.file.Paths.get(
       CacheDirs.root("spec", src.toString), "swarm.lock")
     java.nio.file.Files.createFile(lock)
     java.nio.file.Files.setLastModifiedTime(lock,
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - CacheDirs.LockStaleMs - 60000L))
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 3600000L))
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     val inBuild = new java.util.concurrent.atomic.AtomicInteger(0)
     val overlapped = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -143,78 +139,66 @@ class CacheDirsSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
-  test("release leaves a lock that no longer holds our token (stolen mid-build) in place") {
-    // simulate the wrongly-presumed-dead case: while the owner 'runs', the
-    // lock is replaced by a new owner's token; the first owner's release
-    // must NOT delete the new owner's lock.
+  test("a killed build holder's lock frees itself: the next caller builds within 60 s") {
+    import java.nio.file.{Files, Paths}
     val src = mkSourceDir()
     writeSource(src, "v1")
-    val root = CacheDirs.root("spec", src.toString)
-    val lock = java.nio.file.Paths.get(root, "stolen.lock")
-    CacheDirs.cachedParquet(spark, "spec", src.toString, "stolen") {
-      // mid-build: a usurper swaps the lock content (as a takeover+reacquire would)
-      java.nio.file.Files.write(lock, "usurper-token".getBytes("UTF-8"))
-      Seq((1L, "a")).toDF("id", "v")
-    }.count()
-    assert(java.nio.file.Files.exists(lock),
-      "release deleted a lock it no longer owned")
-    assert(new String(java.nio.file.Files.readAllBytes(lock), "UTF-8") == "usurper-token")
-    java.nio.file.Files.delete(lock) // clean up for other tests
+    val entered = Files.createTempDirectory("graft_cds_kill").resolve("entered")
+    val holder = new ProcessBuilder(
+      Paths.get(System.getProperty("java.home"), "bin", "java").toString, "-Xmx64m",
+      s"-Djava.io.tmpdir=${System.getProperty("java.io.tmpdir")}",
+      "-cp", System.getProperty("java.class.path"),
+      "graft.CacheLockHolder", src.toString, "killed", entered.toString)
+      .redirectErrorStream(true).redirectOutput(ProcessBuilder.Redirect.DISCARD).start()
+    try {
+      val deadline = System.nanoTime() + 60000000000L
+      while (!Files.exists(entered) && holder.isAlive && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(Files.exists(entered), "the child JVM never entered the build")
+    } finally holder.destroyForcibly().waitFor()
+    // a daemon thread: if the lock outlived its holder the call blocks,
+    // and the wait below fails the test instead of hanging the suite
+    val call = scala.concurrent.Future(
+      CacheDirs.cachedParquet(spark, "spec", src.toString, "killed")(
+        Seq((1L, "a"), (2L, "b")).toDF("id", "v")).count()
+    )(scala.concurrent.ExecutionContext.global)
+    assert(scala.concurrent.Await.result(call,
+      scala.concurrent.duration.Duration(60, "s")) == 2L)
   }
 
-  test("takeover hands back a FRESH lock grabbed inside the TOCTOU window") {
-    // ADVICE r14 #1: between a waiter's staleness check and its rename,
-    // another waiter can complete the takeover AND a new builder can
-    // acquire a FRESH lock at the same path — the unguarded rename then
-    // stole that fresh lock, re-admitting two concurrent builders. The
-    // post-rename staleness re-check must detect the fresh tombstone and
-    // restore it.
-    import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft_cds_lockrace").toString
-    val lock = Paths.get(root, "e.lock")
-    Files.write(lock, "dead-owner".getBytes("UTF-8"))
-    Files.setLastModifiedTime(lock, java.nio.file.attribute.FileTime.fromMillis(
-      System.currentTimeMillis() - CacheDirs.LockStaleMs - 60000L))
-    CacheDirs.takeoverRaceHook = () => {
-      // the racing waiter clears the stale lock; a new builder acquires
-      Files.delete(lock)
-      Files.write(lock, "fresh-owner".getBytes("UTF-8")) // fresh mtime = now
-      CacheDirs.takeoverRaceHook = () => () // one-shot
-    }
-    try CacheDirs.takeoverIfStale(root, "e", "late-waiter-token")
-    finally CacheDirs.takeoverRaceHook = () => ()
-    assert(Files.exists(lock), "the fresh owner's lock was destroyed by a late takeover")
-    assert(new String(Files.readAllBytes(lock), "UTF-8") == "fresh-owner")
-    val leaked = Files.list(Paths.get(root))
-    try assert(!leaked.anyMatch(p => p.getFileName.toString.contains("tomb")),
-      "takeover leaked a tombstone")
-    finally leaked.close()
+  test("distinct dataset dirs map to distinct cache roots") {
+    assert(CacheDirs.root("probe", "/data/sf0.001") != CacheDirs.root("probe", "/data/sf0.01"))
   }
 
-  test("release never destroys a lock acquired concurrently at the release instant") {
-    // the former read-token-then-delete release let a takeover + fresh
-    // re-acquire land BETWEEN the read (which matched our token) and the
-    // delete (which then destroyed the fresh owner's lock). The atomic
-    // rename-first release takes OUR lock out before anyone can swap it,
-    // verifies on the tombstone, and leaves a concurrently-created fresh
-    // lock untouched.
-    import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft_cds_relrace").toString
-    val lock = Paths.get(root, "e.lock")
-    Files.write(lock, "me".getBytes("UTF-8"))
-    CacheDirs.releaseRaceHook = () => {
-      // the instant our release starts acting, a fresh builder acquires
-      Files.write(lock, "fresh-owner".getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE_NEW)
-      CacheDirs.releaseRaceHook = () => () // one-shot
+  test("dir tag is 64-bit hex, stable under path normalization") {
+    assert(CacheDirs.dirTag("/data/sf0.01") === CacheDirs.dirTag("/data/./sf0.01"))
+    assert(CacheDirs.dirTag("/a").matches("[0-9a-f]{16}"))
+    // the old 32-bit String.hashCode tag no longer appears in the path
+    val root = CacheDirs.root("probe", "/data/sf0.001")
+    assert(!root.endsWith(("/data/sf0.001".hashCode.toLong & 0xffffffffL).toString))
+  }
+
+  test("cache root is scoped by user.name and writable") {
+    val root = CacheDirs.root("probe", "/data/sf0.001")
+    val user = Option(System.getProperty("user.name")).getOrElse("nouser")
+      .replaceAll("[^A-Za-z0-9_.-]", "_")
+    assert(root.contains(s"graft_cache_$user"))
+    assert(new java.io.File(root).canWrite)
+  }
+}
+
+/** Child-JVM side of the killed-holder test: enters `cachedParquet`'s build
+  * for entry `args(1)` of dataset dir `args(0)`, touches `args(2)` and
+  * sleeps inside the build until it is killed. No Spark session is needed
+  * before the build returns.
+  */
+object CacheLockHolder {
+  def main(args: Array[String]): Unit = {
+    CacheDirs.cachedParquet(null, "spec", args(0), args(1)) {
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(args(2)))
+      Thread.sleep(600000L)
+      null
     }
-    try CacheDirs.releaseLock(root, "e", "me")
-    finally CacheDirs.releaseRaceHook = () => ()
-    assert(Files.exists(lock), "release destroyed the concurrent fresh lock")
-    assert(new String(Files.readAllBytes(lock), "UTF-8") == "fresh-owner")
-    val leaked = Files.list(Paths.get(root))
-    try assert(!leaked.anyMatch(p => p.getFileName.toString.contains(".rel-")),
-      "release leaked a tombstone")
-    finally leaked.close()
+    ()
   }
 }

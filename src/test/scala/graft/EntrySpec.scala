@@ -57,6 +57,18 @@ class EntrySpec extends SparkSpec {
     assert(users == Set("graft/ops/llm/Dedup.scala"), s"GraphX in main code: $users")
   }
 
+  test("main code resolves a cache root only inside CacheDirs") {
+    // derived copies go through cachedParquet/cachedBucketedTable, which
+    // lock and fingerprint them; a write straight into a root does neither
+    val root = mainRoot
+    val callers = scalaFiles(root)
+      .map(root.relativize(_).toString)
+      .filter(_ != "graft/model/CacheDirs.scala")
+      .filter(f => """CacheDirs\.root\b""".r
+        .findFirstIn(new String(Files.readAllBytes(root.resolve(f)), "UTF-8")).isDefined)
+    assert(callers.isEmpty, s"CacheDirs.root called from: ${callers.mkString(", ")}")
+  }
+
   test("every oracle key has a query; names are unique and non-empty") {
     val q = SparkEntry.queries
     assert(SparkEntry.oracleSql.keySet.subsetOf(q.keySet))

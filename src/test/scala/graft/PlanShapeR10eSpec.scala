@@ -115,6 +115,19 @@ class PlanShapeR10eSpec extends SparkSpec {
       s"date must not degrade to a row-level filter:\n$p")
   }
 
+  test("bucketed and date-partitioned copies are reused by a new session: same rows, no rewrite") {
+    import java.nio.file.{Files, Paths}
+    val qs = Seq("bucket_join_colocated", "partition_pruned_scan")
+    val shared = qs.map(q => Queries.all(q).fn(spark, sf).collect().toSeq)
+    val markers = Seq("buckets" -> "bk_orders", "buckets" -> "bk_lineitem", "evpart" -> "events")
+      .map { case (kind, name) => Paths.get(graft.model.CacheDirs.root(kind, sf), s"$name.fp") }
+    val stamped = markers.map(Files.getLastModifiedTime(_))
+    val fresh = spark.newSession()
+    assert(qs.map(q => Queries.all(q).fn(fresh, sf).collect().toSeq) == shared)
+    assert(markers.map(Files.getLastModifiedTime(_)) == stamped,
+      "a new session rewrote a derived copy instead of reusing it")
+  }
+
   test("sketch_hll_sliding: hour anchor broadcasts; no cartesian") {
     val p = planOf("sketch_hll_sliding")
     assert(!p.contains("CartesianProduct"), s"hll sliding plan:\n$p")
