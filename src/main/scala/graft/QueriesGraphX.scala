@@ -31,9 +31,8 @@ object QueriesGraphX {
       var built: Option[GraphAnalytics.HeldFrame] = None
       try graft.model.CacheDirs.cachedParquet(s, "graph", d,
         s"landmark_bfs_lm${spLandmarks.map(_ - graft.model.DerivedGraph.NationBase).mkString("-")}_d$spMaxDepth") {
-        val g = DerivedGraph(s, d)
-        val b = GraphAnalytics.landmarkBfs(g.vertices, DerivedGraph.undirected(g.edges),
-          spLandmarks, spMaxDepth)
+        val b = GraphAnalytics.landmarkBfs(GraphAnalytics.undirectedView(s, d), spLandmarks,
+          spMaxDepth)
         built = Some(b)
         b.frame
       }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -123,22 +122,38 @@ object QueriesGraphX {
     ()
   }
 
-  /** The affiliation subgraph (customer/supplier—nation—region) that
-    * graph_lpa and graph_modularity propagate labels over.
-    */
-  private def memberEdges(g: DerivedGraph.G) =
-    g.edges.filter(col("label").isin("in_nation", "in_region")).select("src", "dst")
-
   /** The five-round LPA labels of the member subgraph, shared by
-    * graph_lpa and graph_modularity. The undirected view is one
-    * cross-session parquet entry: at sf10 it aged 19.2 s vs 27.1 s for a
-    * session checkpoint, with no RDD-storage footprint (BENCHNOTES r14).
+    * graph_lpa and graph_modularity through the session's held member
+    * view.
     */
-  private def memberLabels(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val g = DerivedGraph(s, d)
-    GraphAnalytics.lpaDF(g.vertices.filter(col("label") =!= "part").select("id"),
-      graft.model.CacheDirs.cachedParquet(s, "graph", d, "lpa_und_member_v1")(
-        DerivedGraph.undirected(memberEdges(g))), 5)
+  private def memberLabels(s: org.apache.spark.sql.SparkSession, d: String) =
+    GraphAnalytics.lpaDF(GraphAnalytics.memberView(s, d), 5)
+
+  /** Newman's Q per community of the labels `lbl` (id, community) over
+    * the member edges `member` (src, dst), in exact 4m² units.
+    */
+  private[graft] def modularity(member: org.apache.spark.sql.DataFrame,
+      lbl: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val m = member.count() // one scalar, the |E| every Q term shares
+    val deg = member.select(col("src").as("a"))
+      .unionAll(member.select(col("dst").as("a")))
+      .groupBy("a").agg(count(lit(1)).as("d"))
+    val eIn = member
+      .join(lbl.select(col("id").as("src"), col("community").as("ca")), "src")
+      .join(lbl.select(col("id").as("dst"), col("community").as("cb")), "dst")
+      .filter(col("ca") === col("cb"))
+      .groupBy(col("ca").as("community")).agg(count(lit(1)).as("e_in"))
+    val ds = lbl.join(deg, lbl("id") === deg("a"), "left")
+      .groupBy("community").agg(count(lit(1)).as("n_nodes"),
+        sum(coalesce(col("d"), lit(0L))).as("d_sum"))
+    ds.join(eIn, Seq("community"), "left")
+      .select(col("community"), col("n_nodes"),
+        coalesce(col("e_in"), lit(0L)).as("e_in"), col("d_sum"),
+        (lit(4L * m) * coalesce(col("e_in"), lit(0L))
+          - col("d_sum") * col("d_sum")).as("q_units"))
+      .withColumn("q", round(col("q_units").cast("double")
+        / lit((4L * m * m).toDouble), 6))
+      .orderBy("community")
   }
 
   val defs: ListMap[String, QueryDef] = ListMap(
@@ -152,11 +167,8 @@ object QueriesGraphX {
     // stays as the library op and is tolerance-cross-checked in
     // GraphAnalyticsSpec.
     "graph_pagerank" -> QueryDef(
-      (s, d) => {
-        val g = graft.model.DerivedGraph(s, d)
-        GraphAnalytics.pageRankDF(g.vertices, g.edges, 10)
-          .orderBy(col("rank").desc, col("id")).limit(100)
-      },
+      (s, d) => GraphAnalytics.pageRankDF(GraphAnalytics.directedView(s, d), 10)
+        .orderBy(col("rank").desc, col("id")).limit(100),
       prOracleSql),
 
     // Personalized PageRank from the nation-vertex seed set (Page et al.
@@ -168,12 +180,9 @@ object QueriesGraphX {
     // kernel as graph_pagerank; the oracle replays the rounds with the
     // seed-conditional base term.
     "graph_ppr" -> QueryDef(
-      (s, d) => {
-        val g = graft.model.DerivedGraph(s, d)
-        GraphAnalytics.personalizedPageRankDF(g.vertices, g.edges,
-          col("label") === "nation", 10)
-          .orderBy(col("rank").desc, col("id")).limit(100)
-      },
+      (s, d) => GraphAnalytics.personalizedPageRankDF(GraphAnalytics.directedView(s, d),
+        DerivedGraph(s, d).vertices.filter(col("label") === "nation"), 10)
+        .orderBy(col("rank").desc, col("id")).limit(100),
       pprOracleSql),
 
     // Eigenvector centrality (Bonacich 1972) by 8 rounds of synchronous
@@ -188,14 +197,9 @@ object QueriesGraphX {
     // divide, 6dp round per round), replayed in DuckDB as chained CTEs
     // with a per-round exact-DECIMAL total.
     "graph_eigenvector" -> QueryDef(
-      (s, d) => {
-        val g = graft.model.DerivedGraph(s, d)
-        val sym = graft.model.DerivedGraph.undirected(g.edges)
-          .select(col("a").as("src"), col("b").as("dst"))
-        GraphAnalytics.eigenvectorDF(g.vertices, sym, 8)
-          .select(col("id"), col("x").as("centrality"))
-          .orderBy(col("centrality").desc, col("id")).limit(100)
-      },
+      (s, d) => GraphAnalytics.eigenvectorDF(GraphAnalytics.undirectedView(s, d), 8)
+        .select(col("id"), col("x").as("centrality"))
+        .orderBy(col("centrality").desc, col("id")).limit(100),
       evOracleSql),
 
     // HITS hubs & authorities (Kleinberg 1999) over the DIRECTED derived
@@ -209,11 +213,9 @@ object QueriesGraphX {
     // link structure — orders/customers become hubs, parts/nations
     // authorities. Replayed in DuckDB as 8 chained renorm CTEs.
     "graph_hits" -> QueryDef(
-      (s, d) => {
-        val g = graft.model.DerivedGraph(s, d)
-        GraphAnalytics.hitsDF(g.vertices, g.edges.select("src", "dst"), 4)
-          .orderBy(col("auth").desc, col("id")).limit(100)
-      },
+      (s, d) => GraphAnalytics.hitsDF(GraphAnalytics.directedView(s, d),
+        GraphAnalytics.reversedView(s, d), 4)
+        .orderBy(col("auth").desc, col("id")).limit(100),
       hitsOracleSql),
 
     // Connected components → component sizes. GraphAnalytics.connectedComponents
@@ -228,12 +230,9 @@ object QueriesGraphX {
     // every SF — GraphAnalyticsSpec asserts 12-round == GraphX CC on the
     // real graph.
     "graph_cc" -> QueryDef(
-      (s, d) => {
-        val g = DerivedGraph(s, d)
-        GraphAnalytics.connectedComponents(g.vertices, DerivedGraph.undirected(g.edges))
-          .groupBy("component").agg(count(lit(1)).as("n_vertices"))
-          .orderBy(col("n_vertices").desc, col("component"))
-      },
+      (s, d) => GraphAnalytics.connectedComponents(GraphAnalytics.undirectedView(s, d))
+        .groupBy("component").agg(count(lit(1)).as("n_vertices"))
+        .orderBy(col("n_vertices").desc, col("component")),
       ccOracleSql),
 
     // Label-propagation communities on the affiliation subgraph
@@ -261,30 +260,7 @@ object QueriesGraphX {
     // graph_lpa — the oracle reuses the identical 5-round LPA CTE
     // prefix, so label drift between the two queries is impossible.
     "graph_modularity" -> QueryDef(
-      (s, d) => {
-        val member = memberEdges(DerivedGraph(s, d))
-        val lbl = memberLabels(s, d)
-        val m = member.count() // one scalar, the |E| every Q term shares
-        val deg = member.select(col("src").as("a"))
-          .unionAll(member.select(col("dst").as("a")))
-          .groupBy("a").agg(count(lit(1)).as("d"))
-        val eIn = member
-          .join(lbl.select(col("id").as("src"), col("community").as("ca")), "src")
-          .join(lbl.select(col("id").as("dst"), col("community").as("cb")), "dst")
-          .filter(col("ca") === col("cb"))
-          .groupBy(col("ca").as("community")).agg(count(lit(1)).as("e_in"))
-        val ds = lbl.join(deg, lbl("id") === deg("a"), "left")
-          .groupBy("community").agg(count(lit(1)).as("n_nodes"),
-            sum(coalesce(col("d"), lit(0L))).as("d_sum"))
-        ds.join(eIn, Seq("community"), "left")
-          .select(col("community"), col("n_nodes"),
-            coalesce(col("e_in"), lit(0L)).as("e_in"), col("d_sum"),
-            (lit(4L * m) * coalesce(col("e_in"), lit(0L))
-              - col("d_sum") * col("d_sum")).as("q_units"))
-          .withColumn("q", round(col("q_units").cast("double")
-            / lit((4L * m * m).toDouble), 6))
-          .orderBy("community")
-      },
+      (s, d) => modularity(DerivedGraph.memberEdges(DerivedGraph(s, d)), memberLabels(s, d)),
       modularityOracleSql),
 
     // BFS distances from a nation seed; oracle = min level over chained
@@ -382,26 +358,16 @@ object QueriesGraphX {
          |  CAST(MAX(MAX(dist)) OVER () AS BIGINT) AS diameter_lb
          |FROM d GROUP BY landmark ORDER BY landmark""".stripMargin),
 
-    // 8-core of the derived graph (Seidman's density screen): iterative
-    // peel with a 10-round bound — converges in ≤3 rounds on this graph
-    // family at every SF (the degree tiers make the cascade shallow);
-    // GraphAnalyticsSpec proves an 11th round changes nothing. Oracle =
-    // the same bounded peel as chained MATERIALIZED rounds.
+    // 8-core of the derived graph (Seidman's density screen): the
+    // incremental peel on the block kernel over the session's held
+    // undirected view, with a 10-round bound — converges in ≤3 rounds on
+    // this graph family at every SF (the degree tiers make the cascade
+    // shallow); GraphAnalyticsSpec proves an 11th round changes nothing.
+    // Oracle = the same bounded peel recomputed as chained MATERIALIZED
+    // rounds.
     "graph_kcore" -> QueryDef(
-      (s, d) => {
-        // materialize the fact-edge entry FIRST so the size signal below
-        // reads its real bytes even in a cold session
-        val edges = DerivedGraph(s, d).edges.select("src", "dst")
-        // bucketed-endpoint init degrees by SIZE: they win 5× at sf10+
-        // and lose at sf0.1 (GraphAnalytics.BucketedDegreeMinBytes)
-        val init =
-          if (GraphAnalytics.useBucketedDegrees(d))
-            Some(GraphAnalytics.bucketedDegrees(s, d))
-          else None
-        GraphAnalytics.kCoreDF(edges, k = 8,
-          rounds = KcoreRounds, initDegrees = init)
-          .orderBy("id")
-      },
+      (s, d) => GraphAnalytics.kCoreDF(GraphAnalytics.undirectedView(s, d), k = 8,
+        rounds = KcoreRounds).orderBy("id"),
       kcoreOracleSql),
 
     // 4-truss of the co-order part projection (Cohen 2008): every
@@ -483,8 +449,8 @@ object QueriesGraphX {
     // BFS DAG, not just distances, so it runs both passes itself on the
     // block kernel. Top-100, (stress desc, id) deterministic.
     "graph_stress" -> QueryDef(
-      (s, d) => GraphAnalytics.stressCentralityDF(
-        DerivedGraph.undirected(DerivedGraph(s, d).edges), spLandmarks, 10),
+      (s, d) => GraphAnalytics.stressCentralityDF(GraphAnalytics.undirectedView(s, d),
+        spLandmarks, 10),
       stressOracleSql)
   )
 
@@ -658,8 +624,10 @@ object QueriesGraphX {
   }
 
   /** Generated oracle for graph_kcore: GraphAnalytics.kCoreDF's bounded
-    * peel replayed round by round — survivors of round i = vertices with
-    * ≥ k surviving neighbours in round i-1 — then within-core degrees.
+    * peel recomputed round by round — survivors of round i = vertices
+    * with ≥ k surviving neighbours in round i-1 — then within-core
+    * degrees. The engine subtracts each round's removed neighbours
+    * instead of recounting, which yields the same survivors and degrees.
     * MATERIALIZED for the same exponential-inlining reason as graph_cc.
     */
   private lazy val kcoreOracleSql: String = {

@@ -193,6 +193,12 @@ object DerivedGraph {
     edges.select(col("src").as("a"), col("dst").as("b"))
       .union(edges.select(col("dst").as("a"), col("src").as("b")))
 
+  /** The affiliation subgraph (customer/supplier—nation—region) that
+    * graph_lpa and graph_modularity propagate labels over.
+    */
+  def memberEdges(g: G): DataFrame =
+    g.edges.filter(col("label").isin("in_nation", "in_region")).select("src", "dst")
+
   /** Bucket count and version token of the materialized undirected
     * adjacency ([[undAdjacency]]). 256 directories keeps per-bucket files
     * ≥ tens of MB at the probe SFs while giving depth-1/2 frontiers a

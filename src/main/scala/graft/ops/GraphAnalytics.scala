@@ -9,17 +9,21 @@ import org.apache.spark.storage.StorageLevel
 /** Graph analytics over the vertex/edge DataFrames (SURVEY.md §1.2).
   *
   * The iterations — [[pageRankDF]], [[personalizedPageRankDF]],
-  * [[eigenvectorDF]], [[hitsDF]], [[lpaDF]], [[connectedComponents]] and
-  * the landmark passes of [[landmarkBfs]] and [[stressCentralityDF]] — run
-  * on one block superstep kernel (Pregelix's vertex⋈message join plus
-  * group-by, as a co-partitioned RDD lineage, so Catalyst and AQE never
-  * see a round). The static edges are shuffled once on their sending
-  * endpoint into one primitive-array adjacency block per partition; the
-  * vertex state is one block per partition under the same partitioning.
-  * A round zips the two, combines the messages map-side into a primitive
-  * map and ships one record per receiving partition: one shuffle stage,
-  * no job. [[Exact]], [[DSum6]] and [[ProductSum]] replicate Spark's
-  * arithmetic, so the rows are the ones the DuckDB replays compute.
+  * [[eigenvectorDF]], [[hitsDF]], [[lpaDF]], [[connectedComponents]],
+  * [[kCoreDF]] and the landmark passes of [[landmarkBfs]] and
+  * [[stressCentralityDF]] — run on one block superstep kernel
+  * (Pregelix's vertex⋈message join plus group-by, as a co-partitioned RDD
+  * lineage, so Catalyst and AQE never see a round). The static edges are
+  * shuffled once on their sending endpoint into one primitive-array
+  * adjacency block per partition (a [[Topology]]); the vertex state is one
+  * block per partition under the same partitioning. A session holds one
+  * topology per view of the derived graph, so a call moves only messages;
+  * the DataFrame entry points build one for the call. A round zips the
+  * state with the topology, combines the messages map-side into a
+  * primitive map and ships one record per receiving partition: one
+  * shuffle stage, no job. [[Exact]], [[DSum6]] and [[ProductSum]]
+  * replicate Spark's arithmetic, so the rows are the ones the DuckDB
+  * replays compute.
   *
   * Triangles are enumerated by a degree-ordered DataFrame join
   * ([[triangleListDF]]): GraphX's `TriangleCount` materializes per-vertex
@@ -58,11 +62,15 @@ object GraphAnalytics {
     */
   final val MaxCumLazyRows = 2000000L
 
-  /** Materialize the session-shared derived graph; the kernel holds no
-    * state across calls.
+  /** Materialize the session-shared derived graph and build its held
+    * [[undirectedView]]; the other views are built by their first
+    * consumer.
     */
-  def warm(spark: SparkSession, sfDir: String): Unit =
+  def warm(spark: SparkSession, sfDir: String): Unit = {
     graft.model.DerivedGraph.warm(spark, sfDir)
+    undirectedView(spark, sfDir)
+    ()
+  }
 
   /** Fixed-point units per rank of the PageRank and renormalized
     * ladders. PageRank divides by out-degree, so its messages need the
@@ -216,6 +224,13 @@ object GraphAnalytics {
       new Keyed(o1, if (pairs) o2 else null, ov)
     }
 
+    /** [[toKeyed]], sorted by key unless keyed by pairs: sorted ids
+      * compress better in a shuffle.
+      */
+    def shippable: Keyed = if (pairs) toKeyed else {
+      val ks = toKeyed.k1; java.util.Arrays.sort(ks); new Keyed(ks, null, ks.map(get(_, 0L)))
+    }
+
     private def grow(): Unit = {
       val old = toKeyed
       mask = mask * 2 + 1
@@ -256,7 +271,7 @@ object GraphAnalytics {
   }
 
   private def shipped(maps: Array[LongMap]): Iterator[(Int, Keyed)] =
-    maps.indices.iterator.filter(maps(_).size > 0).map(i => (i, maps(i).toKeyed))
+    maps.indices.iterator.filter(maps(_).size > 0).map(i => (i, maps(i).shippable))
 
   /** The map side of a round in partition `t`: each sender `ids(i)` with
     * out-edges sends `value(i, outdeg)` to every out-neighbour, keyed
@@ -289,25 +304,19 @@ object GraphAnalytics {
 
   /** Flags of the vertex-id map a topology is built from. */
   private final val IsVertex = 1
-  private final val Seed = 2
-  private final val HasIn = 4
+  private final val HasIn = 2
 
   /** The static block of one partition: the adjacency keyed by the
-    * sending endpoint (sorted senders, CSR offsets, receivers) and the
-    * sorted vertex ids with their [[Seed]]/[[HasIn]] flags.
+    * sending endpoint (sorted senders, CSR offsets, receivers), the
+    * sorted vertex ids, and those of them no edge reaches (sorted).
     */
   private final class Topo(val keys: Array[Long], val off: Array[Int], val nbrs: Array[Long],
-      val vids: Array[Long], val vflags: Array[Byte]) extends Serializable {
-    def flags(id: Long): Int = {
-      val i = java.util.Arrays.binarySearch(vids, id)
-      if (i >= 0) vflags(i) else 0
-    }
-  }
+      val vids: Array[Long], val noIn: Array[Long]) extends Serializable
 
   /** One partition's state: ids and their values. */
   private final class Vals(val ids: Array[Long], val x: Array[Double]) extends Serializable
 
-  private def buildTopo(records: Iterator[(Int, Keyed)]): Topo = {
+  private def buildTopo(records: Iterator[(Int, Keyed)], symmetric: Boolean): Topo = {
     val (from, to) = (new LongBuf, new LongBuf)
     val ids = new LongMap(false, Or)
     records.foreach { case (_, r) =>
@@ -330,61 +339,140 @@ object GraphAnalytics {
     val all = ids.toKeyed
     val vids = all.k1.indices.filter(i => (all.v(i) & IsVertex) != 0).map(all.k1).toArray
     java.util.Arrays.sort(vids)
-    new Topo(keys, off, nbrs, vids, vids.map(ids.get(_, 0L).toByte))
+    // in a symmetric relation an id has an in-edge exactly when it sends
+    val noIn = vids.filter(id =>
+      if (symmetric) java.util.Arrays.binarySearch(keys, id) < 0
+      else (ids.get(id, 0L) & HasIn) == 0)
+    new Topo(keys, off, nbrs, vids, noIn)
   }
 
-  /** The static blocks of one message direction, `from` → `to`, under
-    * the `p`-way [[partOf]] partitioning: one shuffle of the edges on
-    * `from`, of each receiver id (flagged [[HasIn]]) and of each vertex id
-    * (flagged [[IsVertex]], plus [[Seed]] where `seed` holds). An edge
-    * with a null endpoint sends nothing.
+  /** The static blocks of the message direction `from` → `to` under the
+    * `p`-way [[partOf]] partitioning, persisted: one shuffle of the edges
+    * on `from`, of each vertex id and, unless the relation is `symmetric`
+    * (both orientations of every edge), of each receiver id. An edge with
+    * a null endpoint sends nothing.
     */
-  private def topology(vertices: DataFrame, seed: Column, edges: DataFrame, from: String,
-      to: String, p: Int): RDD[Topo] = {
+  private def staticBlocks(vertices: DataFrame, edges: DataFrame, from: String, to: String,
+      p: Int, symmetric: Boolean): RDD[Topo] = {
     val fromEdges = edges.select(col(from).cast("long"), col(to).cast("long"))
       .queryExecution.toRdd.mapPartitions { rows =>
         val pairs = Array.fill(p)((new LongBuf, new LongBuf))
-        val recv = Array.fill(p)(new LongMap(false, Or))
+        val recv = Array.fill(if (symmetric) 0 else p)(new LongMap(false, Or))
         rows.foreach { r =>
           if (!r.isNullAt(0) && !r.isNullAt(1)) {
             val (a, b) = (r.getLong(0), r.getLong(1))
             val (fa, ta) = pairs(partOf(a, p))
             fa += a; ta += b
-            recv(partOf(b, p)).add(b, 0L, HasIn)
+            if (!symmetric) recv(partOf(b, p)).add(b, 0L, HasIn)
           }
         }
         pairs.indices.iterator.filter(pairs(_)._1.size > 0)
           .map(i => (i, new Keyed(pairs(i)._1.result, pairs(i)._2.result, null))) ++
           shipped(recv)
       }
-    val fromVertices = vertices.select(col("id").cast("long"), coalesce(seed, lit(false)))
-      .queryExecution.toRdd.mapPartitions { rows =>
-        val ids = Array.fill(p)(new LongMap(false, Or))
-        rows.foreach { r =>
-          if (!r.isNullAt(0)) {
-            val id = r.getLong(0)
-            ids(partOf(id, p)).add(id, 0L, if (r.getBoolean(1)) IsVertex | Seed else IsVertex)
-          }
-        }
-        shipped(ids)
-      }
-    fromEdges.union(fromVertices).partitionBy(new ToPartition(p))
-      .mapPartitions(r => Iterator(buildTopo(r)), preservesPartitioning = true)
+    fromEdges.union(idRecords(vertices, p, IsVertex)).partitionBy(new ToPartition(p))
+      .mapPartitions(r => Iterator(buildTopo(r, symmetric)), preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** The persisted static blocks of one call, one per message direction,
-    * built in one job that also counts the vertices and the seeds.
+  /** The non-null `id`s of `df`, each flagged `flag`, as one record per
+    * target partition.
     */
-  private final class Kernel(val p: Int, val topos: Seq[RDD[Topo]], val nV: Long,
-      val nSeeds: Long) {
-    private val held = scala.collection.mutable.ArrayBuffer[RDD[_]](topos: _*)
-
-    /** `rdd` persisted; [[release]] unpersists it unless it is kept. */
-    def hold[T](rdd: RDD[T]): RDD[T] = {
-      held += rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      rdd
+  private def idRecords(df: DataFrame, p: Int, flag: Int): RDD[(Int, Keyed)] =
+    df.select(col("id").cast("long")).queryExecution.toRdd.mapPartitions { rows =>
+      val ids = Array.fill(p)(new LongMap(false, Or))
+      for (r <- rows if !r.isNullAt(0)) ids(partOf(r.getLong(0), p)).add(r.getLong(0), 0L, flag)
+      shipped(ids)
     }
+
+  /** The persisted static blocks of one message direction over one vertex
+    * set, their width `p` and |V| (`nV`). A session holds one per view of
+    * the derived graph ([[undirectedView]], [[directedView]],
+    * [[reversedView]], [[memberView]]); each DataFrame entry point builds
+    * its own and releases it before it returns.
+    */
+  final class Topology private[GraphAnalytics] (private[GraphAnalytics] val spark: SparkSession,
+      val p: Int, private[GraphAnalytics] val blocks: RDD[Topo], val nV: Long) {
+
+    /** The id `SparkContext.getPersistentRDDs` lists the blocks under. */
+    private[graft] def rddId: Int = blocks.id
+  }
+
+  /** The topologies of the message directions `dirs` over one vertex set:
+    * one edge count sizes them all (so they zip), one job builds the first
+    * and counts |V|, and the others build in their first consumer's job.
+    * `symmetric` marks an edge relation holding both orientations of every
+    * edge.
+    */
+  private def topologies(vertices: DataFrame, edges: DataFrame, dirs: Seq[(String, String)],
+      symmetric: Boolean): Seq[Topology] = {
+    // a row count of the column-free projection: one job, no aggregate
+    val p = widthFor(edges.sparkSession.sparkContext, edges.select().queryExecution.toRdd.count())
+    val bs = dirs.map { case (from, to) => staticBlocks(vertices, edges, from, to, p, symmetric) }
+    // every direction carries the same vertex blocks
+    val nV = bs.head.map(_.vids.length.toLong).fold(0L)(_ + _)
+    bs.map(new Topology(vertices.sparkSession, p, _, nV))
+  }
+
+  /** The topology of the (src, dst) edges src → dst or, when `symmetric`,
+    * of an undirected (a, b) view holding both orientations of every edge
+    * (e.g. [[graft.model.DerivedGraph.undirected]]), a → b.
+    */
+  private def topology(vertices: DataFrame, edges: DataFrame, symmetric: Boolean): Topology =
+    topologies(vertices, edges, Seq(if (symmetric) "a" -> "b" else "src" -> "dst"), symmetric).head
+
+  /** `body` over `t`, a topology built for this call and released when it
+    * returns; the rows the caller reads later recompute from the shuffle
+    * outputs.
+    */
+  private def perCall[T](t: Topology)(body: Topology => T): T =
+    try body(t) finally t.blocks.unpersist(blocking = false)
+
+  /** The derived-graph views a session holds, keyed (sfDir, view), each
+    * built by its first consumer and kept while the SparkContext lives.
+    */
+  private val views = new graft.model.SessionCache[(String, String), Topology]
+
+  private def held(spark: SparkSession, sfDir: String, view: String)(
+      build: graft.model.DerivedGraph.G => Topology): Topology =
+    views.getOrElseUpdate(spark, (sfDir, view))(build(graft.model.DerivedGraph(spark, sfDir)))
+
+  /** Both orientations of every derived-graph edge: the view of the
+    * landmark BFS, graph_stress, graph_cc, graph_eigenvector and
+    * graph_kcore. [[warm]] builds it.
+    */
+  def undirectedView(spark: SparkSession, sfDir: String): Topology =
+    held(spark, sfDir, "undirected")(g =>
+      topology(g.vertices, graft.model.DerivedGraph.undirected(g.edges), symmetric = true))
+
+  /** The derived-graph edges src → dst: pagerank, PPR and HITS forward. */
+  def directedView(spark: SparkSession, sfDir: String): Topology =
+    held(spark, sfDir, "directed")(g => topology(g.vertices, g.edges, symmetric = false))
+
+  /** dst → src at [[directedView]]'s width, built in the job of its first
+    * consumer (HITS backward).
+    */
+  def reversedView(spark: SparkSession, sfDir: String): Topology =
+    held(spark, sfDir, "reversed") { g =>
+      val d = directedView(spark, sfDir)
+      new Topology(spark, d.p, staticBlocks(g.vertices, g.edges, "dst", "src", d.p, false), d.nV)
+    }
+
+  /** The undirected affiliation subgraph over the vertices that are not
+    * parts: graph_lpa and graph_modularity.
+    */
+  def memberView(spark: SparkSession, sfDir: String): Topology =
+    held(spark, sfDir, "members")(g =>
+      topology(g.vertices.filter(col("label") =!= "part").select("id"),
+        graft.model.DerivedGraph.undirected(graft.model.DerivedGraph.memberEdges(g)), true))
+
+  /** The per-call blocks of one operator call over `t`: [[hold]] persists
+    * one, [[release]] unpersists them; `t`'s blocks are never among them.
+    */
+  private final class Kernel(val t: Topology) {
+    private val held = scala.collection.mutable.ArrayBuffer[RDD[_]]()
+
+    def hold[T](rdd: RDD[T]): RDD[T] = { held += rdd.persist(StorageLevel.MEMORY_AND_DISK); rdd }
 
     /** Unpersist every held block not in `keep`. */
     def release(keep: RDD[_]*): Unit = {
@@ -394,59 +482,54 @@ object GraphAnalytics {
     }
   }
 
-  private def kernel(vertices: DataFrame, edges: DataFrame, seed: Column,
-      dirs: Seq[(String, String)], unit: Long, op: String): Kernel = {
-    // a row count of the column-free projection: one job, no aggregate
-    val p = widthFor(vertices.sparkSession.sparkContext,
-      edges.select().queryExecution.toRdd.count())
-    val topos = dirs.map { case (from, to) => topology(vertices, seed, edges, from, to, p) }
-    // every direction carries the same vertex blocks
-    val (nV, nS) = topos.head
-      .map(t => (t.vids.length.toLong, t.vflags.count(f => (f & Seed) != 0).toLong))
-      .fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
-    require(nV < Long.MaxValue / unit,
-      s"$op: |V|=$nV exceeds the fixed-point headroom of $unit units per rank " +
+  private def headroom(t: Topology, unit: Long, op: String): Unit =
+    require(t.nV < Long.MaxValue / unit,
+      s"$op: |V|=${t.nV} exceeds the fixed-point headroom of $unit units per rank " +
         "(long message sums could overflow); reduce the scale factor")
-    new Kernel(p, topos, nV, nS)
-  }
 
   /** |V| as the kernel counts it for the message directions `dirs`. */
   private[graft] def kernelVertexCount(vertices: DataFrame, edges: DataFrame,
-      dirs: Seq[(String, String)]): Long = {
-    val k = kernel(vertices, edges, lit(false), dirs, 1L, "kernelVertexCount")
-    k.release()
-    k.nV
-  }
+      dirs: Seq[(String, String)]): Long =
+    topologies(vertices, edges, dirs, symmetric = false).map(perCall(_)(_.nV)).head
 
-  private def initial(topo: RDD[Topo], x: Double): RDD[Vals] =
-    topo.map(t => new Vals(t.vids, Array.fill(t.vids.length)(x)))
+  private def initial(t: Topology, x: Double): RDD[Vals] =
+    t.blocks.map(b => new Vals(b.vids, Array.fill(b.vids.length)(x)))
+
+  /** The sorted seed ids of each partition of `t`: one shuffle of the ids
+    * of `seeds` only.
+    */
+  private def seedBlocks(t: Topology, seeds: DataFrame): RDD[Array[Long]] =
+    idRecords(seeds, t.p, 0).partitionBy(new ToPartition(t.p)).mapPartitions(r =>
+      Iterator(received(r, pairs = false, Or).shippable.k1), preservesPartitioning = true)
+
+  /** No seeds: an empty seed block per partition of `t`. */
+  private def noSeeds(t: Topology): RDD[Array[Long]] = t.blocks.map(_ => Array.emptyLongArray)
 
   /** One superstep of the double-valued ladders: each state row sends
     * `units(x, outdeg)` to every out-neighbour, summed per receiver on the
     * map side into one record per receiving partition; the receiving
     * partition sums them exactly (integer addition commutes, so the sum is
     * order- and partitioning-independent) and gives each receiver
-    * `recv(flags, sum)` and each vertex no edge reaches `none(flags)`.
+    * `recv(isSeed, sum)` and each vertex no edge reaches `none(isSeed)`.
     */
-  private def superstep(topo: RDD[Topo], state: RDD[Vals], p: Int)(units: (Double, Int) => Long)
-      (recv: (Int, Long) => Double, none: Int => Double): RDD[Vals] =
-    topo.zipPartitions(state) { (ti, si) =>
-      val (t, s) = (ti.next(), si.next())
-      send(t, s.ids, p, pairs = false, Sum)(_ => 0L, (i, deg) => units(s.x(i), deg))
-    }.partitionBy(new ToPartition(p)).zipPartitions(topo) { (mi, ti) =>
-      val t = ti.next()
+  private def superstep(t: Topology, state: RDD[Vals], seeds: RDD[Array[Long]])(
+      units: (Double, Int) => Long)(recv: (Boolean, Long) => Double,
+      none: Boolean => Double): RDD[Vals] = {
+    val p = t.p
+    t.blocks.zipPartitions(state) { (ti, si) =>
+      val (b, s) = (ti.next(), si.next())
+      send(b, s.ids, p, pairs = false, Sum)(_ => 0L, (i, deg) => units(s.x(i), deg))
+    }.partitionBy(new ToPartition(p)).zipPartitions(t.blocks, seeds) { (mi, ti, si) =>
+      val (b, seed) = (ti.next(), si.next())
+      def isSeed(id: Long) = java.util.Arrays.binarySearch(seed, id) >= 0
       val m = received(mi, pairs = false, Sum).toKeyed
-      val quiet = t.vids.indices.filter(i => (t.vflags(i) & HasIn) == 0).toArray
       val n = m.k1.length
-      val ids = java.util.Arrays.copyOf(m.k1, n + quiet.length)
-      val x = new Array[Double](ids.length)
-      var i = 0
-      while (i < n) { x(i) = recv(t.flags(ids(i)), m.v(i)); i += 1 }
-      while (i < ids.length) {
-        ids(i) = t.vids(quiet(i - n)); x(i) = none(t.vflags(quiet(i - n))); i += 1
-      }
-      Iterator(new Vals(ids, x))
+      val ids = java.util.Arrays.copyOf(m.k1, n + b.noIn.length)
+      System.arraycopy(b.noIn, 0, ids, n, b.noIn.length)
+      Iterator(new Vals(ids, Array.tabulate(ids.length)(i =>
+        if (i < n) recv(isSeed(ids(i)), m.v(i)) else none(isSeed(ids(i))))))
     }
+  }
 
   /** The exact-DECIMAL total and the row count of a state, in one job. */
   private def total(state: RDD[Vals]): (Double, Long) = {
@@ -467,30 +550,27 @@ object GraphAnalytics {
     state.map(v => new Vals(v.ids, v.x.map(x => Exact.round6(x * n.toDouble / t))))
   }
 
-  private def valsDF(spark: SparkSession, state: RDD[Vals], name: String): DataFrame =
-    spark.createDataFrame(
+  private def valsDF(t: Topology, state: RDD[Vals], name: String): DataFrame =
+    t.spark.createDataFrame(
       state.flatMap(v => v.ids.indices.iterator.map(i => Row(v.ids(i), v.x(i)))),
       StructType(Seq(StructField("id", LongType, nullable = false),
         StructField(name, DoubleType))))
 
   /** The PageRank ladder [[pageRankDF]] and [[personalizedPageRankDF]]
     * share: init 1.0, then `rank = round(base + 0.85·Σ rank/outdeg, 6)`
-    * per round over directed src→dst messages, where `base(nV, nS)` gives
-    * the teleport term of seeds and of the other vertices. The rounds are
-    * one lineage; the caller's job over the held result runs them all.
+    * per round over directed src→dst messages, where the teleport term is
+    * `sb` on seeds and `ob` on the other vertices. The rounds are one
+    * lineage that the caller's job runs.
     */
-  private def rankLadder(vertices: DataFrame, edges: DataFrame, seed: Column, numIter: Int,
-      op: String)(base: (Long, Long) => (Double, Double)): (Kernel, RDD[Vals]) = {
-    val k = kernel(vertices, edges, seed, Seq("src" -> "dst"), RankUnit, op)
-    val (sb, ob) = base(k.nV, k.nSeeds)
+  private def rankLadder(t: Topology, seeds: RDD[Array[Long]], numIter: Int)(sb: Double,
+      ob: Double): RDD[Vals] = {
     val unit = RankUnit.toDouble
-    val topo = k.topos.head
-    var ranks = initial(topo, 1.0)
+    var ranks = initial(t, 1.0)
     for (_ <- 1 to numIter)
-      ranks = superstep(topo, ranks, k.p)((x, deg) => Exact.floor(x / deg * unit))(
-        (f, s) => Exact.round6((if ((f & Seed) != 0) sb else ob) + 0.85 * (s.toDouble / unit)),
-        f => Exact.round6(if ((f & Seed) != 0) sb else ob))
-    (k, k.hold(ranks))
+      ranks = superstep(t, ranks, seeds)((x, deg) => Exact.floor(x / deg * unit))(
+        (s, m) => Exact.round6((if (s) sb else ob) + 0.85 * (m.toDouble / unit)),
+        s => Exact.round6(if (s) sb else ob))
+    ranks
   }
 
   /** Static PageRank with GraphX `staticPageRank` semantics (init 1.0,
@@ -501,12 +581,15 @@ object GraphAnalytics {
     * same ladder reproduces the exact values. Cross-checked against GraphX
     * in GraphAnalyticsSpec.
     */
-  def pageRankDF(vertices: DataFrame, edges: DataFrame, numIter: Int = 10): DataFrame = {
-    val (k, ranks) = rankLadder(vertices, edges, lit(false), numIter, "pageRankDF")(
-      (_, _) => (0.15, 0.15))
-    val (t, n) = total(ranks)
-    k.release(ranks)
-    valsDF(vertices.sparkSession, renormalized(ranks, t, n), "rank")
+  def pageRankDF(vertices: DataFrame, edges: DataFrame, numIter: Int = 10): DataFrame =
+    perCall(topology(vertices, edges, symmetric = false))(pageRankDF(_, numIter))
+
+  /** [[pageRankDF]] over a src → dst topology, e.g. [[directedView]]. */
+  def pageRankDF(t: Topology, numIter: Int): DataFrame = {
+    headroom(t, RankUnit, "pageRankDF")
+    val ranks = rankLadder(t, noSeeds(t), numIter)(0.15, 0.15)
+    val (s, n) = total(ranks)
+    valsDF(t, renormalized(ranks, s, n), "rank")
   }
 
   /** Personalized PageRank (Page et al. 1999 §6 / Jeh & Widom 2003): the
@@ -516,29 +599,34 @@ object GraphAnalytics {
     * Ranks measure closeness to the seeds, not global prestige.
     */
   def personalizedPageRankDF(vertices: DataFrame, edges: DataFrame,
-      seedPred: Column, numIter: Int = 10): DataFrame = {
-    val (k, ranks) = rankLadder(vertices, edges, seedPred, numIter,
-        "personalizedPageRankDF") { (nV, nS) =>
-      require(nS > 0, "personalizedPageRankDF: empty seed set")
-      // (0.15 · nV) / nS in this op order, as in the generated oracle
-      (0.15 * nV.toDouble / nS.toDouble, 0.0)
-    }
-    ranks.count()
-    k.release(ranks)
-    valsDF(vertices.sparkSession, ranks, "rank")
+      seedPred: Column, numIter: Int = 10): DataFrame =
+    perCall(topology(vertices, edges, symmetric = false))(
+      personalizedPageRankDF(_, vertices.filter(seedPred), numIter))
+
+  /** [[personalizedPageRankDF]] over a src → dst topology, seeded with the
+    * `id`s of `seeds`, which must be vertices of `t`.
+    */
+  def personalizedPageRankDF(t: Topology, seeds: DataFrame, numIter: Int): DataFrame = {
+    headroom(t, RankUnit, "personalizedPageRankDF")
+    val sb = seedBlocks(t, seeds)
+    val nS = sb.map(_.length.toLong).fold(0L)(_ + _)
+    require(nS > 0, "personalizedPageRankDF: empty seed set")
+    // (0.15 · nV) / nS in this op order, as in the generated oracle
+    valsDF(t, rankLadder(t, sb, numIter)(0.15 * t.nV.toDouble / nS.toDouble, 0.0), "rank")
   }
 
-  /** One L1-renormalized half-step of [[eigenvectorDF]] and [[hitsDF]]:
-    * floor(x·1e6) per message, vertices no edge reaches at 0, then
-    * round(y·n/t, 6) over all rows with the exact-DECIMAL total t. The
-    * total is the round's one job. Returns the held y and the new x.
+  /** One L1-renormalized half-step of [[eigenvectorDF]] and [[hitsDF]] over
+    * `t`: floor(x·1e6) per message, vertices no edge reaches at 0, then
+    * round(y·n/t, 6) over all rows with the exact-DECIMAL total. The total
+    * is the round's one job.
     */
-  private def renormStep(k: Kernel, topo: RDD[Topo], x: RDD[Vals]): (RDD[Vals], RDD[Vals]) = {
+  private def renormStep(k: Kernel, t: Topology, x: RDD[Vals], none: RDD[Array[Long]])
+      : RDD[Vals] = {
     val unit = RenormUnit.toDouble
-    val y = k.hold(superstep(topo, x, k.p)((v, _) => Exact.floor(v * unit))(
+    val y = k.hold(superstep(t, x, none)((v, _) => Exact.floor(v * unit))(
       (_, s) => s.toDouble / unit, _ => 0.0))
-    val (t, n) = total(y)
-    (y, renormalized(y, t, n))
+    val (s, n) = total(y)
+    renormalized(y, s, n)
   }
 
   /** Eigenvector centrality by synchronous power iteration (Bonacich
@@ -548,12 +636,17 @@ object GraphAnalytics {
     * is one [[renormStep]]; the DuckDB replay (QueriesGraphX.evOracleSql)
     * applies the identical op order.
     */
-  def eigenvectorDF(vertices: DataFrame, edges: DataFrame, numIter: Int = 8): DataFrame = {
-    val k = kernel(vertices, edges, lit(false), Seq("src" -> "dst"), RenormUnit, "eigenvectorDF")
-    var (y, x) = (null: RDD[Vals], initial(k.topos.head, 1.0))
-    for (_ <- 1 to numIter) { val (ny, nx) = renormStep(k, k.topos.head, x); y = ny; x = nx }
-    k.release(y)
-    valsDF(vertices.sparkSession, x, "x")
+  def eigenvectorDF(vertices: DataFrame, edges: DataFrame, numIter: Int = 8): DataFrame =
+    perCall(topology(vertices, edges, symmetric = false))(eigenvectorDF(_, numIter))
+
+  /** [[eigenvectorDF]] over `t`, e.g. [[undirectedView]]. */
+  def eigenvectorDF(t: Topology, numIter: Int): DataFrame = {
+    headroom(t, RenormUnit, "eigenvectorDF")
+    val (k, none) = (new Kernel(t), noSeeds(t))
+    var x = initial(t, 1.0)
+    for (_ <- 1 to numIter) x = renormStep(k, t, x, none)
+    k.release()
+    valsDF(t, x, "x")
   }
 
   /** HITS hubs & authorities (Kleinberg 1999) over the DIRECTED graph —
@@ -566,17 +659,24 @@ object GraphAnalytics {
     * structure (hubs point at strong authorities). Rows are the ids that
     * carry both a hub and an auth value.
     */
-  def hitsDF(vertices: DataFrame, edges: DataFrame, numIter: Int = 4): DataFrame = {
-    val k = kernel(vertices, edges, lit(false), Seq("src" -> "dst", "dst" -> "src"),
-      RenormUnit, "hitsDF")
-    val Seq(fwd, bwd) = k.topos
-    var (hy, hub) = (null: RDD[Vals], initial(fwd, 1.0))
-    var (ay, auth) = (null: RDD[Vals], initial(fwd, 0.0))
-    for (_ <- 1 to numIter) {
-      val (y1, a) = renormStep(k, fwd, hub); ay = y1; auth = a
-      val (y2, h) = renormStep(k, bwd, auth); hy = y2; hub = h
+  def hitsDF(vertices: DataFrame, edges: DataFrame, numIter: Int = 4): DataFrame =
+    topologies(vertices, edges, Seq("src" -> "dst", "dst" -> "src"), symmetric = false) match {
+      case Seq(fwd, bwd) => perCall(fwd)(f => perCall(bwd)(hitsDF(f, _, numIter)))
     }
-    k.release(hy, ay)
+
+  /** [[hitsDF]] over the src → dst topology `fwd` and its reverse `bwd`,
+    * e.g. [[directedView]] and [[reversedView]].
+    */
+  def hitsDF(fwd: Topology, bwd: Topology, numIter: Int): DataFrame = {
+    require(fwd.p == bwd.p, "hitsDF: both directions must share one width")
+    headroom(fwd, RenormUnit, "hitsDF")
+    val (k, none) = (new Kernel(fwd), noSeeds(fwd))
+    var (hub, auth) = (initial(fwd, 1.0), initial(fwd, 0.0))
+    for (_ <- 1 to numIter) {
+      auth = renormStep(k, fwd, hub, none)
+      hub = renormStep(k, bwd, auth, none)
+    }
+    k.release()
     val rows = hub.zipPartitions(auth) { (hi, ai) =>
       val (h, a) = (hi.next(), ai.next())
       val at = new LongMap(false, Put)
@@ -586,10 +686,44 @@ object GraphAnalytics {
         if (j < 0) None else Some(Row(h.ids(i), h.x(i), a.x(j)))
       }
     }
-    vertices.sparkSession.createDataFrame(rows, StructType(Seq(
+    fwd.spark.createDataFrame(rows, StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("hub", DoubleType), StructField("auth", DoubleType))))
   }
+
+  /** One round over per-partition state `prev`: `out` sends from each
+    * partition's topology block and state, the messages shuffle to their
+    * receivers, and `in` gives each partition its new state.
+    */
+  private def exchange[S: scala.reflect.ClassTag](t: Topology, prev: RDD[S])(
+      out: (Topo, S) => Iterator[(Int, Keyed)])(in: (Iterator[(Int, Keyed)], S) => S): RDD[S] =
+    t.blocks.zipPartitions(prev)((ti, si) => out(ti.next(), si.next())).partitionBy(
+      new ToPartition(t.p)).zipPartitions(prev)((mi, si) => Iterator(in(mi, si.next())))
+
+  /** Rounds of [[connectedComponents]] and [[kCoreDF]] between two
+    * convergence checks.
+    */
+  private final val CheckEvery = 4
+
+  /** Up to `rounds` rounds of `round` from `init`, one held lineage; every
+    * [[CheckEvery]] rounds short of `rounds`, one job sums `left` over the
+    * state, and the loop stops at the first zero.
+    */
+  private def checked[S: scala.reflect.ClassTag](k: Kernel, init: RDD[S], rounds: Int)(
+      left: S => Long)(round: RDD[S] => RDD[S]): RDD[S] = {
+    var (state, r, n) = (init, 0, 1L)
+    while (r < rounds && n > 0) {
+      for (_ <- 1 to math.min(CheckEvery, rounds - r)) { state = k.hold(round(state)); r += 1 }
+      if (r < rounds) n = state.map(left).fold(0L)(_ + _)
+      k.release(state)
+    }
+    state
+  }
+
+  /** Rows of long columns `names` as a frame of `t`'s session. */
+  private def longsDF(t: Topology, rows: RDD[Row], names: String*): DataFrame =
+    t.spark.createDataFrame(rows,
+      StructType(names.map(StructField(_, LongType, nullable = false))))
 
   /** One partition's labels: ids and their labels. */
   private final class Labels(val ids: Array[Long], val lbl: Array[Long]) extends Serializable
@@ -603,8 +737,7 @@ object GraphAnalytics {
     * oracle replays these supersteps as chained CTEs.
     *
     * `und` is the undirected (a, b) edge view — both orientations of
-    * every edge, e.g. [[graft.model.DerivedGraph.undirected]]; labels
-    * flow from b to a.
+    * every edge, e.g. [[graft.model.DerivedGraph.undirected]].
     *
     * Per round, on the block kernel: each vertex sends its label to its
     * neighbours, the (receiver, label) counts are summed map-side, and
@@ -612,17 +745,16 @@ object GraphAnalytics {
     * vertex. All-long arithmetic, so no rounding ladder is needed for
     * oracle parity. The rounds are one lineage run by one job.
     */
-  def lpaDF(vertices: DataFrame, und: DataFrame, numIter: Int = 5): DataFrame = {
-    val k = kernel(vertices, und, lit(false), Seq("b" -> "a"), 1L, "lpaDF")
-    val (p, topo) = (k.p, k.topos.head)
-    var labels = topo.map(t => new Labels(t.vids, t.vids.clone))
-    for (_ <- 1 to numIter) {
-      val prev = labels
-      labels = k.hold(topo.zipPartitions(prev) { (ti, li) =>
-        val (t, l) = (ti.next(), li.next())
-        send(t, l.ids, p, pairs = true, Sum)(l.lbl(_), (_, _) => 1L)
-      }.partitionBy(new ToPartition(p)).zipPartitions(prev) { (mi, li) =>
-        val l = li.next()
+  def lpaDF(vertices: DataFrame, und: DataFrame, numIter: Int = 5): DataFrame =
+    perCall(topology(vertices, und, symmetric = true))(lpaDF(_, numIter))
+
+  /** [[lpaDF]] over an undirected topology, e.g. [[memberView]]. */
+  def lpaDF(t: Topology, numIter: Int): DataFrame = {
+    val (k, p) = (new Kernel(t), t.p)
+    var labels = t.blocks.map(b => new Labels(b.vids, b.vids.clone))
+    for (_ <- 1 to numIter)
+      labels = k.hold(exchange(t, labels)((b, l) =>
+        send(b, l.ids, p, pairs = true, Sum)(l.lbl(_), (_, _) => 1L)) { (mi, l) =>
         val m = received(mi, pairs = true, Sum).toKeyed
         // per receiver, the entry of max (count, -label)
         val best = new LongMap(false, Put)
@@ -632,22 +764,16 @@ object GraphAnalytics {
           if (b < 0 || m.v(e) > m.v(b) || (m.v(e) == m.v(b) && m.k2(e) < m.k2(b)))
             best.add(m.k1(e), 0L, e)
         }
-        Iterator(new Labels(l.ids, l.ids.indices.map { i =>
+        new Labels(l.ids, l.ids.indices.map { i =>
           val b = best.get(l.ids(i), -1L).toInt
           if (b < 0) l.lbl(i) else m.k2(b)
-        }.toArray))
+        }.toArray)
       })
-    }
     labels.count()
-    k.release(labels)
-    vertices.sparkSession.createDataFrame(
-      labels.flatMap(l => l.ids.indices.iterator.map(i => Row(l.ids(i), l.lbl(i)))),
-      StructType(Seq(StructField("id", LongType, nullable = false),
-        StructField("community", LongType, nullable = false))))
+    k.release()
+    longsDF(t, labels.flatMap(l => l.ids.indices.iterator.map(i => Row(l.ids(i), l.lbl(i)))),
+      "id", "community")
   }
-
-  /** Rounds of [[connectedComponents]] between two convergence checks. */
-  private final val CcCheckEvery = 4
 
   /** One partition's component labels, and the indices whose label the
     * last round changed: only those send in the next round.
@@ -660,7 +786,7 @@ object GraphAnalytics {
     * every vertex whose label moved sends it to its neighbours (a vertex
     * that did not move already sent the same label), the messages are
     * min-combined map-side, and a receiver keeps the smaller of its label
-    * and theirs. The rounds are one lineage; every [[CcCheckEvery]] rounds
+    * and theirs. The rounds are one lineage; every [[CheckEvery]] rounds
     * one job counts the labels the last round moved, and the loop stops
     * at the first zero, so the labels are exact at any diameter.
     *
@@ -669,35 +795,25 @@ object GraphAnalytics {
     * `vertices`; an isolated vertex labels itself, and an endpoint missing
     * from `vertices` relays nothing.
     */
-  def connectedComponents(vertices: DataFrame, und: DataFrame): DataFrame = {
-    val k = kernel(vertices, und, lit(false), Seq("b" -> "a"), 1L, "connectedComponents")
-    val (p, topo) = (k.p, k.topos.head)
-    var labels =
-      topo.map(t => new Components(t.vids, t.vids.clone, Array.range(0, t.vids.length)))
-    var moved = 1L
-    while (moved > 0) {
-      for (_ <- 1 to CcCheckEvery) {
-        val prev = labels
-        labels = k.hold(topo.zipPartitions(prev) { (ti, ci) =>
-          val (t, c) = (ti.next(), ci.next())
-          send(t, c.moved.map(c.ids(_)), p, pairs = false, Min)(_ => 0L,
-            (i, _) => c.lbl(c.moved(i)))
-        }.partitionBy(new ToPartition(p)).zipPartitions(prev) { (mi, ci) =>
-          val (in, c) = (received(mi, pairs = false, Min), ci.next())
-          val lbl = Array.tabulate(c.ids.length)(i =>
-            math.min(c.lbl(i), in.get(c.ids(i), Long.MaxValue)))
-          Iterator(new Components(c.ids, lbl,
-            Array.range(0, lbl.length).filter(i => lbl(i) != c.lbl(i))))
-        })
-      }
-      moved = labels.map(_.moved.length.toLong).fold(0L)(_ + _)
-      k.release(topo, labels)
-    }
-    k.release(labels)
-    vertices.sparkSession.createDataFrame(
-      labels.flatMap(c => c.ids.indices.iterator.map(i => Row(c.ids(i), c.lbl(i)))),
-      StructType(Seq(StructField("id", LongType, nullable = false),
-        StructField("component", LongType, nullable = false))))
+  def connectedComponents(vertices: DataFrame, und: DataFrame): DataFrame =
+    perCall(topology(vertices, und, symmetric = true))(connectedComponents(_))
+
+  /** [[connectedComponents]] over an undirected topology, e.g. [[undirectedView]]. */
+  def connectedComponents(t: Topology): DataFrame = {
+    val (k, p) = (new Kernel(t), t.p)
+    val init =
+      t.blocks.map(b => new Components(b.vids, b.vids.clone, Array.range(0, b.vids.length)))
+    val labels = checked(k, init, Int.MaxValue)(_.moved.length.toLong)(exchange(t, _)((b, c) =>
+      send(b, c.moved.map(c.ids(_)), p, pairs = false, Min)(_ => 0L,
+        (i, _) => c.lbl(c.moved(i)))) { (mi, c) =>
+      val in = received(mi, pairs = false, Min)
+      val lbl = Array.tabulate(c.ids.length)(i =>
+        math.min(c.lbl(i), in.get(c.ids(i), Long.MaxValue)))
+      new Components(c.ids, lbl, Array.range(0, lbl.length).filter(i => lbl(i) != c.lbl(i)))
+    })
+    k.release()
+    longsDF(t, labels.flatMap(c => c.ids.indices.iterator.map(i => Row(c.ids(i), c.lbl(i)))),
+      "id", "component")
   }
 
   /** One partition's (vertex, landmark) pairs at one BFS level, with σ,
@@ -712,30 +828,29 @@ object GraphAnalytics {
     */
   private def landmarkRound(k: Kernel, lvl: RDD[Level])(
       value: (Level, Int) => Long): RDD[(Int, Keyed)] = {
-    val p = k.p
-    k.topos.head.zipPartitions(lvl) { (ti, li) =>
+    val p = k.t.p
+    k.t.blocks.zipPartitions(lvl) { (ti, li) =>
       val (t, l) = (ti.next(), li.next())
       send(t, l.ids, p, pairs = true, Sum)(l.lms(_), (i, _) => value(l, i))
     }.partitionBy(new ToPartition(p))
   }
 
-  /** The forward pass of the landmark BFS over the undirected view `und`
-    * (a, b; both orientations of every edge): `maxDepth` rounds in one
-    * lineage, one held block per level. Level 0 holds each seed that is a
-    * vertex or an edge endpoint, with σ = 1. Round d sends σ from level
-    * d−1 to every neighbour; a pair not reached before joins level d with
-    * σ = the ANSI-checked sum of its senders' σ. In a symmetric graph the
-    * neighbours of level d−1 lie in levels d−2..d, so a round reads only
-    * the two levels before it.
+  /** The forward pass of the landmark BFS over an undirected topology `t`:
+    * `maxDepth` rounds in one lineage, one held block per level. Level 0
+    * holds each seed that is a vertex or an edge endpoint, with σ = 1.
+    * Round d sends σ from level d−1 to every neighbour; a pair not reached
+    * before joins level d with σ = the ANSI-checked sum of its senders' σ.
+    * In a symmetric graph the neighbours of level d−1 lie in levels
+    * d−2..d, so a round reads only the two levels before it.
     */
-  private def landmarkLevels(vertices: DataFrame, und: DataFrame, seeds: Seq[Long],
+  private def landmarkLevels(t: Topology, seeds: Seq[Long],
       maxDepth: Int): (Kernel, IndexedSeq[RDD[Level]]) = {
-    val k = kernel(vertices, und, lit(false), Seq("a" -> "b"), 1L, "landmarkLevels")
+    val k = new Kernel(t)
     val lms = seeds.distinct.toArray
-    val levels = scala.collection.mutable.ArrayBuffer(k.hold(k.topos.head.mapPartitions({ ti =>
-      val t = ti.next()
-      val here = lms.filter(s => java.util.Arrays.binarySearch(t.keys, s) >= 0 ||
-        java.util.Arrays.binarySearch(t.vids, s) >= 0)
+    val levels = scala.collection.mutable.ArrayBuffer(k.hold(t.blocks.mapPartitions({ ti =>
+      val b = ti.next()
+      val here = lms.filter(s => java.util.Arrays.binarySearch(b.keys, s) >= 0 ||
+        java.util.Arrays.binarySearch(b.vids, s) >= 0)
       Iterator(new Level(here, here, here.map(_ => 1L), null))
     }, preservesPartitioning = true)))
     for (d <- 1 to maxDepth) {
@@ -759,20 +874,26 @@ object GraphAnalytics {
 
   /** Unweighted undirected BFS distances from every landmark at once: the
     * reference's bounded k-hop traversal (mongraph.py:236-274) as the
-    * forward pass of [[landmarkLevels]]. Rows are (id, landmark, dist) for
-    * every pair within `maxDepth` hops; unreachable pairs are omitted, and
-    * a seed that is neither a vertex nor an edge endpoint has no rows.
+    * forward pass of [[landmarkLevels]] over the undirected (a, b) view
+    * `und`. Rows are (id, landmark, dist) for every pair within `maxDepth`
+    * hops; unreachable pairs are omitted, and a seed that is neither a
+    * vertex nor an edge endpoint has no rows.
     */
   def landmarkBfs(vertices: DataFrame, und: DataFrame, seeds: Seq[Long],
       maxDepth: Int): HeldFrame = {
-    val spark = vertices.sparkSession
-    val (k, levels) = landmarkLevels(vertices, und, seeds, maxDepth)
-    val rows = spark.sparkContext.union(levels.zipWithIndex.map { case (lvl, d) =>
+    val t = topology(vertices, und, symmetric = true)
+    val b = landmarkBfs(t, seeds, maxDepth)
+    new HeldFrame(b.frame, () => perCall(t)(_ => b.release()))
+  }
+
+  /** [[landmarkBfs]] over an undirected topology, e.g. [[undirectedView]]. */
+  def landmarkBfs(t: Topology, seeds: Seq[Long], maxDepth: Int): HeldFrame = {
+    val (k, levels) = landmarkLevels(t, seeds, maxDepth)
+    val rows = t.spark.sparkContext.union(levels.zipWithIndex.map { case (lvl, d) =>
       lvl.mapPartitions(_.flatMap(l => l.ids.indices.iterator.map(i =>
         Row(l.ids(i), l.lms(i), d.toLong))), preservesPartitioning = true)
     })
-    new HeldFrame(spark.createDataFrame(rows, StructType(Seq("id", "landmark", "dist")
-      .map(StructField(_, LongType, nullable = false)))), () => k.release())
+    new HeldFrame(longsDF(t, rows, "id", "landmark", "dist"), () => k.release())
   }
 
   /** Landmark STRESS centrality (Shimbel 1953): the number of shortest
@@ -801,12 +922,15 @@ object GraphAnalytics {
     * every level, so the per-vertex sums need no shuffle. Returns the top
     * 100 by (stress_units desc, id), computed in the call.
     */
-  def stressCentralityDF(und: DataFrame, seeds: Seq[Long], maxDepth: Int = 10): DataFrame = {
-    val spark = und.sparkSession
+  def stressCentralityDF(und: DataFrame, seeds: Seq[Long], maxDepth: Int = 10): DataFrame =
     // a seed without edges reaches nothing and is excluded from its own
     // count, so stress needs no vertex table
-    val (k, levels) = landmarkLevels(und.select(col("a").as("id")).limit(0), und, seeds,
-      maxDepth)
+    perCall(topology(und.select(col("a").as("id")).limit(0), und, symmetric = true))(
+      stressCentralityDF(_, seeds, maxDepth))
+
+  /** [[stressCentralityDF]] over an undirected topology, e.g. [[undirectedView]]. */
+  def stressCentralityDF(t: Topology, seeds: Seq[Long], maxDepth: Int): DataFrame = {
+    val (k, levels) = landmarkLevels(t, seeds, maxDepth)
     val top = try {
       var lvl = k.hold(levels.last.mapPartitions(_.map(l =>
         new Level(l.ids, l.lms, l.sig, new Array[Long](l.ids.length))),
@@ -821,7 +945,7 @@ object GraphAnalytics {
           })
         scored += lvl
       }
-      val all = spark.sparkContext.union(scored.toSeq)
+      val all = t.spark.sparkContext.union(scored.toSeq)
       require(all.partitioner.isDefined, "the level blocks must share one partitioning")
       all.mapPartitions { ls =>
         val acc = scala.collection.mutable.LongMap.empty[ProductSum]
@@ -831,44 +955,28 @@ object GraphAnalytics {
       }.takeOrdered(100)(
         Ordering.Tuple2(Ordering.Long.reverse, Ordering.Long).on[(Long, Long)](r => (r._2, r._1)))
     } finally k.release()
-    spark.createDataFrame(java.util.Arrays.asList(top.map(r => Row(r._1, r._2)): _*),
+    t.spark.createDataFrame(java.util.Arrays.asList(top.map(r => Row(r._1, r._2)): _*),
       StructType(Seq(StructField("id", LongType), StructField("stress_units", LongType))))
   }
 
+  // perfbench's setup steps compile against the three members below.
   /** Bucket count / version of the clustered endpoint copy behind
     * [[bucketedDegrees]].
     */
   val EndpBuckets: Int = 512
   val EndpVersion: String = "v1"
 
-  /** Fact-edge parquet bytes above which the k-core init degrees come
-    * from the bucketed endpoint table instead of the live union. Below
-    * this, the exchange the bucketed table avoids is a few tens of MB
-    * while its [[EndpBuckets]]-file scan has a fixed per-file open cost
-    * (r16 sf0.1 A/B: bucketed aged 1.97 s vs union 1.42 s); above it the
-    * exchange grows with 2|E| into the GBs that killed the sf100 probe
-    * (r15 A/B: sf10 min 14.8 vs 71.6 s). 64 MB of fact-edge parquet
-    * ≈ a few hundred MB exchanged — the measured crossover region.
+  /** Fact-edge parquet bytes above which a caller builds
+    * [[bucketedDegrees]]' endpoint copy.
     */
   val BucketedDegreeMinBytes: Long = 64L << 20
 
-  /** Whether the k-core init degrees of `sfDir` come from
-    * [[bucketedDegrees]]: the size gate above, read off the materialized
-    * fact-edge entry (callers materialize it first).
-    */
-  def useBucketedDegrees(sfDir: String): Boolean =
-    graft.model.CacheDirs.entryBytes("graph", sfDir, "fact_edges") >=
-      BucketedDegreeMinBytes
-
-  /** Exchange-free initial degrees for the k-core peel (VERDICT r14 #6):
-    * the derived graph's endpoint list stored ONCE per dataset as a Spark
-    * bucketed table clustered+sorted on the vertex id, so `groupBy(a)`
-    * runs on the scan's own HashPartitioning — the init degree count was
-    * a ~36 GB map-side-combined exchange at sf100, the single-host disk
-    * ceiling that stopped the d3 probe. The build pays that exchange once
-    * (repartition aligned 1:1 with the bucket spec → one file per
-    * bucket); every session after serves degree counts with zero shuffle.
-    * Used above [[BucketedDegreeMinBytes]] ([[useBucketedDegrees]]).
+  /** Exchange-free vertex degrees: the derived graph's endpoint list
+    * stored ONCE per dataset as a Spark bucketed table clustered+sorted on
+    * the vertex id, so `groupBy(a)` runs on the scan's own
+    * HashPartitioning. The build pays the exchange once (repartition
+    * aligned 1:1 with the bucket spec → one file per bucket); every
+    * session after serves degree counts with zero shuffle.
     */
   def bucketedDegrees(spark: SparkSession, sfDir: String): DataFrame = {
     val endp = graft.model.CacheDirs.cachedBucketedTable(spark, "graph", sfDir,
@@ -880,6 +988,13 @@ object GraphAnalytics {
     endp.groupBy("a").agg(count(lit(1)).as("deg"))
   }
 
+  /** One partition's k-core peel state: the sending ids, their degree
+    * among the survivors, whether each survives, and the indices the
+    * next round removes.
+    */
+  private final class Core(val ids: Array[Long], val deg: Array[Long], val alive: Array[Boolean],
+      val out: Array[Int]) extends Serializable
+
   /** k-core decomposition by iterative peeling: repeatedly drop vertices
     * with fewer than `k` neighbours among the survivors; the fixpoint is
     * the maximal subgraph of minimum degree ≥ k (Seidman, "Network
@@ -888,89 +1003,46 @@ object GraphAnalytics {
     * computation is replayable as chained SQL rounds; convergence within
     * the bound is PROVEN per graph family in GraphAnalyticsSpec (one extra
     * round must change nothing), not assumed. Returns the core members
-    * with their within-core degree.
+    * with their within-core degree, counting parallel edges and a
+    * self-loop twice, as the endpoint-union degree does.
     *
-    * 100 TB shape: each round is two survivor semi-joins on the undirected
-    * edge list (vertex-keyed shuffles, no broadcast requirement) + one
-    * map-side-combinable degree count; survivors shrink monotonically and
-    * the lineage is cut per round. Peel depth on
-    * real-world (heavy-tailed) graphs is small; a chain-of-pendants
-    * adversary needs O(chain length) rounds — that is a property the spec
-    * exercises, and the `rounds` parameter makes the trade explicit
-    * instead of unbounded.
+    * An incremental peel on the block kernel over the undirected view of
+    * `edges`: a vertex's initial degree is its out-count there, a vertex
+    * removed in a round sends 1 per edge to its neighbours, and a survivor
+    * subtracts what it receives. The rounds are one lineage; every
+    * [[CheckEvery]] rounds one job counts the vertices the next round
+    * would remove, and the peel stops at the first zero or after
+    * `rounds`. An edge with a null endpoint sends nothing and adds no
+    * degree.
     */
-  def kCoreDF(edges: DataFrame, k: Int, rounds: Int = 10,
-      initDegrees: Option[DataFrame] = None): DataFrame = {
+  def kCoreDF(edges: DataFrame, k: Int, rounds: Int = 10): DataFrame =
+    perCall(topology(edges.select(col("src").as("id")).limit(0),
+      graft.model.DerivedGraph.undirected(edges), symmetric = true))(kCoreDF(_, k, rounds))
+
+  /** [[kCoreDF]] over an undirected topology, e.g. [[undirectedView]]. */
+  def kCoreDF(t: Topology, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be ≥ 1, got $k")
     require(rounds >= 1, s"rounds must be ≥ 1, got $rounds")
-    // und stays a LAZY view over the caller's edge frame — NOT a
-    // localCheckpoint. The peel is shallow (≤3 rounds on every measured
-    // graph family), so a materialized 2|E|-row copy can never amortize:
-    // at sf10 (120M edges) the 240M-row deserialized checkpoint write
-    // crossed the storage-region threshold and spilled, costing 105 s
-    // against ~20 s of actual peel work (r13 probe) — a 22× decade ratio
-    // from a 2-round query. Each consumer instead re-reads the input
-    // (persisted graph cache / parquet scan) — two cheap columnar scans
-    // per round. Input contract: `edges` must be materialization-stable
-    // (persisted, checkpointed, or a scan), which every caller satisfies;
-    // an unstable frame could present different rows to different rounds.
-    val e = edges.select("src", "dst")
-    val und = e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
-      .select(col("src").as("a"), col("dst").as("b"))
-    // INCREMENTAL peel: degrees are counted over the full edge list ONCE;
-    // each round subtracts the edges lost to that round's removed set
-    // instead of re-counting survivors against survivors (which would
-    // re-shuffle all |2E| rows every round — measured ~10× the query at
-    // bench scale). deg_i(v) = deg_{i-1}(v) − |neighbours removed in
-    // round i| is the same survivor sequence as the recompute form the
-    // SQL oracle replays. The loss join's removed side starts at the
-    // sub-k fringe and shrinks towards convergence — AQE picks the
-    // broadcast side from its real size (no unsafe hint).
-    // initial degrees from a SINGLE-column endpoint union — half the
-    // shuffle bytes of grouping the two-column und view. Callers with a
-    // bucket-clustered endpoint copy pass `initDegrees` (exchange-free —
-    // [[bucketedDegrees]]); the contract is that it equals this count
-    // over the SAME edge frame.
-    var deg = initDegrees.getOrElse(
-      e.select(col("src").as("a"))
-        .unionAll(e.select(col("dst").as("a")))
-        .groupBy("a").agg(count(lit(1)).as("deg"))).localCheckpoint()
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      r += 1
-      val removed = deg.filter(col("deg") < k)
-        .select(col("a").as("rid")).localCheckpoint()
-      // the count reads the checkpointed partition sizes (no recompute);
-      // it sizes the loss join's build side below
-      val nRemoved = removed.count()
-      // an empty removed set makes every remaining round a no-op, so
-      // stopping early returns the SAME result as running all `rounds` —
-      // bounded-round semantics (and oracle parity) are unchanged.
-      if (nRemoved == 0) converged = true
-      else {
-        // EXPLICIT broadcast below the same ~25M-row bound Traverse uses,
-        // capped by this session's maxResultSize (a 1g-default session
-        // gets ~22M, not a failed collect — ADVICE r15 #2): a first-round
-        // fringe in the tens of millions (13M at sf100) is far past AQE's
-        // broadcast threshold, and the SMJ alternative exchanges the
-        // whole 2|E|-row und view (~29 GB at sf100 — the r15 probe's disk
-        // ceiling); a ~100 MB hashed id set is cheap on any executor.
-        // Past the bound, AQE's choice stands.
-        val rem = if (nRemoved <= Traverse.effectiveBroadcastLimit(e.sparkSession))
-          broadcast(removed) else removed
-        val loss = und.join(rem, col("b") === col("rid"))
-          .groupBy("a").agg(count(lit(1)).as("__lost"))
-        deg = deg.filter(col("deg") >= k)
-          .join(loss, Seq("a"), "left")
-          .select(col("a"), (col("deg") - coalesce(col("__lost"), lit(0L))).as("deg"))
-          .localCheckpoint()
-      }
+    val (kern, p) = (new Kernel(t), t.p)
+    def next(deg: Array[Long], alive: Array[Boolean]): Array[Int] =
+      deg.indices.filter(i => alive(i) && deg(i) < k).toArray
+    val init = t.blocks.map { b =>
+      val deg = Array.tabulate(b.keys.length)(j => (b.off(j + 1) - b.off(j)).toLong)
+      val alive = Array.fill(deg.length)(true)
+      new Core(b.keys, deg, alive, next(deg, alive))
     }
-    // deg now holds within-core degrees of the survivors; vertices whose
-    // neighbours were all peeled in the final bounded round carry deg 0
-    // and are edgeless in the core — the recompute/oracle form omits them.
-    deg.filter(col("deg") > 0).select(col("a").as("id"), col("deg"))
+    val core = checked(kern, init, rounds)(_.out.length.toLong)(exchange(t, _)((b, c) =>
+      send(b, c.out.map(c.ids(_)), p, pairs = false, Sum)(_ => 0L, (_, _) => 1L)) { (mi, c) =>
+      val in = received(mi, pairs = false, Sum)
+      val alive = c.alive.clone
+      c.out.foreach(alive(_) = false)
+      val deg = Array.tabulate(c.ids.length)(i =>
+        if (alive(i)) c.deg(i) - in.get(c.ids(i), 0L) else c.deg(i))
+      new Core(c.ids, deg, alive, next(deg, alive))
+    })
+    kern.release()
+    longsDF(t, core.flatMap(c => c.ids.indices.iterator.filter(i => c.alive(i) && c.deg(i) > 0)
+      .map(i => Row(c.ids(i), c.deg(i)))), "id", "deg")
   }
 
   /** Canonical triangle list (x < y < z, one row per triangle) of a

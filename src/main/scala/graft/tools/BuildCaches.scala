@@ -3,13 +3,12 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Dev-only: materialize the once-per-dataset derived caches (fact-edge
-  * parquet, bucketed undirected adjacency, optionally the bucket-clustered
-  * endpoint table) for a dataset, printing per-entry build seconds — so
-  * probe sessions measure SERVE cost against committed caches and the
+  * parquet, bucketed undirected adjacency) for a dataset, printing
+  * per-entry build seconds — so probe sessions measure SERVE cost against committed caches and the
   * build cost is recorded explicitly (the BENCHNOTES build/serve split,
   * VERDICT r14 #7 discipline applied to the probe tiers).
   *
-  * Usage: BuildCaches <sfDir> [steps=graph,adj,endp]
+  * Usage: BuildCaches <sfDir> [steps=graph,adj]
   */
 object BuildCaches {
   def main(args: Array[String]): Unit = {
@@ -48,8 +47,6 @@ object BuildCaches {
     if (steps("adj"))
       timed("adj")(graft.model.DerivedGraph.undAdjacency(spark, sfDir)
         .byBucket.count())
-    if (steps("endp"))
-      timed("endp")(graft.ops.GraphAnalytics.bucketedDegrees(spark, sfDir).count())
     spark.stop()
   }
 }

@@ -7,11 +7,12 @@ import graft.ops.GraphAnalytics
 /** Spark jobs per call of the iteration family, pinned: a change that
   * adds a count, a materialization or a scalar fetch to a round fails
   * here instead of in a benchmark run. On the block superstep kernel a
-  * call pays an edge count, the static-block build, one job per
-  * renormalized round or convergence check (or one for all rounds) and
-  * the collect. Each call runs on the sf0.001 derived graph with its
-  * inventory query's arguments, and the result is collected, so the
-  * count covers the whole call. Pins only go down.
+  * DataFrame entry point pays an edge count and the static-block build
+  * of its call's topology; a query over the session's held views pays
+  * neither. Then come one job per renormalized round or convergence check
+  * (or one for all rounds) and the collect. Each call runs on the sf0.001
+  * derived graph with its inventory query's arguments, and the result is
+  * collected, so the count covers the whole call. Pins only go down.
   */
 class AnalyticsJobBudgetSpec extends SparkSpec {
 
@@ -53,6 +54,30 @@ class AnalyticsJobBudgetSpec extends SparkSpec {
     val g = DerivedGraph(spark, sf001)
     val und = DerivedGraph.undirected(g.edges)
     assert(jobs(GraphAnalytics.connectedComponents(g.vertices, und).collect()) == 5)
+  }
+
+  test("k-core job budget") {
+    assume(haveSf001, "testdata sf0.001 not present")
+    DerivedGraph.warm(spark, sf001)
+    val edges = DerivedGraph(spark, sf001).edges.select("src", "dst")
+    // edge count, static build, one convergence check, collect
+    assert(jobs(GraphAnalytics.kCoreDF(edges, 8, QueriesGraphX.KcoreRounds).collect()) == 4)
+  }
+
+  test("the ten analytics queries' job budgets on warm views") {
+    assume(haveSf001, "testdata sf0.001 not present")
+    // views built by warm and a first pass, outside the counted calls
+    val s = spark.newSession()
+    GraphAnalytics.warm(s, sf001)
+    val names = Seq("graph_pagerank", "graph_ppr", "graph_eigenvector", "graph_hits",
+      "graph_lpa", "graph_modularity", "graph_stress", "graph_cc", "graph_kcore",
+      "graph_triangles")
+    names.foreach(n => Queries.all(n).fn(s, sf001).collect())
+    val got = names.map(n => n -> jobs(Queries.all(n).fn(s, sf001).collect())).toMap
+    // a sorted result costs three jobs (range sample, shuffle, collect)
+    assert(got == Map("graph_pagerank" -> 2, "graph_ppr" -> 2, "graph_eigenvector" -> 9,
+      "graph_hits" -> 9, "graph_lpa" -> 4, "graph_modularity" -> 13, "graph_stress" -> 1,
+      "graph_cc" -> 6, "graph_kcore" -> 4, "graph_triangles" -> 2))
   }
 
   test("shared landmark frame build job budget") {

@@ -177,6 +177,34 @@ class GraphAnalyticsSpec extends SparkSpec {
     assert(GraphAnalytics.kCoreDF(path, k = 2, rounds = 4).count() == 0)
   }
 
+  test("kCoreDF on an irregular hand graph: rows pinned at the round bound, under any layout") {
+    // k = 2 over: the K4 1-2-3-4 with a self-loop on 1; 5 tied to 2 by
+    // three parallel edges; 50 whose only edge is a self-loop (degree 2);
+    // the isolated pair 20-21; the chain 3-10-11-12-13, which peels one
+    // vertex per round and needs exactly 4 rounds; and 40 (neighbours 4,
+    // 41, 42 with 42-43-44 hanging off it), whose degree drops below k
+    // only in round 3, so round 4 removes it; 80 (neighbours 1 and the
+    // pendants 81, 82) loses two in round 1, so round 2 removes it.
+    val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L), (1L, 1L),
+      (2L, 5L), (2L, 5L), (5L, 2L), (50L, 50L), (20L, 21L), (3L, 10L), (10L, 11L),
+      (11L, 12L), (12L, 13L), (4L, 40L), (40L, 41L), (40L, 42L), (42L, 43L), (43L, 44L),
+      (1L, 80L), (80L, 81L), (80L, 82L))
+      .toDF("src", "dst")
+    def run(es: org.apache.spark.sql.DataFrame, rounds: Int) =
+      GraphAnalytics.kCoreDF(es, k = 2, rounds = rounds).orderBy("id")
+        .as[(Long, Long)].collect().toSeq
+    val expected = Map(
+      3 -> Seq((1L, 5L), (2L, 6L), (3L, 4L), (4L, 4L), (5L, 3L), (10L, 1L), (40L, 1L),
+        (50L, 2L)),
+      4 -> Seq((1L, 5L), (2L, 6L), (3L, 3L), (4L, 3L), (5L, 3L), (50L, 2L)),
+      5 -> Seq((1L, 5L), (2L, 6L), (3L, 3L), (4L, 3L), (5L, 3L), (50L, 2L)))
+    for ((rounds, rows) <- expected) {
+      assert(run(edges, rounds) == rows, s"rounds $rounds")
+      atShuffleWidths(Seq(run(edges.coalesce(1), rounds), run(edges.repartition(7), rounds)))
+        .flatten.foreach(got => assert(got == rows, s"rounds $rounds under a layout"))
+    }
+  }
+
   test("graph_kcore oracle convergence: one extra round changes nothing on the real derived graph") {
     val d = "/root/testdata/sf0.001"
     val edges = graft.model.DerivedGraph(spark, d).edges.select("src", "dst")

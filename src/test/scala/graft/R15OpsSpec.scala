@@ -104,17 +104,15 @@ class R15OpsSpec extends SparkSpec {
     assert(bloom == ref)
   }
 
-  test("bucketedDegrees: no exchange in the count plan; kcore values unchanged") {
+  test("bucketedDegrees: no exchange in the count plan; degrees match the endpoint union") {
     assume(haveSf001, "testdata sf0.001 not present")
     val deg = graft.ops.GraphAnalytics.bucketedDegrees(spark, sf001)
     val plan = deg.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"bucketed degree count still exchanges:\n$plan")
     val edges = DerivedGraph(spark, sf001).edges.select("src", "dst")
-    val ref = graft.ops.GraphAnalytics.kCoreDF(edges, k = 8, rounds = 10)
-      .as[(Long, Long)].collect().toSet
-    val got = graft.ops.GraphAnalytics.kCoreDF(edges, k = 8, rounds = 10,
-      initDegrees = Some(deg)).as[(Long, Long)].collect().toSet
-    assert(got == ref)
+    val ref = edges.select(col("src").as("a")).unionAll(edges.select(col("dst").as("a")))
+      .groupBy("a").count().as[(Long, Long)].collect().toSet
+    assert(deg.as[(Long, Long)].collect().toSet == ref && ref.nonEmpty)
   }
 
   test("byBucket hop reads bypass the persisted full view (pruning stays live)") {
