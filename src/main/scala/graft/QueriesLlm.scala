@@ -472,13 +472,12 @@ object QueriesLlm {
         .orderBy("doc_id", "band"),
       minhashOracleSql),
 
-    // Candidate pairs → dedup clusters via connected components; the
-    // cluster representative is the min doc_id (GraphX CC label), i.e.
-    // the doc the exact-dedup keep-min rule would keep. GraphX's Pregel CC
-    // beat a DataFrame min-label fixpoint here, which paid per-round
-    // checkpoint and convergence-check jobs. Oracle: the replayable
-    // minhash pairs + a recursive min-label reachability fixpoint — an
-    // ITERATIVE graph algorithm value-checked end to end.
+    // Candidate pairs → dedup clusters via connected components on the
+    // block kernel; the cluster representative is the min doc_id (the
+    // component's minimum label), i.e. the doc the exact-dedup keep-min
+    // rule would keep. Oracle: the replayable minhash pairs + a recursive
+    // min-label reachability fixpoint — an ITERATIVE graph algorithm
+    // value-checked end to end.
     "dedup_clusters" -> QueryDef(
       (s, d) => Dedup.clusters(
         Dedup.minhashCandidatePairs(Dedup.minhashBuckets(t(s, d, "documents"))))

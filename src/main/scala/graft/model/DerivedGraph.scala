@@ -43,7 +43,7 @@ object DerivedGraph {
   // session-scoped via SessionCache: DataFrames are session-bound, so a
   // cache hit from a different (possibly stopped) session would be stale;
   // identity keying rules out hash aliasing. References are STRONG — the
-  // entry (and its session) stays pinned until SessionCache.evict(session).
+  // entry (and its session) stays pinned until the SparkContext stops.
   private val cache = new SessionCache[String, G]
 
   def apply(spark: SparkSession, sfDir: String): G =

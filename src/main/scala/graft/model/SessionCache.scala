@@ -8,12 +8,12 @@ import org.apache.spark.sql.SparkSession
   * recycled hash could alias a new session to a stopped one and hand out
   * DataFrames bound to a dead context.
   *
-  * Lifetime: entries live until [[evict]] (cached values are DataFrames,
-  * which strongly reference their session, so weak-reference tricks cannot
-  * reclaim them automatically — the WeakHashMap values-reach-keys caveat).
-  * For the engine's driver processes (one session per Verify/Bench JVM)
-  * that is the desired lifetime; a long-lived multi-session host calls
-  * [[evict]] when it stops a session.
+  * Lifetime: entries, and any blocks they persist, live until the
+  * SparkContext stops (cached values are DataFrames, which strongly
+  * reference their session, so weak-reference tricks cannot reclaim them
+  * automatically — the WeakHashMap values-reach-keys caveat). For the
+  * engine's driver processes (one session per Verify/Bench JVM) that is
+  * the desired lifetime; nothing here releases a session earlier.
   */
 final class SessionCache[K, V] {
   private val outer =
@@ -30,8 +30,4 @@ final class SessionCache[K, V] {
     }
     inner.getOrElseUpdate(key, build)
   }
-
-  /** Drop everything cached for `spark` (call when stopping a session). */
-  def evict(spark: SparkSession): Unit =
-    outer.synchronized { outer.remove(spark) }
 }

@@ -35,7 +35,7 @@ object Tables {
   // queries each touching 1-3 tables that's hundreds of redundant footer
   // reads per Verify/Bench run. The returned DataFrame is still lazy.
   // Session-scoped via SessionCache (identity-keyed, STRONG references:
-  // entries live until SessionCache.evict(session) — see its scaladoc).
+  // entries live until the SparkContext stops — see its scaladoc).
   private val cache = new SessionCache[(String, String), DataFrame]
 
   /** Materialize every session-persisted table — the bench warmup hook.

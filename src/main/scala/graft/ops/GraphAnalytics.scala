@@ -466,10 +466,10 @@ object GraphAnalytics {
       topology(g.vertices.filter(col("label") =!= "part").select("id"),
         graft.model.DerivedGraph.undirected(graft.model.DerivedGraph.memberEdges(g)), true))
 
-  /** The per-call blocks of one operator call over `t`: [[hold]] persists
-    * one, [[release]] unpersists them; `t`'s blocks are never among them.
+  /** The per-call blocks of one operator call: [[hold]] persists one,
+    * [[release]] unpersists them; a topology's blocks are never among them.
     */
-  private final class Kernel(val t: Topology) {
+  private final class Kernel {
     private val held = scala.collection.mutable.ArrayBuffer[RDD[_]]()
 
     def hold[T](rdd: RDD[T]): RDD[T] = { held += rdd.persist(StorageLevel.MEMORY_AND_DISK); rdd }
@@ -505,6 +505,15 @@ object GraphAnalytics {
   /** No seeds: an empty seed block per partition of `t`. */
   private def noSeeds(t: Topology): RDD[Array[Long]] = t.blocks.map(_ => Array.emptyLongArray)
 
+  /** The messages of one round: `out` sends from each partition's
+    * topology block and state, and the records shuffle to their receiving
+    * partitions. The caller zips them with what its receive side reads.
+    */
+  private def messages[S: scala.reflect.ClassTag](t: Topology, state: RDD[S])(
+      out: (Topo, S) => Iterator[(Int, Keyed)]): RDD[(Int, Keyed)] =
+    t.blocks.zipPartitions(state)((ti, si) => out(ti.next(), si.next()))
+      .partitionBy(new ToPartition(t.p))
+
   /** One superstep of the double-valued ladders: each state row sends
     * `units(x, outdeg)` to every out-neighbour, summed per receiver on the
     * map side into one record per receiving partition; the receiving
@@ -516,10 +525,9 @@ object GraphAnalytics {
       units: (Double, Int) => Long)(recv: (Boolean, Long) => Double,
       none: Boolean => Double): RDD[Vals] = {
     val p = t.p
-    t.blocks.zipPartitions(state) { (ti, si) =>
-      val (b, s) = (ti.next(), si.next())
+    messages(t, state)((b, s) =>
       send(b, s.ids, p, pairs = false, Sum)(_ => 0L, (i, deg) => units(s.x(i), deg))
-    }.partitionBy(new ToPartition(p)).zipPartitions(t.blocks, seeds) { (mi, ti, si) =>
+    ).zipPartitions(t.blocks, seeds) { (mi, ti, si) =>
       val (b, seed) = (ti.next(), si.next())
       def isSeed(id: Long) = java.util.Arrays.binarySearch(seed, id) >= 0
       val m = received(mi, pairs = false, Sum).toKeyed
@@ -642,7 +650,7 @@ object GraphAnalytics {
   /** [[eigenvectorDF]] over `t`, e.g. [[undirectedView]]. */
   def eigenvectorDF(t: Topology, numIter: Int): DataFrame = {
     headroom(t, RenormUnit, "eigenvectorDF")
-    val (k, none) = (new Kernel(t), noSeeds(t))
+    val (k, none) = (new Kernel, noSeeds(t))
     var x = initial(t, 1.0)
     for (_ <- 1 to numIter) x = renormStep(k, t, x, none)
     k.release()
@@ -670,7 +678,7 @@ object GraphAnalytics {
   def hitsDF(fwd: Topology, bwd: Topology, numIter: Int): DataFrame = {
     require(fwd.p == bwd.p, "hitsDF: both directions must share one width")
     headroom(fwd, RenormUnit, "hitsDF")
-    val (k, none) = (new Kernel(fwd), noSeeds(fwd))
+    val (k, none) = (new Kernel, noSeeds(fwd))
     var (hub, auth) = (initial(fwd, 1.0), initial(fwd, 0.0))
     for (_ <- 1 to numIter) {
       auth = renormStep(k, fwd, hub, none)
@@ -690,15 +698,6 @@ object GraphAnalytics {
       StructField("id", LongType, nullable = false),
       StructField("hub", DoubleType), StructField("auth", DoubleType))))
   }
-
-  /** One round over per-partition state `prev`: `out` sends from each
-    * partition's topology block and state, the messages shuffle to their
-    * receivers, and `in` gives each partition its new state.
-    */
-  private def exchange[S: scala.reflect.ClassTag](t: Topology, prev: RDD[S])(
-      out: (Topo, S) => Iterator[(Int, Keyed)])(in: (Iterator[(Int, Keyed)], S) => S): RDD[S] =
-    t.blocks.zipPartitions(prev)((ti, si) => out(ti.next(), si.next())).partitionBy(
-      new ToPartition(t.p)).zipPartitions(prev)((mi, si) => Iterator(in(mi, si.next())))
 
   /** Rounds of [[connectedComponents]] and [[kCoreDF]] between two
     * convergence checks.
@@ -750,12 +749,13 @@ object GraphAnalytics {
 
   /** [[lpaDF]] over an undirected topology, e.g. [[memberView]]. */
   def lpaDF(t: Topology, numIter: Int): DataFrame = {
-    val (k, p) = (new Kernel(t), t.p)
+    val (k, p) = (new Kernel, t.p)
     var labels = t.blocks.map(b => new Labels(b.vids, b.vids.clone))
     for (_ <- 1 to numIter)
-      labels = k.hold(exchange(t, labels)((b, l) =>
-        send(b, l.ids, p, pairs = true, Sum)(l.lbl(_), (_, _) => 1L)) { (mi, l) =>
-        val m = received(mi, pairs = true, Sum).toKeyed
+      labels = k.hold(messages(t, labels)((b, l) =>
+        send(b, l.ids, p, pairs = true, Sum)(l.lbl(_), (_, _) => 1L)
+      ).zipPartitions(labels) { (mi, li) =>
+        val (m, l) = (received(mi, pairs = true, Sum).toKeyed, li.next())
         // per receiver, the entry of max (count, -label)
         val best = new LongMap(false, Put)
         for (e <- m.k1.indices) {
@@ -764,10 +764,10 @@ object GraphAnalytics {
           if (b < 0 || m.v(e) > m.v(b) || (m.v(e) == m.v(b) && m.k2(e) < m.k2(b)))
             best.add(m.k1(e), 0L, e)
         }
-        new Labels(l.ids, l.ids.indices.map { i =>
+        Iterator(new Labels(l.ids, l.ids.indices.map { i =>
           val b = best.get(l.ids(i), -1L).toInt
           if (b < 0) l.lbl(i) else m.k2(b)
-        }.toArray)
+        }.toArray))
       })
     labels.count()
     k.release()
@@ -800,17 +800,18 @@ object GraphAnalytics {
 
   /** [[connectedComponents]] over an undirected topology, e.g. [[undirectedView]]. */
   def connectedComponents(t: Topology): DataFrame = {
-    val (k, p) = (new Kernel(t), t.p)
+    val (k, p) = (new Kernel, t.p)
     val init =
       t.blocks.map(b => new Components(b.vids, b.vids.clone, Array.range(0, b.vids.length)))
-    val labels = checked(k, init, Int.MaxValue)(_.moved.length.toLong)(exchange(t, _)((b, c) =>
-      send(b, c.moved.map(c.ids(_)), p, pairs = false, Min)(_ => 0L,
-        (i, _) => c.lbl(c.moved(i)))) { (mi, c) =>
-      val in = received(mi, pairs = false, Min)
-      val lbl = Array.tabulate(c.ids.length)(i =>
-        math.min(c.lbl(i), in.get(c.ids(i), Long.MaxValue)))
-      new Components(c.ids, lbl, Array.range(0, lbl.length).filter(i => lbl(i) != c.lbl(i)))
-    })
+    val labels = checked(k, init, Int.MaxValue)(_.moved.length.toLong)(prev =>
+      messages(t, prev)((b, c) => send(b, c.moved.map(c.ids(_)), p, pairs = false, Min)(_ => 0L,
+        (i, _) => c.lbl(c.moved(i)))).zipPartitions(prev) { (mi, ci) =>
+        val (in, c) = (received(mi, pairs = false, Min), ci.next())
+        val lbl = Array.tabulate(c.ids.length)(i =>
+          math.min(c.lbl(i), in.get(c.ids(i), Long.MaxValue)))
+        Iterator(new Components(c.ids, lbl,
+          Array.range(0, lbl.length).filter(i => lbl(i) != c.lbl(i))))
+      })
     k.release()
     longsDF(t, labels.flatMap(c => c.ids.indices.iterator.map(i => Row(c.ids(i), c.lbl(i)))),
       "id", "component")
@@ -823,31 +824,38 @@ object GraphAnalytics {
   private final class Level(val ids: Array[Long], val lms: Array[Long], val sig: Array[Long],
       val h: Array[Long]) extends Serializable
 
-  /** One landmark round: every pair of `lvl` sends `value(l, i)` to each
-    * neighbour, keyed (neighbour, landmark), shuffled to the receivers.
+  /** The forward pass of the landmark BFS over an undirected topology:
+    * one persisted block per level, holding the (vertex, landmark) pairs
+    * first reached at that depth with their σ. A session holds one over
+    * its [[undirectedView]] (`QueriesGraphX.landmarks`); the landmark
+    * queries read it through [[landmarkBfs]] and graph_stress through
+    * [[stressCentralityDF]]. A DataFrame entry point builds its own and
+    * releases it before it returns.
     */
-  private def landmarkRound(k: Kernel, lvl: RDD[Level])(
-      value: (Level, Int) => Long): RDD[(Int, Keyed)] = {
-    val p = k.t.p
-    k.t.blocks.zipPartitions(lvl) { (ti, li) =>
-      val (t, l) = (ti.next(), li.next())
-      send(t, l.ids, p, pairs = true, Sum)(l.lms(_), (i, _) => value(l, i))
-    }.partitionBy(new ToPartition(p))
+  final class Landmarks private[GraphAnalytics] (private[GraphAnalytics] val t: Topology,
+      private[GraphAnalytics] val levels: IndexedSeq[RDD[Level]]) {
+
+    /** Computes every level in one job. */
+    def build(): Unit = { t.spark.sparkContext.union(levels).count(); () }
+
+    /** The ids `SparkContext.getPersistentRDDs` lists the levels under. */
+    private[graft] def rddIds: Seq[Int] = levels.map(_.id)
+
+    private[GraphAnalytics] def release(): Unit = levels.foreach(_.unpersist(blocking = false))
   }
 
   /** The forward pass of the landmark BFS over an undirected topology `t`:
-    * `maxDepth` rounds in one lineage, one held block per level. Level 0
-    * holds each seed that is a vertex or an edge endpoint, with σ = 1.
-    * Round d sends σ from level d−1 to every neighbour; a pair not reached
-    * before joins level d with σ = the ANSI-checked sum of its senders' σ.
-    * In a symmetric graph the neighbours of level d−1 lie in levels
-    * d−2..d, so a round reads only the two levels before it.
+    * `maxDepth` rounds in one lineage, computed by the first job that reads
+    * them. Level 0 holds each seed that is a vertex or an edge endpoint,
+    * with σ = 1. Round d sends σ from level d−1 to every neighbour; a pair
+    * not reached before joins level d with σ = the ANSI-checked sum of its
+    * senders' σ. In a symmetric graph the neighbours of level d−1 lie in
+    * levels d−2..d, so a round reads only the two levels before it.
     */
-  private def landmarkLevels(t: Topology, seeds: Seq[Long],
-      maxDepth: Int): (Kernel, IndexedSeq[RDD[Level]]) = {
-    val k = new Kernel(t)
-    val lms = seeds.distinct.toArray
-    val levels = scala.collection.mutable.ArrayBuffer(k.hold(t.blocks.mapPartitions({ ti =>
+  def landmarkLevels(t: Topology, seeds: Seq[Long], maxDepth: Int): Landmarks = {
+    val (p, lms) = (t.p, seeds.distinct.toArray)
+    def held(l: RDD[Level]) = l.persist(StorageLevel.MEMORY_AND_DISK)
+    val levels = scala.collection.mutable.ArrayBuffer(held(t.blocks.mapPartitions({ ti =>
       val b = ti.next()
       val here = lms.filter(s => java.util.Arrays.binarySearch(b.keys, s) >= 0 ||
         java.util.Arrays.binarySearch(b.vids, s) >= 0)
@@ -855,22 +863,28 @@ object GraphAnalytics {
     }, preservesPartitioning = true)))
     for (d <- 1 to maxDepth) {
       val (prev, prev2) = (levels(d - 1), levels(math.max(d - 2, 0)))
-      levels += k.hold(landmarkRound(k, prev)((l, i) => l.sig(i))
-        .zipPartitions(prev, prev2, preservesPartitioning = true) { (mi, ai, bi) =>
-          val m = received(mi, pairs = true, Sum).toKeyed
-          val seen = new LongMap(true, Put)
-          for (l <- Seq(ai.next(), bi.next()); i <- l.ids.indices) seen.add(l.ids(i), l.lms(i), 1L)
-          val fresh = m.k1.indices.filter(i => seen.get(m.k1(i), m.k2(i), 0L) == 0L).toArray
-          Iterator(new Level(fresh.map(m.k1(_)), fresh.map(m.k2(_)), fresh.map(m.v(_)), null))
-        })
+      levels += held(messages(t, prev)((b, l) =>
+        send(b, l.ids, p, pairs = true, Sum)(l.lms(_), (i, _) => l.sig(i))
+      ).zipPartitions(prev, prev2, preservesPartitioning = true) { (mi, ai, bi) =>
+        val m = received(mi, pairs = true, Sum).toKeyed
+        val seen = new LongMap(true, Put)
+        for (l <- Seq(ai.next(), bi.next()); i <- l.ids.indices) seen.add(l.ids(i), l.lms(i), 1L)
+        val fresh = m.k1.indices.filter(i => seen.get(m.k1(i), m.k2(i), 0L) == 0L).toArray
+        Iterator(new Level(fresh.map(m.k1(_)), fresh.map(m.k2(_)), fresh.map(m.v(_)), null))
+      })
     }
-    (k, levels.toIndexedSeq)
+    new Landmarks(t, levels.toIndexedSeq)
   }
 
-  /** A frame that reads kernel blocks, persisted until [[release]]. */
-  final class HeldFrame private[ops] (val frame: DataFrame, done: () => Unit) {
-    def release(): Unit = done()
-  }
+  /** `body` over the landmark levels of a topology built for this call;
+    * both are released when it returns.
+    */
+  private def perCallLevels[T](vertices: DataFrame, und: DataFrame, seeds: Seq[Long],
+      maxDepth: Int)(body: Landmarks => T): T =
+    perCall(topology(vertices, und, symmetric = true)) { t =>
+      val lv = landmarkLevels(t, seeds, maxDepth)
+      try body(lv) finally lv.release()
+    }
 
   /** Unweighted undirected BFS distances from every landmark at once: the
     * reference's bounded k-hop traversal (mongraph.py:236-274) as the
@@ -880,21 +894,35 @@ object GraphAnalytics {
     * vertex nor an edge endpoint has no rows.
     */
   def landmarkBfs(vertices: DataFrame, und: DataFrame, seeds: Seq[Long],
-      maxDepth: Int): HeldFrame = {
-    val t = topology(vertices, und, symmetric = true)
-    val b = landmarkBfs(t, seeds, maxDepth)
-    new HeldFrame(b.frame, () => perCall(t)(_ => b.release()))
-  }
+      maxDepth: Int): DataFrame =
+    perCallLevels(vertices, und, seeds, maxDepth) { lv =>
+      // a level reads the two before it, so a read after the release would
+      // recompute each level once per path to it: the distances are
+      // shuffled while the levels are held, and a later read only reduces
+      // that shuffle's output
+      val shuffled = distances(lv).mapPartitionsWithIndex((i, ds) => ds.map((i, _)))
+        .partitionBy(new ToPartition(lv.t.p))
+      shuffled.count()
+      distancesDF(lv.t, shuffled.values)
+    }
 
-  /** [[landmarkBfs]] over an undirected topology, e.g. [[undirectedView]]. */
-  def landmarkBfs(t: Topology, seeds: Seq[Long], maxDepth: Int): HeldFrame = {
-    val (k, levels) = landmarkLevels(t, seeds, maxDepth)
-    val rows = t.spark.sparkContext.union(levels.zipWithIndex.map { case (lvl, d) =>
-      lvl.mapPartitions(_.flatMap(l => l.ids.indices.iterator.map(i =>
-        Row(l.ids(i), l.lms(i), d.toLong))), preservesPartitioning = true)
+  /** [[landmarkBfs]] over landmark levels, e.g. the session's: a frame
+    * that reads their blocks.
+    */
+  def landmarkBfs(lv: Landmarks): DataFrame = distancesDF(lv.t, distances(lv))
+
+  /** The (id, landmark, dist) triples of `lv`, one record per level and
+    * partition.
+    */
+  private def distances(lv: Landmarks): RDD[Keyed] =
+    lv.t.spark.sparkContext.union(lv.levels.zipWithIndex.map { case (lvl, d) =>
+      lvl.mapPartitions(_.map(l => new Keyed(l.ids, l.lms, Array.fill(l.ids.length)(d.toLong))),
+        preservesPartitioning = true)
     })
-    new HeldFrame(longsDF(t, rows, "id", "landmark", "dist"), () => k.release())
-  }
+
+  private def distancesDF(t: Topology, ds: RDD[Keyed]): DataFrame =
+    longsDF(t, ds.flatMap(k => k.k1.indices.iterator.map(i => Row(k.k1(i), k.k2(i), k.v(i)))),
+      "id", "landmark", "dist")
 
   /** Landmark STRESS centrality (Shimbel 1953): the number of shortest
     * paths from the landmark set that pass THROUGH each vertex — the
@@ -925,24 +953,28 @@ object GraphAnalytics {
   def stressCentralityDF(und: DataFrame, seeds: Seq[Long], maxDepth: Int = 10): DataFrame =
     // a seed without edges reaches nothing and is excluded from its own
     // count, so stress needs no vertex table
-    perCall(topology(und.select(col("a").as("id")).limit(0), und, symmetric = true))(
-      stressCentralityDF(_, seeds, maxDepth))
+    perCallLevels(und.select(col("a").as("id")).limit(0), und, seeds, maxDepth)(
+      stressCentralityDF)
 
-  /** [[stressCentralityDF]] over an undirected topology, e.g. [[undirectedView]]. */
-  def stressCentralityDF(t: Topology, seeds: Seq[Long], maxDepth: Int): DataFrame = {
-    val (k, levels) = landmarkLevels(t, seeds, maxDepth)
+  /** [[stressCentralityDF]]'s backward pass and scoring over landmark
+    * levels, e.g. the session's.
+    */
+  def stressCentralityDF(lv: Landmarks): DataFrame = {
+    val (t, levels, k) = (lv.t, lv.levels, new Kernel)
+    val p = t.p
     val top = try {
       var lvl = k.hold(levels.last.mapPartitions(_.map(l =>
         new Level(l.ids, l.lms, l.sig, new Array[Long](l.ids.length))),
         preservesPartitioning = true))
       val scored = scala.collection.mutable.ArrayBuffer(lvl)
-      for (d <- maxDepth - 1 to 0 by -1) {
-        lvl = k.hold(landmarkRound(k, lvl)((l, i) => Math.addExact(1L, l.h(i)))
-          .zipPartitions(levels(d), preservesPartitioning = true) { (mi, li) =>
-            val (in, l) = (received(mi, pairs = true, Sum), li.next())
-            Iterator(new Level(l.ids, l.lms, l.sig,
-              l.ids.indices.map(i => in.get(l.ids(i), l.lms(i), 0L)).toArray))
-          })
+      for (d <- levels.length - 2 to 0 by -1) {
+        lvl = k.hold(messages(t, lvl)((b, l) =>
+          send(b, l.ids, p, pairs = true, Sum)(l.lms(_), (i, _) => Math.addExact(1L, l.h(i)))
+        ).zipPartitions(levels(d), preservesPartitioning = true) { (mi, li) =>
+          val (in, l) = (received(mi, pairs = true, Sum), li.next())
+          Iterator(new Level(l.ids, l.lms, l.sig,
+            l.ids.indices.map(i => in.get(l.ids(i), l.lms(i), 0L)).toArray))
+        })
         scored += lvl
       }
       val all = t.spark.sparkContext.union(scored.toSeq)
@@ -1023,7 +1055,7 @@ object GraphAnalytics {
   def kCoreDF(t: Topology, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be ≥ 1, got $k")
     require(rounds >= 1, s"rounds must be ≥ 1, got $rounds")
-    val (kern, p) = (new Kernel(t), t.p)
+    val (kern, p) = (new Kernel, t.p)
     def next(deg: Array[Long], alive: Array[Boolean]): Array[Int] =
       deg.indices.filter(i => alive(i) && deg(i) < k).toArray
     val init = t.blocks.map { b =>
@@ -1031,15 +1063,16 @@ object GraphAnalytics {
       val alive = Array.fill(deg.length)(true)
       new Core(b.keys, deg, alive, next(deg, alive))
     }
-    val core = checked(kern, init, rounds)(_.out.length.toLong)(exchange(t, _)((b, c) =>
-      send(b, c.out.map(c.ids(_)), p, pairs = false, Sum)(_ => 0L, (_, _) => 1L)) { (mi, c) =>
-      val in = received(mi, pairs = false, Sum)
-      val alive = c.alive.clone
-      c.out.foreach(alive(_) = false)
-      val deg = Array.tabulate(c.ids.length)(i =>
-        if (alive(i)) c.deg(i) - in.get(c.ids(i), 0L) else c.deg(i))
-      new Core(c.ids, deg, alive, next(deg, alive))
-    })
+    val core = checked(kern, init, rounds)(_.out.length.toLong)(prev =>
+      messages(t, prev)((b, c) => send(b, c.out.map(c.ids(_)), p, pairs = false, Sum)(_ => 0L,
+        (_, _) => 1L)).zipPartitions(prev) { (mi, ci) =>
+        val (in, c) = (received(mi, pairs = false, Sum), ci.next())
+        val alive = c.alive.clone
+        c.out.foreach(alive(_) = false)
+        val deg = Array.tabulate(c.ids.length)(i =>
+          if (alive(i)) c.deg(i) - in.get(c.ids(i), 0L) else c.deg(i))
+        Iterator(new Core(c.ids, deg, alive, next(deg, alive)))
+      })
     kern.release()
     longsDF(t, core.flatMap(c => c.ids.indices.iterator.filter(i => c.alive(i) && c.deg(i) > 0)
       .map(i => Row(c.ids(i), c.deg(i)))), "id", "deg")

@@ -209,7 +209,8 @@ object Dedup {
 
   /** Near-dup clusters: connected components over the candidate-pair graph
     * — the step that turns pairwise candidates into dedup groups (keep one
-    * representative per cluster, drop the rest). GraphX CC labels each
+    * representative per cluster, drop the rest). The block kernel's
+    * [[graft.ops.GraphAnalytics.connectedComponents]] labels each
     * component with its minimum member id, so the `cluster_rep` column is
     * both the canonical survivor (smallest doc_id, matching [[exact]]'s
     * keep-min rule) and fully deterministic given the pairs. Docs in no
@@ -218,14 +219,13 @@ object Dedup {
     */
   def clusters(candidatePairs: DataFrame, aCol: String = "a_id", bCol: String = "b_id")
       : DataFrame = {
-    val spark = candidatePairs.sparkSession
-    import spark.implicits._
-    val eRDD = candidatePairs.select(aCol, bCol).rdd
-      .map(r => (r.getLong(0), r.getLong(1)))
-    org.apache.spark.graphx.Graph.fromEdgeTuples(eRDD, 1)
-      .connectedComponents().vertices
-      .map { case (id, rep) => (id, rep) }
-      .toDF("doc_id", "cluster_rep")
+    // the kernel reads the pairs three times (edge count, edges, vertex
+    // ids); one checkpoint runs the candidate/verify plan behind them once
+    val pairs = candidatePairs.select(col(aCol).as("src"), col(bCol).as("dst")).localCheckpoint()
+    val docs = pairs.select(col("src").as("id")).union(pairs.select(col("dst").as("id")))
+      .distinct()
+    graft.ops.GraphAnalytics.connectedComponents(docs, graft.model.DerivedGraph.undirected(pairs))
+      .select(col("id").as("doc_id"), col("component").as("cluster_rep"))
   }
 
   /** Sorted distinct shingle-hash set per document — the exact-verification

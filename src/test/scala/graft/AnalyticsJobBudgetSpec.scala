@@ -82,15 +82,20 @@ class AnalyticsJobBudgetSpec extends SparkSpec {
 
   test("shared landmark frame build job budget") {
     assume(haveSf001, "testdata sf0.001 not present")
-    // a fresh session has no memoized frame; the derived graph is warmed
-    // outside the count, then the frame is built under an empty cache root
+    // a fresh session holds no landmark levels; the derived graph is warmed
+    // outside the count, then the levels are built under an empty cache
+    // root: the undirected view (edge count, build) and one job for every
+    // level, with no cache entry written
     val s = spark.newSession()
     DerivedGraph.warm(s, sf001)
     val saved = System.getProperty("java.io.tmpdir")
-    System.setProperty("java.io.tmpdir",
-      java.nio.file.Files.createTempDirectory("graft-landmarks").toString)
+    val root = java.nio.file.Files.createTempDirectory("graft-landmarks")
+    System.setProperty("java.io.tmpdir", root.toString)
     val built = try jobs(QueriesGraphX.warmSharedBfs(s, sf001))
     finally System.setProperty("java.io.tmpdir", saved)
-    assert(built == 7)
+    assert(built == 3)
+    val left = java.nio.file.Files.list(root)
+    try assert(left.count() == 0, s"warmSharedBfs wrote under the cache root $root")
+    finally left.close()
   }
 }

@@ -47,14 +47,14 @@ class EntrySpec extends SparkSpec {
     assert(violations.isEmpty, violations.mkString("new runtime switches:\n", "\n", ""))
   }
 
-  test("main code imports GraphX only in the dedup clusters") {
+  test("main code imports no GraphX") {
     // the graph operators run on the block superstep kernel; GraphX is the
-    // test-scope reference (GraphXRef) apart from Dedup.clusters
+    // test-scope reference (GraphXRef)
     val root = mainRoot
     val users = scalaFiles(root)
       .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains("org.apache.spark.graphx"))
       .map(root.relativize(_).toString).toSet
-    assert(users == Set("graft/ops/llm/Dedup.scala"), s"GraphX in main code: $users")
+    assert(users.isEmpty, s"GraphX in main code: $users")
   }
 
   test("main code resolves a cache root only inside CacheDirs") {

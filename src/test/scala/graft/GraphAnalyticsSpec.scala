@@ -288,10 +288,9 @@ class GraphAnalyticsSpec extends SparkSpec {
       val edges = pairs.toDF("src", "dst").withColumn("label", lit("e"))
       val g = GraphXRef.graph(verts, edges)
       def kernel(vs: org.apache.spark.sql.DataFrame, es: org.apache.spark.sql.DataFrame,
-          depth: Int): Set[(Long, Long, Long)] = {
-        val b = GraphAnalytics.landmarkBfs(vs, DerivedGraph.undirected(es), landmarks, depth)
-        try b.frame.as[(Long, Long, Long)].collect().toSet finally b.release()
-      }
+          depth: Int): Set[(Long, Long, Long)] =
+        GraphAnalytics.landmarkBfs(vs, DerivedGraph.undirected(es), landmarks, depth)
+          .as[(Long, Long, Long)].collect().toSet
       for (depth <- Seq(2, 10)) {
         val ref = landmarks.flatMap { lm =>
           GraphXRef.bfsDistances(g, lm, depth).as[(Long, Long)].collect()

@@ -6,11 +6,12 @@ import graft.model.DerivedGraph
 import graft.ops.GraphAnalytics
 
 /** The derived-graph views a session holds ([[GraphAnalytics.undirectedView]]
-  * and its siblings): a kernel query reads the same rows whether its views
-  * were built by [[GraphAnalytics.warm]] and earlier queries, by the query
-  * itself in a fresh session, or per call through the public DataFrame
-  * entry points. A call leaves no per-call block persisted and drops no
-  * held view; a new session builds its own views.
+  * and its siblings, and the landmark levels over the undirected one): a
+  * kernel query reads the same rows whether its views were built by
+  * [[GraphAnalytics.warm]], [[QueriesGraphX.warmSharedBfs]] and earlier
+  * queries, by the query itself in a fresh session, or per call through
+  * the public DataFrame entry points. A call leaves no per-call block
+  * persisted and drops no held view; a new session builds its own views.
   */
 class HeldViewSpec extends SparkSpec {
 
@@ -37,9 +38,11 @@ class HeldViewSpec extends SparkSpec {
     (out, after -- before)
   }
 
-  private def views(s: SparkSession): Set[Int] = Set(GraphAnalytics.undirectedView(s, sf001),
+  /** The block ids of each held view: one per topology, one per landmark level. */
+  private def views(s: SparkSession): Seq[Set[Int]] = Seq(GraphAnalytics.undirectedView(s, sf001),
     GraphAnalytics.directedView(s, sf001), GraphAnalytics.reversedView(s, sf001),
-    GraphAnalytics.memberView(s, sf001)).map(_.rddId)
+    GraphAnalytics.memberView(s, sf001)).map(v => Set(v.rddId)) :+
+    QueriesGraphX.landmarks(s, sf001).rddIds.toSet
 
   /** Each query's rows through the public DataFrame entry points. */
   private def viaDataFrames(s: SparkSession, name: String): Seq[String] = {
@@ -49,10 +52,9 @@ class HeldViewSpec extends SparkSpec {
     val memberUnd = DerivedGraph.undirected(DerivedGraph.memberEdges(g))
     name match {
       case "graph_bfs_dist" =>
-        val b = GraphAnalytics.landmarkBfs(g.vertices, und, QueriesGraphX.spLandmarks, 10)
-        try strings(b.frame.filter(col("landmark") === DerivedGraph.NationBase + 7)
-          .select("id", "dist").orderBy("id"))
-        finally b.release()
+        strings(GraphAnalytics.landmarkBfs(g.vertices, und, QueriesGraphX.spLandmarks, 10)
+          .filter(col("landmark") === DerivedGraph.NationBase + 7).select("id", "dist")
+          .orderBy("id"))
       case "graph_stress" =>
         strings(GraphAnalytics.stressCentralityDF(und, QueriesGraphX.spLandmarks, 10))
       case "graph_cc" => strings(GraphAnalytics.connectedComponents(g.vertices, und)
@@ -82,11 +84,21 @@ class HeldViewSpec extends SparkSpec {
     assume(haveSf001, "testdata sf0.001 not present")
     def query(s: SparkSession, name: String) = strings(Queries.all(name).fn(s, sf001))
 
-    // (a) views built by warm and by a first pass, then read by a second
+    // (a) views built by the warm hooks and by a first pass, then read by
+    // a second; warmSharedBfs builds the landmark levels and nothing else,
+    // all of them, so their consumers build nothing
     val s1 = spark.newSession()
     GraphAnalytics.warm(s1, sf001)
-    names.foreach(query(s1, _))
-    val warmViews = views(s1)
+    val (_, levels) = call(s1, "warmSharedBfs")(QueriesGraphX.warmSharedBfs(s1, sf001))
+    assert(levels.nonEmpty && levels == QueriesGraphX.landmarks(s1, sf001).rddIds.toSet)
+    assert(s1.sparkContext.getRDDStorageInfo.filter(i => levels(i.id))
+      .forall(i => i.numCachedPartitions == i.numPartitions), "levels left uncomputed")
+    names.foreach { n =>
+      val (_, built) = call(s1, n)(query(s1, n))
+      if (n == "graph_bfs_dist" || n == "graph_stress")
+        assert(built.isEmpty, s"$n after warmSharedBfs left blocks $built")
+    }
+    val warmViews = views(s1).flatten.toSet
     val warm = names.map { n =>
       val (rows, built) = call(s1, n)(query(s1, n))
       assert(built.isEmpty, s"$n in a warm session left blocks $built")
@@ -96,8 +108,8 @@ class HeldViewSpec extends SparkSpec {
     // (b) a fresh session: each view is built by its first consumer
     val s2 = spark.newSession()
     val firstCalls = names.map(n => n -> call(s2, n)(query(s2, n)))
-    val freshViews = views(s2)
-    assert(freshViews.size == 4 && freshViews.intersect(warmViews).isEmpty,
+    val freshViews = views(s2).flatten.toSet
+    assert(views(s2).size == 5 && freshViews.intersect(warmViews).isEmpty,
       "a new session must build its own views")
     val builtBy = firstCalls.map { case (n, (_, built)) => n -> built }
     builtBy.foreach { case (n, built) =>
@@ -105,6 +117,8 @@ class HeldViewSpec extends SparkSpec {
     }
     assert(builtBy.flatMap(_._2).sorted == freshViews.toSeq.sorted,
       s"each view is built exactly once: $builtBy")
+    // graph_bfs_dist, the first consumer of the landmark levels, builds them
+    assert(QueriesGraphX.landmarks(s2, sf001).rddIds.toSet.subsetOf(builtBy.head._2))
 
     // (c) the public DataFrame entry points build and release their own
     names.foreach { n =>
