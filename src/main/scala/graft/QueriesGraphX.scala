@@ -109,40 +109,6 @@ object QueriesGraphX {
     ()
   }
 
-  /** The five-round LPA labels of the member subgraph, shared by
-    * graph_lpa and graph_modularity through the session's held member
-    * view.
-    */
-  private def memberLabels(s: org.apache.spark.sql.SparkSession, d: String) =
-    GraphAnalytics.lpaDF(GraphAnalytics.memberView(s, d), 5)
-
-  /** Newman's Q per community of the labels `lbl` (id, community) over
-    * the member edges `member` (src, dst), in exact 4m² units.
-    */
-  private[graft] def modularity(member: org.apache.spark.sql.DataFrame,
-      lbl: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val m = member.count() // one scalar, the |E| every Q term shares
-    val deg = member.select(col("src").as("a"))
-      .unionAll(member.select(col("dst").as("a")))
-      .groupBy("a").agg(count(lit(1)).as("d"))
-    val eIn = member
-      .join(lbl.select(col("id").as("src"), col("community").as("ca")), "src")
-      .join(lbl.select(col("id").as("dst"), col("community").as("cb")), "dst")
-      .filter(col("ca") === col("cb"))
-      .groupBy(col("ca").as("community")).agg(count(lit(1)).as("e_in"))
-    val ds = lbl.join(deg, lbl("id") === deg("a"), "left")
-      .groupBy("community").agg(count(lit(1)).as("n_nodes"),
-        sum(coalesce(col("d"), lit(0L))).as("d_sum"))
-    ds.join(eIn, Seq("community"), "left")
-      .select(col("community"), col("n_nodes"),
-        coalesce(col("e_in"), lit(0L)).as("e_in"), col("d_sum"),
-        (lit(4L * m) * coalesce(col("e_in"), lit(0L))
-          - col("d_sum") * col("d_sum")).as("q_units"))
-      .withColumn("q", round(col("q_units").cast("double")
-        / lit((4L * m * m).toDouble), 6))
-      .orderBy("community")
-  }
-
   val defs: ListMap[String, QueryDef] = ListMap(
 
     // Static 10-iteration PageRank over the derived graph; top-100 by
@@ -235,7 +201,7 @@ object QueriesGraphX {
     // GraphAnalyticsSpec cross-checks it against GraphX's LPA at
     // community-structure level.
     "graph_lpa" -> QueryDef(
-      (s, d) => memberLabels(s, d).orderBy("id"),
+      (s, d) => GraphAnalytics.lpaDF(GraphAnalytics.memberView(s, d), 5).orderBy("id"),
       lpaOracleSql),
 
     // Newman modularity of the LPA partition (Newman-Girvan 2004): the
@@ -245,9 +211,13 @@ object QueriesGraphX {
     // intra-community edges, d_c = community degree sum), one display
     // divide. Same member graph and the SAME converged labels as
     // graph_lpa — the oracle reuses the identical 5-round LPA CTE
-    // prefix, so label drift between the two queries is impossible.
+    // prefix, so label drift between the two queries is impossible. Runs
+    // on the kernel over the held member view
+    // (GraphAnalytics.modularityDF): the LPA rounds, one label round, one
+    // shuffle of per-community partials, then Spark's BIGINT Q columns.
     "graph_modularity" -> QueryDef(
-      (s, d) => modularity(DerivedGraph.memberEdges(DerivedGraph(s, d)), memberLabels(s, d)),
+      (s, d) => GraphAnalytics.modularityDF(GraphAnalytics.memberView(s, d), 5)
+        .orderBy("community"),
       modularityOracleSql),
 
     // BFS distances from a nation seed; oracle = min level over chained

@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -10,20 +12,28 @@ import org.apache.spark.storage.StorageLevel
   *
   * The iterations — [[pageRankDF]], [[personalizedPageRankDF]],
   * [[eigenvectorDF]], [[hitsDF]], [[lpaDF]], [[connectedComponents]],
-  * [[kCoreDF]] and the landmark passes of [[landmarkBfs]] and
-  * [[stressCentralityDF]] — run on one block superstep kernel
-  * (Pregelix's vertex⋈message join plus group-by, as a co-partitioned RDD
-  * lineage, so Catalyst and AQE never see a round). The static edges are
-  * shuffled once on their sending endpoint into one primitive-array
-  * adjacency block per partition (a [[Topology]]); the vertex state is one
-  * block per partition under the same partitioning. A session holds one
-  * topology per view of the derived graph, so a call moves only messages;
-  * the DataFrame entry points build one for the call. A round zips the
-  * state with the topology, combines the messages map-side into a
-  * primitive map and ships one record per receiving partition: one
-  * shuffle stage, no job. [[Exact]], [[DSum6]] and [[ProductSum]]
-  * replicate Spark's arithmetic, so the rows are the ones the DuckDB
-  * replays compute.
+  * [[kCoreDF]], [[modularityDF]] and the landmark passes of
+  * [[landmarkBfs]] and [[stressCentralityDF]] — run on one block
+  * superstep kernel (Pregelix's vertex⋈message join plus group-by, as a
+  * co-partitioned RDD lineage, so Catalyst and AQE never see a round).
+  * The static edges are shuffled once on their sending endpoint into one
+  * primitive-array adjacency block per partition (a [[Topology]]); the
+  * vertex state is one block per partition under the same partitioning.
+  * A session holds one topology per view of the derived graph, so a call
+  * moves only messages; the DataFrame entry points build one for the
+  * call. A round zips the state with the topology, combines the messages
+  * map-side into a primitive map and ships one record per receiving
+  * partition: one shuffle stage, no job. A renormalizing total is
+  * computed inside the lineage too, Pregelix's in-dataflow aggregator:
+  * p² partials shuffled all-to-all, in their own stage
+  * ([[renormalized]]) or, when every endpoint is a vertex, beside the
+  * messages ([[closedRenormStep]]). So the eigenvector, HITS and
+  * PageRank ladders run in their caller's job. A
+  * frame sorted on a vertex id (k-core, LPA, modularity) ends in one
+  * range-routing stage and declares that layout ([[rangeFrame]]), so its
+  * `orderBy` plans no exchange and no sort. [[Exact]], [[DSum6]] and
+  * [[ProductSum]] replicate Spark's arithmetic, so the rows are the ones
+  * the DuckDB replays compute.
   *
   * Triangles are enumerated by a degree-ordered DataFrame join
   * ([[triangleListDF]]): GraphX's `TriangleCount` materializes per-vertex
@@ -63,12 +73,12 @@ object GraphAnalytics {
   final val MaxCumLazyRows = 2000000L
 
   /** Materialize the session-shared derived graph and build its held
-    * [[undirectedView]]; the other views are built by their first
-    * consumer.
+    * [[undirectedView]] with its |V| and frame bounds; the other views are
+    * built by their first consumer.
     */
   def warm(spark: SparkSession, sfDir: String): Unit = {
     graft.model.DerivedGraph.warm(spark, sfDir)
-    undirectedView(spark, sfDir)
+    undirectedView(spark, sfDir).nV
     ()
   }
 
@@ -129,6 +139,15 @@ object GraphAnalytics {
       this
     }
     def merge(o: DSum6): this.type = { hi = hi.add(o.hi); addUnits(o.lo) }
+    /** Adds a·b units exactly. */
+    def addProduct(a: Long, b: Long): this.type = {
+      val u = a * b
+      if (Math.multiplyHigh(a, b) == (u >> 63)) addUnits(u)
+      else {
+        hi = hi.add(java.math.BigInteger.valueOf(a).multiply(java.math.BigInteger.valueOf(b)))
+        this
+      }
+    }
     def toDouble: Double =
       new java.math.BigDecimal(hi.add(java.math.BigInteger.valueOf(lo)), 6).doubleValue
   }
@@ -308,10 +327,11 @@ object GraphAnalytics {
 
   /** The static block of one partition: the adjacency keyed by the
     * sending endpoint (sorted senders, CSR offsets, receivers), the
-    * sorted vertex ids, and those of them no edge reaches (sorted).
+    * sorted vertex ids, those of them no edge reaches (sorted), and
+    * whether every endpoint placed here is a vertex (`closed`).
     */
   private final class Topo(val keys: Array[Long], val off: Array[Int], val nbrs: Array[Long],
-      val vids: Array[Long], val noIn: Array[Long]) extends Serializable
+      val vids: Array[Long], val noIn: Array[Long], val closed: Boolean) extends Serializable
 
   /** One partition's state: ids and their values. */
   private final class Vals(val ids: Array[Long], val x: Array[Double]) extends Serializable
@@ -343,7 +363,9 @@ object GraphAnalytics {
     val noIn = vids.filter(id =>
       if (symmetric) java.util.Arrays.binarySearch(keys, id) < 0
       else (ids.get(id, 0L) & HasIn) == 0)
-    new Topo(keys, off, nbrs, vids, noIn)
+    val closed = keys.forall(java.util.Arrays.binarySearch(vids, _) >= 0) &&
+      all.v.forall(f => (f & IsVertex) != 0)
+    new Topo(keys, off, nbrs, vids, noIn, closed)
   }
 
   /** The static blocks of the message direction `from` → `to` under the
@@ -385,33 +407,99 @@ object GraphAnalytics {
       shipped(ids)
     }
 
+  /** |V|, whether every edge endpoint is a vertex (`closed`), and the
+    * upper bounds of the key ranges of a frame sorted on a vertex id:
+    * partition i of such a frame holds the keys in (bounds(i − 1),
+    * bounds(i)].
+    */
+  private final class Layout(val nV: Long, val closed: Boolean, val bounds: Array[Long])
+      extends Serializable {
+    def rangeOf(id: Long): Int = {
+      val i = java.util.Arrays.binarySearch(bounds, id)
+      if (i >= 0) i else -i - 1
+    }
+  }
+
+  /** Ids [[layoutOf]] samples per partition, per range. */
+  private final val SamplesPerRange = 20
+
+  /** The distinct ids of two sorted arrays of distinct ids, sorted. */
+  private def sortedUnion(a: Array[Long], b: Array[Long]): Array[Long] = {
+    val out = new LongBuf
+    var (i, j) = (0, 0)
+    while (i < a.length || j < b.length)
+      if (j == b.length || (i < a.length && a(i) < b(j))) { out += a(i); i += 1 }
+      else { if (i < a.length && a(i) == b(j)) i += 1; out += b(j); j += 1 }
+    out.result
+  }
+
+  /** The [[Layout]] of `blocks`, in one job: each partition counts its
+    * vertex ids and samples its sorted vertex and sender ids evenly; the
+    * bounds cut the samples, each weighted by the ids it stands for, into
+    * `p` ranges of near-equal weight.
+    */
+  private def layoutOf(blocks: RDD[Topo], p: Int): Layout = {
+    val parts = blocks.map { b =>
+      val ids = sortedUnion(b.vids, b.keys)
+      val k = math.min(ids.length, SamplesPerRange * p)
+      (b.vids.length.toLong, b.closed, ids.length.toDouble / math.max(k, 1),
+        Array.tabulate(k)(i => ids((i.toLong * ids.length / k).toInt)))
+    }.collect()
+    val samples = parts.flatMap { case (_, _, w, s) => s.map((_, w)) }.sortBy(_._1)
+    val total = samples.map(_._2).sum
+    val bounds = scala.collection.mutable.ArrayBuffer[Long]()
+    var (acc, next) = (0.0, 1)
+    for ((id, w) <- samples) {
+      acc += w
+      while (next < p && acc >= total * next / p) {
+        if (bounds.isEmpty || bounds.last < id) bounds += id
+        next += 1
+      }
+    }
+    new Layout(parts.map(_._1).sum, parts.forall(_._2), bounds.toArray)
+  }
+
   /** The persisted static blocks of one message direction over one vertex
-    * set, their width `p` and |V| (`nV`). A session holds one per view of
-    * the derived graph ([[undirectedView]], [[directedView]],
+    * set, their width `p` and the number of edge rows they were built from
+    * (`nE`, null endpoints included). A session holds one per view of the
+    * derived graph ([[undirectedView]], [[directedView]],
     * [[reversedView]], [[memberView]]); each DataFrame entry point builds
     * its own and releases it before it returns.
     */
   final class Topology private[GraphAnalytics] (private[GraphAnalytics] val spark: SparkSession,
-      val p: Int, private[GraphAnalytics] val blocks: RDD[Topo], val nV: Long) {
+      val p: Int, private[GraphAnalytics] val blocks: RDD[Topo], val nE: Long,
+      measure: => Layout) {
+
+    /** |V| and the frame bounds: one job, run by the first reader. */
+    private[GraphAnalytics] lazy val layout: Layout = measure
+
+    def nV: Long = layout.nV
+
+    /** The upper key bounds of the ranges of a frame sorted on a vertex
+      * id: partition i holds the keys in (bounds(i − 1), bounds(i)].
+      */
+    private[graft] def bounds: Array[Long] = layout.bounds.clone
 
     /** The id `SparkContext.getPersistentRDDs` lists the blocks under. */
     private[graft] def rddId: Int = blocks.id
+
+    private[graft] def release(): Unit = { blocks.unpersist(blocking = false); () }
   }
 
   /** The topologies of the message directions `dirs` over one vertex set:
-    * one edge count sizes them all (so they zip), one job builds the first
-    * and counts |V|, and the others build in their first consumer's job.
-    * `symmetric` marks an edge relation holding both orientations of every
-    * edge.
+    * one edge count sizes them all (so they zip), and each builds in its
+    * first consumer's job. Every direction carries the same vertex blocks,
+    * so the first one's [[Layout]] serves all. `symmetric` marks an edge
+    * relation holding both orientations of every edge.
     */
   private def topologies(vertices: DataFrame, edges: DataFrame, dirs: Seq[(String, String)],
       symmetric: Boolean): Seq[Topology] = {
     // a row count of the column-free projection: one job, no aggregate
-    val p = widthFor(edges.sparkSession.sparkContext, edges.select().queryExecution.toRdd.count())
+    val nE = edges.select().queryExecution.toRdd.count()
+    val p = widthFor(edges.sparkSession.sparkContext, nE)
     val bs = dirs.map { case (from, to) => staticBlocks(vertices, edges, from, to, p, symmetric) }
-    // every direction carries the same vertex blocks
-    val nV = bs.head.map(_.vids.length.toLong).fold(0L)(_ + _)
-    bs.map(new Topology(vertices.sparkSession, p, _, nV))
+    lazy val layout = layoutOf(bs.head, p)
+    bs.map(new Topology(vertices.sparkSession, p, _, nE, layout))
   }
 
   /** The topology of the (src, dst) edges src → dst or, when `symmetric`,
@@ -421,12 +509,18 @@ object GraphAnalytics {
   private def topology(vertices: DataFrame, edges: DataFrame, symmetric: Boolean): Topology =
     topologies(vertices, edges, Seq(if (symmetric) "a" -> "b" else "src" -> "dst"), symmetric).head
 
+  /** The topology of an undirected (a, b) view `und` over `vertices`,
+    * which the caller releases.
+    */
+  private[graft] def undirectedTopology(vertices: DataFrame, und: DataFrame): Topology =
+    topology(vertices, und, symmetric = true)
+
   /** `body` over `t`, a topology built for this call and released when it
     * returns; the rows the caller reads later recompute from the shuffle
     * outputs.
     */
   private def perCall[T](t: Topology)(body: Topology => T): T =
-    try body(t) finally t.blocks.unpersist(blocking = false)
+    try body(t) finally t.release()
 
   /** The derived-graph views a session holds, keyed (sfDir, view), each
     * built by its first consumer and kept while the SparkContext lives.
@@ -455,11 +549,13 @@ object GraphAnalytics {
   def reversedView(spark: SparkSession, sfDir: String): Topology =
     held(spark, sfDir, "reversed") { g =>
       val d = directedView(spark, sfDir)
-      new Topology(spark, d.p, staticBlocks(g.vertices, g.edges, "dst", "src", d.p, false), d.nV)
+      new Topology(spark, d.p, staticBlocks(g.vertices, g.edges, "dst", "src", d.p, false), d.nE,
+        d.layout)
     }
 
   /** The undirected affiliation subgraph over the vertices that are not
-    * parts: graph_lpa and graph_modularity.
+    * parts: graph_lpa and graph_modularity. Its `nE` is twice the member
+    * edge count.
     */
   def memberView(spark: SparkSession, sfDir: String): Topology =
     held(spark, sfDir, "members")(g =>
@@ -514,6 +610,32 @@ object GraphAnalytics {
     t.blocks.zipPartitions(state)((ti, si) => out(ti.next(), si.next()))
       .partitionBy(new ToPartition(t.p))
 
+  /** [[messages]] with each partition's state block shipped to itself as
+    * well: the receive side ([[split]]) reads the previous state from the
+    * same shuffle, so the rounds form one linear lineage that needs no
+    * held block and no job.
+    */
+  private def carried[S <: AnyRef : scala.reflect.ClassTag](t: Topology, state: RDD[S])(
+      out: (Topo, S) => Iterator[(Int, Keyed)]): RDD[(Int, AnyRef)] =
+    t.blocks.zipPartitions(state) { (ti, si) =>
+      val s = si.next()
+      out(ti.next(), s) ++ Iterator((org.apache.spark.TaskContext.getPartitionId(), s))
+    }.partitionBy(new ToPartition(t.p))
+
+  /** The receive side of a [[carried]] round: the state block, and the
+    * messages combined per key.
+    */
+  private def split[S](records: Iterator[(Int, AnyRef)], pairs: Boolean, mode: Int)
+      : (S, LongMap) = {
+    val in = new LongMap(pairs, mode)
+    var state: Any = null
+    records.foreach {
+      case (_, k: Keyed) => in.addAll(k)
+      case (_, s) => state = s
+    }
+    (state.asInstanceOf[S], in)
+  }
+
   /** One superstep of the double-valued ladders: each state row sends
     * `units(x, outdeg)` to every out-neighbour, summed per receiver on the
     * map side into one record per receiving partition; the receiving
@@ -539,23 +661,33 @@ object GraphAnalytics {
     }
   }
 
-  /** The exact-DECIMAL total and the row count of a state, in one job. */
-  private def total(state: RDD[Vals]): (Double, Long) = {
-    val (s, n) = state.map { v =>
-      val d = new DSum6
-      v.x.foreach(d.add)
-      (d, v.ids.length.toLong)
-    }.fold((new DSum6, 0L))((a, b) => (a._1.merge(b._1), a._2 + b._2))
-    (s.toDouble, n)
-  }
-
-  /** `state` rescaled so its values sum to the row count `n`:
-    * round(x·n/t, 6). A zero total fails like the ANSI divide.
+  /** A partition's partial of [[renormalized]]'s total and row count, and
+    * to its own partition its state block too.
     */
-  private def renormalized(state: RDD[Vals], t: Double, n: Long): RDD[Vals] = {
-    if (t == 0.0) throw new ArithmeticException(
-      "[DIVIDE_BY_ZERO] Division by zero: the renormalizing total is 0")
-    state.map(v => new Vals(v.ids, v.x.map(x => Exact.round6(x * n.toDouble / t))))
+  private final class Partial(val block: Vals, val sum: DSum6, val n: Long) extends Serializable
+
+  /** `state` rescaled so its values sum to its row count n: round(x·n/t,
+    * 6) with t the exact-DECIMAL total, inside the lineage. In one shuffle
+    * stage each partition ships its partial total to every partition (p²
+    * records) and its block to itself; every partition merges the same p
+    * partials exactly, so all rescale by the same t, with no job. A zero
+    * total fails the job with the ANSI divide's `[DIVIDE_BY_ZERO]`.
+    */
+  private def renormalized(t: Topology, state: RDD[Vals]): RDD[Vals] = {
+    val p = t.p
+    state.mapPartitionsWithIndex { (i, vs) =>
+      val v = vs.next()
+      val s = new DSum6
+      v.x.foreach(s.add)
+      Iterator.tabulate(p)(j => (j, new Partial(if (j == i) v else null, s, v.ids.length.toLong)))
+    }.partitionBy(new ToPartition(p)).mapPartitions { rs =>
+      val s = new DSum6
+      var (n, own) = (0L, null: Vals)
+      rs.foreach { case (_, r) => s.merge(r.sum); n += r.n; if (r.block != null) own = r.block }
+      val tot = s.toDouble
+      if (tot == 0.0) throw org.apache.spark.sql.GraftShim.divideByZero()
+      Iterator(new Vals(own.ids, own.x.map(x => Exact.round6(x * n.toDouble / tot))))
+    }
   }
 
   private def valsDF(t: Topology, state: RDD[Vals], name: String): DataFrame =
@@ -595,9 +727,7 @@ object GraphAnalytics {
   /** [[pageRankDF]] over a src → dst topology, e.g. [[directedView]]. */
   def pageRankDF(t: Topology, numIter: Int): DataFrame = {
     headroom(t, RankUnit, "pageRankDF")
-    val ranks = rankLadder(t, noSeeds(t), numIter)(0.15, 0.15)
-    val (s, n) = total(ranks)
-    valsDF(t, renormalized(ranks, s, n), "rank")
+    valsDF(t, renormalized(t, rankLadder(t, noSeeds(t), numIter)(0.15, 0.15)), "rank")
   }
 
   /** Personalized PageRank (Page et al. 1999 §6 / Jeh & Widom 2003): the
@@ -625,16 +755,54 @@ object GraphAnalytics {
 
   /** One L1-renormalized half-step of [[eigenvectorDF]] and [[hitsDF]] over
     * `t`: floor(x·1e6) per message, vertices no edge reaches at 0, then
-    * round(y·n/t, 6) over all rows with the exact-DECIMAL total. The total
-    * is the round's one job.
+    * round(y·n/t, 6) over all rows with the exact-DECIMAL total. Two
+    * shuffle stages, one over a closed topology; no job.
     */
-  private def renormStep(k: Kernel, t: Topology, x: RDD[Vals], none: RDD[Array[Long]])
-      : RDD[Vals] = {
+  private def renormStep(t: Topology, x: RDD[Vals], none: RDD[Array[Long]]): RDD[Vals] = {
     val unit = RenormUnit.toDouble
-    val y = k.hold(superstep(t, x, none)((v, _) => Exact.floor(v * unit))(
+    if (t.layout.closed) closedRenormStep(t, x)
+    else renormalized(t, superstep(t, x, none)((v, _) => Exact.floor(v * unit))(
       (_, s) => s.toDouble / unit, _ => 0.0))
-    val (s, n) = total(y)
-    renormalized(y, s, n)
+  }
+
+  /** The bound below which a message sum s keeps units6(s/1e6) == s: for
+    * y < 2³² a double's error stays under half a unit of 1e-6.
+    */
+  private final val ExactUnits = (1L << 32) * RenormUnit
+
+  /** [[renormStep]] over a closed topology, in one shuffle stage. Every
+    * vertex then sends and every row is a vertex, so the rows are the |V|
+    * vertices, and y = s/1e6 makes each row's DECIMAL units its message
+    * sum s: the total is Σ outdeg·floor(x·1e6) over the senders, which
+    * each partition ships to every partition beside its messages.
+    */
+  private def closedRenormStep(t: Topology, x: RDD[Vals]): RDD[Vals] = {
+    val (p, n, unit) = (t.p, t.nV.toDouble, RenormUnit.toDouble)
+    t.blocks.zipPartitions(x) { (ti, xi) =>
+      val (b, v) = (ti.next(), xi.next())
+      val sent = new DSum6
+      val out = send(b, v.ids, p, pairs = false, Sum)(_ => 0L, { (i, deg) =>
+        val c = Exact.floor(v.x(i) * unit)
+        sent.addProduct(deg.toLong, c)
+        c
+      })
+      out ++ Iterator.tabulate(p)(j => (j, new Partial(null, sent, 0L)))
+    }.partitionBy(new ToPartition(p)).zipPartitions(t.blocks) { (rs, ti) =>
+      val (in, s, b) = (new LongMap(false, Sum), new DSum6, ti.next())
+      rs.foreach {
+        case (_, k: Keyed) => in.addAll(k)
+        case (_, r: Partial) => s.merge(r.sum)
+      }
+      val tot = s.toDouble
+      if (tot == 0.0) throw org.apache.spark.sql.GraftShim.divideByZero()
+      val m = in.toKeyed
+      if (m.v.exists(u => math.abs(u) >= ExactUnits)) throw new ArithmeticException(
+        "a renormalized sum reaches 2^32; its DECIMAL units are no longer exact")
+      val ids = java.util.Arrays.copyOf(m.k1, m.k1.length + b.noIn.length)
+      System.arraycopy(b.noIn, 0, ids, m.k1.length, b.noIn.length)
+      Iterator(new Vals(ids, Array.tabulate(ids.length)(i =>
+        Exact.round6((if (i < m.k1.length) m.v(i).toDouble / unit else 0.0) * n / tot))))
+    }
   }
 
   /** Eigenvector centrality by synchronous power iteration (Bonacich
@@ -650,10 +818,9 @@ object GraphAnalytics {
   /** [[eigenvectorDF]] over `t`, e.g. [[undirectedView]]. */
   def eigenvectorDF(t: Topology, numIter: Int): DataFrame = {
     headroom(t, RenormUnit, "eigenvectorDF")
-    val (k, none) = (new Kernel, noSeeds(t))
+    val none = noSeeds(t)
     var x = initial(t, 1.0)
-    for (_ <- 1 to numIter) x = renormStep(k, t, x, none)
-    k.release()
+    for (_ <- 1 to numIter) x = renormStep(t, x, none)
     valsDF(t, x, "x")
   }
 
@@ -678,13 +845,12 @@ object GraphAnalytics {
   def hitsDF(fwd: Topology, bwd: Topology, numIter: Int): DataFrame = {
     require(fwd.p == bwd.p, "hitsDF: both directions must share one width")
     headroom(fwd, RenormUnit, "hitsDF")
-    val (k, none) = (new Kernel, noSeeds(fwd))
+    val none = noSeeds(fwd)
     var (hub, auth) = (initial(fwd, 1.0), initial(fwd, 0.0))
     for (_ <- 1 to numIter) {
-      auth = renormStep(k, fwd, hub, none)
-      hub = renormStep(k, bwd, auth, none)
+      auth = renormStep(fwd, hub, none)
+      hub = renormStep(bwd, auth, none)
     }
-    k.release()
     val rows = hub.zipPartitions(auth) { (hi, ai) =>
       val (h, a) = (hi.next(), ai.next())
       val at = new LongMap(false, Put)
@@ -747,15 +913,23 @@ object GraphAnalytics {
   def lpaDF(vertices: DataFrame, und: DataFrame, numIter: Int = 5): DataFrame =
     perCall(topology(vertices, und, symmetric = true))(lpaDF(_, numIter))
 
-  /** [[lpaDF]] over an undirected topology, e.g. [[memberView]]. */
-  def lpaDF(t: Topology, numIter: Int): DataFrame = {
-    val (k, p) = (new Kernel, t.p)
+  /** [[lpaDF]] over an undirected topology, e.g. [[memberView]]: a frame
+    * sorted on `id` ([[rangeFrame]]).
+    */
+  def lpaDF(t: Topology, numIter: Int): DataFrame =
+    rangeFrame(t, lpa(t, numIter).map(l => new Cols(Array(l.ids, l.lbl))),
+      Seq("id" -> false, "community" -> false))()
+
+  /** [[lpaDF]]'s rounds: one carried lineage. */
+  private def lpa(t: Topology, numIter: Int): RDD[Labels] = {
+    val p = t.p
     var labels = t.blocks.map(b => new Labels(b.vids, b.vids.clone))
     for (_ <- 1 to numIter)
-      labels = k.hold(messages(t, labels)((b, l) =>
+      labels = carried(t, labels)((b, l) =>
         send(b, l.ids, p, pairs = true, Sum)(l.lbl(_), (_, _) => 1L)
-      ).zipPartitions(labels) { (mi, li) =>
-        val (m, l) = (received(mi, pairs = true, Sum).toKeyed, li.next())
+      ).mapPartitions { r =>
+        val (l, in) = split[Labels](r, pairs = true, Sum)
+        val m = in.toKeyed
         // per receiver, the entry of max (count, -label)
         val best = new LongMap(false, Put)
         for (e <- m.k1.indices) {
@@ -768,11 +942,102 @@ object GraphAnalytics {
           val b = best.get(l.ids(i), -1L).toInt
           if (b < 0) l.lbl(i) else m.k2(b)
         }.toArray))
-      })
-    labels.count()
-    k.release()
-    longsDF(t, labels.flatMap(l => l.ids.indices.iterator.map(i => Row(l.ids(i), l.lbl(i)))),
-      "id", "community")
+      }
+    labels
+  }
+
+  /** Newman's modularity (Newman & Girvan 2004) of the [[lpaDF]]
+    * communities of the undirected view of the member edges `member`
+    * (src, dst) over `vertices`: one row per community with its n_nodes,
+    * e_in (member edges with both endpoints in it), d_sum (its endpoint
+    * degree sum; a self-loop counts twice), q_units = 4m·e_in − d_sum² in
+    * exact BIGINT units (m = member edges, null endpoints and endpoints
+    * outside `vertices` included) and q = round(q_units / 4m², 6).
+    */
+  def modularityDF(vertices: DataFrame, member: DataFrame, numIter: Int = 5): DataFrame =
+    perCall(topology(vertices, graft.model.DerivedGraph.undirected(member), symmetric = true))(
+      modularityDF(_, numIter))
+
+  /** [[modularityDF]] over an undirected topology built from member edges,
+    * e.g. [[memberView]]: after the LPA rounds, one more round ships each
+    * vertex's label to its neighbours, each partition sums (n_nodes,
+    * d_sum, 2·e_in) per community from its degrees and those messages,
+    * and the partials meet in [[rangeFrame]]'s shuffle by community. A
+    * frame sorted on `community`; Spark computes the Q columns.
+    */
+  def modularityDF(t: Topology, numIter: Int): DataFrame = {
+    val p = t.p
+    val partials = carried(t, lpa(t, numIter))((b, l) =>
+      send(b, l.ids, p, pairs = true, Sum)(l.lbl(_), (_, _) => 1L)
+    ).zipPartitions(t.blocks) { (r, ti) =>
+      val ((l, in), b) = (split[Labels](r, pairs = true, Sum), ti.next())
+      val Seq(n, d, e2) = Seq.fill(3)(new LongMap(false, Sum))
+      for (i <- l.ids.indices) {
+        val (id, c) = (l.ids(i), l.lbl(i))
+        val j = java.util.Arrays.binarySearch(b.keys, id)
+        n.add(c, 0L, 1L)
+        d.add(c, 0L, if (j >= 0) (b.off(j + 1) - b.off(j)).toLong else 0L)
+        e2.add(c, 0L, in.get(id, c, 0L))
+      }
+      val cs = n.shippable.k1
+      Iterator(new Cols(cs +: Seq(n, e2, d).map(v => cs.map(v.get(_, 0L))).toArray))
+    }
+    // both orientations of every member edge, so e_in counted twice and
+    // nE = 2m
+    val m = t.nE / 2
+    rangeFrame(t, partials,
+      Seq("community" -> false, "n_nodes" -> false, "e_in" -> false, "d_sum" -> true))(
+      c => new Cols(Array(c.c(0), c.c(1), c.c(2).map(_ / 2), c.c(3))))
+      .select(col("community"), col("n_nodes"), col("e_in"), col("d_sum"),
+        (lit(4L * m) * col("e_in") - col("d_sum") * col("d_sum")).as("q_units"))
+      .withColumn("q", round(col("q_units").cast("double") / lit((4L * m * m).toDouble), 6))
+  }
+
+  /** Rows of long columns keyed on the first, one block or one shuffle
+    * record of a [[rangeFrame]].
+    */
+  private final class Cols(val c: Array[Array[Long]]) extends Serializable
+
+  /** A frame of the long columns `fields` (name, nullable) over `rows`,
+    * one block per partition keyed on the first column: in one shuffle
+    * stage each row goes to the partition of its key's range under `t`'s
+    * [[Layout]], where the rows are sorted on the key, rows of one key
+    * summed column-wise, and `finish` applied. The frame declares that
+    * layout ([[org.apache.spark.sql.GraftShim.rangeSortedFrame]]), so an
+    * `orderBy` on the key plans no exchange and no sort.
+    */
+  private def rangeFrame(t: Topology, rows: RDD[Cols], fields: Seq[(String, Boolean)])(
+      finish: Cols => Cols = identity): DataFrame = {
+    val (p, layout, w) = (t.p, t.layout, fields.length)
+    val sorted = rows.flatMap { b =>
+      // a counting sort of the rows by destination range
+      val dest = b.c(0).map(layout.rangeOf)
+      val start = new Array[Int](p + 1)
+      dest.foreach(r => start(r + 1) += 1)
+      for (r <- 0 until p) start(r + 1) += start(r)
+      val (fill, order) = (start.clone, new Array[Int](dest.length))
+      for (i <- dest.indices) { order(fill(dest(i))) = i; fill(dest(i)) += 1 }
+      (0 until p).iterator.filter(r => start(r + 1) > start(r)).map(r => (r, new Cols(b.c.map(
+        col => Array.tabulate(start(r + 1) - start(r))(j => col(order(start(r) + j)))))))
+    }.partitionBy(new ToPartition(p)).mapPartitions { rs =>
+      val cols = Array.fill(w)(new LongBuf)
+      rs.foreach { case (_, b) => for (j <- 0 until w) cols(j) ++= b.c(j) }
+      val in = cols.map(_.result)
+      val keys = in(0).clone
+      java.util.Arrays.sort(keys)
+      val uniq = keys.indices.filter(i => i == 0 || keys(i) != keys(i - 1)).map(keys).toArray
+      val slot = new LongMap(false, Put)
+      for (i <- uniq.indices) slot.add(uniq(i), 0L, i)
+      val out = Array.tabulate(w)(j => if (j == 0) uniq else new Array[Long](uniq.length))
+      for (i <- in(0).indices; s = slot.get(in(0)(i), 0L).toInt; j <- 1 until w)
+        out(j)(s) = Math.addExact(out(j)(s), in(j)(i))
+      val f = finish(new Cols(out))
+      f.c(0).indices.iterator.map(i =>
+        new GenericInternalRow(Array.tabulate[Any](w)(j => f.c(j)(i))): InternalRow)
+    }
+    org.apache.spark.sql.GraftShim.rangeSortedFrame(t.spark,
+      StructType(fields.map { case (n, nullable) => StructField(n, LongType, nullable) }),
+      sorted, fields.head._1)
   }
 
   /** One partition's component labels, and the indices whose label the
@@ -1051,7 +1316,9 @@ object GraphAnalytics {
     perCall(topology(edges.select(col("src").as("id")).limit(0),
       graft.model.DerivedGraph.undirected(edges), symmetric = true))(kCoreDF(_, k, rounds))
 
-  /** [[kCoreDF]] over an undirected topology, e.g. [[undirectedView]]. */
+  /** [[kCoreDF]] over an undirected topology, e.g. [[undirectedView]]: a
+    * frame sorted on `id` ([[rangeFrame]]).
+    */
   def kCoreDF(t: Topology, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be ≥ 1, got $k")
     require(rounds >= 1, s"rounds must be ≥ 1, got $rounds")
@@ -1074,8 +1341,10 @@ object GraphAnalytics {
         Iterator(new Core(c.ids, deg, alive, next(deg, alive)))
       })
     kern.release()
-    longsDF(t, core.flatMap(c => c.ids.indices.iterator.filter(i => c.alive(i) && c.deg(i) > 0)
-      .map(i => Row(c.ids(i), c.deg(i)))), "id", "deg")
+    rangeFrame(t, core.map { c =>
+      val kept = c.ids.indices.filter(i => c.alive(i) && c.deg(i) > 0).toArray
+      new Cols(Array(kept.map(c.ids), kept.map(c.deg)))
+    }, Seq("id" -> false, "deg" -> false))()
   }
 
   /** Canonical triangle list (x < y < z, one row per triangle) of a

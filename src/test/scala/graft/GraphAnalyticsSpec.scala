@@ -120,6 +120,50 @@ class GraphAnalyticsSpec extends SparkSpec {
     assert(shuffled == got, "lpaDF changed under repartitioning")
   }
 
+  test("eigenvectorDF and hitsDF read the same rows with and without every endpoint a vertex") {
+    // every sf0.001 edge endpoint is a vertex, so a half-step runs in one
+    // stage with the total from its senders; an edge between two ids
+    // outside the vertex table takes the two-stage path and never reaches
+    // a vertex, so the rows must not change
+    val d = "/root/testdata/sf0.001"
+    assume(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d)), "sf0.001 not present")
+    val g = DerivedGraph(spark, d)
+    val stray = Seq((1L << 40, (1L << 40) + 1)).toDF("src", "dst")
+    val und = DerivedGraph.undirected(g.edges).select(col("a").as("src"), col("b").as("dst"))
+    val directed = g.edges.select("src", "dst")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("id").collect().toSeq
+    assert(rows(GraphAnalytics.eigenvectorDF(g.vertices, und, 8)) ==
+      rows(GraphAnalytics.eigenvectorDF(g.vertices, und.union(stray), 8)))
+    assert(rows(GraphAnalytics.hitsDF(g.vertices, directed, 4)) ==
+      rows(GraphAnalytics.hitsDF(g.vertices, directed.union(stray), 4)))
+  }
+
+  test("modularityDF equals the DataFrame reference on sf0.001 and on a hand graph") {
+    def same(what: String, vs: org.apache.spark.sql.DataFrame,
+        member: org.apache.spark.sql.DataFrame): Unit = {
+      val got = GraphAnalytics.modularityDF(vs, member, 5).orderBy("community")
+      val ref = ModularityRef.modularity(member,
+        GraphAnalytics.lpaDF(vs, DerivedGraph.undirected(member), 5))
+      assert(got.schema == ref.schema, what)
+      val rows = got.collect().toSeq
+      assert(rows.nonEmpty && rows == ref.collect().toSeq, what)
+    }
+    // duplicate member edges, a self-loop, an endpoint with no label (99),
+    // an isolated vertex (9) and an edge between two unlabelled endpoints
+    val vs = (1L to 9L).toDF("id")
+    val member = Seq((1L, 2L), (1L, 2L), (2L, 3L), (3L, 1L), (3L, 3L), (4L, 5L), (5L, 6L),
+      (6L, 4L), (6L, 99L), (7L, 8L), (2L, 5L), (98L, 97L)).toDF("src", "dst")
+    same("hand graph", vs, member)
+    same("hand graph, 7 partitions", vs.repartition(7), member.repartition(7))
+    same("hand graph, 1 partition", vs.coalesce(1), member.coalesce(1))
+    val d = "/root/testdata/sf0.001"
+    if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d))) {
+      val g = DerivedGraph(spark, d)
+      same("sf0.001", g.vertices.filter(col("label") =!= "part").select("id"),
+        DerivedGraph.memberEdges(g))
+    }
+  }
+
   test("lpaDF vs GraphX LPA: identical community PARTITION on a tie-free graph") {
     // Two clean stars (hub 1 w/ leaves 2-4, hub 10 w/ leaves 11-13): no
     // count ties after round 1, so the induced partition must agree even

@@ -75,8 +75,8 @@ class HeldViewSpec extends SparkSpec {
           g.edges.select("src", "dst"), 4)
         .orderBy(col("auth").desc, col("id")).limit(100))
       case "graph_lpa" => strings(GraphAnalytics.lpaDF(members, memberUnd, 5).orderBy("id"))
-      case "graph_modularity" => strings(QueriesGraphX.modularity(
-        DerivedGraph.memberEdges(g), GraphAnalytics.lpaDF(members, memberUnd, 5)))
+      case "graph_modularity" => strings(GraphAnalytics.modularityDF(members,
+        DerivedGraph.memberEdges(g), 5).orderBy("community"))
     }
   }
 
