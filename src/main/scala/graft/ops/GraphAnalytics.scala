@@ -25,11 +25,9 @@ import org.apache.spark.storage.StorageLevel
   * map-side into a primitive map and ships one record per receiving
   * partition: one shuffle stage, no job. A renormalizing total is
   * computed inside the lineage too, Pregelix's in-dataflow aggregator:
-  * p² partials shuffled all-to-all, in their own stage
-  * ([[renormalized]]) or, when every endpoint is a vertex, beside the
-  * messages ([[closedRenormStep]]). So the eigenvector, HITS and
-  * PageRank ladders run in their caller's job. A
-  * frame sorted on a vertex id (k-core, LPA, modularity) ends in one
+  * p² partials shuffled all-to-all in one stage ([[renormalized]]), so
+  * the eigenvector, HITS and PageRank ladders run in their caller's job.
+  * A frame sorted on a vertex id (k-core, LPA, modularity) ends in one
   * range-routing stage and declares that layout ([[rangeFrame]]), so its
   * `orderBy` plans no exchange and no sort. [[Exact]], [[DSum6]] and
   * [[ProductSum]] replicate Spark's arithmetic, so the rows are the ones
@@ -139,15 +137,6 @@ object GraphAnalytics {
       this
     }
     def merge(o: DSum6): this.type = { hi = hi.add(o.hi); addUnits(o.lo) }
-    /** Adds a·b units exactly. */
-    def addProduct(a: Long, b: Long): this.type = {
-      val u = a * b
-      if (Math.multiplyHigh(a, b) == (u >> 63)) addUnits(u)
-      else {
-        hi = hi.add(java.math.BigInteger.valueOf(a).multiply(java.math.BigInteger.valueOf(b)))
-        this
-      }
-    }
     def toDouble: Double =
       new java.math.BigDecimal(hi.add(java.math.BigInteger.valueOf(lo)), 6).doubleValue
   }
@@ -327,11 +316,10 @@ object GraphAnalytics {
 
   /** The static block of one partition: the adjacency keyed by the
     * sending endpoint (sorted senders, CSR offsets, receivers), the
-    * sorted vertex ids, those of them no edge reaches (sorted), and
-    * whether every endpoint placed here is a vertex (`closed`).
+    * sorted vertex ids, and those of them no edge reaches (sorted).
     */
   private final class Topo(val keys: Array[Long], val off: Array[Int], val nbrs: Array[Long],
-      val vids: Array[Long], val noIn: Array[Long], val closed: Boolean) extends Serializable
+      val vids: Array[Long], val noIn: Array[Long]) extends Serializable
 
   /** One partition's state: ids and their values. */
   private final class Vals(val ids: Array[Long], val x: Array[Double]) extends Serializable
@@ -363,9 +351,7 @@ object GraphAnalytics {
     val noIn = vids.filter(id =>
       if (symmetric) java.util.Arrays.binarySearch(keys, id) < 0
       else (ids.get(id, 0L) & HasIn) == 0)
-    val closed = keys.forall(java.util.Arrays.binarySearch(vids, _) >= 0) &&
-      all.v.forall(f => (f & IsVertex) != 0)
-    new Topo(keys, off, nbrs, vids, noIn, closed)
+    new Topo(keys, off, nbrs, vids, noIn)
   }
 
   /** The static blocks of the message direction `from` → `to` under the
@@ -407,13 +393,11 @@ object GraphAnalytics {
       shipped(ids)
     }
 
-  /** |V|, whether every edge endpoint is a vertex (`closed`), and the
-    * upper bounds of the key ranges of a frame sorted on a vertex id:
-    * partition i of such a frame holds the keys in (bounds(i − 1),
-    * bounds(i)].
+  /** |V| and the upper bounds of the key ranges of a frame sorted on a
+    * vertex id: partition i of such a frame holds the keys in
+    * (bounds(i − 1), bounds(i)].
     */
-  private final class Layout(val nV: Long, val closed: Boolean, val bounds: Array[Long])
-      extends Serializable {
+  private final class Layout(val nV: Long, val bounds: Array[Long]) extends Serializable {
     def rangeOf(id: Long): Int = {
       val i = java.util.Arrays.binarySearch(bounds, id)
       if (i >= 0) i else -i - 1
@@ -434,29 +418,19 @@ object GraphAnalytics {
   }
 
   /** The [[Layout]] of `blocks`, in one job: each partition counts its
-    * vertex ids and samples its sorted vertex and sender ids evenly; the
-    * bounds cut the samples, each weighted by the ids it stands for, into
-    * `p` ranges of near-equal weight.
+    * vertex ids and samples its sorted vertex and sender ids evenly, and
+    * Spark's range partitioner cuts the samples, each weighted by the ids
+    * it stands for, into `p` ranges of near-equal weight.
     */
   private def layoutOf(blocks: RDD[Topo], p: Int): Layout = {
     val parts = blocks.map { b =>
       val ids = sortedUnion(b.vids, b.keys)
       val k = math.min(ids.length, SamplesPerRange * p)
-      (b.vids.length.toLong, b.closed, ids.length.toDouble / math.max(k, 1),
+      (b.vids.length.toLong, (ids.length.toDouble / math.max(k, 1)).toFloat,
         Array.tabulate(k)(i => ids((i.toLong * ids.length / k).toInt)))
     }.collect()
-    val samples = parts.flatMap { case (_, _, w, s) => s.map((_, w)) }.sortBy(_._1)
-    val total = samples.map(_._2).sum
-    val bounds = scala.collection.mutable.ArrayBuffer[Long]()
-    var (acc, next) = (0.0, 1)
-    for ((id, w) <- samples) {
-      acc += w
-      while (next < p && acc >= total * next / p) {
-        if (bounds.isEmpty || bounds.last < id) bounds += id
-        next += 1
-      }
-    }
-    new Layout(parts.map(_._1).sum, parts.forall(_._2), bounds.toArray)
+    new Layout(parts.map(_._1).sum, org.apache.spark.sql.GraftShim.rangeBounds(
+      parts.flatMap { case (_, w, s) => s.map((_, w)) }, p))
   }
 
   /** The persisted static blocks of one message direction over one vertex
@@ -474,11 +448,6 @@ object GraphAnalytics {
     private[GraphAnalytics] lazy val layout: Layout = measure
 
     def nV: Long = layout.nV
-
-    /** The upper key bounds of the ranges of a frame sorted on a vertex
-      * id: partition i holds the keys in (bounds(i − 1), bounds(i)].
-      */
-    private[graft] def bounds: Array[Long] = layout.bounds.clone
 
     /** The id `SparkContext.getPersistentRDDs` lists the blocks under. */
     private[graft] def rddId: Int = blocks.id
@@ -509,18 +478,20 @@ object GraphAnalytics {
   private def topology(vertices: DataFrame, edges: DataFrame, symmetric: Boolean): Topology =
     topologies(vertices, edges, Seq(if (symmetric) "a" -> "b" else "src" -> "dst"), symmetric).head
 
-  /** The topology of an undirected (a, b) view `und` over `vertices`,
-    * which the caller releases.
-    */
-  private[graft] def undirectedTopology(vertices: DataFrame, und: DataFrame): Topology =
-    topology(vertices, und, symmetric = true)
-
   /** `body` over `t`, a topology built for this call and released when it
     * returns; the rows the caller reads later recompute from the shuffle
     * outputs.
     */
   private def perCall[T](t: Topology)(body: Topology => T): T =
     try body(t) finally t.release()
+
+  /** [[perCall]] for a frame of rounds that end in a shuffle whose receive
+    * side reads no block of `t`: the frame's stages run while `t` is held
+    * (one job), so a later read only reduces that shuffle's output.
+    * Read after the release, each stage would rebuild `t` from its shuffle.
+    */
+  private def perCallFrame(t: Topology)(body: Topology => DataFrame): DataFrame =
+    perCall(t) { t => val df = body(t); df.queryExecution.toRdd.count(); df }
 
   /** The derived-graph views a session holds, keyed (sfDir, view), each
     * built by its first consumer and kept while the SparkContext lives.
@@ -722,7 +693,7 @@ object GraphAnalytics {
     * in GraphAnalyticsSpec.
     */
   def pageRankDF(vertices: DataFrame, edges: DataFrame, numIter: Int = 10): DataFrame =
-    perCall(topology(vertices, edges, symmetric = false))(pageRankDF(_, numIter))
+    perCallFrame(topology(vertices, edges, symmetric = false))(pageRankDF(_, numIter))
 
   /** [[pageRankDF]] over a src → dst topology, e.g. [[directedView]]. */
   def pageRankDF(t: Topology, numIter: Int): DataFrame = {
@@ -756,53 +727,12 @@ object GraphAnalytics {
   /** One L1-renormalized half-step of [[eigenvectorDF]] and [[hitsDF]] over
     * `t`: floor(x·1e6) per message, vertices no edge reaches at 0, then
     * round(y·n/t, 6) over all rows with the exact-DECIMAL total. Two
-    * shuffle stages, one over a closed topology; no job.
+    * shuffle stages, no job.
     */
   private def renormStep(t: Topology, x: RDD[Vals], none: RDD[Array[Long]]): RDD[Vals] = {
     val unit = RenormUnit.toDouble
-    if (t.layout.closed) closedRenormStep(t, x)
-    else renormalized(t, superstep(t, x, none)((v, _) => Exact.floor(v * unit))(
+    renormalized(t, superstep(t, x, none)((v, _) => Exact.floor(v * unit))(
       (_, s) => s.toDouble / unit, _ => 0.0))
-  }
-
-  /** The bound below which a message sum s keeps units6(s/1e6) == s: for
-    * y < 2³² a double's error stays under half a unit of 1e-6.
-    */
-  private final val ExactUnits = (1L << 32) * RenormUnit
-
-  /** [[renormStep]] over a closed topology, in one shuffle stage. Every
-    * vertex then sends and every row is a vertex, so the rows are the |V|
-    * vertices, and y = s/1e6 makes each row's DECIMAL units its message
-    * sum s: the total is Σ outdeg·floor(x·1e6) over the senders, which
-    * each partition ships to every partition beside its messages.
-    */
-  private def closedRenormStep(t: Topology, x: RDD[Vals]): RDD[Vals] = {
-    val (p, n, unit) = (t.p, t.nV.toDouble, RenormUnit.toDouble)
-    t.blocks.zipPartitions(x) { (ti, xi) =>
-      val (b, v) = (ti.next(), xi.next())
-      val sent = new DSum6
-      val out = send(b, v.ids, p, pairs = false, Sum)(_ => 0L, { (i, deg) =>
-        val c = Exact.floor(v.x(i) * unit)
-        sent.addProduct(deg.toLong, c)
-        c
-      })
-      out ++ Iterator.tabulate(p)(j => (j, new Partial(null, sent, 0L)))
-    }.partitionBy(new ToPartition(p)).zipPartitions(t.blocks) { (rs, ti) =>
-      val (in, s, b) = (new LongMap(false, Sum), new DSum6, ti.next())
-      rs.foreach {
-        case (_, k: Keyed) => in.addAll(k)
-        case (_, r: Partial) => s.merge(r.sum)
-      }
-      val tot = s.toDouble
-      if (tot == 0.0) throw org.apache.spark.sql.GraftShim.divideByZero()
-      val m = in.toKeyed
-      if (m.v.exists(u => math.abs(u) >= ExactUnits)) throw new ArithmeticException(
-        "a renormalized sum reaches 2^32; its DECIMAL units are no longer exact")
-      val ids = java.util.Arrays.copyOf(m.k1, m.k1.length + b.noIn.length)
-      System.arraycopy(b.noIn, 0, ids, m.k1.length, b.noIn.length)
-      Iterator(new Vals(ids, Array.tabulate(ids.length)(i =>
-        Exact.round6((if (i < m.k1.length) m.v(i).toDouble / unit else 0.0) * n / tot))))
-    }
   }
 
   /** Eigenvector centrality by synchronous power iteration (Bonacich
@@ -813,7 +743,7 @@ object GraphAnalytics {
     * applies the identical op order.
     */
   def eigenvectorDF(vertices: DataFrame, edges: DataFrame, numIter: Int = 8): DataFrame =
-    perCall(topology(vertices, edges, symmetric = false))(eigenvectorDF(_, numIter))
+    perCallFrame(topology(vertices, edges, symmetric = false))(eigenvectorDF(_, numIter))
 
   /** [[eigenvectorDF]] over `t`, e.g. [[undirectedView]]. */
   def eigenvectorDF(t: Topology, numIter: Int): DataFrame = {
@@ -836,7 +766,7 @@ object GraphAnalytics {
     */
   def hitsDF(vertices: DataFrame, edges: DataFrame, numIter: Int = 4): DataFrame =
     topologies(vertices, edges, Seq("src" -> "dst", "dst" -> "src"), symmetric = false) match {
-      case Seq(fwd, bwd) => perCall(fwd)(f => perCall(bwd)(hitsDF(f, _, numIter)))
+      case Seq(fwd, bwd) => perCall(fwd)(f => perCallFrame(bwd)(hitsDF(f, _, numIter)))
     }
 
   /** [[hitsDF]] over the src → dst topology `fwd` and its reverse `bwd`,
@@ -911,7 +841,7 @@ object GraphAnalytics {
     * oracle parity. The rounds are one lineage run by one job.
     */
   def lpaDF(vertices: DataFrame, und: DataFrame, numIter: Int = 5): DataFrame =
-    perCall(topology(vertices, und, symmetric = true))(lpaDF(_, numIter))
+    perCallFrame(topology(vertices, und, symmetric = true))(lpaDF(_, numIter))
 
   /** [[lpaDF]] over an undirected topology, e.g. [[memberView]]: a frame
     * sorted on `id` ([[rangeFrame]]).
@@ -955,8 +885,8 @@ object GraphAnalytics {
     * outside `vertices` included) and q = round(q_units / 4m², 6).
     */
   def modularityDF(vertices: DataFrame, member: DataFrame, numIter: Int = 5): DataFrame =
-    perCall(topology(vertices, graft.model.DerivedGraph.undirected(member), symmetric = true))(
-      modularityDF(_, numIter))
+    perCallFrame(topology(vertices, graft.model.DerivedGraph.undirected(member),
+      symmetric = true))(modularityDF(_, numIter))
 
   /** [[modularityDF]] over an undirected topology built from member edges,
     * e.g. [[memberView]]: after the LPA rounds, one more round ships each

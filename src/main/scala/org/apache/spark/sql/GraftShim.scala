@@ -43,6 +43,14 @@ object GraftShim {
       LogicalRDD(output, rows, RangePartitioning(order, rows.getNumPartitions), order)(s))
   }
 
+  /** Up to `p` − 1 strictly increasing bounds that cut the weighted
+    * `samples` into `p` ranges of near-equal weight, as Spark's
+    * `RangePartitioner` cuts its sample.
+    */
+  def rangeBounds(samples: Array[(Long, Float)], p: Int): Array[Long] =
+    org.apache.spark.RangePartitioner.determineBounds(
+      scala.collection.mutable.ArrayBuffer.from(samples), p)
+
   /** The error of Spark's ANSI division by zero, `[DIVIDE_BY_ZERO]`: a
     * SparkThrowable, so a task that throws it fails the job under its own
     * name.

@@ -7,12 +7,14 @@ import graft.ops.GraphAnalytics
 /** Spark jobs per call of the iteration family, pinned: a change that
   * adds a count, a materialization or a scalar fetch to a round fails
   * here instead of in a benchmark run. On the block superstep kernel a
-  * DataFrame entry point pays an edge count for its call's topology, and
-  * one job for |V| and the frame bounds where it reads them; a query over
-  * the session's held views pays neither. Then come one job per
-  * convergence check and the collect, which runs every other round (the
-  * renormalizing totals included) and the sort of a frame sorted on a
-  * vertex id. Each call runs on the sf0.001 derived graph with its
+  * DataFrame entry point pays an edge count for its call's topology, one
+  * job for |V| and the frame bounds where it reads them, and, where its
+  * rounds run unchecked, one job that runs them while the topology is
+  * held; a query over the session's held views pays none of these. Then
+  * come one job per convergence check and the collect, which runs every
+  * other round (the renormalizing totals included) and the sort of a
+  * frame sorted on a vertex id. Each call runs on the sf0.001 derived
+  * graph with its
   * inventory query's arguments (dedup_clusters on sf0.01), and the result
   * is collected, so the count covers the whole call. Pins only go down.
   */
@@ -48,10 +50,33 @@ class AnalyticsJobBudgetSpec extends SparkSpec {
         g.vertices.filter(col("label") =!= "part").select("id"), member, 5).collect()),
       "stress" -> jobs(GraphAnalytics.stressCentralityDF(und, QueriesGraphX.spLandmarks, 10)
         .collect()))
-    // edge count, |V| and bounds, collect; PPR adds its seed count, and
-    // stress needs no |V|
-    assert(got == Map("pagerank" -> 3, "ppr" -> 4, "eigenvector" -> 3, "hits" -> 3,
-      "lpa" -> 3, "modularity" -> 3, "stress" -> 2))
+    // edge count, |V| and bounds, the rounds, collect; PPR counts its
+    // seeds instead and runs its rounds in the collect, and stress needs
+    // no |V|
+    assert(got == Map("pagerank" -> 4, "ppr" -> 4, "eigenvector" -> 4, "hits" -> 4,
+      "lpa" -> 4, "modularity" -> 4, "stress" -> 2))
+  }
+
+  test("a DataFrame entry point's frame reads no round after the call") {
+    assume(haveSf001, "testdata sf0.001 not present")
+    DerivedGraph.warm(spark, sf001)
+    val g = DerivedGraph(spark, sf001)
+    val und = DerivedGraph.undirected(g.edges)
+    val members = g.vertices.filter(col("label") =!= "part").select("id")
+    val member = DerivedGraph.memberEdges(g)
+    val frames = Map(
+      "pagerank" -> GraphAnalytics.pageRankDF(g.vertices, g.edges, 10),
+      "eigenvector" -> GraphAnalytics.eigenvectorDF(g.vertices,
+        und.select(col("a").as("src"), col("b").as("dst")), 8),
+      "hits" -> GraphAnalytics.hitsDF(g.vertices, g.edges.select("src", "dst"), 4),
+      "lpa" -> GraphAnalytics.lpaDF(members, DerivedGraph.undirected(member), 5),
+      "modularity" -> GraphAnalytics.modularityDF(members, member, 5))
+    // the call ran the rounds while its topology was held and released
+    // it; a read reduces the last shuffle in one stage and rebuilds no
+    // topology
+    val stages = frames.map { case (n, df) => n -> JobCounter.stages(spark.sparkContext)(
+      df.collect())._2 }
+    assert(stages == frames.map { case (n, _) => n -> 1 })
   }
 
   test("connected components job budget") {

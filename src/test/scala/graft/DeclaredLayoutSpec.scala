@@ -35,11 +35,11 @@ class DeclaredLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def sortedRows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 
-  /** Every check of one declared frame `df`, sorted on `key`, whose
-    * ranges are `bounds`; `ordered` is the query's sorted frame over it.
+  /** Every check of one declared frame `df`, sorted on `key`; `ordered` is
+    * the query's sorted frame over it. Returns the keys of each partition.
     */
-  private def checkFrame(what: String, df: DataFrame, key: String, bounds: Array[Long],
-      p: Int, ordered: DataFrame): Unit = {
+  private def checkFrame(what: String, df: DataFrame, key: String,
+      ordered: DataFrame): Seq[Array[Long]] = {
     // the sort plans no exchange and no sort, and its rows are those of
     // the same rows sorted without the declaration
     val rows = ordered.collect().toSeq
@@ -51,19 +51,17 @@ class DeclaredLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val plain = spark.createDataFrame(df.rdd, df.schema)
     assert(rows == plain.orderBy(key).collect().toSeq, s"$what: sorted rows differ")
 
-    // each partition holds the keys of its range, sorted; later
-    // partitions past the last bound are empty
+    // as many partitions as declared, each sorted, and every key above
+    // those of the non-empty partitions before it
     val k = df.schema.fieldIndex(key)
-    val parts = df.queryExecution.toRdd.mapPartitionsWithIndex((i, rs) =>
-      Iterator((i, rs.map(_.getLong(k)).toArray))).collect()
-    assert(parts.length == p, s"$what: ${parts.length} partitions, not $p")
-    parts.foreach { case (i, ks) =>
+    val parts = df.queryExecution.toRdd.mapPartitions(rs =>
+      Iterator(rs.map(_.getLong(k)).toArray)).collect().toSeq
+    val declared = df.queryExecution.executedPlan.outputPartitioning.numPartitions
+    assert(parts.length == declared, s"$what: ${parts.length} partitions, $declared declared")
+    parts.zipWithIndex.foldLeft(Option.empty[Long]) { case (below, (ks, i)) =>
       assert(ks.sameElements(ks.sorted), s"$what: partition $i unsorted")
-      ks.foreach { x =>
-        assert(i <= bounds.length && (i == 0 || x > bounds(i - 1)) &&
-          (i == bounds.length || x <= bounds(i)),
-          s"$what: key $x in partition $i outside bounds ${bounds.mkString(",")}")
-      }
+      below.foreach(b => assert(ks.forall(_ > b), s"$what: partition $i reaches below $b"))
+      ks.lastOption.orElse(below)
     }
 
     // a join and a groupBy on the key, against an ordinary frame, read the
@@ -77,15 +75,8 @@ class DeclaredLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       f.join(other, key), other.join(f, Seq(key), "left"), f.join(other, Seq(key), "full"),
       f.groupBy(key).agg(count(lit(1)).as("n"), sum(col(second)).as("s"))).map(sortedRows)
     assert(reads(df) == reads(copy), s"$what: a join or groupBy read other rows")
+    parts
   }
-
-  /** The three declared frames over an undirected topology `t` (the
-    * k-core one at `k`), with the key each is sorted on.
-    */
-  private def frames(t: GraphAnalytics.Topology, k: Int): Seq[(String, DataFrame, String)] = Seq(
-    ("kcore", GraphAnalytics.kCoreDF(t, k, 10), "id"),
-    ("lpa", GraphAnalytics.lpaDF(t, 5), "id"),
-    ("modularity", GraphAnalytics.modularityDF(t, 5), "community"))
 
   test("hand-graph kernel frames hold the range layout they declare") {
     // duplicate edges, a self-loop, an endpoint outside the vertex table
@@ -101,17 +92,17 @@ class DeclaredLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Seq((7L, 9L)).toDF("src", "dst"), 1))
     for ((name, vs, es, k) <- graphs; in <- Seq(1, 7)) {
       val layout = (df: DataFrame) => if (in == 1) df.coalesce(1) else df.repartition(in)
-      val t = GraphAnalytics.undirectedTopology(layout(vs), DerivedGraph.undirected(layout(es)))
-      try {
-        val bounds = t.bounds
-        if (name == "two vertices") assert(bounds.length < t.p - 1, "no empty range")
-        underEachPlanner { planner =>
-          frames(t, k).foreach { case (op, df, key) =>
-            checkFrame(s"$name $op, $in input partitions, $planner", df, key, bounds, t.p,
-              df.orderBy(key))
-          }
+      val (v, e) = (layout(vs), layout(es))
+      val frames = Seq(("kcore", GraphAnalytics.kCoreDF(e, k), "id"),
+        ("lpa", GraphAnalytics.lpaDF(v, DerivedGraph.undirected(e)), "id"),
+        ("modularity", GraphAnalytics.modularityDF(v, e), "community"))
+      underEachPlanner { planner =>
+        frames.foreach { case (op, df, key) =>
+          val parts = checkFrame(s"$name $op, $in input partitions, $planner", df, key,
+            df.orderBy(key))
+          if (name == "two vertices") assert(parts.exists(_.isEmpty), s"$op: no empty partition")
         }
-      } finally t.release()
+      }
     }
   }
 
@@ -123,12 +114,12 @@ class DeclaredLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val (und, member) = (GraphAnalytics.undirectedView(s, sf001),
       GraphAnalytics.memberView(s, sf001))
     val byQuery = Seq(
-      ("graph_kcore", GraphAnalytics.kCoreDF(und, 8, QueriesGraphX.KcoreRounds), "id", und),
-      ("graph_lpa", GraphAnalytics.lpaDF(member, 5), "id", member),
-      ("graph_modularity", GraphAnalytics.modularityDF(member, 5), "community", member))
+      ("graph_kcore", GraphAnalytics.kCoreDF(und, 8, QueriesGraphX.KcoreRounds), "id"),
+      ("graph_lpa", GraphAnalytics.lpaDF(member, 5), "id"),
+      ("graph_modularity", GraphAnalytics.modularityDF(member, 5), "community"))
     underEachPlanner { planner =>
-      byQuery.foreach { case (q, df, key, t) =>
-        checkFrame(s"$q, $planner", df, key, t.bounds, t.p, Queries.all(q).fn(s, sf001))
+      byQuery.foreach { case (q, df, key) =>
+        checkFrame(s"$q, $planner", df, key, Queries.all(q).fn(s, sf001))
       }
     }
   }
